@@ -20,7 +20,7 @@ object Bench {
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
     catch { case _: Throwable => () }
     // Skipped when benching the warm dir itself: the dedup warm queries
-    // populate SessionMemo shared builds keyed on (session, dir), and
+    // populate memoized shared builds keyed on (session, dir), and
     // reusing them would zero out the cost the explicit `*_build`
     // entries below are meant to measure.
     if (sfDir != warmSf) {
@@ -125,6 +125,10 @@ object Bench {
       val total = fmt(results.map(_._2).filter(_ >= 0).sum)
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$extra$runsMeta,"sf":"$sfDir"}"""
     }
+    // lifecycle hygiene: no graft-pinned blocks outlive the run. Freed
+    // BEFORE the JSON lines: unpersisting a checkpoint logs a WARN,
+    // which must not land after the summary in a captured log tail.
+    CacheScope.releaseAll(spark)
     // Full per-query detail: persisted to a file (sbt log noise cannot
     // truncate a file) and printed for humans reading the whole log.
     val full = toJson(results, "")
@@ -145,8 +149,6 @@ object Bench {
     val esc = out.replace("\\", "\\\\").replace("\"", "\\\"")
     println(toJson(failedFirst.take(20),
       s""","n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"detail":"$esc""""))
-    // lifecycle hygiene: no graft-pinned blocks outlive the run
-    graft.queries.SessionMemo.release(spark)
     spark.stop()
     // a run with any -1 sentinel must not exit 0: scripts gating on rc
     // would otherwise treat a regressed run as passing

@@ -1,115 +1,115 @@
 package graft
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Session-scoped registry of caches the library creates INSIDE
-  * operators (e.g. the df-capped shingle index in
-  * [[graft.dedup.Dedup.jaccardPairsFromShingles]]), so a long-lived
-  * consumer session has an explicit release point instead of pinning
-  * blocks until LRU eviction. One-shot mains (Verify/Bench) call
-  * [[graft.queries.SessionMemo.release]], which drains this too.
+/** The one owner of session-scoped storage. Three kinds of entry live
+  * in one table per session, under one lock:
+  *   - memoized builds shared by several registry queries ([[memo]]);
+  *   - caches the library creates INSIDE operators ([[track]], e.g.
+  *     the df-capped shingle index in
+  *     [[graft.dedup.Dedup.jaccardPairsFromShingles]]);
+  *   - every local checkpoint ([[trackLocalCheckpoint]] is the
+  *     library's only `localCheckpoint()` call).
+  * [[release]] frees one cache or checkpoint early; [[releaseAll]] is
+  * the session's release point: it frees everything and forgets the
+  * memos, so a registry query run afterwards simply rebuilds.
   *
-  * Lifecycle note: a Dataset strongly references its SparkSession, so
-  * a WeakHashMap keyed on the session would never collect (the
-  * value→key indirect-reference trap in the WeakHashMap javadoc), and
-  * weak Dataset values would lose the unpersist handle the moment the
-  * caller drops its reference — re-pinning blocks, the exact problem
-  * this class exists to solve. So: strong references, plus a sweep
-  * that forgets STOPPED sessions on every call (a stopped context's
-  * blocks are already freed by Spark). A service that cycles sessions
-  * through `session.stop()` therefore does not accumulate; dropping a
-  * live session without stop() leaks the session itself regardless of
-  * this registry.
+  * A released CACHE recomputes; a released CHECKPOINT does not (its
+  * blocks are the only copy of its data, lineage truncated), so a
+  * checkpoint is released only after every consumer has been
+  * evaluated.
+  *
+  * References are strong. A Dataset strongly references its
+  * SparkSession, so a weak map keyed on the session would never
+  * collect (values reach their keys), and a weak handle would lose
+  * its unpersist the moment the caller dropped it. Instead every call
+  * forgets STOPPED sessions (a stopped context's blocks are already
+  * freed by Spark), so a service that cycles sessions through
+  * `session.stop()` does not accumulate.
   */
 object CacheScope {
-  private val tracked = new java.util.HashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]]()
-
-  /** localCheckpoint storage registered for [[releaseAll]] — kept
-    * apart from `tracked` because the release semantics differ: a
-    * released CACHE recomputes, a released CHECKPOINT's blocks are the
-    * only copy of its data (lineage truncated), so these are freed
-    * only at the session-level release point, after every consumer of
-    * the round's results has been evaluated. */
-  private val trackedCp = new java.util.HashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]]()
-
-  private def pruneStopped(): Unit = {
-    tracked.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-    trackedCp.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
+  /** Registered under the lock, built OUTSIDE it: a build thunk may
+    * itself call [[memo]] (a memoized corpus loading a memoized
+    * table), where building under the lock would serialize every
+    * build. `lazy val` gives once-only construction per key. */
+  private final class Memo(thunk: () => AnyRef) {
+    @volatile var built = false
+    lazy val value: AnyRef = { val v = thunk(); built = true; v }
   }
 
-  /** Persist `df` (MEMORY_AND_DISK, `.cache()` semantics) and remember
-    * it for [[releaseAll]]. */
-  def track[T](df: Dataset[T]): Dataset[T] = {
-    val q = tracked.synchronized {
-      pruneStopped()
-      var v = tracked.get(df.sparkSession)
-      if (v == null) {
-        v = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-        tracked.put(df.sparkSession, v)
-      }
-      v
-    }
-    q.add(df.cache())
-    df
+  /** One session's storage: memos by key, and every cache or
+    * checkpoint by identity with the call that frees its blocks. */
+  private final class Scope {
+    val memos = new java.util.HashMap[String, Memo]()
+    val pinned = new java.util.IdentityHashMap[Dataset[_], () => Unit]()
   }
 
-  /** The materialized RDD behind a `localCheckpoint()`ed Dataset — the
-    * handle its storage blocks are freed through. Empty for any other
-    * plan shape (then there is nothing to free). */
-  private def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
-    ds.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+  private val scopes = new java.util.HashMap[SparkSession, Scope]()
+
+  private def inScope[T](s: SparkSession)(f: Scope => T): T =
+    scopes.synchronized {
+      scopes.entrySet().removeIf(_.getKey.sparkContext.isStopped)
+      f(scopes.computeIfAbsent(s, _ => new Scope))
     }
 
-  /** Eager `localCheckpoint` whose storage blocks are REGISTERED for
-    * [[releaseAll]] (r21 verdict: per-call checkpoints lingered until
-    * the RDD was GC'd and the ContextCleaner noticed — orphaned blocks
-    * for the rest of the session). Consumers must be evaluated before
-    * the session-level release: unlike a cache, a released checkpoint
-    * does not recompute. */
+  private def pin[T](ds: Dataset[T])(free: => Unit): Dataset[T] = {
+    inScope(ds.sparkSession)(_.pinned.put(ds, () => free))
+    ds
+  }
+
+  /** The value `build` returns, built once per (session, dir, tag) —
+    * for DataFrames shared by several registry queries in one run.
+    * Registry queries are read-only over immutable testdata dirs, so
+    * within one live session the memo never goes stale. */
+  def memo[T <: AnyRef](s: SparkSession, dir: String, tag: String)(
+      build: => T): T =
+    inScope(s)(_.memos.computeIfAbsent(s"$tag|$dir",
+      _ => new Memo(() => build))).value.asInstanceOf[T]
+
+  /** Persist `df` (MEMORY_AND_DISK, `.cache()` semantics) and register
+    * it. */
+  def track[T](df: Dataset[T]): Dataset[T] =
+    pin(df.cache())(df.unpersist(false))
+
+  /** Eager `localCheckpoint`, registered. The returned Dataset is the
+    * handle [[release]] takes; a plan derived from it is not. */
   def trackLocalCheckpoint[T](ds: Dataset[T]): Dataset[T] = {
     val cp = ds.localCheckpoint()
-    registerCheckpoint(cp)
-    cp
+    val rdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    pin(cp)(rdd.unpersist(false))
   }
 
-  /** Register an ALREADY-checkpointed Dataset for [[releaseAll]] —
-    * for iteration loops whose final generation is only known after
-    * the loop (re-checkpointing there would copy the blocks). */
-  def registerCheckpoint(cp: Dataset[_]): Unit =
-    checkpointRdd(cp).foreach { r =>
-      val q = tracked.synchronized {
-        pruneStopped()
-        var v = trackedCp.get(cp.sparkSession)
-        if (v == null) {
-          v = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
-          trackedCp.put(cp.sparkSession, v)
-        }
-        v
-      }
-      q.add(r)
-    }
-
-  /** Free the storage behind a `localCheckpoint()`ed Dataset NOW — for
+  /** Free a registered cache or checkpoint NOW and forget it — for
     * iteration loops whose superseded generations are provably dead
-    * (e.g. rank vector i−1 once vector i is materialized). The Dataset
-    * must not be referenced again: its lineage is truncated, so there
-    * is no recompute path. No-op on non-checkpoint plans. */
-  def releaseCheckpoint(ds: Dataset[_]): Unit =
-    checkpointRdd(ds).foreach(_.unpersist(false))
+    * (e.g. rank vector i−1 once vector i is materialized). A released
+    * checkpoint must not be read again: there is no recompute path.
+    * No-op on anything else, a plan derived from a handle included.
+    * An emptied scope is dropped: every stream runs its micro-batches
+    * on its own cloned session, so per-stream scopes would otherwise
+    * pile up. */
+  def release(ds: Dataset[_]): Unit = Option(inScope(ds.sparkSession) { sc =>
+    val free = sc.pinned.remove(ds)
+    if (sc.pinned.isEmpty && sc.memos.isEmpty) scopes.remove(ds.sparkSession)
+    free
+  }).foreach(_())
 
-  /** Unpersist every cache and registered checkpoint tracked for `s`
-    * (non-blocking) and forget them. Results derived from a released
-    * CACHE recompute; results derived from a released CHECKPOINT must
-    * already have been evaluated (see [[trackLocalCheckpoint]]). */
+  /** Unpersist every memoized Dataset, cache and checkpoint of `s`
+    * (non-blocking) and forget them all. Results derived from a
+    * released cache recompute; results derived from a released
+    * checkpoint must already have been evaluated. */
   def releaseAll(s: SparkSession): Unit = {
-    val (q, qc) = tracked.synchronized {
-      pruneStopped(); (tracked.remove(s), trackedCp.remove(s))
+    val scope = scopes.synchronized(scopes.remove(s))
+    if (scope != null) {
+      // only memos whose thunk actually RAN can pin storage — forcing
+      // unbuilt ones here would do the build just to throw it away
+      scope.memos.values.forEach { m =>
+        if (m.built) m.value match {
+          case ds: Dataset[_] => ds.unpersist(false)
+          case _ => ()
+        }
+      }
+      scope.pinned.values.forEach(_())
     }
-    if (q != null) q.forEach(_.unpersist(false))
-    if (qc != null) qc.forEach(_.unpersist(false))
   }
 }

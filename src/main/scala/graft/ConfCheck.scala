@@ -24,7 +24,7 @@ object ConfCheck {
       val wsc = spark.conf.get("spark.sql.codegen.wholeStage")
       println(s"CONFCHECK after $n: partitions=$sp aqe=$aqe codegen=$wsc")
     }
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
   }
 }

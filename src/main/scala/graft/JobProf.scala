@@ -82,7 +82,7 @@ object JobProf {
           }
       }
     }
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
   }
 }

@@ -59,7 +59,7 @@ object Profile {
       "/tmp/graft_profile.csv")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       sb.toString.getBytes("UTF-8"))
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
   }
 }

@@ -260,7 +260,7 @@ object Stress {
           .queryExecution.toRdd.count()
         catch { case _: Throwable => () }
       }
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
 
     amplify(spark, base, work, amp)
 
@@ -288,7 +288,7 @@ object Stress {
         val scaled = "dedup_semantic_cells_scaled" -> timed(
           semanticScaled(spark, dir, cells)
             .queryExecution.toRdd.count())
-        graft.queries.SessionMemo.release(spark)
+        CacheScope.releaseAll(spark)
         System.err.println(s"stress: $label done")
         label -> (builds ++ entries :+ scaled)
     }
@@ -320,12 +320,12 @@ object Stress {
       s""","times_sf01":${obj(byScale("sf0.1"))}""" +
       s""","times_sf001":${obj(byScale("sf0.01"))}""" +
       s""","sf":"$work"}"""
+    CacheScope.releaseAll(spark)   // its WARNs must precede the JSON line
     println(json)
     val out = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "BENCH_SF1.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       json.getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    graft.queries.SessionMemo.release(spark)
     spark.stop()
   }
 }

@@ -32,7 +32,7 @@ object TimeQuery {
       t
     }
     println(f"TIMEQ $name median: ${ts.sorted.apply((runs - 1) / 2)}%.3f s")
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
   }
 }

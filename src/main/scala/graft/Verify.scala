@@ -55,7 +55,7 @@ object Verify {
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))
     // lifecycle hygiene: no graft-pinned blocks outlive the run
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
     // rc stays 0: the driver must still run the DuckDB compare on the
     // queries that DID produce output — verify_errors.json + stderr carry

@@ -149,7 +149,7 @@ object Dedup {
       .filter(col("__df") <= maxShingleDf)
     // tracked cache (not bare .cache()): three consumers below, but a
     // long-lived session must be able to drop it — CacheScope.releaseAll
-    // / SessionMemo.release is the lifecycle point (VERDICT r4 nit)
+    // is the lifecycle point (VERDICT r4 nit)
     val sh = graft.CacheScope.track(shAll.join(keep, Seq("shingle")))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     // a shingle occurring in exactly ONE doc cannot contribute to any
@@ -289,7 +289,7 @@ object Dedup {
     // local checkpoints live in executor storage.
     // registered (not bare): the final labeling joins `nodes` (derived
     // from these edges), so the blocks must live until the caller has
-    // consumed the result — SessionMemo/CacheScope release is that point
+    // consumed the result — CacheScope.releaseAll is that point
     val edges = graft.CacheScope.trackLocalCheckpoint(
       pairs.select(col("id1").as("a"), col("id2").as("b"))
         .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
@@ -333,7 +333,7 @@ object Dedup {
         }
       // the collect above was the edges' last consumer in this regime —
       // free the checkpoint now (the returned labeling is driver-local)
-      graft.CacheScope.releaseCheckpoint(edges)
+      graft.CacheScope.release(edges)
       return parent.keys.toSeq.map(id => (id, find(id))).sortBy(_._1)
         .toDF("id", "cluster_id")
     }
@@ -342,13 +342,14 @@ object Dedup {
     // still be labeled (the union-find regime labels them) — `nodes`
     // re-adds them at the end
     val nodes = edges.select(col("a").as("id")).distinct()
-    var cur = edges.filter(col("a") < col("b"))
-      .select(col("a").as("u"), col("b").as("v")).localCheckpoint()
+    var cur = graft.CacheScope.trackLocalCheckpoint(edges
+      .filter(col("a") < col("b")).select(col("a").as("u"), col("b").as("v")))
     var nCur = cur.count()
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
-      val next = smallStar(largeStar(cur)).localCheckpoint()
+      val next =
+        graft.CacheScope.trackLocalCheckpoint(smallStar(largeStar(cur)))
       val nNext = next.count()
       // Fixed point ⟺ sets equal; both sides are distinct sets, so
       // equal counts + empty one-sided difference suffice. At the fixed
@@ -359,7 +360,7 @@ object Dedup {
       // check above has evaluated (the final labeling reads only the
       // LAST generation): free its blocks now instead of waiting for
       // GC + ContextCleaner (r21 verdict: orphaned checkpoint blocks)
-      graft.CacheScope.releaseCheckpoint(cur)
+      graft.CacheScope.release(cur)
       cur = next
       nCur = nNext
       iter += 1
@@ -368,9 +369,6 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters star rounds " +
           "— raise maxIters")
-    // the surviving generation feeds the returned labeling (consumed
-    // lazily by callers) — register it for session-level release
-    graft.CacheScope.registerCheckpoint(cur)
     val starLabels = cur.select(col("v").as("id"), col("u").as("cluster_id"))
       .unionByName(cur.select(col("u").as("id"), col("u").as("cluster_id"))
         .distinct())

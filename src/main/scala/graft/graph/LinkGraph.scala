@@ -80,36 +80,35 @@ object LinkGraph {
       iters: Int): DataFrame = {
     require(iters >= 1, "iters must be ≥ 1")
     // out-degree folded into the edge list once, outside the loop
-    val e2 = edges
+    val e2 = graft.CacheScope.trackLocalCheckpoint(edges
       .join(edges.groupBy("src").agg(count(lit(1)).as("__od")), "src")
-      .select(col("src"), col("dst"), col("__od"))
-      .localCheckpoint()
-    val tele = base.select(col("id"), col("__tele")).localCheckpoint()
-    var ranks = base.select(col("id"), col("score")).localCheckpoint()
+      .select(col("src"), col("dst"), col("__od")))
+    val tele = graft.CacheScope.trackLocalCheckpoint(
+      base.select(col("id"), col("__tele")))
+    var ranks = graft.CacheScope.trackLocalCheckpoint(
+      base.select(col("id"), col("score")))
     for (_ <- 1 to iters) {
       val contrib = e2.join(ranks, e2("src") === ranks("id"))
         .select(col("dst"),
           expr("(17 * score) DIV (20 * __od)").as("__c"))
         .groupBy("dst").agg(sum(col("__c")).as("__in"))
-      val next = tele
+      val next = graft.CacheScope.trackLocalCheckpoint(tele
         .join(contrib, tele("id") === contrib("dst"), "left_outer")
         .select(tele("id"),
-          (col("__tele") + coalesce(col("__in"), lit(0L))).as("score"))
-        .localCheckpoint()
+          (col("__tele") + coalesce(col("__in"), lit(0L))).as("score")))
       // generation i−1 is dead once generation i is materialized (the
       // returned vector is the LAST checkpoint; each checkpoint's plan
       // is lineage-free) — free its blocks now instead of waiting for
       // GC + ContextCleaner (r21 verdict: orphaned checkpoint blocks)
-      graft.CacheScope.releaseCheckpoint(ranks)
+      graft.CacheScope.release(ranks)
       ranks = next
     }
     // the loop state is fully materialized: e2/tele are not in the
     // returned vector's (truncated) lineage, so their blocks free now;
-    // the final vector itself is consumed lazily by callers — register
-    // it for session-level release
-    graft.CacheScope.releaseCheckpoint(e2)
-    graft.CacheScope.releaseCheckpoint(tele)
-    graft.CacheScope.registerCheckpoint(ranks)
+    // the final vector itself is consumed lazily by callers and stays
+    // registered for session-level release
+    graft.CacheScope.release(e2)
+    graft.CacheScope.release(tele)
     ranks
   }
 
@@ -137,7 +136,7 @@ object LinkGraph {
   def hits(vertices: DataFrame, edges: DataFrame, iters: Int,
       q: Long = 1L << 20): DataFrame = {
     require(iters >= 1, "iters must be ≥ 1")
-    val e = edges.select("src", "dst").localCheckpoint()
+    val e = graft.CacheScope.trackLocalCheckpoint(edges.select("src", "dst"))
     // v feeds the normalization joins AND the returned frame — its
     // blocks live until the caller consumes the result (session-level
     // release); e is freed at function end (the raw sums are
@@ -150,8 +149,8 @@ object LinkGraph {
     // superseded raw-sum generations: araw_i / hraw_i are dead once
     // iteration i+1 has materialized its own sums (the only readers —
     // auth_i / hubs_i — were last used to build them); the FINAL pair
-    // stays referenced by the returned frame, so it is registered for
-    // session-level release instead
+    // stays referenced by the returned frame, so it stays registered
+    // for session-level release instead
     var prevAraw: DataFrame = null
     var prevHraw: DataFrame = null
     def normMax(df: DataFrame, c: String): Long = {
@@ -167,20 +166,20 @@ object LinkGraph {
       // those recomputes). The normalized vectors are one shallow
       // metadata join over a checkpoint — no lineage growth, so they
       // need no checkpoint of their own. Arithmetic unchanged.
-      val araw = e.join(hubs, e("src") === hubs("id"))
-        .groupBy(col("dst").as("id")).agg(sum(col("h")).as("ar"))
-        .localCheckpoint()
+      val araw = graft.CacheScope.trackLocalCheckpoint(
+        e.join(hubs, e("src") === hubs("id"))
+          .groupBy(col("dst").as("id")).agg(sum(col("h")).as("ar")))
       // hubs_{i-1} (→ hraw_{i-1}) was last read building araw above
-      if (prevHraw != null) graft.CacheScope.releaseCheckpoint(prevHraw)
+      if (prevHraw != null) graft.CacheScope.release(prevHraw)
       val amax = normMax(araw, "ar")
       auth = v.join(araw, Seq("id"), "left_outer")
         .select(col("id"),
           coalesce(expr(s"(ar * ${q}L) div ${amax}L"), lit(0L)).as("a"))
-      val hraw = e.join(auth, e("dst") === auth("id"))
-        .groupBy(col("src").as("id")).agg(sum(col("a")).as("hr"))
-        .localCheckpoint()
+      val hraw = graft.CacheScope.trackLocalCheckpoint(
+        e.join(auth, e("dst") === auth("id"))
+          .groupBy(col("src").as("id")).agg(sum(col("a")).as("hr")))
       // auth_{i-1} (→ araw_{i-1}) is unreferenced since auth was rebound
-      if (prevAraw != null) graft.CacheScope.releaseCheckpoint(prevAraw)
+      if (prevAraw != null) graft.CacheScope.release(prevAraw)
       val hmax = normMax(hraw, "hr")
       hubs = v.join(hraw, Seq("id"), "left_outer")
         .select(col("id"),
@@ -188,9 +187,7 @@ object LinkGraph {
       prevAraw = araw
       prevHraw = hraw
     }
-    graft.CacheScope.releaseCheckpoint(e)
-    if (prevAraw != null) graft.CacheScope.registerCheckpoint(prevAraw)
-    if (prevHraw != null) graft.CacheScope.registerCheckpoint(prevHraw)
+    graft.CacheScope.release(e)
     auth.join(hubs, Seq("id"))
       .select(col("id"), col("a").as("authority"), col("h").as("hub"))
   }

@@ -188,7 +188,7 @@ object Aggregates extends QueryModule {
     * the batch `w10_capped_sessions` oracle verifies it hash-for-hash
     * — the same stream≡batch proof shape as `pgn_stream_e2e`. */
   private def cappedStreamPath(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "w10_stream") {
+    graft.CacheScope.memo(s, d, "w10_stream") {
       import graft.streaming.CappedSessions
       val base = s"${sys.props("java.io.tmpdir")}/graft_w10s_" +
         java.lang.Integer.toHexString(d.hashCode)

@@ -62,7 +62,7 @@ object ChessPipeline extends QueryModule {
   // filter instead of a second full parse. validateAndClean itself is
   // a pure projection+filter — cheap to re-derive.
   private def runPipeline(s: SparkSession, d: String): Cleaning.CleanResult = {
-    val normalized = SessionMemo(s, d, "pgn_normalized") {
+    val normalized = graft.CacheScope.memo(s, d, "pgn_normalized") {
       val parsed = PgnParser.parseLines(synthesizedLines(s, d))
       Normalize.buildGameData(parsed,
         ingestedAt = lit("2025-05-02 00:00:00").cast("timestamp")).persist()
@@ -116,7 +116,7 @@ object ChessPipeline extends QueryModule {
     * (checkpoint) and the merge must overwrite, not duplicate (LWW).
     * Returns the merged table path. */
   private def streamedTable(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "pgn_streamed") {
+    graft.CacheScope.memo(s, d, "pgn_streamed") {
       import s.implicits._
       val base = s"${sys.props("java.io.tmpdir")}/graft_stream_" +
         java.lang.Integer.toHexString(d.hashCode)

@@ -57,7 +57,7 @@ object CorpusOps extends QueryModule {
     * gram aggregation once per (session, dir), like the shared shingle
     * indexes in DataOps. */
   private def dupPositions(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "passage_positions") {
+    graft.CacheScope.memo(s, d, "passage_positions") {
       PassageDedup.duplicatedPositions(
         plantedCorpus(s, d, "dedup_passage"), "doc_id", "text", K).persist()
     }
@@ -167,7 +167,7 @@ object CorpusOps extends QueryModule {
     * classifier projection and the gram aggregation run once, not per
     * plan reference (same memo discipline as dupPositions). */
   private def v3Gated(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "curate_v3_gated") {
+    graft.CacheScope.memo(s, d, "curate_v3_gated") {
       // keepExpr as a filter — one scan, no self-join, no second
       // derivation of the planted union
       plantedCorpus(s, d, "pipeline_curate_v3")
@@ -175,7 +175,7 @@ object CorpusOps extends QueryModule {
     }
 
   private def v3Positions(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "curate_v3_positions") {
+    graft.CacheScope.memo(s, d, "curate_v3_positions") {
       PassageDedup.duplicatedPositions(v3Gated(s, d), "doc_id", "text", K)
         .persist()
     }
@@ -202,7 +202,7 @@ object CorpusOps extends QueryModule {
   // the md5 formula. Directory↔column consistency is pinned in
   // ExportSpec (a pruned single-shard read contains exactly its keys).
   private def exportShardManifest(s: SparkSession, d: String): DataFrame = {
-    val path = SessionMemo(s, d, "export_shards") {
+    val path = graft.CacheScope.memo(s, d, "export_shards") {
       val p = scratch(d)
       Export.writeShards(Tables.documents(s, d), "doc_id", Shards, p)
       p
@@ -278,10 +278,10 @@ object CorpusOps extends QueryModule {
   }
 
   /** Build + save the decontamination state once per (session, dir);
-    * the served entry loads it back. SessionMemo keys the SAVE; the
+    * the served entry loads it back. The memo keys the SAVE; the
     * load is per-query (cheap: 1 meta row + lazy parquet scans). */
   private def decontamStateDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "decontam_state") {
+    graft.CacheScope.memo(s, d, "decontam_state") {
       val base = s"${sys.props("java.io.tmpdir")}/graft_dcst_" +
         java.lang.Integer.toHexString(d.hashCode)
       Decontam.saveState(Decontam.buildState(

@@ -35,22 +35,19 @@ object DataOps extends QueryModule {
   // entries (jaccard, minhash, simhash) that a Verify/Bench run calls
   // back-to-back — memoize and persist them per (session, dir) so the
   // explode+distinct and the dictionary's global sort run once.
-  // (SessionMemo is weak on the session: stopped sessions GC.)
   /** (id, shingle), persisted. */
   private def sharedShingles(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "dedup_shingles") {
+    graft.CacheScope.memo(s, d, "dedup_shingles") {
       Dedup.shingles(Tables.documents(s, d), "doc_id", "text").persist()
     }
 
   /** (id, sid) — dictionary-encoded, persisted. Separate memo entry:
     * the rank dictionary does driver-side bucket-offset work eagerly,
     * and only the minhash/simhash oracle paths need it — jaccard and
-    * clustering must not pay for it. The shingle memo is resolved
-    * BEFORE this entry's thunk: a nested computeIfAbsent on the same
-    * map violates the ConcurrentHashMap contract (recursive update). */
+    * clustering must not pay for it. */
   private def sharedEncoded(s: SparkSession, d: String): DataFrame = {
     val sh = sharedShingles(s, d)
-    SessionMemo(s, d, "dedup_encoded") {
+    graft.CacheScope.memo(s, d, "dedup_encoded") {
       sh.join(Dedup.shingleDictionary(sh), Seq("shingle"))
         .select("id", "sid").persist()
     }
@@ -61,7 +58,7 @@ object DataOps extends QueryModule {
     * one posting-list self-join, memoized. */
   private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame = {
     val sh = sharedShingles(s, d)   // resolved before the thunk (no nesting)
-    SessionMemo(s, d, "jaccard_pairs") {
+    graft.CacheScope.memo(s, d, "jaccard_pairs") {
       Dedup.jaccardPairsFromShingles(sh, 0.3).persist()
     }
   }
@@ -73,7 +70,7 @@ object DataOps extends QueryModule {
     * and the keep-list decision built on it) — one CC pass, memoized. */
   private[queries] def sharedClusters(s: SparkSession, d: String): DataFrame = {
     val pairs = sharedJaccardPairs(s, d)   // resolved before the thunk
-    SessionMemo(s, d, "dedup_clusters") {
+    graft.CacheScope.memo(s, d, "dedup_clusters") {
       Dedup.connectedComponents(pairs.select("id1", "id2")).persist()
     }
   }
@@ -174,7 +171,7 @@ object DataOps extends QueryModule {
     * RE-DELIVERY of increment 1 — the id skip must make it a no-op.
     * Returns the state path; the registry entry reads docs/. */
   private def streamAdmittedState(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "stream_admit") {
+    graft.CacheScope.memo(s, d, "stream_admit") {
       val base = s"${sys.props("java.io.tmpdir")}/graft_admit_" +
         java.lang.Integer.toHexString(d.hashCode)
       val (src, cp, state) = (s"$base/src", s"$base/cp", s"$base/state")
@@ -355,7 +352,7 @@ object DataOps extends QueryModule {
     * explode is shared with the jaccard/minhash/simhash entries
     * instead of re-run; CC runs once per (session, dir). */
   private def curateClusters(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "curate_clusters") {
+    graft.CacheScope.memo(s, d, "curate_clusters") {
       val sh = sharedShingles(s, d)
       val plantedSh = sh.unionByName(sh.filter(col("id") % 10 === 0)
         .select((col("id") + Planting.Offset).as("id"), col("shingle")))
@@ -373,7 +370,7 @@ object DataOps extends QueryModule {
     * memoized + persisted so they share one materialization; the
     * headroom guard runs once in the build. */
   private def curateU(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "curate_u") {
+    graft.CacheScope.memo(s, d, "curate_u") {
       val base = Tables.documents(s, d)
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
       Planting.requireHeadroom(base, "doc_id", "pipeline_curate")

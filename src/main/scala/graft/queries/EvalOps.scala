@@ -26,7 +26,7 @@ object EvalOps extends QueryModule {
   /** The evaluated ranking — exact cosine top-10, memoized per
     * (session, dir): three metric entries share it. */
   private def ranking(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "eval_ranking") {
+    graft.CacheScope.memo(s, d, "eval_ranking") {
       Similarity.bruteForceTopK(Tables.embeddings(s, d),
         col("vec_id") % 50 === 0, k = K).persist()
     }

@@ -281,7 +281,7 @@ object Joins extends QueryModule {
   // swaps) — memoized per (session, dir) so bench reruns, Explain,
   // and sibling callers pay it once and share one temp dir
   private def scd2StreamTable(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "scd2_stream_table") {
+    graft.CacheScope.memo(s, d, "scd2_stream_table") {
       val log = Tables.events(s, d)
         .select("user_id", "ts", "event_type", "event_id")
       val dir = java.nio.file.Files.createTempDirectory("scd2_stream")

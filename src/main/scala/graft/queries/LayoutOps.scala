@@ -15,7 +15,7 @@ import graft.sources.{Bucketing, TextFormats}
   * side) are asserted in LayoutSpec; PLANS.md documents both.
   *
   * Write targets live under java.io.tmpdir, keyed by the sf dir, and
-  * are written once per (session, dir) via SessionMemo — a Verify or
+  * are written once per (session, dir) via CacheScope.memo — a Verify or
   * Bench run pays one layout write, like a real pipeline pays its
   * write once and prunes forever after.
   */
@@ -27,7 +27,7 @@ object LayoutOps extends QueryModule {
 
   /** Date-partitioned cleaned games, written once per (session, dir). */
   private def partitionedGamesPath(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "layout_partitioned") {
+    graft.CacheScope.memo(s, d, "layout_partitioned") {
       val path = scratch(d, "games")
       Layout.writePartitionedByDate(ChessPipeline.cleanedGames(s, d), path)
       path
@@ -46,7 +46,7 @@ object LayoutOps extends QueryModule {
     * Returns the two catalog table names. */
   private[queries] def bucketedTables(s: SparkSession, d: String)
       : (String, String) =
-    SessionMemo(s, d, "layout_bucketed") {
+    graft.CacheScope.memo(s, d, "layout_bucketed") {
       val h = java.lang.Integer.toHexString(d.hashCode)
       val (ct, ot) = (s"graft_bkt_customer_$h", s"graft_bkt_orders_$h")
       Bucketing.writeBucketed(
@@ -83,7 +83,7 @@ object LayoutOps extends QueryModule {
   // the ORIGINAL parquet, so hash equality proves write∘read = id.
   private def srcJsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    val path = SessionMemo(s, d, "src_jsonl") {
+    val path = graft.CacheScope.memo(s, d, "src_jsonl") {
       val p = scratch(d, "jsonl")
       TextFormats.writeJsonl(ev, p); p
     }
@@ -92,7 +92,7 @@ object LayoutOps extends QueryModule {
 
   private def srcCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    val path = SessionMemo(s, d, "src_csv") {
+    val path = graft.CacheScope.memo(s, d, "src_csv") {
       val p = scratch(d, "csv")
       TextFormats.writeCsv(ev, p); p
     }
@@ -101,7 +101,7 @@ object LayoutOps extends QueryModule {
 
   private def srcOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    val path = SessionMemo(s, d, "src_orc") {
+    val path = graft.CacheScope.memo(s, d, "src_orc") {
       val p = scratch(d, "orc")
       TextFormats.writeOrc(ev, p); p
     }
@@ -112,7 +112,7 @@ object LayoutOps extends QueryModule {
     * (session, dir). LayoutSpec pins the locality property (per-
     * partition bounding boxes ≪ the table's extent on BOTH axes). */
   private def zorderedOrdersPath(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "layout_zorder") {
+    graft.CacheScope.memo(s, d, "layout_zorder") {
       val path = scratch(d, "zord")
       graft.Tables.orders(s, d)
         .withColumn("z", graft.functions.ZOrder.zValue(
@@ -139,7 +139,7 @@ object LayoutOps extends QueryModule {
   // parquet, so hash equality proves compaction is content-preserving.
   // (File-count arithmetic is pinned in LayoutSpec.)
   private def compactedEventsPath(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "layout_compact") {
+    graft.CacheScope.memo(s, d, "layout_compact") {
       val frag = scratch(d, "frag")
       val comp = scratch(d, "comp")
       graft.Tables.events(s, d).repartition(50)
@@ -159,7 +159,7 @@ object LayoutOps extends QueryModule {
     * (pinned in SchemaContractSpec), so this is the drift case a real
     * multi-year table hits. Written once per (session, dir). */
   private def schemaGenerationsPath(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "layout_schema_evo") {
+    graft.CacheScope.memo(s, d, "layout_schema_evo") {
       val base = graft.Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       val root = scratch(d, "evo")
@@ -209,7 +209,7 @@ object LayoutOps extends QueryModule {
     * written once per (session, dir). */
   private[graft] def rangeSortedEventsPath(s: SparkSession, d: String)
       : String =
-    SessionMemo(s, d, "layout_range_sorted") {
+    graft.CacheScope.memo(s, d, "layout_range_sorted") {
       val path = scratch(d, "rsort")
       graft.ops.Export.writeRangeSorted(
         graft.Tables.events(s, d), Seq("ts", "event_id"), 8, path)
@@ -251,7 +251,7 @@ object LayoutOps extends QueryModule {
     * (the batch-id idempotence protocol — a double-counted replay
     * would hash-mismatch the oracle). Built once per (session, dir). */
   private def incrAggStreamTable(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "incr_agg_stream") {
+    graft.CacheScope.memo(s, d, "incr_agg_stream") {
       val o = graft.Tables.orders(s, d)
         .select("o_custkey", "o_orderkey", "o_totalprice", "o_orderdate")
       val dir = java.nio.file.Files.createTempDirectory("incr_agg")
@@ -335,7 +335,7 @@ object LayoutOps extends QueryModule {
     * histogram counts would hash-mismatch the oracle). Built once per
     * (session, dir). */
   private def incrQuantileStreamTable(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "incr_quantile_stream") {
+    graft.CacheScope.memo(s, d, "incr_quantile_stream") {
       val o = graft.Tables.orders(s, d)
         .select("o_custkey", "o_totalprice", "o_orderdate")
       val dir = java.nio.file.Files.createTempDirectory("incr_quantile")
@@ -394,7 +394,7 @@ object LayoutOps extends QueryModule {
   /** Streamed windowed-quantile state: three ten-day delivery slices
     * plus a replayed id that must be a no-op. */
   private def w11StreamTable(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "w11_quantile_stream") {
+    graft.CacheScope.memo(s, d, "w11_quantile_stream") {
       val e = w11Events(s, d)
       val dir = java.nio.file.Files.createTempDirectory("w11_quantile")
         .toString + "/state"

@@ -180,7 +180,7 @@ object MultimodalAudioOps extends QueryModule {
     * the scene exactly, so expected fingerprints (and clusters) are
     * pure integer+md5 arithmetic the DuckDB oracle recomputes. */
   private def audioPcmFixtureDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "mm_audio_pcm_fixtures") {
+    graft.CacheScope.memo(s, d, "mm_audio_pcm_fixtures") {
       import graft.multimodal.AudioCodec
       val base = s"${sys.props("java.io.tmpdir")}/graft_apcm_" +
         java.lang.Integer.toHexString(d.hashCode)

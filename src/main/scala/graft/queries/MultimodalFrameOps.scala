@@ -241,7 +241,7 @@ object MultimodalFrameOps extends QueryModule {
     *                        byte-distinct, collapses onto the %300
     *                        HEVC primary. */
   private def clipFixtureDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "mm_clip_fixtures") {
+    graft.CacheScope.memo(s, d, "mm_clip_fixtures") {
       val base = s"${sys.props("java.io.tmpdir")}/graft_clip_" +
         java.lang.Integer.toHexString(d.hashCode)
       val bp = java.nio.file.Paths.get(base)

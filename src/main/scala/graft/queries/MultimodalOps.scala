@@ -35,7 +35,7 @@ object MultimodalOps extends QueryModule {
     * dimensions derivable from doc_id in the DuckDB oracle. The text
     * bytes ride after the header so payload sizes vary organically. */
   private def imageFixtureDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "mm_image_fixtures") {
+    graft.CacheScope.memo(s, d, "mm_image_fixtures") {
       val base = s"${sys.props("java.io.tmpdir")}/graft_img_" +
         java.lang.Integer.toHexString(d.hashCode)
       val bp = java.nio.file.Paths.get(base)
@@ -78,7 +78,7 @@ object MultimodalOps extends QueryModule {
     * DuckDB oracle recomputes sample rate, channels, and the integer
     * duration math from the planting formula. */
   private def avFixtureDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "mm_av_fixtures") {
+    graft.CacheScope.memo(s, d, "mm_av_fixtures") {
       val base = s"${sys.props("java.io.tmpdir")}/graft_av_" +
         java.lang.Integer.toHexString(d.hashCode)
       val bp = java.nio.file.Paths.get(base)
@@ -124,7 +124,7 @@ object MultimodalOps extends QueryModule {
     * (bounded at 4% of docs); the operators under test are fully
     * distributed. */
   private def binaryFixtureDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "mm_binary_fixtures") {
+    graft.CacheScope.memo(s, d, "mm_binary_fixtures") {
       val base = s"${sys.props("java.io.tmpdir")}/graft_mm_" +
         java.lang.Integer.toHexString(d.hashCode)
       val bp = java.nio.file.Paths.get(base)
@@ -265,7 +265,7 @@ object MultimodalOps extends QueryModule {
     * are pure integer+md5 arithmetic the DuckDB oracle recomputes
     * verbatim. */
   private def pixelFixtureDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "mm_pixel_fixtures") {
+    graft.CacheScope.memo(s, d, "mm_pixel_fixtures") {
       import graft.multimodal.PixelCodec
       val base = s"${sys.props("java.io.tmpdir")}/graft_pxl_" +
         java.lang.Integer.toHexString(d.hashCode)

@@ -178,7 +178,7 @@ object MultimodalStreamOps extends QueryModule {
       fingerprint: Array[Byte] => Option[Long],
       jpegCopies: Boolean = false,
       clipProtocol: Boolean = false): String =
-    SessionMemo(s, d, tag) {
+    graft.CacheScope.memo(s, d, tag) {
       val base = s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
         java.lang.Integer.toHexString(d.hashCode)
       val (src, cp, state) = (s"$base/src", s"$base/cp", s"$base/state")
@@ -224,7 +224,7 @@ object MultimodalStreamOps extends QueryModule {
           else MediaAdmission.start(stream, state, cp,
             "asset_id", "payload", fingerprint)
           val done = q.awaitTermination(300000)
-          // stop a timed-out query BEFORE throwing: SessionMemo does
+          // stop a timed-out query BEFORE throwing: a memo does
           // not cache a failed build, so a later retry would delete
           // and rebuild this directory underneath a zombie stream
           if (!done) q.stop()

@@ -21,70 +21,14 @@ trait QueryModule {
 
   /** One-time shared state builds (seeded streaming state, memoized
     * gated corpora, written tables) that several registry queries
-    * reuse via [[SessionMemo]]. Bench runs these FIRST, timed as their
-    * own `*_build` entries, so a single-shot benchmark charges the
-    * build to an explicit line instead of booking 5–20 s of setup
-    * against whichever consumer happens to run first — the per-query
+    * reuse via [[graft.CacheScope.memo]]. Bench runs these FIRST,
+    * timed as their own `*_build` entries, so a single-shot benchmark
+    * charges the build to an explicit line instead of booking 5–20 s of
+    * setup against whichever consumer happens to run first — the per-query
     * numbers then reflect steady state (build-once/query-many is the
     * production shape). Verify ignores these: correctness queries
     * force the same memos on demand. */
   def benchBuilds: Map[String, (SparkSession, String) => Unit] = Map.empty
-}
-
-/** Per-session memo for DataFrames shared by several registry queries
-  * in one Verify/Bench run. The outer map is WEAK on the SparkSession,
-  * so a stopped session (and everything it persisted) becomes
-  * collectable — a long-lived service does not accumulate entries
-  * across sessions. Within one live session the memo is by design:
-  * registry queries are read-only over immutable testdata dirs. */
-object SessionMemo {
-  /** Lazy holder: registered in the map cheaply, built OUTSIDE the
-    * map's lock — nested SessionMemo calls from inside a build thunk
-    * (e.g. a memoized corpus thunk loading a memoized table) are legal,
-    * where a direct `computeIfAbsent(_ => build)` would throw
-    * "Recursive update". `lazy val` gives once-only per-key
-    * construction under concurrency. */
-  private final class Holder(thunk: () => AnyRef) {
-    @volatile private var done = false
-    lazy val value: AnyRef = { val v = thunk(); done = true; v }
-    /** The value if the thunk already ran; never triggers a build. */
-    def builtValue: Option[AnyRef] = if (done) Some(value) else None
-  }
-
-  private val bySession = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, Holder]]()
-
-  def apply[T <: AnyRef](s: SparkSession, dir: String, tag: String)(
-      build: => T): T = {
-    val inner = bySession.synchronized {
-      var m = bySession.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Holder]()
-        bySession.put(s, m)
-      }
-      m
-    }
-    inner.computeIfAbsent(s"$tag|$dir", _ => new Holder(() => build))
-      .value.asInstanceOf[T]
-  }
-
-  /** Explicit lifecycle end for library consumers (one-shot mains call
-    * it before `spark.stop()`): unpersist every memoized DataFrame,
-    * forget the memo, and drain [[graft.CacheScope]]'s operator-internal
-    * caches. After release the session holds no graft-pinned blocks;
-    * re-running a registry query simply rebuilds (and re-memoizes). */
-  def release(s: SparkSession): Unit = {
-    val inner = bySession.synchronized(bySession.remove(s))
-    // only holders whose thunk actually RAN can pin storage — forcing
-    // unbuilt ones here would do the build just to throw it away
-    if (inner != null) inner.values.forEach { h =>
-      h.builtValue match {
-        case Some(df: org.apache.spark.sql.Dataset[_]) => df.unpersist(false)
-        case _ => ()   // non-DataFrame memo values hold no storage
-      }
-    }
-    graft.CacheScope.releaseAll(s)
-  }
 }
 
 /** Scoped session-conf override — the r20 t2_watermark_dedup
@@ -149,7 +93,7 @@ object Planting {
     // unchanged.
     val key = "headroom|" + idCol + "|" +
       df.queryExecution.analyzed.semanticHash()
-    val ok = SessionMemo(df.sparkSession, "", key) {
+    val ok = graft.CacheScope.memo(df.sparkSession, "", key) {
       val row = df.agg(max(idCol)).head()
       // empty table: max is NULL — trivially under the bound
       java.lang.Boolean.valueOf(row.isNullAt(0) || row.getLong(0) < Offset)

@@ -57,7 +57,7 @@ object SimOps extends QueryModule {
   // the synthetic (near-random — PQ's worst case) embeddings:
   // 0.95 recall@10 from a 100-candidate pool (DataOpsSpec floor 0.9).
   private def pqModel(s: SparkSession, d: String): Pq.PqModel =
-    SessionMemo(s, d, "pq_model") {
+    graft.CacheScope.memo(s, d, "pq_model") {
       Pq.trainPq(Tables.embeddings(s, d), m = 8, ksub = 64, iters = 2)
     }
 
@@ -67,7 +67,7 @@ object SimOps extends QueryModule {
     * reads this instead of re-encoding per query batch. */
   private def pqEncoded(s: SparkSession, d: String): DataFrame = {
     val model = pqModel(s, d)   // resolved before the nested memo
-    SessionMemo(s, d, "pq_encoded") {
+    graft.CacheScope.memo(s, d, "pq_encoded") {
       Pq.pqEncode(Tables.embeddings(s, d), model).persist()
     }
   }
@@ -140,11 +140,15 @@ object SimOps extends QueryModule {
     * without retrain — built once per (session, dir). */
   private def ivfAppendedIndex(s: SparkSession, d: String)
       : Similarity.IvfIndex =
-    SessionMemo(s, d, "ivf_appended") {
+    graft.CacheScope.memo(s, d, "ivf_appended") {
       val emb = Tables.embeddings(s, d)
       val base = Similarity.buildIvfIndex(
         emb.filter(col("vec_id") % 7 =!= 3), numCells = 8, iters = 2)
-      Similarity.appendToIvfIndex(base, emb.filter(col("vec_id") % 7 === 3))
+      val appended = Similarity.appendToIvfIndex(base,
+        emb.filter(col("vec_id") % 7 === 3))
+      graft.CacheScope.release(base.cells)
+      graft.CacheScope.release(base.vecs)
+      appended
     }
 
   // Realistic probe over the appended index — trained-centroid-specific

@@ -249,11 +249,14 @@ object TokenOps extends QueryModule {
     * context totals persisted (they feed three entries), V scalar. */
   private def lmModel(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Long) =
-    SessionMemo(s, d, "bigram_lm") {
+    graft.CacheScope.memo(s, d, "bigram_lm") {
       val docs = Tables.documents(s, d)
-      val counts = graft.text.BigramLm
-        .trainCounts(docs, "doc_id", "text").persist()
-      val totals = graft.text.BigramLm.contextTotals(counts).persist()
+      // tracked, not persisted: releaseAll unpersists a memo that IS a
+      // Dataset, not the Datasets inside a tuple
+      val counts = graft.CacheScope.track(
+        graft.text.BigramLm.trainCounts(docs, "doc_id", "text"))
+      val totals =
+        graft.CacheScope.track(graft.text.BigramLm.contextTotals(counts))
       (counts, totals, graft.text.BigramLm.vocabSize(docs, "text"))
     }
 
@@ -317,7 +320,7 @@ object TokenOps extends QueryModule {
     * cells equal the one-shot batch sketch (sketch addition is exact —
     * the mergeability CMS exists for). Built once per (session, dir). */
   private def hhStreamCells(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "hh_stream_cells") {
+    graft.CacheScope.memo(s, d, "hh_stream_cells") {
       import graft.text.CountMin
       val dir = java.nio.file.Files.createTempDirectory("hh_stream")
         .toString + "/cells"

@@ -213,7 +213,7 @@ object TrainPrep extends QueryModule {
     * probe), and both the host-gate entry and curate v4 share this
     * frame, so the memo collapses four derivations to one. */
   private def canonCrawl(s: SparkSession, d: String): DataFrame =
-    SessionMemo(s, d, "canon_crawl") {
+    graft.CacheScope.memo(s, d, "canon_crawl") {
       val srcNum = substring(col("source"), 4, 6).cast("int")
       val pathId = when(expr("(doc_id % 400) DIV 20") < srcNum,
           col("doc_id") % 5)

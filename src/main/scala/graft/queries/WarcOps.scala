@@ -70,7 +70,7 @@ object WarcOps extends QueryModule {
     * body. A corrupt shard (+Offset ids, truncated mid-record) MUST
     * parse to None and contribute nothing. */
   private def warcFixtureDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "warc_fixtures") {
+    graft.CacheScope.memo(s, d, "warc_fixtures") {
       val base = s"${sys.props("java.io.tmpdir")}/graft_warc_" +
         java.lang.Integer.toHexString(d.hashCode)
       val bp = java.nio.file.Paths.get(base)

@@ -238,7 +238,7 @@ object Windows extends QueryModule {
     * the streamed output must equal exactly the original events table
     * — the batch-distinct oracle. */
   private def t2StreamDir(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "t2_watermark_stream") {
+    graft.CacheScope.memo(s, d, "t2_watermark_stream") {
       val base = java.nio.file.Files.createTempDirectory("t2_wm").toString
       val e = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type")

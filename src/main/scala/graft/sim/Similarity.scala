@@ -455,6 +455,8 @@ object Similarity {
     * between retrains, append keeps the index complete, and recall
     * degrades only as far as the drift (IvfAppendSpec pins append ≡
     * frozen-centroid rebuild EXACTLY, so there is no additional loss).
+    * The superseded `idx` stays pinned: once nothing reads it, the
+    * caller frees its `cells` and `vecs` with [[graft.CacheScope.release]].
     */
   def appendToIvfIndex(idx: IvfIndex, newEmbeddings: DataFrame,
       checkOverlap: Boolean = true): IvfIndex = {
@@ -472,10 +474,12 @@ object Similarity {
     // localCheckpoint like buildIvfIndex's cells: without it every
     // query batch re-runs the increment's assignment, and chained
     // daily appends would compound N-deep union plans
-    IvfIndex(idx.centroids,
+    val appended = IvfIndex(idx.centroids,
       graft.CacheScope.trackLocalCheckpoint(
         idx.cells.unionByName(assignCells(nv, idx.centroids))),
       graft.CacheScope.trackLocalCheckpoint(idx.vecs.unionByName(nv)))
+    graft.CacheScope.release(nv)   // both unions are materialized
+    appended
   }
 
   /** Persist a built index: centroids as a C-row metadata parquet,

@@ -191,20 +191,20 @@ object StreamAdmission {
     // already shingled — is a deliberate batch-scale recompute: passing
     // the flag-stage postings through would couple the two stages'
     // lifecycles for a scan bounded by the admitted slice of one batch.)
-    val aSh = trace("ckpt-shingles")(Dedup.shingles(admitted, "id", "text")
-      .withColumn("__k", concat(col("id").cast("string"), lit(":"),
-        col("shingle")))
-      .localCheckpoint())
+    val aSh = trace("ckpt-shingles")(graft.CacheScope.trackLocalCheckpoint(
+      Dedup.shingles(admitted, "id", "text").withColumn("__k",
+        concat(col("id").cast("string"), lit(":"), col("shingle")))))
     trace("merge-shingles")(
       MicroBatchIngest.mergeParquet(spark, aSh, s"$statePath/shingles",
         "__k", Seq(asc("__k")), assumeDeduped = true))
     val aDf = aSh.groupBy("shingle").agg(count(lit(1)).as("__d"))
-    val newDf = trace("ckpt-shdf")((readIfExists(spark, s"$statePath/shdf") match {
-      case Some(sdf) => sdf.join(aDf, Seq("shingle"), "full_outer")
-        .select(col("shingle"), (coalesce(col("df"), lit(0L)) +
-          coalesce(col("__d"), lit(0L))).as("df"))
-      case None => aDf.select(col("shingle"), col("__d").as("df"))
-    }).localCheckpoint())
+    val newDf = trace("ckpt-shdf")(graft.CacheScope.trackLocalCheckpoint(
+      readIfExists(spark, s"$statePath/shdf") match {
+        case Some(sdf) => sdf.join(aDf, Seq("shingle"), "full_outer")
+          .select(col("shingle"), (coalesce(col("df"), lit(0L)) +
+            coalesce(col("__d"), lit(0L))).as("df"))
+        case None => aDf.select(col("shingle"), col("__d").as("df"))
+      }))
     trace("swap-shdf")(
       graft.sources.TableSwap.replace(spark, newDf, s"$statePath/shdf"))
     trace("merge-docs")(
@@ -212,8 +212,8 @@ object StreamAdmission {
         "id", Seq(asc("id")), assumeDeduped = true))
     // both checkpoints are fully consumed by the writes above — free
     // their blocks now instead of leaving them to GC (r22 lifecycle)
-    graft.CacheScope.releaseCheckpoint(aSh)
-    graft.CacheScope.releaseCheckpoint(newDf)
+    graft.CacheScope.release(aSh)
+    graft.CacheScope.release(newDf)
   }
 
   /** Initialize state from an already-curated corpus (no admission
@@ -225,13 +225,12 @@ object StreamAdmission {
     val base = docs.select(col(idCol).cast("long").as("id"),
       col(textCol).cast("string").as("text")).dropDuplicates("id")
     val sh = Dedup.shingles(base, "id", "text")
-    val sized = base.join(
+    val sized = graft.CacheScope.trackLocalCheckpoint(base.join(
         sh.groupBy("id").agg(count(lit(1)).as("n_sh")), Seq("id"), "left")
       .select(col("id"), col("text"),
-        coalesce(col("n_sh"), lit(0L)).as("n_sh"))
-      .localCheckpoint()
+        coalesce(col("n_sh"), lit(0L)).as("n_sh")))
     commitAdmitted(spark, sized, statePath)
-    graft.CacheScope.releaseCheckpoint(sized)   // consumed by the commit
+    graft.CacheScope.release(sized)   // consumed by the commit
   }
 
   /** One micro-batch: flag, then commit admitted rows. Returns the
@@ -240,7 +239,8 @@ object StreamAdmission {
       statePath: String, idCol: String, textCol: String, tau: Double,
       maxShingleDf: Long, expectedBatch: Long): DataFrame = {
     // tracked, not bare: the flags frame is RETURNED (stats/tests), so
-    // its blocks live until session release rather than lingering to GC
+    // the caller frees it with CacheScope.release ([[start]] does, per
+    // batch) or leaves it to session release
     val flags = trace("flag")(graft.CacheScope.trackLocalCheckpoint(
       flagBatch(batch, loadState(spark, statePath), idCol,
         textCol, tau, maxShingleDf, expectedBatch)))
@@ -264,9 +264,9 @@ object StreamAdmission {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        admitAndCommit(batch.sparkSession, batch, statePath, idCol,
-          textCol, tau, maxShingleDf, expectedBatch)
-        ()
+        // nothing reads a batch's flags once its commit has landed
+        graft.CacheScope.release(admitAndCommit(batch.sparkSession, batch,
+          statePath, idCol, textCol, tau, maxShingleDf, expectedBatch))
       }
       .start()
 

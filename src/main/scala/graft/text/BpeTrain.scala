@@ -44,13 +44,12 @@ object BpeTrain {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    var words = docs
+    var words = graft.CacheScope.trackLocalCheckpoint(docs
       .select(explode(Tokens.ws(lower(col(textCol)))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(col("cnt"),
-        filter(split(col("w"), ""), c => c =!= "").as("sym"))
-      .localCheckpoint()
+        filter(split(col("w"), ""), c => c =!= "").as("sym")))
 
     val learned = Seq.newBuilder[(Int, String, String, String, Long)]
     var rank = 0
@@ -72,24 +71,23 @@ object BpeTrain {
         learned += ((rank, l, r, l + r, n))
         // greedy left-to-right merge fold; literals bound as Columns
         // (never string-spliced — operands may carry SQL metachars)
-        val next = words
+        val next = graft.CacheScope.trackLocalCheckpoint(words
           .withColumn("sym", aggregate(
             col("sym"),
             array().cast("array<string>"),
             (acc, x) => when(
               size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-              .otherwise(concat(acc, array(x)))))
-          .localCheckpoint()
+              .otherwise(concat(acc, array(x))))))
         // rank k's histogram is dead once rank k+1 is materialized
         // (the learned table is driver-local rows) — free it now
-        graft.CacheScope.releaseCheckpoint(words)
+        graft.CacheScope.release(words)
         words = next
         rank += 1
       }
     }
     // the final generation is not referenced by the returned table
-    graft.CacheScope.releaseCheckpoint(words)
+    graft.CacheScope.release(words)
     learned.result()
       .toDF(MergeCols: _*)
       .select(col("rank").cast("int"), col("left"), col("right"),

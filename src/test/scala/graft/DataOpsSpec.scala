@@ -18,11 +18,13 @@ class DataOpsSpec extends AnyFunSuite {
   private def docs = Tables.documents(spark, sf001)
   private def embs = Tables.embeddings(spark, sf001)
 
-  test("SessionMemo.release leaves no graft-pinned blocks (cache lifecycle)") {
+  test("releaseAll leaves no graft-pinned blocks, checkpoints included") {
     // other suites share this JVM/session, so assert RELATIVELY: after
     // exercising the memoized paths AND the operator-internal tracked
-    // cache, release() must leave no persisted RDDs beyond what was
-    // already pinned before this test ran
+    // cache, releaseAll must leave no persisted RDDs beyond what was
+    // already pinned before this test ran — every library checkpoint
+    // (CC's lineage truncation included) is registered, so none is
+    // exempt
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // memoized registry paths (shingles, jaccard pairs, clusters) …
     graft.SparkEntry.queries("dedup_clusters")(spark, sf001).count()
@@ -30,20 +32,14 @@ class DataOpsSpec extends AnyFunSuite {
     Dedup.jaccardPairs(docs, "doc_id", "text", 0.3).count()
     assert(spark.sparkContext.getPersistentRDDs.keySet.size > before.size,
       "expected the exercised paths to pin blocks before release")
-    graft.queries.SessionMemo.release(spark)
-    // local-checkpoint blocks (CC's lineage truncation) are NOT leaks:
-    // they hold no CacheManager reference, so ContextCleaner unpersists
-    // them as soon as the derived datasets are unreachable — the
-    // assertion targets the strongly-referenced cache entries release()
-    // is responsible for
-    val after = spark.sparkContext.getPersistentRDDs
-      .filterNot(_._2.isCheckpointed).keySet
+    CacheScope.releaseAll(spark)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
-      s"release left graft-pinned RDDs: ${after -- before}")
+      s"releaseAll left graft-pinned RDDs: ${after -- before}")
     // released ≠ broken: the same query still answers (rebuilds memo)
     assert(graft.SparkEntry.queries("dedup_clusters")(spark, sf001)
       .count() > 0)
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
   }
 
   test("PQ exhaustive rerank equals brute force bit-for-bit") {
