@@ -1,41 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM on the tiny SF so the first timed query doesn't
-    // absorb startup: codegen + parquet machinery (entry), the
-    // interpreted higher-order-function paths of the shingle pipeline
-    // (jaccard/simhash — measured ~3s of one-time JIT otherwise charged
-    // to the first dedup query), and the array_dot codegen kernel.
-    val warmSf = SparkEntry.TinySfDir
-    try SparkEntry.entry(spark).queryExecution.toRdd.count()
-    catch { case _: Throwable => () }
-    // Skipped when benching the warm dir itself: the dedup warm queries
-    // populate memoized shared builds keyed on (session, dir), and
-    // reusing them would zero out the cost the explicit `*_build`
-    // entries below are meant to measure.
-    if (sfDir != warmSf) {
-      Seq("dedup_ngram_jaccard", "dedup_simhash", "sim_cosine_topk").foreach { q =>
-        SparkEntry.queries.get(q) match {
-          case Some(fn) =>
-            // catch only runtime failures (e.g. missing testdata), not a
-            // renamed registry key — that would silently un-warm the JIT
-            try fn(spark, warmSf).queryExecution.toRdd.count()
-            catch { case _: Throwable => () }
-          case None =>
-            System.err.println(s"Bench warm-up: registry query '$q' missing")
-        }
-      }
-    }
+    val spark = GraftSession.local()
+    GraftSession.warm(spark, sfDir)
     // One-time shared builds (seeded streaming state, shingle indexes,
     // gated corpora, written tables) run FIRST, timed once each as
     // their own `*_build` entries: a single-shot run then charges

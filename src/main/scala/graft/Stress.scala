@@ -236,7 +236,6 @@ object Stress {
       Tables.embeddings(s, d), 0.35, numCells = cells)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val small = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL",
       "/root/testdata/sf0.01")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
@@ -244,22 +243,8 @@ object Stress {
     val work = sys.env.getOrElse("SPARK_GRAFT_STRESS_WORK",
       s"${sys.props("java.io.tmpdir")}/graft_sf1")
     val amp = sys.env.getOrElse("SPARK_GRAFT_AMP", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // JVM/codegen warm-up on the tiny SF (same rationale as Bench)
-    try SparkEntry.entry(spark).queryExecution.toRdd.count()
-    catch { case _: Throwable => () }
-    Seq("dedup_ngram_jaccard", "dedup_simhash", "sim_cosine_topk")
-      .foreach { q =>
-        try SparkEntry.queries(q)(spark, SparkEntry.TinySfDir)
-          .queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-      }
+    val spark = GraftSession.local()
+    GraftSession.warm(spark, small)
     CacheScope.releaseAll(spark)
 
     amplify(spark, base, work, amp)

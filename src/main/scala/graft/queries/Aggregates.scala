@@ -227,9 +227,7 @@ object Aggregates extends QueryModule {
       // tiny per-batch state tables: 8 shuffle partitions keeps task
       // scheduling off the build's critical path (saved/restored —
       // production tunes this per batch size like any Spark job)
-      val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         deliver(e.filter(col("us") <= c1))
         deliver(e.filter(col("us") > c1 && col("us") <= c2))
         deliver(e.filter(col("us") > c2))
@@ -238,7 +236,7 @@ object Aggregates extends QueryModule {
           .withColumn("ts", timestamp_micros(
             lit(hi + 3L * graft.streaming.CappedSessions.GapUs))))
         graft.sources.FixtureMarker.stamp(base, fp)
-      } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
+      }
       out
       }
       if (reusable) out else build()

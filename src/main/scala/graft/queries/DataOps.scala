@@ -220,12 +220,6 @@ object DataOps extends QueryModule {
       // task-scheduling overhead off the build's critical path without
       // touching the operator itself (production tunes this per batch
       // size like any Spark job). Saved/restored around the build.
-      val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val savedWsc = s.conf.get("spark.sql.codegen.wholeStage")
-      s.conf.set("spark.sql.codegen.wholeStage", "false")
-      val savedAqe = s.conf.get("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
       def phase[T](tag: String)(f: => T): T = {
         val t0 = System.nanoTime()
         val r = f
@@ -233,7 +227,9 @@ object DataOps extends QueryModule {
           f"[admit] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
         r
       }
-      try {
+      ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8",
+          "spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.adaptive.enabled" -> "false") {
         phase("seed")(graft.streaming.StreamAdmission.seed(s, existing,
           state, "doc_id", "text"))
         phase("incA")(deliver(incA))
@@ -241,10 +237,6 @@ object DataOps extends QueryModule {
         // re-delivery: must converge with zero changes
         phase("redeliver")(deliver(incA))
         graft.sources.FixtureMarker.stamp(base, fp)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedSp)
-        s.conf.set("spark.sql.codegen.wholeStage", savedWsc)
-        s.conf.set("spark.sql.adaptive.enabled", savedAqe)
       }
       state
       }

@@ -231,9 +231,7 @@ object MultimodalStreamOps extends QueryModule {
           require(done, s"$tag: admission stream did not finish " +
             "within 5 minutes — refusing to read partial state")
         }
-        val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
           if (clipProtocol)
             MediaAdmission.seedClips(s, payloads(seed), state,
               "asset_id", "payload")
@@ -243,7 +241,7 @@ object MultimodalStreamOps extends QueryModule {
           deliver(incB)
           deliver(incA)   // replay: must converge with zero changes
           graft.sources.FixtureMarker.stamp(base, fp)
-        } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
+        }
       }
       state
     }

@@ -43,11 +43,11 @@ trait QueryModule {
   * sizes state stores to executors — a per-stream setting either way,
   * never a session constant. */
 private[graft] object ScopedConf {
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    finally prev.foreach { case (k, v) => s.conf.set(k, v) }
   }
 
   /** The stream-build partition count DERIVED instead of pinned (the
@@ -73,7 +73,8 @@ private[graft] object ScopedConf {
 
   def withStreamPartitions[T](s: SparkSession,
       input: org.apache.spark.sql.DataFrame)(body: => T): T =
-    withShufflePartitions(s, streamPartitions(s, input))(body)
+    withConf(s, "spark.sql.shuffle.partitions" ->
+      streamPartitions(s, input).toString)(body)
 }
 
 /** Shared guard for conformance entries that plant duplicate rows

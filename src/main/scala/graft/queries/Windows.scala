@@ -286,10 +286,8 @@ object Windows extends QueryModule {
     // the fixed store count 4×. At 100 TB the SAME dial scales the
     // other way: size partitions so each store's state fits an
     // executor, not by the default. Scoped to the stream and restored
-    // — batch queries keep the session's 32.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    // — batch queries keep the session's own count.
+    ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       // the stream pins numShufflePartitions from the session conf at
       // its first batch, so the restore must wait for completion
       val q = s.readStream.schema(schema)
@@ -300,7 +298,7 @@ object Windows extends QueryModule {
         .writeStream.format("memory").queryName(sink)
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.table(sink)
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("user_id"), col("event_type"))

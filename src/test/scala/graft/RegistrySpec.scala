@@ -3,19 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession. */
+/** Shared session for all suites — one JVM-wide SparkSession. Its 4
+  * cores are fixed so test partitioning does not follow the host's
+  * `$SPARK_GRAFT_CPUS`. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("4")
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
@@ -127,8 +119,17 @@ class RegistrySpec extends AnyFunSuite {
     val overlap = SparkEntry.benchBuilds.keySet & SparkEntry.queries.keySet
     assert(overlap.isEmpty, s"build name shadows a query: $overlap")
     assert(SparkEntry.benchBuilds.keySet.forall(_.endsWith("_build")))
+    // each build on its own session: a build that leaves a scoped conf
+    // changed would silently degrade every later query in the session
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage")
     SparkEntry.benchBuilds.foreach { case (name, fn) =>
-      withClue(s"$name: ") { fn(spark, sf0001) }
+      val s = spark.newSession()
+      val before = keys.map(s.conf.get)
+      try withClue(s"$name: ") {
+        fn(s, sf0001)
+        assert(keys.map(s.conf.get) === before, "build leaked session conf")
+      } finally CacheScope.releaseAll(s)
     }
   }
 
