@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   *       DataFrame construction, planning (`executedPlan`) and execution
   *       (`toRdd.count()`); CSV on stdout, per-phase medians of N runs
   *   jobs [query-or-build ...]       wall time of every Spark job an
-  *       entry runs (eager actions, AQE stages, stream micro-batches)
+  *       entry runs (eager actions, AQE stages, stream micro-batches),
+  *       and the share of the entry's wall time no job covers (gaps)
   *   explain [query ...]             formatted physical plans
   */
 object Dev {
@@ -84,6 +85,18 @@ object Dev {
     }
   }
 
+  /** Milliseconds covered by at least one [start, end) span; spans that
+    * never ended (end <= start) cover nothing. */
+  private[graft] def coveredMs(spans: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var reach = Long.MinValue
+    spans.sortBy(_._1).foreach { case (s, e) =>
+      val from = math.max(s, reach)
+      if (e > from) { covered += e - from; reach = e }
+    }
+    covered
+  }
+
   private case class Job(id: Int, start: Long, stages: Int, desc: String,
       @volatile var end: Long = 0L)
 
@@ -106,22 +119,25 @@ object Dev {
     })
     names.foreach { n =>
       seen.clear()
-      val t0 = System.nanoTime()
+      val t0 = System.currentTimeMillis() // the listener's event clock
       val r =
         try Right(SparkEntry.queries.get(n) match {
           case Some(fn) => fn(spark, sfDir).queryExecution.toRdd.count()
           case None => SparkEntry.benchBuilds(n)(spark, sfDir)
         })
         catch { case e: Throwable => Left(e) }
-      val wall = (System.nanoTime() - t0) / 1e9
+      val t1 = System.currentTimeMillis()
+      val wall = (t1 - t0) / 1e3
       Thread.sleep(300) // let the listener bus drain
       r match {
         case Left(e) => println(s"JOBS $n FAILED: ${e.getMessage}")
         case Right(_) =>
           val js = seen.values.toArray(Array.empty[Job]).sortBy(_.id)
-          val jobSum = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
+          // broadcast and AQE jobs overlap: count each instant once
+          val busy = coveredMs(js.map(j =>
+            (math.max(j.start, t0), math.min(j.end, t1)))) / 1e3
           println(f"JOBS $n wall=$wall%.3f s, ${js.length} jobs, " +
-            f"job-time sum=$jobSum%.3f s (gaps=${wall - jobSum}%.3f)")
+            f"job-time union=$busy%.3f s (gaps=${wall - busy}%.3f)")
           js.foreach { j =>
             val d = math.max(0L, j.end - j.start) / 1e3
             if (d >= 0.05)

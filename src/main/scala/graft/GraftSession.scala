@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one place a SparkSession is built: Bench, Verify, Stress, the dev
@@ -17,6 +19,12 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // CacheScope.releaseAll unpersists every registered localCheckpoint and
+    // Spark warns once per RDD that its truncated lineage cannot be
+    // recomputed: expected on release, and 70+ lines per Bench or Verify
+    // run. A Dataset checkpoints through a MapPartitionsRDD, so only that
+    // logger is raised to ERROR; every other logger stays at WARN.
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     spark
   }
 

@@ -1,7 +1,8 @@
 package graft.multimodal
 
-import Mp4Codec.{assembleMp4, be16, be16b, be32, be32b, box, child,
-  children, fourcc, fullBox, md5Hex, trackExtents, u8}
+import Bytes.{be16, be16b, be32, be32b, fourcc, u8}
+import Mp4Codec.{assembleMp4, box, child, children, fullBox, md5Hex,
+  trackExtents}
 
 /** The AAC audio tier split out of [[Mp4Codec]] (file-size rule):
   * the M4A (`soun`/`mp4a`) sample-digest walk and its ADTS (`.aac`)

@@ -34,11 +34,8 @@ package graft.multimodal
   */
 object AudioCodec {
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)).toLong |
-      (u8(b, i + 3).toLong << 24)
+  import Bytes.{be16, be16b, be32, be32b, fourcc, le16, le16b, le32, le32b,
+    riffChunk, riffChunks, u8}
 
   /** Decoded mono PCM: signed integer samples (stereo already
     * downmixed; 16-bit magnitude for 16-bit containers, 24-bit for
@@ -61,36 +58,32 @@ object AudioCodec {
     * are skipped — a re-encoded container with stripped/added tags
     * decodes to the same samples. None on anything malformed. */
   def decodePcmWav(b: Array[Byte]): Option[Pcm] = {
-    if (b.length < 12 || !(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' &&
-        b(11) == 'E')) return None
-    var p = 12
+    if (b.length < 12 || fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "WAVE")
+      return None
     var rate = 0; var channels = 0; var bits = 0; var haveFmt = false
     var dataOff = -1; var dataLen = 0; var law = 0
-    while (p + 8 <= b.length && (!haveFmt || dataOff < 0)) {
-      val id = new String(b, p, 4, "US-ASCII")
-      val sz = le32(b, p + 4)
-      if (sz < 0 || p + 8 + sz > b.length) return None // declared past buffer
-      if (id == "fmt " && sz >= 16) {
-        val tag = le16(b, p + 8)
+    val walked = riffChunks(b, 12, b.length) { (id, s, e) =>
+      if (id == "fmt " && e - s >= 16) {
+        val tag = le16(b, s)
         if (tag == 0xfffe) {
           // extensible: cbSize >= 22, SubFormat GUID at fmt+24 must
           // be integer PCM (the GUID's first u16 is the wrapped tag)
-          if (sz < 40 ||
+          if (e - s < 40 ||
               !java.util.Arrays.equals(
-                java.util.Arrays.copyOfRange(b, p + 32, p + 48),
+                java.util.Arrays.copyOfRange(b, s + 24, s + 40),
                 PcmGuid)) return None
         } else if (tag == 6 || tag == 7) law = tag     // G.711 A-law/μ-law
         else if (tag != 1) return None                 // PCM only
-        channels = le16(b, p + 10)
-        rate = le32(b, p + 12).toInt
-        bits = le16(b, p + 22)
+        channels = le16(b, s + 2)
+        rate = le32(b, s + 4).toInt
+        bits = le16(b, s + 14)
         haveFmt = true
       } else if (id == "data") {
-        dataOff = p + 8; dataLen = sz.toInt
+        dataOff = s; dataLen = e - s
       }
-      p += 8 + sz.toInt + (sz.toInt & 1)               // word-aligned
+      !haveFmt || dataOff < 0
     }
+    if (!walked) return None                           // declared past buffer
     if (!haveFmt || dataOff < 0 || rate <= 0 ||
         (channels != 1 && channels != 2)) return None
     // G.711 carries 8-bit codewords; linear PCM is 16 or 24 bit
@@ -127,44 +120,38 @@ object AudioCodec {
     * integral rates recover exactly from the top mantissa bits.
     * Unknown chunks are skipped; None on anything malformed. */
   def decodeAiff16(b: Array[Byte]): Option[Pcm] = {
-    def be16(i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-    def be32(i: Int): Long =
-      ((u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-        (u8(b, i + 2) << 8) | u8(b, i + 3))
-    if (b.length < 12 || !(b(0) == 'F' && b(1) == 'O' && b(2) == 'R' &&
-        b(3) == 'M' && b(8) == 'A' && b(9) == 'I' && b(10) == 'F' &&
-        b(11) == 'F')) return None
-    var p = 12
+    if (b.length < 12 || fourcc(b, 0) != "FORM" || fourcc(b, 8) != "AIFF")
+      return None
     var rate = 0; var channels = 0; var bits = 0; var haveComm = false
     var nFrames = 0L
     var sndOff = -1; var sndLen = 0
-    while (p + 8 <= b.length && (!haveComm || sndOff < 0)) {
-      val id = new String(b, p, 4, "US-ASCII")
-      val sz = be32(p + 4)
-      if (sz < 0 || p + 8 + sz > b.length) return None
+    // IFF chunks: the RIFF walk with big-endian sizes
+    val walked = riffChunks(b, 12, b.length, size = be32) { (id, s, e) =>
+      val sz = e - s
       if (id == "COMM" && sz >= 18) {
-        channels = be16(p + 8)
-        nFrames = be32(p + 10)
-        bits = be16(p + 14)
-        // 80-bit extended float at +16: 1 sign + 15 exponent bits,
+        channels = be16(b, s)
+        nFrames = be32(b, s + 2)
+        bits = be16(b, s + 6)
+        // 80-bit extended float at +8: 1 sign + 15 exponent bits,
         // then a 64-bit mantissa with an explicit integer bit
-        val exp = be16(p + 16) & 0x7fff
-        val mantHi = be32(p + 18)
+        val exp = be16(b, s + 8) & 0x7fff
+        val mantHi = be32(b, s + 10)
         val shift = 16383 + 31 - exp
-        if ((be16(p + 16) & 0x8000) != 0 || shift < 0 || shift > 31)
+        if ((be16(b, s + 8) & 0x8000) != 0 || shift < 0 || shift > 31)
           return None
         rate = (mantHi >>> shift).toInt
         haveComm = true
       } else if (id == "SSND") {
         if (sz < 8) return None
         // SSND payload: offset u32 + blockSize u32, then sample data
-        val off = be32(p + 8)
-        if (off < 0 || 8 + off > sz) return None
-        sndOff = p + 16 + off.toInt
+        val off = be32(b, s)
+        if (8 + off > sz) return None
+        sndOff = s + 8 + off.toInt
         sndLen = (sz - 8 - off).toInt
       }
-      p += 8 + sz.toInt + (sz.toInt & 1)               // chunks even-padded
+      !haveComm || sndOff < 0
     }
+    if (!walked) return None
     if (!haveComm || sndOff < 0 || bits != 16 || rate <= 0 ||
         (channels != 1 && channels != 2)) return None
     val frameBytes = channels * 2
@@ -174,10 +161,10 @@ object AudioCodec {
     var i = 0
     while (i < n) {
       val off = sndOff + i * frameBytes
-      val s0 = be16(off).toShort.toInt
+      val s0 = be16(b, off).toShort.toInt
       out(i) =
         if (channels == 1) s0
-        else Math.floorDiv(s0 + be16(off + 2).toShort.toInt, 2)
+        else Math.floorDiv(s0 + be16(b, off + 2).toShort.toInt, 2)
       i += 1
     }
     Some(Pcm(rate, out))
@@ -237,12 +224,6 @@ object AudioCodec {
 
   // ---- encoders (fixture planting + spec round-trips) ----
 
-  private def le16b(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32b(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, (v >>> 24).toByte)
-
   /** Encode mono/stereo 16-bit PCM as a canonical WAV; `extraChunk`
     * plants a LIST metadata chunk BEFORE data (bytes a tag stripper
     * would remove — the re-encode variant). For stereo, `samples`
@@ -258,19 +239,15 @@ object AudioCodec {
       data(i * 2 + 1) = ((samples(i) >> 8) & 0xff).toByte
       i += 1
     }
-    val extra = extraChunk.map { t =>
-      val payload = ("INFO" + t).getBytes("US-ASCII")
-      val padded = if (payload.length % 2 == 1) payload :+ 0.toByte
-        else payload
-      "LIST".getBytes("US-ASCII") ++ le32b(payload.length) ++ padded
-    }.getOrElse(Array.emptyByteArray)
+    val extra = extraChunk.map(t =>
+      riffChunk("LIST", ("INFO" + t).getBytes("US-ASCII")))
+      .getOrElse(Array.emptyByteArray)
     val blockAlign = channels * 2
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32b(16) ++
-      le16b(1) ++ le16b(channels) ++ le32b(sampleRate) ++
-      le32b(sampleRate * blockAlign) ++ le16b(blockAlign) ++ le16b(16)
-    val dataC = "data".getBytes("US-ASCII") ++ le32b(data.length) ++ data
-    val body = "WAVE".getBytes("US-ASCII") ++ fmt ++ extra ++ dataC
-    "RIFF".getBytes("US-ASCII") ++ le32b(body.length) ++ body
+    val fmt = riffChunk("fmt ", le16b(1) ++ le16b(channels) ++
+      le32b(sampleRate) ++ le32b(sampleRate * blockAlign) ++
+      le16b(blockAlign) ++ le16b(16))
+    riffChunk("RIFF", "WAVE".getBytes("US-ASCII") ++ fmt ++ extra ++
+      riffChunk("data", data))
   }
 
   // ---- G.711 companding (ITU-T G.711 μ-law / A-law) ----
@@ -344,15 +321,11 @@ object AudioCodec {
     require(codes.length % channels == 0)
     val data = codes.map(c => (c & 0xff).toByte)
     val tag = if (aLaw) 6 else 7
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32b(18) ++
-      le16b(tag) ++ le16b(channels) ++ le32b(sampleRate) ++
-      le32b(sampleRate * channels) ++ le16b(channels) ++ le16b(8) ++
-      le16b(0)
-    val dataC = "data".getBytes("US-ASCII") ++ le32b(data.length) ++ data
-    val pad = if (data.length % 2 == 1) Array(0.toByte)
-      else Array.emptyByteArray
-    val body = "WAVE".getBytes("US-ASCII") ++ fmt ++ dataC ++ pad
-    "RIFF".getBytes("US-ASCII") ++ le32b(body.length) ++ body
+    val fmt = riffChunk("fmt ", le16b(tag) ++ le16b(channels) ++
+      le32b(sampleRate) ++ le32b(sampleRate * channels) ++
+      le16b(channels) ++ le16b(8) ++ le16b(0))
+    riffChunk("RIFF", "WAVE".getBytes("US-ASCII") ++ fmt ++
+      riffChunk("data", data))
   }
 
   /** Encode mono/stereo 24-bit PCM as a canonical WAV (the hi-res
@@ -370,9 +343,11 @@ object AudioCodec {
       i += 1
     }
     val blockAlign = channels * 3
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32b(16) ++
-      le16b(1) ++ le16b(channels) ++ le32b(sampleRate) ++
-      le32b(sampleRate * blockAlign) ++ le16b(blockAlign) ++ le16b(24)
+    val fmt = riffChunk("fmt ", le16b(1) ++ le16b(channels) ++
+      le32b(sampleRate) ++ le32b(sampleRate * blockAlign) ++
+      le16b(blockAlign) ++ le16b(24))
+    // no pad byte after an odd-sized mono data chunk (the planted
+    // 24-bit fixtures have always been written this way)
     val dataC = "data".getBytes("US-ASCII") ++ le32b(data.length) ++ data
     val body = "WAVE".getBytes("US-ASCII") ++ fmt ++ dataC
     "RIFF".getBytes("US-ASCII") ++ le32b(body.length) ++ body
@@ -395,13 +370,12 @@ object AudioCodec {
     }
     val blockAlign = channels * 2
     val mask = if (channels == 1) 0x4 else 0x3   // FC | (FL+FR)
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32b(40) ++
-      le16b(0xfffe) ++ le16b(channels) ++ le32b(sampleRate) ++
-      le32b(sampleRate * blockAlign) ++ le16b(blockAlign) ++ le16b(16) ++
-      le16b(22) ++ le16b(16) ++ le32b(mask) ++ PcmGuid
-    val dataC = "data".getBytes("US-ASCII") ++ le32b(data.length) ++ data
-    val body = "WAVE".getBytes("US-ASCII") ++ fmt ++ dataC
-    "RIFF".getBytes("US-ASCII") ++ le32b(body.length) ++ body
+    val fmt = riffChunk("fmt ", le16b(0xfffe) ++ le16b(channels) ++
+      le32b(sampleRate) ++ le32b(sampleRate * blockAlign) ++
+      le16b(blockAlign) ++ le16b(16) ++ le16b(22) ++ le16b(16) ++
+      le32b(mask) ++ PcmGuid)
+    riffChunk("RIFF", "WAVE".getBytes("US-ASCII") ++ fmt ++
+      riffChunk("data", data))
   }
 
   /** Encode mono/stereo 16-bit PCM as an AIFF: FORM/AIFF with COMM
@@ -410,11 +384,6 @@ object AudioCodec {
       channels: Int): Array[Byte] = {
     require(channels == 1 || channels == 2)
     require(samples.length % channels == 0 && sampleRate > 0)
-    def be16b(v: Int): Array[Byte] =
-      Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be32b(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
     // 80-bit extended: normalize the integral rate to 1.m × 2^k
     val k = 31 - java.lang.Integer.numberOfLeadingZeros(sampleRate)
     val exp = 16383 + k

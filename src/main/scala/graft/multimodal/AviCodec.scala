@@ -31,37 +31,16 @@ package graft.multimodal
 object AviCodec {
   import PixelCodec.Gray
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le32(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)).toLong |
-      (u8(b, i + 3).toLong << 24)
-  private def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, "US-ASCII")
+  import Bytes.{fourcc, le16b, le32, le32b, riffChunk, riffChunks}
 
   private val MaxFrames = 256
-
-  /** Walk the RIFF chunk sequence in [from, until), invoking `f` with
-    * (chunkId, payloadStart, payloadEnd) — for LIST chunks the payload
-    * INCLUDES the 4-byte list type. Returns false (abort signal) if
-    * any declared size runs past the window — truncated or hostile. */
-  private def eachChunk(b: Array[Byte], from: Int, until: Int)(
-      f: (String, Int, Int) => Boolean): Boolean = {
-    var p = from
-    while (p + 8 <= until) {
-      val sz = le32(b, p + 4)
-      if (sz < 0 || p + 8 + sz > until) return false
-      if (!f(fourcc(b, p), p + 8, (p + 8 + sz).toInt)) return false
-      p += 8 + sz.toInt + (sz.toInt & 1)   // chunks are word-aligned
-    }
-    true
-  }
 
   /** First LIST of the given list type in [from, until):
     * Some(payload after the type fourcc, payload end). */
   private def findList(b: Array[Byte], from: Int, until: Int,
       listType: String): Option[(Int, Int)] = {
     var found: Option[(Int, Int)] = None
-    eachChunk(b, from, until) { (id, s, e) =>
+    riffChunks(b, from, until) { (id, s, e) =>
       if (id == "LIST" && e - s >= 4 && found.isEmpty &&
           fourcc(b, s) == listType) { found = Some((s + 4, e)); false }
       else found.isEmpty
@@ -77,12 +56,12 @@ object AviCodec {
       hdrlE: Int): Option[Int] = {
     var idx = -1
     var found: Option[Int] = None
-    eachChunk(b, hdrlS, hdrlE) { (id, s, e) =>
+    riffChunks(b, hdrlS, hdrlE) { (id, s, e) =>
       if (id == "LIST" && e - s >= 4 && fourcc(b, s) == "strl") {
         idx += 1
         if (found.isEmpty) {
           var isVids = false; var isMjpeg = false
-          eachChunk(b, s + 4, e) { (cid, cs, ce) =>
+          riffChunks(b, s + 4, e) { (cid, cs, ce) =>
             if (cid == "strh" && ce - cs >= 8) {
               isVids = fourcc(b, cs) == "vids"
               val h = fourcc(b, cs + 4)
@@ -129,7 +108,7 @@ object AviCodec {
     var n = 0
     var bad = false
     def collect(from: Int, until: Int): Boolean =
-      eachChunk(b, from, until) { (id, s, e) =>
+      riffChunks(b, from, until) { (id, s, e) =>
         if (id == "LIST" && e - s >= 4 && fourcc(b, s) == "rec ") {
           if (!collect(s + 4, e)) bad = true
         } else if (id == dataId || id == dataIdU) {
@@ -149,20 +128,9 @@ object AviCodec {
 
   // ---- encoder (fixture planting + spec round-trips) ----
 
-  private def le16b(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32b(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, (v >>> 24).toByte)
   private def cc(s: String): Array[Byte] = s.getBytes("US-ASCII")
-
-  private def chunk(id: String, payload: Array[Byte]): Array[Byte] = {
-    val padded = if (payload.length % 2 == 1) payload :+ 0.toByte
-      else payload
-    cc(id) ++ le32b(payload.length) ++ padded
-  }
   private def list(listType: String, payload: Array[Byte]): Array[Byte] =
-    chunk("LIST", cc(listType) ++ payload)
+    riffChunk("LIST", cc(listType) ++ payload)
 
   /** Encode frames as an MJPEG AVI: `hdrl` (avih + one vids/MJPG
     * strl) + `movi` of per-frame baseline JPEGs + an `idx1` index.
@@ -178,19 +146,19 @@ object AviCodec {
     val n = samples.length
     val maxSz = samples.map(_.length).max
 
-    val strh = chunk("strh",
+    val strh = riffChunk("strh",
       cc("vids") ++ cc("MJPG") ++ le32b(0) ++
       le16b(0) ++ le16b(0) ++ le32b(0) ++      // priority/language/initial
       le32b(1) ++ le32b(15) ++                 // scale / rate: 15 fps
       le32b(0) ++ le32b(n) ++                  // start / length
       le32b(maxSz) ++ le32b(-1) ++ le32b(0) ++ // bufsize / quality / sampsize
       le16b(0) ++ le16b(0) ++ le16b(w) ++ le16b(h))   // rcFrame
-    val strf = chunk("strf",
+    val strf = riffChunk("strf",
       le32b(40) ++ le32b(w) ++ le32b(h) ++
       le16b(1) ++ le16b(24) ++ cc("MJPG") ++
       le32b(w * h * 3) ++ le32b(0) ++ le32b(0) ++ le32b(0) ++ le32b(0))
     val strl = list("strl", strh ++ strf)
-    val avih = chunk("avih",
+    val avih = riffChunk("avih",
       le32b(66666) ++ le32b(maxSz * 15) ++ le32b(0) ++
       le32b(0x10) ++                           // AVIF_HASINDEX
       le32b(n) ++ le32b(0) ++ le32b(1) ++ le32b(maxSz) ++
@@ -198,7 +166,7 @@ object AviCodec {
       le32b(0) ++ le32b(0) ++ le32b(0) ++ le32b(0))
     val hdrl = list("hdrl", avih ++ strl)
 
-    val dataChunks = samples.map(s => chunk("00dc", s))
+    val dataChunks = samples.map(s => riffChunk("00dc", s))
     val moviPayload =
       if (recGroup <= 0) dataChunks.toArray.flatten
       else dataChunks.grouped(recGroup)
@@ -208,22 +176,17 @@ object AviCodec {
     // idx1 offsets are relative to the 'movi' type fourcc; walk the
     // encoded movi payload to recover each chunk's position
     val idxEntries = Array.newBuilder[Byte]
-    def indexChunks(payload: Array[Byte], at: Int, until: Int): Unit = {
-      var p = at
-      while (p + 8 <= until) {
-        val sz = le32(payload, p + 4).toInt
-        if (fourcc(payload, p) == "LIST")
-          indexChunks(payload, p + 8 + 4, p + 8 + sz)
-        else if (fourcc(payload, p) == "00dc")
+    def indexChunks(from: Int, until: Int): Boolean =
+      riffChunks(moviPayload, from, until) { (id, s, e) =>
+        if (id == "LIST") indexChunks(s + 4, e)
+        else if (id == "00dc")
           idxEntries ++= cc("00dc") ++ le32b(0x10) ++
-            le32b(4 + p) ++ le32b(sz)          // offset from 'movi' cc
-        p += 8 + sz + (sz & 1)
+            le32b(s - 4) ++ le32b(e - s)       // offset from 'movi' cc
+        true
       }
-    }
-    indexChunks(moviPayload, 0, moviPayload.length)
-    val idx1 = chunk("idx1", idxEntries.result())
+    indexChunks(0, moviPayload.length)
+    val idx1 = riffChunk("idx1", idxEntries.result())
 
-    val body = cc("AVI ") ++ hdrl ++ movi ++ idx1
-    cc("RIFF") ++ le32b(body.length) ++ body
+    riffChunk("RIFF", cc("AVI ") ++ hdrl ++ movi ++ idx1)
   }
 }

@@ -35,16 +35,8 @@ package graft.multimodal
   */
 object AvifCodec {
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 8) | u8(b, i + 1)
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3)
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-  private def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, "US-ASCII")
+  import Bytes.{be16, be16b, be32, be32b, be64, be64b, boxAt, fourcc, u8}
+  import Mp4Codec.{box, fullBox}
 
   private val MaxItems = 256
   private val MaxExtents = 64
@@ -61,24 +53,6 @@ object AvifCodec {
     try decode0(b)
     catch { case _: RuntimeException => None }
 
-  /** One box at `p`: (type, payloadStart, payloadEnd). Strict: the
-    * declared size must fit `until`. */
-  private def boxAt(b: Array[Byte], p: Int,
-      until: Int): Option[(String, Int, Int)] = {
-    if (p + 8 > until) return None
-    val sz32 = be32(b, p)
-    val typ = fourcc(b, p + 4)
-    if (sz32 == 1) {
-      if (p + 16 > until) return None
-      val sz = be64(b, p + 8)
-      if (sz < 16 || sz > until - p) return None
-      Some((typ, p + 16, (p + sz).toInt))
-    } else {
-      if (sz32 < 8 || sz32 > until - p) return None
-      Some((typ, p + 8, (p + sz32).toInt))
-    }
-  }
-
   /** All children of [from, until) in order — None unless they tile
     * the range EXACTLY (the drop-whole discipline: a truncated or
     * slack-padded master is malformed). */
@@ -87,8 +61,8 @@ object AvifCodec {
     val out = Vector.newBuilder[(String, Int, Int)]
     var p = from
     while (p < until) {
-      val (t, s, e) = boxAt(b, p, until).getOrElse(return None)
-      out += ((t, s, e))
+      val (s, e) = boxAt(b, p, until).getOrElse(return None)
+      out += ((fourcc(b, p + 4), s, e))
       p = e
     }
     Some(out.result())
@@ -314,16 +288,9 @@ object AvifCodec {
     (head + "." * (600 - head.length)).getBytes("US-ASCII")
   }
 
-  private def be16b(v: Int) = Mp4Codec.be16b(v)
-  private def be32b(v: Int) = Mp4Codec.be32b(v)
-  private def be64b(v: Long): Array[Byte] =
-    be32b((v >>> 32).toInt) ++ be32b((v & 0xffffffffL).toInt)
-  private def box(t: String, p: Array[Byte]) = Mp4Codec.box(t, p)
-  private def fullBox(t: String, p: Array[Byte]) = Mp4Codec.fullBox(t, p)
   private def fullBoxV(t: String, version: Int, flags: Int,
       p: Array[Byte]): Array[Byte] =
-    box(t, Array(version.toByte, ((flags >> 16) & 0xff).toByte,
-      ((flags >> 8) & 0xff).toByte, (flags & 0xff).toByte) ++ p)
+    box(t, be32b((version << 24) | (flags & 0xffffff)) ++ p)
 
   /** Encode a planted AVIF (or HEIC) still: `ftyp` + `meta`
     * (hdlr pict, pitm, iinf/infe, iloc, iprp with ispe + config and

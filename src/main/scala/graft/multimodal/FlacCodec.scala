@@ -28,82 +28,11 @@ import scala.collection.mutable.ArrayBuffer
 object FlacCodec {
   import AudioCodec.Pcm
 
-  // ---- CRCs (FLAC frame checksums: CRC-8 poly 0x07, CRC-16 poly
-  // 0x8005, both init 0, unreflected) ----
-
-  private val Crc8Table: Array[Int] = Array.tabulate(256) { i =>
-    var c = i
-    var k = 0
-    while (k < 8) { c = if ((c & 0x80) != 0) (c << 1) ^ 0x07 else c << 1; k += 1 }
-    c & 0xff
-  }
-
-  private val Crc16Table: Array[Int] = Array.tabulate(256) { i =>
-    var c = i << 8
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 0x8000) != 0) (c << 1) ^ 0x8005 else c << 1
-      k += 1
-    }
-    c & 0xffff
-  }
-
-  private def crc8(b: Array[Byte], from: Int, until: Int): Int = {
-    var c = 0
-    var i = from
-    while (i < until) { c = Crc8Table(c ^ (b(i) & 0xff)); i += 1 }
-    c
-  }
-
-  private def crc16(b: Array[Byte], from: Int, until: Int): Int = {
-    var c = 0
-    var i = from
-    while (i < until) {
-      c = ((c << 8) ^ Crc16Table(((c >> 8) ^ (b(i) & 0xff)) & 0xff)) & 0xffff
-      i += 1
-    }
-    c
-  }
-
-  // ---- MSB-first bit reader (out-of-bounds access throws and is
-  // caught at the decode boundary — the truncation signal) ----
-
-  private final class BitReader(b: Array[Byte], startByte: Int) {
-    var pos: Int = startByte * 8 // bit position
-    def byteAt: Int = pos >> 3
-    def bit(): Int = {
-      val v = (b(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1
-      v
-    }
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def bitsL(n: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def signed(n: Int): Int = {
-      val v = bits(n)
-      if (n > 0 && (v & (1 << (n - 1))) != 0) v - (1 << n) else v
-    }
-    def unary(): Int = {
-      var q = 0
-      while (bit() == 0) {
-        q += 1
-        if (q > (1 << 24)) throw new ArrayIndexOutOfBoundsException(q)
-      }
-      q
-    }
-    def alignByte(): Unit = pos = (pos + 7) & ~7
-  }
+  import Bytes.{Crc16, Crc8, MsbBitReader, MsbBitWriter, be24}
 
   /** UTF-8-coded frame/sample number (T.81-style extended UTF-8, up to
     * 7 bytes); -1 = malformed. */
-  private def readUtf8(r: BitReader): Long = {
+  private def readUtf8(r: MsbBitReader): Long = {
     val b0 = r.bits(8)
     if ((b0 & 0x80) == 0) return b0
     var n = 0
@@ -141,12 +70,11 @@ object FlacCodec {
       val h = b(p) & 0xff
       last = (h & 0x80) != 0
       val typ = h & 0x7f
-      val len = ((b(p + 1) & 0xff) << 16) | ((b(p + 2) & 0xff) << 8) |
-        (b(p + 3) & 0xff)
+      val len = be24(b, p + 1)
       if (p + 4 + len > b.length) return None
       if (first) {
         if (typ != 0 || len != 34) return None // STREAMINFO first
-        val r = new BitReader(b, p + 4)
+        val r = new MsbBitReader(b, p + 4, b.length)
         r.bits(16); r.bits(16) // min/max block size
         r.bits(24); r.bits(24) // min/max frame size
         sampleRate = r.bits(20)
@@ -177,7 +105,7 @@ object FlacCodec {
     * samples; return the next frame's byte offset, or None. */
   private def decodeFrame(b: Array[Byte], start: Int, chans: Int,
       mono: ArrayBuffer[Int]): Option[Int] = {
-    val r = new BitReader(b, start)
+    val r = new MsbBitReader(b, start, b.length)
     if (r.bits(14) != 0x3ffe) return None // sync
     if (r.bit() != 0) return None          // reserved
     r.bit()                                // blocking strategy
@@ -208,7 +136,7 @@ object FlacCodec {
     if (blockSize <= 0 || blockSize > (1 << 20)) return None
     // CRC-8 over the header bytes (reader is byte-aligned here)
     val hdrEnd = r.byteAt
-    if (crc8(b, start, hdrEnd) != r.bits(8)) return None
+    if (Crc8(b, start, hdrEnd) != r.bits(8)) return None
 
     val nch = if (chanAsgn <= 7) chanAsgn + 1
       else if (chanAsgn <= 10) 2
@@ -228,7 +156,7 @@ object FlacCodec {
     r.alignByte()
     val frameEnd = r.byteAt
     if (frameEnd + 2 > b.length) return None
-    if (crc16(b, start, frameEnd) != r.bits(16)) return None
+    if (Crc16(b, start, frameEnd) != r.bits(16)) return None
 
     // stereo reconstruction + exact integer downmix
     var i = 0
@@ -255,7 +183,7 @@ object FlacCodec {
   private def clamp16(v: Int): Int =
     if (v < -32768) -32768 else if (v > 32767) 32767 else v
 
-  private def decodeSubframe(r: BitReader, n: Int,
+  private def decodeSubframe(r: MsbBitReader, n: Int,
       bps: Int): Option[Array[Int]] = {
     if (r.bit() != 0) return None // padding bit
     val t = r.bits(6)
@@ -318,7 +246,7 @@ object FlacCodec {
   }
 
   /** Rice/Rice2 residual partitions into out(order until n). */
-  private def readResidual(r: BitReader, out: Array[Int], order: Int,
+  private def readResidual(r: MsbBitReader, out: Array[Int], order: Int,
       n: Int): Boolean = {
     val method = r.bits(2)
     if (method > 1) return false
@@ -357,36 +285,16 @@ object FlacCodec {
 
   // ---- encoder (fixture planting + spec round-trips) ----
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0
-    private var nb = 0
-    def put(v: Long, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1L).toInt
-        nb += 1
-        if (nb == 8) { out.write(acc); acc = 0; nb = 0 }
-        i -= 1
-      }
-    }
-    def putSigned(v: Int, len: Int): Unit =
-      put(v & ((1L << len) - 1), len)
-    def alignZero(): Unit = if (nb > 0) put(0, 8 - nb)
-    def bytes: Array[Byte] = { alignZero(); out.toByteArray }
-    def size: Int = out.size()
-  }
-
-  private def writeUtf8(bw: BitWriter, v: Long): Unit =
-    if (v < 0x80) bw.put(v, 8)
+  private def writeUtf8(bw: MsbBitWriter, v: Long): Unit =
+    if (v < 0x80) bw.bits(v, 8)
     else if (v < 0x800) {
-      bw.put(0xc0 | (v >> 6), 8); bw.put(0x80 | (v & 0x3f), 8)
+      bw.bits(0xc0 | (v >> 6), 8); bw.bits(0x80 | (v & 0x3f), 8)
     } else if (v < 0x10000) {
-      bw.put(0xe0 | (v >> 12), 8); bw.put(0x80 | ((v >> 6) & 0x3f), 8)
-      bw.put(0x80 | (v & 0x3f), 8)
+      bw.bits(0xe0 | (v >> 12), 8); bw.bits(0x80 | ((v >> 6) & 0x3f), 8)
+      bw.bits(0x80 | (v & 0x3f), 8)
     } else {
-      bw.put(0xf0 | (v >> 18), 8); bw.put(0x80 | ((v >> 12) & 0x3f), 8)
-      bw.put(0x80 | ((v >> 6) & 0x3f), 8); bw.put(0x80 | (v & 0x3f), 8)
+      bw.bits(0xf0 | (v >> 18), 8); bw.bits(0x80 | ((v >> 12) & 0x3f), 8)
+      bw.bits(0x80 | ((v >> 6) & 0x3f), 8); bw.bits(0x80 | (v & 0x3f), 8)
     }
 
   /** Optimal-ish Rice parameter for a residual slice: minimize the
@@ -428,18 +336,18 @@ object FlacCodec {
     val out = new java.io.ByteArrayOutputStream()
     out.write("fLaC".getBytes("US-ASCII"))
     // STREAMINFO (34 bytes)
-    val si = new BitWriter
+    val si = new MsbBitWriter
     val lastBlock = if (nTotal % blockSize == 0) blockSize
       else nTotal % blockSize
-    si.put(math.min(blockSize, lastBlock).toLong, 16)
-    si.put(blockSize.toLong, 16)
-    si.put(0, 24); si.put(0, 24) // frame sizes unknown
-    si.put(sampleRate.toLong, 20)
-    si.put((channels - 1).toLong, 3)
-    si.put(15, 5) // bps - 1
-    si.put(nTotal.toLong, 36)
-    si.put(0, 64); si.put(0, 64) // md5 unset
-    val siBytes = si.bytes
+    si.bits(math.min(blockSize, lastBlock).toLong, 16)
+    si.bits(blockSize.toLong, 16)
+    si.bits(0, 24); si.bits(0, 24) // frame sizes unknown
+    si.bits(sampleRate.toLong, 20)
+    si.bits((channels - 1).toLong, 3)
+    si.bits(15, 5) // bps - 1
+    si.bits(nTotal.toLong, 36)
+    si.bits(0, 64); si.bits(0, 64) // md5 unset
+    val siBytes = si.result()
     out.write(if (metaPadding > 0) 0x00 else 0x80) // STREAMINFO, last?
     out.write(0); out.write(0); out.write(34)
     out.write(siBytes)
@@ -455,12 +363,12 @@ object FlacCodec {
     var s0 = 0
     while (s0 < nTotal) {
       val n = math.min(blockSize, nTotal - s0)
-      val bw = new BitWriter
-      bw.put(0x3ffe, 14)
-      bw.put(0, 1) // reserved
-      bw.put(0, 1) // fixed blocking
-      bw.put(7, 4) // block size: 16-bit n-1 at header end
-      bw.put(0, 4) // sample rate: from STREAMINFO
+      val bw = new MsbBitWriter
+      bw.bits(0x3ffe, 14)
+      bw.bits(0, 1) // reserved
+      bw.bits(0, 1) // fixed blocking
+      bw.bits(7, 4) // block size: 16-bit n-1 at header end
+      bw.bits(0, 4) // sample rate: from STREAMINFO
       val asgn =
         if (channels == 1) 0
         else (frameIdx % 3) match {
@@ -468,14 +376,14 @@ object FlacCodec {
           case 1 => 8  // left/side
           case _ => 10 // mid/side
         }
-      bw.put(asgn.toLong, 4)
-      bw.put(4, 3) // 16-bit samples
-      bw.put(0, 1) // reserved
+      bw.bits(asgn.toLong, 4)
+      bw.bits(4, 3) // 16-bit samples
+      bw.bits(0, 1) // reserved
       writeUtf8(bw, frameIdx)
-      bw.put((n - 1).toLong, 16)
-      val hdr = bw.bytes
+      bw.bits((n - 1).toLong, 16)
+      val hdr = bw.result()
       out.write(hdr)
-      out.write(crc8(hdr, 0, hdr.length))
+      out.write(Crc8(hdr, 0, hdr.length))
 
       // channel extraction (+ decorrelation)
       val chans: Seq[(Array[Int], Int)] =
@@ -494,37 +402,37 @@ object FlacCodec {
           }
         }
 
-      val body = new BitWriter
+      val body = new MsbBitWriter
       for ((cs, eb) <- chans) {
-        body.put(0, 1) // padding bit
+        body.bits(0, 1) // padding bit
         val allEqual = cs.forall(_ == cs(0))
         if (allEqual) {
-          body.put(0, 6) // constant
-          body.put(0, 1) // no wasted bits
-          body.putSigned(cs(0), eb)
+          body.bits(0, 6) // constant
+          body.bits(0, 1) // no wasted bits
+          body.signed(cs(0), eb)
         } else if (n < 3 || frameIdx % 4 == 2) {
-          body.put(1, 6) // verbatim
-          body.put(0, 1)
-          cs.foreach(body.putSigned(_, eb))
+          body.bits(1, 6) // verbatim
+          body.bits(0, 1)
+          cs.foreach(body.signed(_, eb))
         } else {
           // order-2 polynomial predictor, through the fixed path or
           // (every 4th frame) the LPC path with coefs {2, -1}/shift 0
           // — identical residuals, distinct decode machinery
           val lpc = frameIdx % 4 == 3
           if (lpc) {
-            body.put(33, 6) // LPC, order 2 (0b100000 | order-1)
-            body.put(0, 1)
-            body.putSigned(cs(0), eb)
-            body.putSigned(cs(1), eb)
-            body.put(4, 4)  // precision 5
-            body.putSigned(0, 5) // shift 0
-            body.putSigned(2, 5)
-            body.putSigned(-1, 5)
+            body.bits(33, 6) // LPC, order 2 (0b100000 | order-1)
+            body.bits(0, 1)
+            body.signed(cs(0), eb)
+            body.signed(cs(1), eb)
+            body.bits(4, 4)  // precision 5
+            body.signed(0, 5) // shift 0
+            body.signed(2, 5)
+            body.signed(-1, 5)
           } else {
-            body.put(10, 6) // fixed, order 2
-            body.put(0, 1)
-            body.putSigned(cs(0), eb)
-            body.putSigned(cs(1), eb)
+            body.bits(10, 6) // fixed, order 2
+            body.bits(0, 1)
+            body.signed(cs(0), eb)
+            body.signed(cs(1), eb)
           }
           val err = new Array[Int](n)
           var i = 2
@@ -533,27 +441,27 @@ object FlacCodec {
             i += 1
           }
           val (param, _) = ricePick(err, 2, n)
-          body.put(0, 2)             // Rice, 4-bit params
-          body.put(0, 4)             // partition order 0
-          body.put(param.toLong, 4)
+          body.bits(0, 2)             // Rice, 4-bit params
+          body.bits(0, 4)             // partition order 0
+          body.bits(param.toLong, 4)
           i = 2
           while (i < n) {
             val u = (err(i).toLong << 1) ^ (err(i).toLong >> 63)
             val q = (u >>> param).toInt
             var z = 0
-            while (z < q) { body.put(0, 1); z += 1 }
-            body.put(1, 1)
-            body.put(u & ((1L << param) - 1), param)
+            while (z < q) { body.bits(0, 1); z += 1 }
+            body.bits(1, 1)
+            body.bits(u & ((1L << param) - 1), param)
             i += 1
           }
         }
       }
-      val bodyBytes = body.bytes // zero-aligned
+      val bodyBytes = body.result() // zero-aligned
       out.write(bodyBytes)
       // CRC-16 over header + crc8 byte + body
       val frame = out.toByteArray
       val frameStart = frame.length - hdr.length - 1 - bodyBytes.length
-      val c16 = crc16(frame, frameStart, frame.length)
+      val c16 = Crc16(frame, frameStart, frame.length)
       out.write((c16 >> 8) & 0xff)
       out.write(c16 & 0xff)
       s0 += n

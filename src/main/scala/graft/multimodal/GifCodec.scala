@@ -27,9 +27,7 @@ package graft.multimodal
 object GifCodec {
   import PixelCodec.Gray
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8)
+  import Bytes.{LsbBitReader, LsbBitWriter, le16, le16b, u8}
 
   /** GIF89a Appendix-E interlace row schedule: the stream carries rows
     * in four passes (every 8th from 0, every 8th from 4, every 4th
@@ -145,21 +143,9 @@ object GifCodec {
     var width = minCode + 1
     val out = new Array[Int](expect)
     var outN = 0
-    var bitPos = 0
+    val r = new LsbBitReader(data, 0, data.length) // running dry raises
     var prev = -1
     val buf = new Array[Int](4096) // expansion scratch (max chain)
-
-    def readCode(): Int = {
-      if (bitPos + width > data.length * 8) return -1
-      var v = 0; var i = 0
-      while (i < width) {
-        val bp = bitPos + i
-        if (((data(bp >> 3) >> (bp & 7)) & 1) != 0) v |= 1 << i
-        i += 1
-      }
-      bitPos += width
-      v
-    }
 
     def expand(code: Int): Int = { // writes chain into buf, returns len
       var c = code; var n = 0
@@ -172,8 +158,8 @@ object GifCodec {
     }
 
     while (outN < expect) {
-      val code = readCode()
-      if (code < 0 || code > nextCode || code == end) return None
+      val code = r.bits(width)
+      if (code > nextCode || code == end) return None
       if (code == clear) {
         nextCode = end + 1; width = minCode + 1; prev = -1
       } else {
@@ -404,13 +390,12 @@ object GifCodec {
     val minCode = math.max(2, ctBits)
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF89a".getBytes("US-ASCII"))
-    def le16b(v: Int): Unit = { out.write(v & 0xff); out.write(v >> 8) }
-    le16b(g.width); le16b(g.height)
+    out.write(le16b(g.width) ++ le16b(g.height))
     out.write(0x80 | (ctBits - 1)) // global table, 2^ctBits entries
     out.write(0); out.write(0)
     out.write(ct)
     out.write(0x2c)                // image descriptor
-    le16b(0); le16b(0); le16b(g.width); le16b(g.height)
+    out.write(le16b(0) ++ le16b(0) ++ le16b(g.width) ++ le16b(g.height))
     out.write(if (interlaced) 0x40 else 0) // no local table
     out.write(minCode)
     val px = if (interlaced) interlaceRows(g.luma, g.width, g.height)
@@ -441,8 +426,7 @@ object GifCodec {
       frames.head.luma.distinct.sorted, salt)
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF89a".getBytes("US-ASCII"))
-    def le16b(v: Int): Unit = { out.write(v & 0xff); out.write(v >> 8) }
-    le16b(cw); le16b(ch)
+    out.write(le16b(cw) ++ le16b(ch))
     out.write(0x80 | (gBits - 1))
     out.write(0); out.write(0)
     out.write(gct)
@@ -454,7 +438,7 @@ object GifCodec {
     frames.foreach { f =>
       // graphic-control extension: disposal 1, no transparency
       out.write(0x21); out.write(0xf9); out.write(4)
-      out.write(0x04); le16b(5); out.write(0); out.write(0)
+      out.write(0x04); out.write(le16b(5)); out.write(0); out.write(0)
       val (left, top, w, h) =
         if (prev == null || !deltaRect) (0, 0, cw, ch)
         else {
@@ -487,7 +471,7 @@ object GifCodec {
         if (useLocal) buildPalette(rect.distinct.sorted, salt)
         else (gct, gIndex, gBits)
       out.write(0x2c)
-      le16b(left); le16b(top); le16b(w); le16b(h)
+      out.write(le16b(left) ++ le16b(top) ++ le16b(w) ++ le16b(h))
       out.write((if (useLocal) 0x80 | (ctBits - 1) else 0) |
         (if (interlaced) 0x40 else 0))
       if (useLocal) out.write(ct)
@@ -507,17 +491,9 @@ object GifCodec {
   private def lzwEncode(indices: Array[Int], minCode: Int): Array[Byte] = {
     val clear = 1 << minCode
     val end = clear + 1
-    val bits = new java.io.ByteArrayOutputStream()
-    var acc = 0L
-    var accBits = 0
+    val w = new LsbBitWriter
     var width = minCode + 1
-    def put(code: Int): Unit = {
-      acc |= code.toLong << accBits
-      accBits += width
-      while (accBits >= 8) {
-        bits.write((acc & 0xff).toInt); acc >>= 8; accBits -= 8
-      }
-    }
+    def put(code: Int): Unit = w.bits(code, width)
     var dict = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
     var nextCode = end + 1
     put(clear)
@@ -548,9 +524,8 @@ object GifCodec {
     }
     if (prev >= 0) put(prev)
     put(end)
-    if (accBits > 0) bits.write((acc & 0xff).toInt)
     // wrap in 255-byte sub-blocks
-    val raw = bits.toByteArray
+    val raw = w.result()
     val out = new java.io.ByteArrayOutputStream()
     var off = 0
     while (off < raw.length) {

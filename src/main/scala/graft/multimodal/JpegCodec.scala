@@ -33,10 +33,7 @@ package graft.multimodal
   */
 object JpegCodec {
   import PixelCodec.Gray
-
-  private[multimodal] def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private[multimodal] def be16(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 8) | u8(b, i + 1)
+  import Bytes.{be16, be16b, u8}
 
   /** Zigzag index k → natural (row-major) index (T.81 Figure 5). */
   private[multimodal] val Zigzag: Array[Int] = {
@@ -534,8 +531,7 @@ object JpegCodec {
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
     def seg(m: Int, payload: Array[Int]): Unit = {
       marker(m)
-      val len = payload.length + 2
-      out.write(len >> 8); out.write(len & 0xff)
+      out.write(be16b(payload.length + 2))
       payload.foreach(out.write)
     }
     marker(0xd8) // SOI

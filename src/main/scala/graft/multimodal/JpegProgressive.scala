@@ -41,6 +41,7 @@ package graft.multimodal
 object JpegProgressive {
   import PixelCodec.Gray
   import JpegCodec._
+  import Bytes.{be16, be16b, u8}
 
   private case class Comp(id: Int, h: Int, v: Int, tq: Int)
 
@@ -451,8 +452,7 @@ object JpegProgressive {
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
     def seg(m: Int, payload: Array[Int]): Unit = {
       marker(m)
-      val len = payload.length + 2
-      out.write(len >> 8); out.write(len & 0xff)
+      out.write(be16b(payload.length + 2))
       payload.foreach(out.write)
     }
     marker(0xd8) // SOI

@@ -46,7 +46,7 @@ object Mp3Codec {
       frameDigests.mkString("").getBytes("US-ASCII"))
   }
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  import Bytes.u8
 
   // bitrate tables (kbps), index 1..14; 0 = free format (rejected),
   // 15 = invalid (ISO 11172-3 / 13818-3)

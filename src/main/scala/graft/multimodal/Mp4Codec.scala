@@ -34,37 +34,7 @@ package graft.multimodal
   */
 object Mp4Codec {
   import PixelCodec.Gray
-
-  private[multimodal] def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private[multimodal] def be16(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 8) | u8(b, i + 1)
-  private[multimodal] def be32(b: Array[Byte], i: Int): Long =
-    ((u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3))
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-  private[multimodal] def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, "US-ASCII")
-
-  /** One box at `p` in [p, until): (payloadStart, payloadEnd), or
-    * None when malformed. Size 1 reads the 64-bit `largesize` (the
-    * >4 GiB form DASH-era files use — the payload must still land in
-    * this buffer); size 0 (to-end-of-file) rejects — an unbounded box
-    * defeats the strict-extent discipline every tier here relies on. */
-  private def boxAt(b: Array[Byte], p: Int,
-      until: Int): Option[(Int, Int)] = {
-    if (p + 8 > until) return None
-    val sz32 = be32(b, p)
-    if (sz32 == 1) {
-      if (p + 16 > until) return None
-      val sz = be64(b, p + 8)
-      if (sz < 16 || sz > until - p) return None
-      Some((p + 16, p + sz.toInt))
-    } else {
-      if (sz32 < 8 || sz32 > until - p) return None
-      Some((p + 8, p + sz32.toInt))
-    }
-  }
+  import Bytes.{be16, be16b, be32, be32b, be64, boxAt, fourcc, u8}
 
   /** First child box `target` in [from, until): Some(payload offset,
     * payload end). */
@@ -517,12 +487,6 @@ object Mp4Codec {
 
   // ---- encoder (fixture planting + spec round-trips) ----
 
-  private[multimodal] def be32b(v: Int): Array[Byte] =
-    Array((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private[multimodal] def be16b(v: Int): Array[Byte] =
-    Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-
   private[multimodal] def box(typ: String, payload: Array[Byte]): Array[Byte] =
     be32b(8 + payload.length) ++ typ.getBytes("US-ASCII") ++ payload
 
@@ -718,10 +682,7 @@ object Mp4Codec {
       // trun box layout: size(4) type(4) ver/flags(4) count(4) then
       // the data_offset field at bytes 16..19 of the LEADING trun
       val trunAt = moof.length - truns.length
-      moof(trunAt + 16) = ((dataOff >> 24) & 0xff).toByte
-      moof(trunAt + 17) = ((dataOff >> 16) & 0xff).toByte
-      moof(trunAt + 18) = ((dataOff >> 8) & 0xff).toByte
-      moof(trunAt + 19) = (dataOff & 0xff).toByte
+      System.arraycopy(be32b(dataOff), 0, moof, trunAt + 16, 4)
       out.write(moof)
       val body = group.flatten
       if (largesizeMdat) {

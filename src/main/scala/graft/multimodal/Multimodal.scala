@@ -58,11 +58,7 @@ object Multimodal {
     * arithmetic — the real-codec seam stays open, and decode never
     * throws on hostile bytes. */
   object HeaderDecoder extends MediaDecoder {
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-    private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-    private def be32(b: Array[Byte], i: Int): Int =
-      (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
+    import Bytes.{be16, be32, le16, u8}
 
     private val PngSig =
       Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -71,7 +67,7 @@ object Multimodal {
     def pngDims(b: Array[Byte]): Option[(Int, Int)] =
       if (b.length >= 24 && b.take(8).sameElements(PngSig) &&
           b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R')
-        Some((be32(b, 16), be32(b, 20)))
+        Some((be32(b, 16).toInt, be32(b, 20).toInt))
       else None
 
     /** (width, height) from the first JPEG frame header (SOF), walking
@@ -136,16 +132,7 @@ object Multimodal {
     * Unrecognized payloads fall back to deterministic arithmetic on the
     * byte length (the open real-codec seam, same as [[StubDecoder]]). */
   object AvHeaderDecoder extends Serializable {
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-    private def le32(b: Array[Byte], i: Int): Long =
-      (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)).toLong |
-        (u8(b, i + 3).toLong << 24)
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-        (u8(b, i + 2) << 8) | u8(b, i + 3))
-    private def fourcc(b: Array[Byte], i: Int): String =
-      new String(b, i, 4, "US-ASCII")
+    import Bytes.{be32, fourcc, le16, le32, u8}
 
     /** (sample_rate, channels, duration_ms) from a RIFF/WAVE header. */
     def wavMeta(b: Array[Byte]): Option[(Int, Int, Long)] = {
@@ -226,11 +213,8 @@ object Multimodal {
     * dimensions (the payload after the header is arbitrary bytes; the
     * metadata tier never reads past the header). */
   object MediaHeaders {
-    private def be16(v: Int): Array[Byte] =
-      Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    private def be32(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    import Bytes.{be16b, be32b, le16b, le32b}
+    import Mp4Codec.box
 
     /** Valid 33-byte PNG prefix: signature + IHDR (8-bit RGB,
       * deflate/adaptive/no-interlace) with a correct CRC32. */
@@ -238,11 +222,11 @@ object Multimodal {
       val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
         .map(_.toByte)
       val typeAndData = "IHDR".getBytes("US-ASCII") ++
-        be32(width) ++ be32(height) ++
+        be32b(width) ++ be32b(height) ++
         Array[Byte](8, 2, 0, 0, 0)
       val crc = new java.util.zip.CRC32
       crc.update(typeAndData)
-      sig ++ be32(13) ++ typeAndData ++ be32(crc.getValue.toInt)
+      sig ++ be32b(13) ++ typeAndData ++ be32b(crc.getValue.toInt)
     }
 
     /** Valid 39-byte JPEG prefix: SOI + JFIF APP0 + SOF0 (8-bit,
@@ -253,7 +237,7 @@ object Multimodal {
         "JFIF".getBytes("US-ASCII") ++
         Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
       val sof0 = Array(0xff, 0xc0, 0x00, 0x11, 0x08).map(_.toByte) ++
-        be16(height) ++ be16(width) ++
+        be16b(height) ++ be16b(width) ++
         Array[Byte](3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
       soi ++ app0 ++ sof0
     }
@@ -261,15 +245,7 @@ object Multimodal {
     /** 13-byte GIF89a prefix: signature + logical screen descriptor. */
     def gif(width: Int, height: Int): Array[Byte] =
       "GIF89a".getBytes("US-ASCII") ++
-        Array((width & 0xff).toByte, ((width >> 8) & 0xff).toByte,
-          (height & 0xff).toByte, ((height >> 8) & 0xff).toByte,
-          0.toByte, 0.toByte, 0.toByte)
-
-    private def le16b(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    private def le32b(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, (v >>> 24).toByte)
+        le16b(width) ++ le16b(height) ++ Array[Byte](0, 0, 0)
 
     /** Canonical 44-byte PCM WAV header declaring `dataLen` bytes of
       * 16-bit samples (the tail after the header plays the samples'
@@ -288,23 +264,19 @@ object Multimodal {
       * version-0 `mvhd` with the given timescale and tick duration —
       * 132 bytes total. */
     def mp4(timescale: Int, durationTicks: Int): Array[Byte] = {
-      val ftyp = be32(16) ++ "ftypisom".getBytes("US-ASCII") ++ be32(0)
+      val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ be32b(0))
       val mvhdPayload =
-        be32(0) ++                      // version 0 + flags
-        be32(0) ++ be32(0) ++           // creation / modification
-        be32(timescale) ++ be32(durationTicks) ++
-        be32(0x00010000) ++             // rate 1.0
+        be32b(0) ++                     // version 0 + flags
+        be32b(0) ++ be32b(0) ++         // creation / modification
+        be32b(timescale) ++ be32b(durationTicks) ++
+        be32b(0x00010000) ++            // rate 1.0
         Array[Byte](0x01, 0x00, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0) ++ // volume u16 + 10 reserved
-        (be32(0x00010000) ++ be32(0) ++ be32(0) ++
-         be32(0) ++ be32(0x00010000) ++ be32(0) ++
-         be32(0) ++ be32(0) ++ be32(0x40000000)) ++ // unity matrix
+        (be32b(0x00010000) ++ be32b(0) ++ be32b(0) ++
+         be32b(0) ++ be32b(0x00010000) ++ be32b(0) ++
+         be32b(0) ++ be32b(0) ++ be32b(0x40000000)) ++ // unity matrix
         Array.fill[Byte](24)(0) ++      // pre_defined
-        be32(2)                         // next_track_ID
-      val mvhd = be32(8 + mvhdPayload.length) ++
-        "mvhd".getBytes("US-ASCII") ++ mvhdPayload
-      val moov = be32(8 + mvhd.length) ++
-        "moov".getBytes("US-ASCII") ++ mvhd
-      ftyp ++ moov
+        be32b(2)                        // next_track_ID
+      ftyp ++ box("moov", box("mvhd", mvhdPayload))
     }
 
     /** Header sizes, mirrored by the DuckDB oracles (n_bytes = header

@@ -74,40 +74,16 @@ object OggCodec {
       packetDigests.mkString("").getBytes("US-ASCII"))
   }
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le32(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)).toLong |
-      (u8(b, i + 3).toLong << 24)
+  import Bytes.{Crc32, be16, be24, le32, le32b, u8}
 
-  /** RFC 3533 CRC-32: polynomial 0x04c11db7, init 0, no reflection,
-    * no final xor. */
-  private val CrcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var r = i << 24
-      var k = 0
-      while (k < 8) {
-        r = if ((r & 0x80000000) != 0) (r << 1) ^ 0x04c11db7 else r << 1
-        k += 1
-      }
-      t(i) = r
-      i += 1
-    }
-    t
-  }
+  private val ZeroCrcField = new Array[Byte](4)
 
-  private[graft] def crc(b: Array[Byte], from: Int, until: Int,
-      zeroAt: Int = -1): Int = {
-    var r = 0
-    var i = from
-    while (i < until) {
-      val v = if (zeroAt >= 0 && i >= zeroAt && i < zeroAt + 4) 0
-        else u8(b, i)
-      r = (r << 8) ^ CrcTable(((r >>> 24) ^ v) & 0xff)
-      i += 1
-    }
-    r
+  /** RFC 3533 checksum of the page at [from, until): CRC-32 (init 0,
+    * no reflection, no final xor) with the page's own checksum field
+    * (bytes 22–25) read as zeros. */
+  private[graft] def pageCrc(b: Array[Byte], from: Int, until: Int): Int = {
+    val head = Crc32(b, from, from + 22)
+    Crc32(b, from + 26, until, init = Crc32(ZeroCrcField, 0, 4, init = head))
   }
 
   private val MaxPackets = 1 << 16
@@ -160,9 +136,7 @@ object OggCodec {
       val body = segTable + nSegs
       val pageEnd = body + bodyLen
       if (pageEnd > b.length) return None
-      // CRC over the whole page with the checksum field zeroed
-      if ((crc(b, p, pageEnd, zeroAt = p + 22) & 0xffffffffL) != wantCrc)
-        return None
+      if ((pageCrc(b, p, pageEnd) & 0xffffffffL) != wantCrc) return None
 
       val st = if (bos) {
         // a BOS page starts the NEXT LINK (RFC 3533 sequential
@@ -341,13 +315,12 @@ object OggCodec {
     if (ident.length >= 51 && u8(ident, 0) == 0x7f &&
         new String(ident, 1, 4, "US-ASCII") == "FLAC") {
       if (u8(ident, 5) != 1) return None // mapping major version 1
-      val nHdr = (u8(ident, 7) << 8) | u8(ident, 8)
+      val nHdr = be16(ident, 7)
       if (new String(ident, 9, 4, "US-ASCII") != "fLaC") return None
       // STREAMINFO block: type 0, length 34 (the FLAC spec's fixed
       // size) — sample rate 20 bits, channels-1 3 bits at bytes 10-12
       if ((u8(ident, 13) & 0x7f) != 0) return None
-      val blen = (u8(ident, 14) << 16) | (u8(ident, 15) << 8) |
-        u8(ident, 16)
+      val blen = be24(ident, 14)
       if (blen != 34 || ident.length < 17 + 34) return None
       val sampleRate = (u8(ident, 27) << 12) | (u8(ident, 28) << 4) |
         (u8(ident, 29) >> 4)
@@ -360,8 +333,7 @@ object OggCodec {
       while (h <= nHdr) {
         val p = all(h)
         if (p.length < 4 || (u8(p, 0) & 0x7f) > 6) return None
-        if (((u8(p, 1) << 16) | (u8(p, 2) << 8) | u8(p, 3)) !=
-          p.length - 4) return None
+        if (be24(p, 1) != p.length - 4) return None
         h += 1
       }
       val audio = all.drop(1 + nHdr)
@@ -473,22 +445,15 @@ object OggCodec {
       var g = granule
       var i = 0
       while (i < 8) { header.write((g & 0xff).toInt); g >>= 8; i += 1 }
-      def le(v: Long): Unit = {
-        header.write((v & 0xff).toInt); header.write(((v >> 8) & 0xff).toInt)
-        header.write(((v >> 16) & 0xff).toInt)
-        header.write(((v >> 24) & 0xff).toInt)
-      }
-      le(serial); le(seq); le(0)           // CRC placeholder
+      header.write(le32b(serial.toInt)); header.write(le32b(seq.toInt))
+      header.write(le32b(0))               // CRC placeholder
       header.write(lace.length)
       lace.foreach(header.write)
       val hb = header.toByteArray
       val bb = segments.toArray.flatten
       val pageBytes = hb ++ bb
-      val c = crc(pageBytes, 0, pageBytes.length)
-      pageBytes(22) = (c & 0xff).toByte
-      pageBytes(23) = ((c >> 8) & 0xff).toByte
-      pageBytes(24) = ((c >> 16) & 0xff).toByte
-      pageBytes(25) = ((c >>> 24) & 0xff).toByte
+      System.arraycopy(le32b(pageCrc(pageBytes, 0, pageBytes.length)), 0,
+        pageBytes, 22, 4)
       pages += pageBytes
       seq += 1
     }

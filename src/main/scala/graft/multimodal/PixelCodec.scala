@@ -38,12 +38,7 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   */
 object PixelCodec {
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be32(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
+  import Bytes.{be32, be32b, le16, le16b, le32, le32b, u8}
 
   /** A decoded grayscale image: luma (0–255) row-major. */
   case class Gray(width: Int, height: Int, luma: Array[Int])
@@ -137,13 +132,13 @@ object PixelCodec {
     var plte: Array[Byte] = null
     val idat = new java.io.ByteArrayOutputStream()
     while (p + 8 <= b.length) {
-      val len = be32(b, p)
+      val len = be32(b, p).toInt
       if (len < 0 || p + 12 + len > b.length) return None
       val typ = new String(b, p + 4, 4, "US-ASCII")
       typ match {
         case "IHDR" =>
           if (len != 13) return None
-          w = be32(b, p + 8); h = be32(b, p + 12)
+          w = be32(b, p + 8).toInt; h = be32(b, p + 12).toInt
           colorType = u8(b, p + 17)
           depthBits = u8(b, p + 16)
           // gray: 1/2/4/8/16; palette: 1/2/4/8; RGB/RGBA: 8/16 —
@@ -361,9 +356,9 @@ object PixelCodec {
     * write R=G=B, where the weights collapse to identity). */
   def decodeBmp24(b: Array[Byte]): Option[Gray] = {
     if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return None
-    val dataOff = le32(b, 10)
-    if (le32(b, 14) < 40) return None             // header size
-    val w = le32(b, 18); val h = le32(b, 22)
+    val dataOff = le32(b, 10).toInt
+    if (le32(b, 14).toInt < 40) return None       // header size
+    val w = le32(b, 18).toInt; val h = le32(b, 22).toInt
     if (le16(b, 26) != 1 || le16(b, 28) != 24 || le32(b, 30) != 0)
       return None                                  // planes/bpp/compression
     if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
@@ -454,10 +449,6 @@ object PixelCodec {
     decodePixels(payload).flatMap(lumaGrid8).map(dhash64)
 
   // ---- encoders (fixture planting + spec round-trips) ----
-
-  private def be32b(v: Int): Array[Byte] =
-    Array((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
 
   private def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
     val td = typ.getBytes("US-ASCII") ++ data
@@ -741,12 +732,6 @@ object PixelCodec {
     assemblePng(g.width, g.height, 3, Some(plte),
       deflateFiltered(rows, g.width, 1, 0), None)
   }
-
-  private def le16b(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32b(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, (v >>> 24).toByte)
 
   /** Encode a 24-bit bottom-up BMP with R=G=B=luma (the format-
     * conversion variant of the same image). */

@@ -23,16 +23,13 @@ package graft.multimodal
 object TiffCodec {
   import PixelCodec.{Gray, lum}
 
+  import Bytes.{MsbBitReader, MsbBitWriter, be16, be16b, be32, be32b, le16,
+    le16b, le32, le32b}
+
+  /** Reads in the file's byte order (II = little-, MM = big-endian). */
   private final class Reader(b: Array[Byte], le: Boolean) {
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int =
-      if (le) u8(i) | (u8(i + 1) << 8)
-      else (u8(i) << 8) | u8(i + 1)
-    def u32(i: Int): Long =
-      if (le) (u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16)).toLong |
-        (u8(i + 3).toLong << 24)
-      else (u8(i).toLong << 24) | (u8(i + 1) << 16) |
-        (u8(i + 2) << 8) | u8(i + 3)
+    def u16(i: Int): Int = if (le) le16(b, i) else be16(b, i)
+    def u32(i: Int): Long = if (le) le32(b, i) else be32(b, i)
     def ok(i: Long, n: Long): Boolean = i >= 0 && i + n <= b.length
   }
 
@@ -198,34 +195,20 @@ object TiffCodec {
   // made early writers incompatible, standardized as mandatory by
   // TIFF 6.0 and libtiff).
 
-  /** LZW-decode one strip into `out[at, at+need)`; strict: EOI (or
-    * end of input) must land exactly `need` bytes. */
+  /** LZW-decode one strip into `out[at, at+need)`; strict: EOI must
+    * land exactly `need` bytes (input ending before EOI raises). */
   private def unLzw(b: Array[Byte], from: Int, until: Int,
       out: Array[Byte], at: Int, need: Int): Boolean = {
-    var pos = from
-    var acc = 0L
-    var nBits = 0
+    val r = new MsbBitReader(b, from, until)
     var width = 9
-    def read(): Int = {
-      while (nBits < width) {
-        if (pos >= until) return -1
-        acc = (acc << 8) | (b(pos) & 0xffL)
-        nBits += 8
-        pos += 1
-      }
-      val v = ((acc >>> (nBits - width)) & ((1 << width) - 1)).toInt
-      nBits -= width
-      v
-    }
     val table = new Array[Array[Byte]](4096)
     var i = 0
     while (i < 256) { table(i) = Array(i.toByte); i += 1 }
     var next = 258
     var prev: Array[Byte] = null
     var got = 0
-    var code = read()
+    var code = r.bits(width)
     while (code != 257) {
-      if (code < 0) return false           // ran out of bits before EOI
       if (code == 256) {                   // clear
         next = 258; width = 9; prev = null
       } else {
@@ -244,7 +227,7 @@ object TiffCodec {
         if (next == (1 << width) - 1 && width < 12) width += 1
         prev = entry
       }
-      code = read()
+      code = r.bits(width)
     }
     got == need
   }
@@ -253,18 +236,9 @@ object TiffCodec {
     * the dictionary with a ClearCode whenever it fills. */
   private def lzwStrip(raw: Array[Byte], from: Int,
       len: Int): Array[Byte] = {
-    val outB = new java.io.ByteArrayOutputStream(len / 2 + 16)
-    var acc = 0L
-    var nBits = 0
+    val w = new MsbBitWriter
     var width = 9
-    def write(code: Int): Unit = {
-      acc = (acc << width) | code
-      nBits += width
-      while (nBits >= 8) {
-        outB.write(((acc >>> (nBits - 8)) & 0xff).toInt)
-        nBits -= 8
-      }
-    }
+    def write(code: Int): Unit = w.bits(code, width)
     var dict = scala.collection.mutable.HashMap.empty[Seq[Byte], Int]
     var next = 258
     def reset(): Unit = { dict = scala.collection.mutable.HashMap.empty
@@ -298,8 +272,7 @@ object TiffCodec {
     }
     if (curCode >= 0) write(curCode)
     write(257)                             // EOI
-    if (nBits > 0) outB.write(((acc << (8 - nBits)) & 0xff).toInt)
-    outB.toByteArray
+    w.result()
   }
 
   /** Zlib-Deflate one strip (encoder side of compression 8). */
@@ -438,14 +411,8 @@ object TiffCodec {
     }
 
     val le = littleEndian
-    def b16(v: Int): Array[Byte] =
-      if (le) Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-      else Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def b32(v: Int): Array[Byte] =
-      if (le) Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, (v >>> 24).toByte)
-      else Array((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    def b16(v: Int): Array[Byte] = if (le) le16b(v) else be16b(v)
+    def b32(v: Int): Array[Byte] = if (le) le32b(v) else be32b(v)
 
     // layout: 8-byte header, IFD (10 tags), [bits array], [strip
     // tables when >1 strip], strip data

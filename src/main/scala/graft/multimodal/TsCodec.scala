@@ -50,7 +50,7 @@ package graft.multimodal
   */
 object TsCodec {
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  import Bytes.{Crc32, be16, be16b, be32, be32b, u8}
 
   private val PacketLen = 188
   private val MaxSamples = 256
@@ -65,26 +65,6 @@ object TsCodec {
       sampleDigests: Vector[String]) {
     def fingerprint: String = Mp4Codec.md5Hex(
       sampleDigests.mkString("").getBytes("US-ASCII"))
-  }
-
-  /** CRC-32/MPEG-2 (ISO 13818-1 Annex A): poly 0x04C11DB7, MSB-first,
-    * init all-ones, no reflection, no final xor. */
-  private[multimodal] def crc32Mpeg(b: Array[Byte], from: Int,
-      until: Int): Long = {
-    var crc = 0xffffffffL
-    var i = from
-    while (i < until) {
-      crc ^= (u8(b, i).toLong << 24)
-      var k = 0
-      while (k < 8) {
-        crc = if ((crc & 0x80000000L) != 0) ((crc << 1) ^ 0x04C11DB7L)
-          else (crc << 1)
-        crc &= 0xffffffffL
-        k += 1
-      }
-      i += 1
-    }
-    crc
   }
 
   def decodeTsDigest(b: Array[Byte]): Option[TsClip] =
@@ -129,13 +109,13 @@ object TsCodec {
     if (s + 3 > limit) return None
     if (u8(b, s) != tableId) return None
     if ((u8(b, s + 1) & 0x80) == 0) return None // section_syntax_indicator
-    val secLen = ((u8(b, s + 1) & 0x0f) << 8) | u8(b, s + 2)
+    val secLen = be16(b, s + 1) & 0x0fff
     if (secLen < 9 || secLen > 1021) return None
     val end = s + 3 + secLen
     if (end > limit) return None               // multi-packet PSI: out of tier scope
-    val want = (u8(b, end - 4).toLong << 24) | (u8(b, end - 3).toLong << 16) |
-      (u8(b, end - 2).toLong << 8) | u8(b, end - 1).toLong
-    if (crc32Mpeg(b, s, end - 4) != want) return None
+    // CRC-32/MPEG-2 (ISO 13818-1 Annex A): init all-ones
+    if ((Crc32(b, s, end - 4, init = -1) & 0xffffffffL) != be32(b, end - 4))
+      return None
     var i = end
     while (i < limit) {                        // section stuffing
       if (u8(b, i) != 0xff) return None
@@ -155,7 +135,7 @@ object TsCodec {
     if (u8(pes, 0) != 0 || u8(pes, 1) != 0 || u8(pes, 2) != 1) return null
     val sid = u8(pes, 3)
     if (sid < 0xe0 || sid > 0xef) return null  // video stream_id
-    val pesLen = (u8(pes, 4) << 8) | u8(pes, 5)
+    val pesLen = be16(pes, 4)
     // a nonzero PES_packet_length must cover the reassembled bytes
     // EXACTLY; 0 is the unbounded video form (bounded by the next
     // payload-unit start — already applied by the caller's split)
@@ -246,7 +226,7 @@ object TsCodec {
       val b1 = u8(b, p + 1)
       if ((b1 & 0x80) != 0) return None        // transport_error_indicator
       val pusi = (b1 & 0x40) != 0
-      val pid = ((b1 & 0x1f) << 8) | u8(b, p + 2)
+      val pid = be16(b, p + 1) & 0x1fff
       val b3 = u8(b, p + 3)
       if ((b3 >> 6) != 0) return None          // scrambling_control
       val afc = (b3 >> 4) & 3
@@ -278,8 +258,8 @@ object TsCodec {
           var q = s + 5
           var found = -1
           while (q + 4 <= e) {
-            val prog = (u8(b, q) << 8) | u8(b, q + 1)
-            val mpid = ((u8(b, q + 2) & 0x1f) << 8) | u8(b, q + 3)
+            val prog = be16(b, q)
+            val mpid = be16(b, q + 2) & 0x1fff
             if (prog != 0 && found < 0) found = mpid
             q += 4
           }
@@ -292,7 +272,7 @@ object TsCodec {
           val (s, e) = psiSection(b, payload, limit, 0x02)
             .getOrElse(return None)
           if (e - s < 9) return None
-          val pil = ((u8(b, s + 7) & 0x0f) << 8) | u8(b, s + 8)
+          val pil = be16(b, s + 7) & 0x0fff
           var q = s + 9 + pil
           var vp = -1
           var vHevc = false
@@ -300,8 +280,8 @@ object TsCodec {
           var lev = 0
           while (q + 5 <= e) {
             val st = u8(b, q)
-            val epid = ((u8(b, q + 1) & 0x1f) << 8) | u8(b, q + 2)
-            val eil = ((u8(b, q + 3) & 0x0f) << 8) | u8(b, q + 4)
+            val epid = be16(b, q + 1) & 0x1fff
+            val eil = be16(b, q + 3) & 0x0fff
             if (q + 5 + eil > e) return None
             if ((st == 0x1b || st == 0x24) && vp < 0) { // H.264/H.265
               vp = epid
@@ -446,9 +426,7 @@ object TsCodec {
       s.write(0x00); s.write(0x00)             // section numbers
       s.write(body, 0, body.length)
       val raw = s.toByteArray
-      val c = crc32Mpeg(raw, 0, raw.length)
-      s.write(((c >> 24) & 0xff).toInt); s.write(((c >> 16) & 0xff).toInt)
-      s.write(((c >> 8) & 0xff).toInt); s.write((c & 0xff).toInt)
+      s.write(be32b(Crc32(raw, 0, raw.length, init = -1)))
       s.toByteArray
     }
 
@@ -551,7 +529,7 @@ object TsCodec {
       val pesLen = if (pesLenZero) 0 else 3 + ptsB.length + esb.length
       val pes = new java.io.ByteArrayOutputStream()
       pes.write(0); pes.write(0); pes.write(1); pes.write(0xe0)
-      pes.write((pesLen >> 8) & 0xff); pes.write(pesLen & 0xff)
+      pes.write(be16b(pesLen))
       pes.write(0x80); pes.write(0x80)         // '10', PTS present
       pes.write(ptsB.length)
       pes.write(ptsB, 0, ptsB.length)
@@ -564,8 +542,7 @@ object TsCodec {
         val ab = s"adts-sib:$scene:$k".getBytes("US-ASCII")
         val apes = new java.io.ByteArrayOutputStream()
         apes.write(0); apes.write(0); apes.write(1); apes.write(0xc0)
-        val alen = 3 + ab.length
-        apes.write((alen >> 8) & 0xff); apes.write(alen & 0xff)
+        apes.write(be16b(3 + ab.length))
         apes.write(0x80); apes.write(0x00); apes.write(0)
         apes.write(ab, 0, ab.length)
         writePes(audPid, apes.toByteArray)

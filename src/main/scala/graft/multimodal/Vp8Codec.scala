@@ -45,11 +45,10 @@ object Vp8Codec {
   import PixelCodec.Gray
   import Vp8Entropy.BoolDecoder
   import Vp8Tables._
+  import Bytes.{le16, le24, u8}
 
   private def fail(msg: String): Nothing =
     throw new IllegalStateException(msg)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
 
   /** Parsed frame-level state shared by mode parse / tokens / recon. */
   private[multimodal] final class Header(
@@ -83,14 +82,14 @@ object Vp8Codec {
   private def decode0(b: Array[Byte], from: Int,
       until: Int): Option[Gray] = {
     if (until - from < 10 || until > b.length) return None
-    val tag = u8(b, from) | (u8(b, from + 1) << 8) | (u8(b, from + 2) << 16)
+    val tag = le24(b, from)
     if ((tag & 1) != 0) return None        // interframe: not a still
     if (((tag >> 1) & 7) > 3) return None  // version reserved
     val firstPartSize = tag >> 5
     if (u8(b, from + 3) != 0x9d || u8(b, from + 4) != 0x01 ||
         u8(b, from + 5) != 0x2a) return None
-    val width = (u8(b, from + 6) | (u8(b, from + 7) << 8)) & 0x3fff
-    val height = (u8(b, from + 8) | (u8(b, from + 9) << 8)) & 0x3fff
+    val width = le16(b, from + 6) & 0x3fff
+    val height = le16(b, from + 8) & 0x3fff
     if (width == 0 || height == 0) return None
     if (width.toLong * height > (1L << 26)) return None
     val part1 = from + 10
@@ -112,9 +111,7 @@ object Vp8Codec {
     partStarts(0) = sizesAt + 3 * (nParts - 1)
     var pi = 0
     while (pi < nParts - 1) {
-      val sz = u8(b, sizesAt + 3 * pi) |
-        (u8(b, sizesAt + 3 * pi + 1) << 8) |
-        (u8(b, sizesAt + 3 * pi + 2) << 16)
+      val sz = le24(b, sizesAt + 3 * pi)
       partStarts(pi + 1) = partStarts(pi) + sz
       if (partStarts(pi + 1) > until) return None
       pi += 1

@@ -53,18 +53,8 @@ object Vp8Encoder {
       probUpdates: Seq[(Int, Int, Int, Int, Int)] = Nil): Array[Byte] = {
     val payload = encodeVp8Frame(g, qi, nParts, skipFlags, filterLevel,
       simpleFilter, sharpness, segmented, probUpdates)
-    val out = new java.io.ByteArrayOutputStream(payload.length + 32)
-    def fourcc(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    val chunk = payload.length + (payload.length & 1)
-    fourcc("RIFF"); le32(4 + 8 + chunk); fourcc("WEBP")
-    fourcc("VP8 "); le32(payload.length)
-    out.write(payload)
-    if ((payload.length & 1) == 1) out.write(0)
-    out.toByteArray
+    Bytes.riffChunk("RIFF",
+      "WEBP".getBytes("US-ASCII") ++ Bytes.riffChunk("VP8 ", payload))
   }
 
   /** The raw VP8 key-frame payload. */

@@ -1,62 +1,18 @@
 package graft.multimodal
 
-/** Bit-level I/O and canonical prefix codes for the VP8L (WebP
-  * lossless) bitstream — the RFC 9649 conventions: bits pack LSB-first
-  * within bytes, prefix codes are canonical Huffman codes assigned in
-  * symbol order within each length, shorter lengths first, and the
-  * per-symbol code is read MSB-of-code-last (i.e. each successive bit
-  * descends the canonical tree).
+/** Canonical prefix codes for the VP8L (WebP lossless) bitstream —
+  * the RFC 9649 conventions: bits pack LSB-first within bytes (read and
+  * written through [[Bytes.LsbBitReader]] / [[Bytes.LsbBitWriter]]),
+  * prefix codes are canonical Huffman codes assigned in symbol order
+  * within each length, shorter lengths first, and the per-symbol code
+  * is read MSB-of-code-last (i.e. each successive bit descends the
+  * canonical tree).
   *
   * Shared by [[WebpCodec]]'s decoder and encoder so a round-trip
   * exercises one definition of the bit order and code construction.
   */
 private[multimodal] object Vp8lBits {
-
-  /** LSB-first bit reader. Reads past the end raise (the codec
-    * boundary converts to None — hostile-input discipline). */
-  final class BitReader(b: Array[Byte], from: Int, until: Int) {
-    private var pos = from
-    private var acc = 0L
-    private var nBits = 0
-
-    def readBit(): Int = readBits(1)
-
-    /** Up to 24 bits, LSB-first. */
-    def readBits(n: Int): Int = {
-      while (nBits < n) {
-        if (pos >= until) throw new IllegalStateException("eof")
-        acc |= (b(pos) & 0xffL) << nBits
-        nBits += 8
-        pos += 1
-      }
-      val v = (acc & ((1L << n) - 1)).toInt
-      acc >>>= n
-      nBits -= n
-      v
-    }
-  }
-
-  /** LSB-first bit writer (encoder side). */
-  final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0L
-    private var nBits = 0
-
-    def writeBits(v: Int, n: Int): Unit = {
-      acc |= (v.toLong & ((1L << n) - 1)) << nBits
-      nBits += n
-      while (nBits >= 8) {
-        out.write((acc & 0xff).toInt)
-        acc >>>= 8
-        nBits -= 8
-      }
-    }
-
-    def result(): Array[Byte] = {
-      if (nBits > 0) out.write((acc & 0xff).toInt)
-      out.toByteArray
-    }
-  }
+  import Bytes.{LsbBitReader, LsbBitWriter}
 
   val MaxCodeLength = 15
 
@@ -105,12 +61,12 @@ private[multimodal] object Vp8lBits {
     }
 
     /** Decode one symbol: walk bits MSB-of-code-first. */
-    def readSymbol(r: BitReader): Int = {
+    def readSymbol(r: LsbBitReader): Int = {
       if (single >= 0) return single
       var code = 0
       var l = 0
       while (l < MaxCodeLength) {
-        code = (code << 1) | r.readBit()
+        code = (code << 1) | r.bit()
         l += 1
         val count = firstSym(l + 1) - firstSym(l)
         if (count > 0 && code - firstCode(l) < count && code >= firstCode(l))
@@ -137,11 +93,11 @@ private[multimodal] object Vp8lBits {
 
   /** Write a symbol through the encoder table: the code's bits
     * MSB-first (each bit is what the decoder's tree walk consumes). */
-  def writeSymbol(w: BitWriter, table: Array[(Int, Int)], sym: Int): Unit = {
+  def writeSymbol(w: LsbBitWriter, table: Array[(Int, Int)], sym: Int): Unit = {
     val (code, len) = table(sym)
     var i = len - 1
     while (i >= 0) {
-      w.writeBits((code >> i) & 1, 1)
+      w.bits((code >> i) & 1, 1)
       i -= 1
     }
   }

@@ -57,7 +57,7 @@ object WebmCodec {
       frameDigests.mkString("").getBytes("US-ASCII"))
   }
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  import Bytes.{le32, le32b, u8}
 
   /** Read an EBML element ID at `p` (raw bytes INCLUDING the length
     * marker, per RFC 8794 §5): Some(id, nextOffset). */
@@ -140,13 +140,9 @@ object WebmCodec {
     if (from >= until || u8(b, from) != 0xBF) return Some(from)
     val (sz, sp) = readSize(b, from + 1, until).getOrElse(return None)
     if (sz != 4 || sp + 4 > until) return None
-    if (crc32(b, sp + 4, until) != leU32(b, sp)) None
+    if (crc32(b, sp + 4, until) != le32(b, sp)) None
     else Some(sp + 4)
   }
-
-  private def leU32(b: Array[Byte], i: Int): Long =
-    u8(b, i).toLong | (u8(b, i + 1).toLong << 8) |
-      (u8(b, i + 2).toLong << 16) | (u8(b, i + 3).toLong << 24)
 
   private def crc32(b: Array[Byte], from: Int, until: Int): Long = {
     val c = new java.util.zip.CRC32()
@@ -394,7 +390,7 @@ object WebmCodec {
             val (xsz, xsp) = readSize(b, c + 1, bound)
               .getOrElse(return None)
             if (xsz != 4 || xsp + 4 > bound) return None
-            crcWant = leU32(b, xsp)
+            crcWant = le32(b, xsp)
             crcFrom = xsp + 4
             c = crcFrom
           }
@@ -502,9 +498,7 @@ object WebmCodec {
   private def crcPrefixed(payload: Array[Byte]): Array[Byte] = {
     val c = new java.util.zip.CRC32()
     c.update(payload)
-    val v = c.getValue
-    el(0xBFL, Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)) ++ payload
+    el(0xBFL, le32b(c.getValue.toInt)) ++ payload
   }
 
   /** Write a vint of FORCED byte length `n` (the EBML-lacing signed

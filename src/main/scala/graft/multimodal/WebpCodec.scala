@@ -28,12 +28,7 @@ object WebpCodec {
   import PixelCodec.{Gray, lum}
   import Vp8lBits._
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le32(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)).toLong |
-      (u8(b, i + 3).toLong << 24)
-  private def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, "US-ASCII")
+  import Bytes.{LsbBitReader, fourcc, le24, le32, riffChunks, u8}
 
   /** The 120-entry distance-code → (dx, dy) map (RFC 9649 §4.2.2),
     * built by inverting the row-major plane LUT: lut[y·16 + (8−dx)] =
@@ -80,20 +75,14 @@ object WebpCodec {
         fourcc(b, 8) != "WEBP") return None
     val riffEnd = math.min(b.length.toLong, 8 + le32(b, 4)).toInt
     // chunk walk to the image chunk (skips VP8X metadata containers)
-    var p = 12
-    while (p + 8 <= riffEnd) {
-      val sz = le32(b, p + 4)
-      if (sz < 0 || p + 8 + sz > riffEnd) return None
-      if (fourcc(b, p) == "VP8L")
-        return decodeVp8l(b, p + 8, (p + 8 + sz).toInt)
-      if (fourcc(b, p) == "VP8 ")
-        return Vp8Codec.decodeFrame(b, p + 8, (p + 8 + sz).toInt)
+    riffChunks(b, 12, riffEnd) { (id, s, e) =>
+      if (id == "VP8L") return decodeVp8l(b, s, e)
+      if (id == "VP8 ") return Vp8Codec.decodeFrame(b, s, e)
       // an extended-format still with an alpha plane (VP8X+ALPH+VP8):
       // the opaque frame decode would IGNORE the alpha plane and land
       // wrong pixels — drop at the gate, the same alpha discipline as
       // [[decodeWebpFrames]]
-      if (fourcc(b, p) == "ALPH") return None
-      p += 8 + sz.toInt + (sz.toInt & 1)
+      id != "ALPH"
     }
     None
   }
@@ -131,17 +120,13 @@ object WebpCodec {
     var canvas: Array[Int] = null
     val frames = Seq.newBuilder[Gray]
     var n = 0
-    var p = 12
-    while (p + 8 <= riffEnd) {
-      val sz = le32(b, p + 4)
-      if (sz < 0 || p + 8 + sz > riffEnd) return None
-      val body = p + 8
-      fourcc(b, p) match {
+    val walked = riffChunks(b, 12, riffEnd) { (id, body, end) =>
+      val sz = end - body
+      id match {
         case "VP8L" if !animated =>        // simple lossless image
-          return decodeVp8l(b, body, (body + sz).toInt).map(Seq(_))
+          return decodeVp8l(b, body, end).map(Seq(_))
         case "VP8 " if !animated =>        // simple lossy image
-          return Vp8Codec.decodeFrame(b, body, (body + sz).toInt)
-            .map(Seq(_))
+          return Vp8Codec.decodeFrame(b, body, end).map(Seq(_))
         case "ALPH" => return None         // alpha plane unsupported
         case "VP8X" =>
           if (sz < 10) return None
@@ -168,39 +153,35 @@ object WebpCodec {
           val blend = (flags & 2) == 0     // 0 = use alpha blending
           if (fx + fw > canvasW || fy + fh > canvasH) return None
           // frame data: its own chunk(s); expect exactly one VP8L
-          val fEnd = (body + sz).toInt
-          var q = body + 16
           var sub: Option[Gray] = None
-          while (q + 8 <= fEnd && sub.isEmpty) {
-            val csz = le32(b, q + 4)
-            if (csz < 0 || q + 8 + csz > fEnd) return None
-            fourcc(b, q) match {
+          val frameOk = riffChunks(b, body + 16, end) { (cid, cs, ce) =>
+            cid match {
               case "VP8L" =>
                 // an alpha-hinted frame under use-alpha blending
                 // could be translucent — the luma canvas can't
                 // honor it
                 // the hint is bit 28 after the signature (LSB-first):
                 // byte sig+4, bit 4
-                if (blend && q + 8 < fEnd &&
-                    u8(b, q + 8) == 0x2f && q + 13 <= fEnd &&
-                    ((u8(b, q + 12) >> 4) & 1) == 1) return None
-                sub = decodeVp8l(b, q + 8, (q + 8 + csz).toInt)
+                if (blend && cs < end &&
+                    u8(b, cs) == 0x2f && cs + 5 <= end &&
+                    ((u8(b, cs + 4) >> 4) & 1) == 1) return None
+                sub = decodeVp8l(b, cs, ce)
                 if (sub.isEmpty) return None
                 if (sub.get.width != fw || sub.get.height != fh)
                   return None
               case "VP8 " =>
                 // lossy frames carry no alpha: opaque under either
                 // blend mode, so the luma canvas composites exactly
-                sub = Vp8Codec.decodeFrame(b, q + 8, (q + 8 + csz).toInt)
+                sub = Vp8Codec.decodeFrame(b, cs, ce)
                 if (sub.isEmpty) return None
                 if (sub.get.width != fw || sub.get.height != fh)
                   return None
               case "ALPH" => return None
               case _ => ()                 // unknown: skip
             }
-            q += 8 + csz.toInt + (csz.toInt & 1)
+            sub.isEmpty
           }
-          if (sub.isEmpty) return None
+          if (!frameOk || sub.isEmpty) return None
           val g = sub.get
           var y = 0
           while (y < fh) {
@@ -219,23 +200,21 @@ object WebpCodec {
           }
         case _ => ()                       // metadata chunks: skip
       }
-      p += 8 + sz.toInt + (sz.toInt & 1)
+      true
     }
+    if (!walked) return None
     val out = frames.result()
     if (out.isEmpty) None else Some(out)
   }
 
-  private def le24(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)
-
   private def decodeVp8l(b: Array[Byte], from: Int,
       until: Int): Option[Gray] = {
     if (from >= until || u8(b, from) != 0x2f) return None
-    val r = new BitReader(b, from + 1, until)
-    val w = r.readBits(14) + 1
-    val h = r.readBits(14) + 1
-    r.readBits(1)                          // alpha hint
-    if (r.readBits(3) != 0) return None    // version must be 0
+    val r = new LsbBitReader(b, from + 1, until)
+    val w = r.bits(14) + 1
+    val h = r.bits(14) + 1
+    r.bits(1)                          // alpha hint
+    if (r.bits(3) != 0) return None    // version must be 0
     if (w.toLong * h > (1L << 26)) return None
     val argb = decodeImageStream(r, w, h, topLevel = true)
     val out = new Array[Int](w * h)
@@ -258,26 +237,26 @@ object WebpCodec {
   /** Decode an image stream: transforms (top level only), color
     * cache, meta prefix groups (top level only), prefix codes, LZ77
     * pixels, then inverse transforms in reverse read order. */
-  private def decodeImageStream(r: BitReader, width: Int, height: Int,
+  private def decodeImageStream(r: LsbBitReader, width: Int, height: Int,
       topLevel: Boolean): Array[Int] = {
     var w = width                          // shrinks under color indexing
     var transforms = List.empty[Transform]
     if (topLevel) {
       var seen = Set.empty[Int]
-      while (r.readBit() == 1) {
-        val typ = r.readBits(2)
+      while (r.bit() == 1) {
+        val typ = r.bits(2)
         if (seen(typ)) fail("duplicate transform")
         seen += typ
         val t = typ match {
           case 0 | 1 =>                    // predictor / cross-color
-            val bits = r.readBits(3) + 2
+            val bits = r.bits(3) + 2
             val tw = divCeil(w, 1 << bits)
             val th = divCeil(height, 1 << bits)
             Transform(typ, bits, decodeImageStream(r, tw, th,
               topLevel = false), w)
           case 2 => Transform(2, 0, Array.emptyIntArray, w)
           case _ =>                        // color indexing
-            val n = r.readBits(8) + 1
+            val n = r.bits(8) + 1
             val raw = decodeImageStream(r, n, 1, topLevel = false)
             // palette entries are delta-coded per channel
             var i = 1
@@ -308,9 +287,9 @@ object WebpCodec {
   private case class Group(g: PrefixCode, red: PrefixCode,
       blue: PrefixCode, alpha: PrefixCode, dist: PrefixCode)
 
-  private def decodeImageData(r: BitReader, w: Int, h: Int,
+  private def decodeImageData(r: LsbBitReader, w: Int, h: Int,
       isMain: Boolean): Array[Int] = {
-    val cacheBits = if (r.readBit() == 1) r.readBits(4) else 0
+    val cacheBits = if (r.bit() == 1) r.bits(4) else 0
     if (cacheBits > 11) fail("cache bits")
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
 
@@ -319,8 +298,8 @@ object WebpCodec {
     var metaImage: Array[Int] = null
     var metaW = 0
     var nGroups = 1
-    if (isMain && r.readBit() == 1) {
-      metaBits = r.readBits(3) + 2
+    if (isMain && r.bit() == 1) {
+      metaBits = r.bits(3) + 2
       metaW = divCeil(w, 1 << metaBits)
       val metaH = divCeil(h, 1 << metaBits)
       metaImage = decodeImageStream(r, metaW, metaH, topLevel = false)
@@ -393,41 +372,41 @@ object WebpCodec {
 
   /** LZ77 length/distance prefix value: code < 4 → code + 1, else
     * (2 + (code & 1)) << extra | ReadBits(extra), extra = (code−2)/2. */
-  private def prefixValue(code: Int, r: BitReader): Int =
+  private def prefixValue(code: Int, r: LsbBitReader): Int =
     if (code < 4) code + 1
     else {
       val extra = (code - 2) >> 1
       val offset = (2 + (code & 1)) << extra
-      offset + r.readBits(extra) + 1
+      offset + r.bits(extra) + 1
     }
 
   /** One prefix code: simple (1–2 symbols inline) or code-length-coded
     * with optional max_symbol cap (RFC 9649 §5.2.2). */
-  private def readPrefixCode(r: BitReader, alphabetSize: Int): PrefixCode = {
-    if (r.readBit() == 1) {                // simple
-      val nSyms = r.readBits(1) + 1
-      val first8 = r.readBits(1)
-      val s0 = r.readBits(if (first8 == 1) 8 else 1)
+  private def readPrefixCode(r: LsbBitReader, alphabetSize: Int): PrefixCode = {
+    if (r.bit() == 1) {                // simple
+      val nSyms = r.bits(1) + 1
+      val first8 = r.bits(1)
+      val s0 = r.bits(if (first8 == 1) 8 else 1)
       val lengths = new Array[Int](alphabetSize)
       if (s0 >= alphabetSize) fail("simple symbol")
       lengths(s0) = 1
       if (nSyms == 2) {
-        val s1 = r.readBits(8)
+        val s1 = r.bits(8)
         if (s1 >= alphabetSize || s1 == s0) fail("simple symbol")
         lengths(s1) = 1
       }
       new PrefixCode(lengths)
     } else {
       val clLengths = new Array[Int](19)
-      val nCl = r.readBits(4) + 4
+      val nCl = r.bits(4) + 4
       if (nCl > 19) fail("cl count")
       var i = 0
-      while (i < nCl) { clLengths(ClOrder(i)) = r.readBits(3); i += 1 }
+      while (i < nCl) { clLengths(ClOrder(i)) = r.bits(3); i += 1 }
       val clCode = new PrefixCode(clLengths)
       var maxSymbol =
-        if (r.readBit() == 1) {
-          val nBits = 2 + 2 * r.readBits(3)
-          2 + r.readBits(nBits)
+        if (r.bit() == 1) {
+          val nBits = 2 + 2 * r.bits(3)
+          2 + r.bits(nBits)
         } else alphabetSize
       val lengths = new Array[Int](alphabetSize)
       var sym = 0
@@ -439,14 +418,14 @@ object WebpCodec {
           lengths(sym) = cl; sym += 1
           if (cl != 0) prev = cl
         } else if (cl == 16) {
-          var rep = 3 + r.readBits(2)
+          var rep = 3 + r.bits(2)
           while (rep > 0 && sym < alphabetSize) {
             lengths(sym) = prev; sym += 1; rep -= 1
           }
         } else if (cl == 17) {
-          sym += 3 + r.readBits(3)
+          sym += 3 + r.bits(3)
         } else {
-          sym += 11 + r.readBits(7)
+          sym += 11 + r.bits(7)
         }
       }
       if (sym > alphabetSize) fail("lengths overflow")

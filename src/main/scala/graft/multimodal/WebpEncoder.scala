@@ -34,6 +34,7 @@ package graft.multimodal
 object WebpEncoder {
   import PixelCodec.{Gray, colorize}
   import Vp8lBits._
+  import Bytes.{LsbBitWriter, le24b, riffChunk}
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
@@ -74,19 +75,19 @@ object WebpEncoder {
       i += 1
     }
 
-    val bw = new BitWriter
-    bw.writeBits(w - 1, 14)
-    bw.writeBits(h - 1, 14)
-    bw.writeBits(0, 1)                     // alpha hint
-    bw.writeBits(0, 3)                     // version
+    val bw = new LsbBitWriter
+    bw.bits(w - 1, 14)
+    bw.bits(h - 1, 14)
+    bw.bits(0, 1)                     // alpha hint
+    bw.bits(0, 3)                     // version
 
     var px = argb0
     var effW = w
     if (palette) {
       val pal = px.distinct
       if (pal.length > 256) fail("palette overflow")
-      bw.writeBits(1, 1); bw.writeBits(3, 2)
-      bw.writeBits(pal.length - 1, 8)
+      bw.bits(1, 1); bw.bits(3, 2)
+      bw.bits(pal.length - 1, 8)
       val deltas = pal.zipWithIndex.map { case (p, j) =>
         if (j == 0) p else subPixels(p, pal(j - 1))
       }
@@ -115,8 +116,8 @@ object WebpEncoder {
       effW = packedW
     } else {
       if (predictorBits > 0) {
-        bw.writeBits(1, 1); bw.writeBits(0, 2)
-        bw.writeBits(predictorBits - 2, 3)
+        bw.bits(1, 1); bw.bits(0, 2)
+        bw.bits(predictorBits - 2, 3)
         val tw = divCeil(w, 1 << predictorBits)
         val th = divCeil(h, 1 << predictorBits)
         val modes = Array.tabulate(tw * th)(t =>
@@ -139,8 +140,8 @@ object WebpEncoder {
         px = res
       }
       if (crossColor) {
-        bw.writeBits(1, 1); bw.writeBits(1, 2)
-        bw.writeBits(7, 3)                 // bits=9: one global tile
+        bw.bits(1, 1); bw.bits(1, 2)
+        bw.bits(7, 3)                 // bits=9: one global tile
         val g2r = 0x10 + (salt & 0x0f)
         val g2b = 0xe8
         val r2b = 0x23 + (salt & 0x07)
@@ -162,7 +163,7 @@ object WebpEncoder {
         px = out
       }
       if (subtractGreen) {
-        bw.writeBits(1, 1); bw.writeBits(2, 2)
+        bw.bits(1, 1); bw.bits(2, 2)
         val out = new Array[Int](px.length)
         var j = 0
         while (j < px.length) {
@@ -176,7 +177,7 @@ object WebpEncoder {
         px = out
       }
     }
-    bw.writeBits(0, 1)                     // no more transforms
+    bw.bits(0, 1)                     // no more transforms
     writeImageData(bw, px, effW, h, isMain = true, cacheBits, lz77)
     Array[Byte](0x2f) ++ bw.result()
   }
@@ -199,23 +200,10 @@ object WebpEncoder {
     val w = frames.head.width; val h = frames.head.height
     require(frames.forall(f => f.width == w && f.height == h), "dims")
     val out = new java.io.ByteArrayOutputStream()
-    def le(v: Int, nBytes: Int): Unit = {
-      var i = 0
-      while (i < nBytes) { out.write((v >> (8 * i)) & 0xff); i += 1 }
-    }
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def chunk(fc: String, body: Array[Byte]): Unit = {
-      tag(fc); le(body.length, 4); out.write(body)
-      if ((body.length & 1) == 1) out.write(0)
-    }
+    def chunk(fc: String, body: Array[Byte]): Unit =
+      out.write(riffChunk(fc, body))
     // VP8X: flags (animation), 3 reserved, canvas w-1 / h-1 (24-bit)
-    val vp8x = new java.io.ByteArrayOutputStream()
-    vp8x.write(0x02); vp8x.write(0); vp8x.write(0); vp8x.write(0)
-    def le24(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-      o.write(v & 0xff); o.write((v >> 8) & 0xff); o.write((v >> 16) & 0xff)
-    }
-    le24(vp8x, w - 1); le24(vp8x, h - 1)
-    chunk("VP8X", vp8x.toByteArray)
+    chunk("VP8X", Array[Byte](0x02, 0, 0, 0) ++ le24b(w - 1) ++ le24b(h - 1))
     // ANIM: background color [B, G, R, A] + loop count
     val (br, bgG, bb) = bg
     chunk("ANIM", Array[Byte](bb.toByte, bgG.toByte, br.toByte,
@@ -251,29 +239,14 @@ object WebpEncoder {
         subtractGreen = true, predictorBits = 0,
         crossColor = color, cacheBits = if (i % 2 == 0) 6 else 0,
         palette = false, lz77 = true)
-      val anmf = new java.io.ByteArrayOutputStream()
-      le24(anmf, fx / 2); le24(anmf, fy / 2)
-      le24(anmf, fw - 1); le24(anmf, fh - 1)
-      le24(anmf, 40)                       // duration ms
-      anmf.write(0x02 | (if (disposeBg) 1 else 0)) // no-blend (+dispose)
-      anmf.write("VP8L".getBytes("US-ASCII"))
-      val pl = payload.length
-      anmf.write(pl & 0xff); anmf.write((pl >> 8) & 0xff)
-      anmf.write((pl >> 16) & 0xff); anmf.write((pl >> 24) & 0xff)
-      anmf.write(payload)
-      if ((pl & 1) == 1) anmf.write(0)
-      chunk("ANMF", anmf.toByteArray)
+      chunk("ANMF", le24b(fx / 2) ++ le24b(fy / 2) ++
+        le24b(fw - 1) ++ le24b(fh - 1) ++
+        le24b(40) ++                       // duration ms
+        Array((0x02 | (if (disposeBg) 1 else 0)).toByte) ++ // no-blend (+dispose)
+        riffChunk("VP8L", payload))
       prev = f
     }
-    val body = out.toByteArray
-    val riff = new java.io.ByteArrayOutputStream()
-    def rle32(v: Int): Unit = {
-      riff.write(v & 0xff); riff.write((v >> 8) & 0xff)
-      riff.write((v >> 16) & 0xff); riff.write((v >> 24) & 0xff)
-    }
-    riff.write("RIFF".getBytes("US-ASCII")); rle32(4 + body.length)
-    riff.write("WEBP".getBytes("US-ASCII")); riff.write(body)
-    riff.toByteArray
+    riffChunk("RIFF", "WEBP".getBytes("US-ASCII") ++ out.toByteArray)
   }
 
   private def divCeil(a: Int, b: Int): Int = (a + b - 1) / b
@@ -371,13 +344,13 @@ object WebpEncoder {
   /** Write one prefix code: trivial/simple for ≤2 usable symbols,
     * else the code-length-coded form with 16/17/18 runs. Returns the
     * encoder table. */
-  private def writeCode(bw: BitWriter, freq: Array[Long],
+  private def writeCode(bw: LsbBitWriter, freq: Array[Long],
       alphabetSize: Int): Array[(Int, Int)] = {
     val used = freq.indices.filter(freq(_) > 0)
     if (used.isEmpty) {
       // unused alphabet: 1-symbol simple code the decoder never reads
-      bw.writeBits(1, 1); bw.writeBits(0, 1)
-      bw.writeBits(0, 1); bw.writeBits(0, 1)
+      bw.bits(1, 1); bw.bits(0, 1)
+      bw.bits(0, 1); bw.bits(0, 1)
       val t = new Array[(Int, Int)](alphabetSize)
       t(0) = (0, 0)
       return t
@@ -386,16 +359,16 @@ object WebpEncoder {
       if (used.length <= 2 && used.forall(_ <= 255)) {
         val l = new Array[Int](alphabetSize)
         used.foreach(l(_) = 1)
-        bw.writeBits(1, 1)                 // simple
-        bw.writeBits(used.length - 1, 1)
+        bw.bits(1, 1)                 // simple
+        bw.bits(used.length - 1, 1)
         val s0 = used.head
-        if (s0 > 1) { bw.writeBits(1, 1); bw.writeBits(s0, 8) }
-        else { bw.writeBits(0, 1); bw.writeBits(s0, 1) }
-        if (used.length == 2) bw.writeBits(used(1), 8)
+        if (s0 > 1) { bw.bits(1, 1); bw.bits(s0, 8) }
+        else { bw.bits(0, 1); bw.bits(s0, 1) }
+        if (used.length == 2) bw.bits(used(1), 8)
         l
       } else {
         val l = huffmanLengths(freq)
-        bw.writeBits(0, 1)                 // code-length-coded
+        bw.bits(0, 1)                 // code-length-coded
         writeLengths(bw, l)
         l
       }
@@ -405,7 +378,7 @@ object WebpEncoder {
   /** Code-length sequence via the 19-symbol code-length code:
     * literal lengths 0–15, 16 = repeat-previous ×3–6,
     * 17/18 = zero runs ×3–10 / ×11–138. */
-  private def writeLengths(bw: BitWriter, lengths: Array[Int]): Unit = {
+  private def writeLengths(bw: LsbBitWriter, lengths: Array[Int]): Unit = {
     // tokenize
     val toks = Vector.newBuilder[(Int, Int, Int)] // (clSym, extraBits, extraVal)
     var i = 0
@@ -450,25 +423,25 @@ object WebpEncoder {
         l(clFreq.indexWhere(_ > 0)) = 1
         l
       } else huffmanLengths(clFreq, maxLen = 7)
-    bw.writeBits(19 - 4, 4)
+    bw.bits(19 - 4, 4)
     var k = 0
-    while (k < 19) { bw.writeBits(clLengths(ClOrder(k)), 3); k += 1 }
-    bw.writeBits(0, 1)                     // no max_symbol cap
+    while (k < 19) { bw.bits(clLengths(ClOrder(k)), 3); k += 1 }
+    bw.bits(0, 1)                     // no max_symbol cap
     val clTable = new PrefixCode(clLengths).encoderTable
     tokens.foreach { case (sym, eb, ev) =>
       writeSymbol(bw, clTable, sym)
-      if (eb > 0) bw.writeBits(ev, eb)
+      if (eb > 0) bw.bits(ev, eb)
     }
   }
 
   // ---- image data ----
 
-  private def writeImageData(bw: BitWriter, px: Array[Int], w: Int,
+  private def writeImageData(bw: LsbBitWriter, px: Array[Int], w: Int,
       h: Int, isMain: Boolean, cacheBits: Int, lz77: Boolean): Unit = {
     require(px.length == w * h, "pixel count")
-    if (cacheBits > 0) { bw.writeBits(1, 1); bw.writeBits(cacheBits, 4) }
-    else bw.writeBits(0, 1)
-    if (isMain) bw.writeBits(0, 1)         // no meta prefix groups
+    if (cacheBits > 0) { bw.bits(1, 1); bw.bits(cacheBits, 4) }
+    else bw.bits(0, 1)
+    if (isMain) bw.bits(0, 1)         // no meta prefix groups
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     val tokens = buildTokens(px, w, cacheBits, lz77)
 
@@ -504,27 +477,15 @@ object WebpEncoder {
       case Copy(len, dv) =>
         val (lc, leb, lev) = toPrefixCode(len)
         writeSymbol(bw, gT, 256 + lc)
-        if (leb > 0) bw.writeBits(lev, leb)
+        if (leb > 0) bw.bits(lev, leb)
         val (dc, deb, dev) = toPrefixCode(dv)
         writeSymbol(bw, dT, dc)
-        if (deb > 0) bw.writeBits(dev, deb)
+        if (deb > 0) bw.bits(dev, deb)
     }
   }
 
   // ---- container ----
 
-  private def wrapRiff(vp8l: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    val pad = vp8l.length & 1
-    tag("RIFF"); le32(4 + 8 + vp8l.length + pad)
-    tag("WEBP"); tag("VP8L"); le32(vp8l.length)
-    out.write(vp8l)
-    if (pad == 1) out.write(0)
-    out.toByteArray
-  }
+  private def wrapRiff(vp8l: Array[Byte]): Array[Byte] =
+    riffChunk("RIFF", "WEBP".getBytes("US-ASCII") ++ riffChunk("VP8L", vp8l))
 }

@@ -28,6 +28,7 @@ package graft.sources
   * grammar is the public ISO 28500 / WARC 1.1 specification.
   */
 object WarcCodec {
+  import graft.multimodal.Bytes.{le16, le32, u8}
 
   /** One parsed record. For `response` records the HTTP message is
     * unwrapped: `httpStatus`, the payload's `contentType`, and `body`
@@ -45,8 +46,8 @@ object WarcCodec {
   def parseWarc(b: Array[Byte]): Option[Vector[WarcRecord]] =
     try {
       val raw =
-        if (b.length >= 2 && (b(0) & 0xff) == 0x1f &&
-            (b(1) & 0xff) == 0x8b) gunzipExact(b)
+        if (b.length >= 2 && u8(b, 0) == 0x1f && u8(b, 1) == 0x8b)
+          gunzipExact(b)
         else b
       parseRaw(raw)
     } catch { case _: Exception => None }
@@ -67,13 +68,13 @@ object WarcCodec {
     var p = 0
     if (b.length < 18) bad()
     while (p < b.length) {
-      if (p + 10 > b.length || (b(p) & 0xff) != 0x1f ||
-          (b(p + 1) & 0xff) != 0x8b || (b(p + 2) & 0xff) != 8) bad()
-      val flg = b(p + 3) & 0xff
+      if (p + 10 > b.length || u8(b, p) != 0x1f ||
+          u8(b, p + 1) != 0x8b || u8(b, p + 2) != 8) bad()
+      val flg = u8(b, p + 3)
       p += 10
       if ((flg & 4) != 0) {                // FEXTRA
         if (p + 2 > b.length) bad()
-        p += 2 + ((b(p) & 0xff) | ((b(p + 1) & 0xff) << 8))
+        p += 2 + le16(b, p)
       }
       def skipZString(): Unit = {
         while (p < b.length && b(p) != 0) p += 1
@@ -99,17 +100,13 @@ object WarcCodec {
         }
         p = b.length - inf.getRemaining
         if (p + 8 > b.length) bad()
-        if (crcLe32(b, p) != crc.getValue ||
-            crcLe32(b, p + 4) != (memberLen & 0xffffffffL)) bad()
+        if (le32(b, p) != crc.getValue ||
+            le32(b, p + 4) != (memberLen & 0xffffffffL)) bad()
         p += 8
       } finally inf.end()
     }
     out.toByteArray
   }
-
-  private def crcLe32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL)) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   private def parseRaw(b: Array[Byte]): Option[Vector[WarcRecord]] = {
     val out = Vector.newBuilder[WarcRecord]

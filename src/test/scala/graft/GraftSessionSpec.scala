@@ -14,6 +14,16 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(spark.newSession().conf.get("spark.sql.session.timeZone") === "UTC")
   }
 
+  test("local quiets only the checkpoint-release warning's logger") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    // releaseAll's "was locally checkpointed" warning comes from here
+    assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+      .getLevel === Level.ERROR)
+    assert(LogManager.getRootLogger.getLevel === Level.WARN)
+    assert(LogManager.getLogger("org.apache.spark.sql.execution.CacheManager")
+      .isWarnEnabled)
+  }
+
   test("GraftSession is the only session builder in src") {
     // one factory: a second builder would drift from its defaults
     val builder = """SparkSession\s*\.\s*builder""".r

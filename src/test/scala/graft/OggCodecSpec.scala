@@ -120,7 +120,7 @@ class OggCodecSpec extends AnyFunSuite {
       // ident byte sits at 28 + at, and the page CRC must be redone
       m(28 + at) = v.toByte
       val pageEnd = 28 + (m(26 + 1) & 0xff)
-      val c = OggCodec.crc(m, 0, pageEnd, zeroAt = 22)
+      val c = OggCodec.pageCrc(m, 0, pageEnd)
       m(22) = (c & 0xff).toByte
       m(23) = ((c >> 8) & 0xff).toByte
       m(24) = ((c >> 16) & 0xff).toByte
@@ -224,7 +224,7 @@ class OggCodecSpec extends AnyFunSuite {
     packets.foreach(p => o.write(p.length))
     packets.foreach(p => o.write(p, 0, p.length))
     val page = o.toByteArray
-    val c = OggCodec.crc(page, 0, page.length)
+    val c = OggCodec.pageCrc(page, 0, page.length)
     page(22) = (c & 0xff).toByte
     page(23) = ((c >> 8) & 0xff).toByte
     page(24) = ((c >> 16) & 0xff).toByte
@@ -320,7 +320,7 @@ class OggCodecSpec extends AnyFunSuite {
     val m = good.clone()
     m(28 + 8) = 0x11
     val pageEnd = 28 + (m(27) & 0xff)
-    val c = OggCodec.crc(m, 0, pageEnd, zeroAt = 22)
+    val c = OggCodec.pageCrc(m, 0, pageEnd)
     m(22) = (c & 0xff).toByte
     m(23) = ((c >> 8) & 0xff).toByte
     m(24) = ((c >> 16) & 0xff).toByte
@@ -424,7 +424,7 @@ class OggCodecSpec extends AnyFunSuite {
       while (i < nSegs) { bodyLen += m(27 + i) & 0xff; i += 1 }
       27 + nSegs + bodyLen
     }
-    val c = OggCodec.crc(m, 0, pageEnd, zeroAt = 22)
+    val c = OggCodec.pageCrc(m, 0, pageEnd)
     m(22) = (c & 0xff).toByte
     m(23) = ((c >> 8) & 0xff).toByte
     m(24) = ((c >> 16) & 0xff).toByte
@@ -449,7 +449,7 @@ class OggCodecSpec extends AnyFunSuite {
     var blen2 = 0
     var j2 = 0
     while (j2 < nSegs2) { blen2 += h(p2 + 27 + j2) & 0xff; j2 += 1 }
-    val c2 = OggCodec.crc(h, p2, body2 + blen2, zeroAt = p2 + 22)
+    val c2 = OggCodec.pageCrc(h, p2, body2 + blen2)
     h(p2 + 22) = (c2 & 0xff).toByte
     h(p2 + 23) = ((c2 >> 8) & 0xff).toByte
     h(p2 + 24) = ((c2 >> 16) & 0xff).toByte
