@@ -132,8 +132,10 @@ object PixelCodec {
     var plte: Array[Byte] = null
     val idat = new java.io.ByteArrayOutputStream()
     while (p + 8 <= b.length) {
+      // be32 is unsigned and the sum is a Long: a length near 2^31
+      // cannot wrap past the bounds check
+      if (p + 12 + be32(b, p) > b.length) return None
       val len = be32(b, p).toInt
-      if (len < 0 || p + 12 + len > b.length) return None
       val typ = new String(b, p + 4, 4, "US-ASCII")
       typ match {
         case "IHDR" =>

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The read-side query surface (SURVEY.md: the reference's Flask API —
@@ -56,31 +55,24 @@ object ReadApi {
 
   /** Paged game history for one player (O2 pagination; J2-style
     * disjunctive match on either color, decomposed to a union).
-    * OFFSET-style: needs a global row numbering — but only of the
-    * first (page+1)·pageSize rows, so a distributed top-k
-    * (`TakeOrderedAndProject`: per-partition limit, then a k-row
-    * merge) bounds the input BEFORE the single-partition numbering
-    * window. The window then sees ≤ k rows at any corpus size (the
-    * r21 shape ran it over every matching row — a single-partition
-    * global sort at scale). The order is total (unique id_game
-    * tiebreak), so the top-k prefix IS rows 1..k of the global
-    * numbering: results identical. Deep paging at corpus scale should
-    * still use [[gameHistoryAfter]] (keyset) — offset depth k is the
-    * price of the offset contract itself. */
+    * OFFSET-style: `limit(k).offset(page·pageSize)` over the ordered
+    * rows plans as one `TakeOrderedAndProject(limit = k, offset)` — a
+    * distributed top-k (per-partition limit, then a k-row merge) that
+    * drops the first page·pageSize rows of the merge, with no
+    * numbering window. The order is total (unique id_game tiebreak),
+    * so pages tile. Deep paging at corpus scale should still use
+    * [[gameHistoryAfter]] (keyset) — offset depth k is the price of
+    * the offset contract itself. */
   def gameHistory(games: DataFrame, user: String,
       page: Int, pageSize: Int): DataFrame = {
     val mine = games.filter(
       col("id_user_white") === user || col("id_user_black") === user)
-    val k = (page + 1) * pageSize
-    val w = Window.orderBy(desc("dt_game"), asc("id_game"))
-    mine.orderBy(desc("dt_game"), asc("id_game")).limit(k)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") > page * pageSize)
-      .drop("__rn")
+    mine.orderBy(desc("dt_game"), asc("id_game"))
+      .limit((page + 1) * pageSize).offset(page * pageSize)
   }
 
   /** Keyset (cursor) pagination — the scale-correct form of O2. OFFSET
-    * pagination needs a global row numbering (single-partition window);
+    * pagination merges (page+1)·pageSize rows to return pageSize;
     * keyset passes the last row of the previous page as a cursor, so
     * the predicate bounds the scan and the sort becomes a distributed
     * top-k (`TakeOrderedAndProject`: per-partition limit, then a

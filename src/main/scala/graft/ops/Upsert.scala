@@ -22,13 +22,22 @@ object Upsert {
     * sequence) — ordering by a batch-constant timestamp alone leaves
     * the winner to partition order. */
   def lastWriteWins(existing: DataFrame, incoming: DataFrame,
-      key: String, orderCols: Seq[Column]): DataFrame = {
+      key: String, orderCols: Seq[Column]): DataFrame =
+    replaceByKey(existing, firstPerKey(incoming, key, orderCols), key)
+
+  /** The FIRST row per `key` under `orderCols` (pass a total order). */
+  def firstPerKey(rows: DataFrame, key: String,
+      orderCols: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(key).orderBy(orderCols: _*)
-    val dedup = incoming
-      .withColumn("__rn", row_number().over(w))
+    rows.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    existing.join(dedup, Seq(key), "left_anti").unionByName(dedup)
   }
+
+  /** `incoming` (already unique per key) replaces existing rows with
+    * the same key: the merge step of [[lastWriteWins]]. */
+  def replaceByKey(existing: DataFrame, incoming: DataFrame,
+      key: String): DataFrame =
+    existing.join(incoming, Seq(key), "left_anti").unionByName(incoming)
 
   /** Convenience: newest `orderCol` wins (callers must ensure it is
     * unique per key, or use the Seq overload with a tiebreaker). */
@@ -42,10 +51,7 @@ object Upsert {
     */
   def firstWriteWins(existing: DataFrame, incoming: DataFrame,
       key: String, orderCols: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(orderCols: _*)
-    val dedup = incoming
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val dedup = firstPerKey(incoming, key, orderCols)
     existing.unionByName(dedup.join(existing, Seq(key), "left_anti"))
   }
 

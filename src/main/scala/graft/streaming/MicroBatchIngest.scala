@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Normalize, Upsert}
@@ -58,7 +58,7 @@ object MicroBatchIngest {
     // then the merge proper — the stored table carries no __seq.
     // assumeDeduped: the __seq window already made keys unique; a second
     // dedup window in mergeParquet would be a redundant shuffle.
-    val deduped = Upsert.lastWriteWins(batch.limit(0), batch, "id_game",
+    val deduped = Upsert.firstPerKey(batch, "id_game",
       Seq(desc("tm_ingested"), desc("__seq"))).drop("__seq")
     mergeParquet(spark, deduped, tablePath, "id_game",
       Seq(desc("tm_ingested")), assumeDeduped = true)
@@ -69,7 +69,7 @@ object MicroBatchIngest {
     * (skipped when the caller already did — `assumeDeduped`),
     * last-write-wins against the existing table, write through a
     * tmp-write / target→backup / tmp→target swap. Returns the merged
-    * row count.
+    * row count, observed on the write itself (no re-read of `.tmp`).
     *
     * Crash safety (what makes StreamMerge's replay convergence hold):
     * the old table is MOVED to a backup, never deleted before the new
@@ -85,15 +85,15 @@ object MicroBatchIngest {
     graft.sources.TableSwap.recover(tablePath)
     val deduped =
       if (assumeDeduped) incoming
-      else Upsert.lastWriteWins(incoming.limit(0), incoming, key, orderCols)
+      else Upsert.firstPerKey(incoming, key, orderCols)
     val merged =
-      if (Files.exists(Paths.get(tablePath))) {
-        val existing = spark.read.parquet(tablePath)
-        Upsert.lastWriteWins(existing, deduped, key, orderCols)
-      } else deduped
-    val tmp = tablePath + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    val n = spark.read.parquet(tmp).count()
+      if (Files.exists(Paths.get(tablePath)))
+        Upsert.replaceByKey(spark.read.parquet(tablePath), deduped, key)
+      else deduped
+    val rows = Observation()
+    merged.observe(rows, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(tablePath + ".tmp")
+    val n = rows.get("n").asInstanceOf[Long]
     graft.sources.TableSwap.promoteTmp(tablePath)
     n
   }

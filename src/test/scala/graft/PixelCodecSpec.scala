@@ -275,6 +275,13 @@ class PixelCodecSpec extends AnyFunSuite {
     assert(PixelCodec.decodePng(badIdx).isEmpty)
   }
 
+  test("a chunk length near 2^31 decodes to None instead of wrapping past the bounds check") {
+    val probe = pngSig ++ Array[Byte](0x7f, -1, -1, -16) ++
+      "IDAT".getBytes("US-ASCII") ++ new Array[Byte](40)
+    assert(PixelCodec.decodePng(probe).isEmpty)
+    assert(PixelCodec.phash(probe).isEmpty)
+  }
+
   test("nearDupMediaClusters e2e: re-encoded/resized/color/BMP copies cluster, distinct scenes don't") {
     val dir = Files.createTempDirectory("mm_pxl_spec").toString
     def put(name: String, b: Array[Byte]): Unit =

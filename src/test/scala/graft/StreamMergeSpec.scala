@@ -196,6 +196,20 @@ class StreamMergeSpec extends AnyFunSuite {
     assert(rows === Set("k1" -> "v1", "k2" -> "v2", "k3" -> "v1"))
   }
 
+  test("mergeParquet returns the merged row count, empty deliveries included") {
+    import graft.streaming.MicroBatchIngest.mergeParquet
+    val dir = Files.createTempDirectory("mc").toString
+    val batch = Seq(("k1", "v0", ts("2025-05-01 09:00:00")),
+      ("k1", "v1", ts("2025-05-01 10:00:00")),
+      ("k2", "v1", ts("2025-05-01 10:00:00")))
+      .toDF("id_game", "id_user_white", "tm_ingested")
+    val order = Seq(desc("tm_ingested"))
+    assert(mergeParquet(spark, batch, dir + "/t", "id_game", order) === 2L)
+    assert(mergeParquet(spark, batch.limit(0), dir + "/t", "id_game", order) === 2L)
+    assert(mergeParquet(spark, batch.limit(0), dir + "/e", "id_game", order) === 0L)
+    assert(spark.read.parquet(dir + "/t").count() === 2L)
+  }
+
   test("append-mode watermark: late rows dropped, only finalized windows emit") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
