@@ -70,14 +70,19 @@ object PgnParser {
     ParsedGame(headers, block.lastOption.filter(isMove).getOrElse(""))
   }
 
-  /** The block splitter: every block with a non-blank line, in order. */
+  /** The block splitter: every block with a header or a move line, in
+    * order. A block of only malformed `[` lines (only ever the open
+    * trailing one) yields nothing — the rule [[parseLines]] applies
+    * too. */
   private def splitLines(lines: Iterator[String]): Iterator[ParsedGame] =
     blocks(lines).map(parse)
+      .filter(g => g.headers.nonEmpty || g.moves.nonEmpty)
 
   /** Batch parse: input must have columns (src_file: String, line_no:
     * Long, line: String), ordered by line_no within each src_file.
     * Output: (src_file, game_idx, headers: Map[String,String],
-    * moves: String) — one row per game block.
+    * moves: String) — one row per game block with a header or a move
+    * line (the [[splitLines]] rule).
     */
   def parseLines(lines: DataFrame): DataFrame = {
     val trimmed = lines
@@ -122,6 +127,7 @@ object PgnParser {
             slice(col("hs"), i + 2, size(col("hs"))), _("k") === x("k"))),
           x => struct(x("k"), x("v")))).as("headers"),
         col("moves"))
+      .filter(size(col("headers")) > 0 || length(col("moves")) > 0)
   }
 
   /** Read PGN text files (a file or a directory of them) and parse them.
@@ -186,13 +192,11 @@ object PgnParser {
     }
 
   /** Imperative per-document splitter — the streaming seam. One PGN
-    * document (many games) → parsed games; a trailing block of only
-    * malformed `[` lines yields nothing. Pure function: safe inside
+    * document (many games) → parsed games. Pure function: safe inside
     * `flatMap`/`mapPartitions`, no driver involvement.
     */
   def splitBlocks(doc: String): Seq[ParsedGame] =
-    splitLines(doc.split("\n", -1).iterator)
-      .filter(g => g.headers.nonEmpty || g.moves.nonEmpty).toVector
+    splitLines(doc.split("\n", -1).iterator).toVector
 
   private[pgn] case class SplitLine(src_file: String, block_start: Long,
       line: String)

@@ -220,31 +220,20 @@ object DataOps extends QueryModule {
       // task-scheduling overhead off the build's critical path without
       // touching the operator itself (production tunes this per batch
       // size like any Spark job). Saved/restored around the build.
-      def phase[T](tag: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (sys.env.contains("SPARK_GRAFT_TRACE")) System.err.println(
-          f"[admit] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
       ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8",
           "spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.adaptive.enabled" -> "false") {
-        phase("seed")(graft.streaming.StreamAdmission.seed(s, existing,
-          state, "doc_id", "text"))
-        phase("incA")(deliver(incA))
-        phase("incB")(deliver(incB))
+        graft.streaming.StreamAdmission.seed(s, existing, state,
+          "doc_id", "text")
+        deliver(incA)
+        deliver(incB)
         // re-delivery: must converge with zero changes
-        phase("redeliver")(deliver(incA))
+        deliver(incA)
         graft.sources.FixtureMarker.stamp(base, fp)
       }
       state
       }
-      if (reusable) {
-        if (sys.env.contains("SPARK_GRAFT_TRACE"))
-          System.err.println("[admit] fixture reused (fingerprint match)")
-        state
-      } else build()
+      if (reusable) state else build()
     }
 
   /** T2-composed-with-dedup in the registry denominator: the admitted

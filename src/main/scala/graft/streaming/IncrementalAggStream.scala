@@ -1,17 +1,18 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.IncrementalAgg
 
 /** Streaming maintenance of an [[graft.ops.IncrementalAgg]] state
   * table: each micro-batch's partial aggregates merge into the parquet
-  * summary via `foreachBatch`, so the table converges to exactly
-  * `summarize(all rows ever delivered)` — the continuously-maintained
-  * rollup shape (batch twin: `ops_incr_agg`). The idempotence and
-  * crash-safety protocol (batch-id marker inside the atomic swap) is
-  * [[MergeableStream]] — shared with every other mergeable summary.
+  * summary through [[applyBatch]] (a `foreachBatch` body; the
+  * `ops_incr_agg_stream` entry drives it per slice), so the table
+  * converges to exactly `summarize(all rows ever delivered)` — the
+  * continuously-maintained rollup shape (batch twin: `ops_incr_agg`).
+  * The idempotence and crash-safety protocol (batch-id marker inside
+  * the atomic swap) is [[MergeableStream]] — shared with every other
+  * mergeable summary.
   *
   * Scale: per tick, one scan of the micro-batch (map-side combined to
   * one row per touched key) plus a keyed merge with the state table —
@@ -19,18 +20,6 @@ import graft.ops.IncrementalAgg
   * there is nothing to watermark and memory is flat however long the
   * stream runs. */
 object IncrementalAggStream {
-
-  def start(stream: DataFrame, tablePath: String, checkpoint: String,
-      keys: Seq[String], valCol: String, dateCol: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, tablePath, keys, valCol, dateCol)
-        ()
-      }
-      .start()
 
   /** One micro-batch against the state table — also the seam the spec
     * drives directly (incl. replaying a batch id to prove the no-op).

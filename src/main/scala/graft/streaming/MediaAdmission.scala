@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.Dedup
 
@@ -110,17 +110,12 @@ object MediaAdmission {
   def start(stream: DataFrame, statePath: String, checkpoint: String,
       idCol: String, payloadCol: String,
       fingerprint: Array[Byte] => Option[Long],
-      maxDist: Int = 2,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, batchId, statePath, idCol, payloadCol,
-          fingerprint, maxDist)
-        ()
-      }
-      .start()
+      maxDist: Int = 2): StreamingQuery =
+    ForeachBatch.start(stream, checkpoint) { (batch, batchId) =>
+      admitBatch(batch, batchId, statePath, idCol, payloadCol,
+        fingerprint, maxDist)
+      ()
+    }
 
   // ---- the clip (many-fingerprints-per-asset) protocol ----
 
@@ -195,15 +190,9 @@ object MediaAdmission {
     * [[admitClipBatch]]. */
   def startClips(stream: DataFrame, statePath: String,
       checkpoint: String, idCol: String, payloadCol: String,
-      maxDist: Int = 2,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitClipBatch(batch, batchId, statePath, idCol, payloadCol,
-          maxDist)
-        ()
-      }
-      .start()
+      maxDist: Int = 2): StreamingQuery =
+    ForeachBatch.start(stream, checkpoint) { (batch, batchId) =>
+      admitClipBatch(batch, batchId, statePath, idCol, payloadCol, maxDist)
+      ()
+    }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-
-
 import org.apache.spark.sql.DataFrame
+
+import graft.sources.TableSwap
 
 /** The ONE copy of the idempotent mergeable-state maintenance
   * protocol: a parquet state table updated per micro-batch by
@@ -24,7 +24,7 @@ object MergeableStream {
   private val Marker = "_applied_batch"
 
   private def appliedBatch(tablePath: String): Long =
-    graft.sources.TableSwap.readMarker(tablePath, Marker)
+    TableSwap.readMarker(tablePath, Marker)
       .map(_.trim.toLong).getOrElse(-1L)
 
   /** Returns true iff the batch was applied (false = replay skipped).
@@ -36,18 +36,12 @@ object MergeableStream {
   def applyBatch(batch: DataFrame, batchId: Long, tablePath: String,
       summarize: DataFrame => DataFrame,
       merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    val spark = batch.sparkSession
-    graft.sources.TableSwap.recover(tablePath)
-    val exists = graft.sources.TableSwap.exists(tablePath)
-    if (exists && batchId <= appliedBatch(tablePath)) return false
+    if (TableSwap.exists(tablePath) && batchId <= appliedBatch(tablePath))
+      return false
     val delta = summarize(batch)
-    val merged =
-      if (!exists) delta
-      else merge(spark.read.parquet(tablePath), delta)
-    val tmp = tablePath + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.sources.TableSwap.writeMarker(tmp, Marker, batchId.toString)
-    graft.sources.TableSwap.promoteTmp(tablePath)
+    TableSwap.commit(
+      TableSwap.read(batch.sparkSession, tablePath).fold(delta)(merge(_, delta)),
+      tablePath, Some(Marker -> batchId.toString))
     true
   }
 }

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Normalize, Upsert}
 import graft.pgn.{ParsedGame, PgnParser}
+import graft.sources.TableSwap
 
 /** T1-T3 micro-batch ingestion (SURVEY.md §2.7): the reference's
   * poll→parse→upsert loop (get_games_from_tv.py:122-147) re-expressed
@@ -67,35 +66,24 @@ object MicroBatchIngest {
   /** Generalized idempotent parquet merge (also the `foreachBatch` body
     * of [[StreamMerge]]): dedup incoming per key under `orderCols`
     * (skipped when the caller already did — `assumeDeduped`),
-    * last-write-wins against the existing table, write through a
-    * tmp-write / target→backup / tmp→target swap. Returns the merged
-    * row count, observed on the write itself (no re-read of `.tmp`).
+    * last-write-wins against the existing table, committed through
+    * [[graft.sources.TableSwap]]. Returns the merged row count, observed
+    * on the write itself (no re-read).
     *
     * Crash safety (what makes StreamMerge's replay convergence hold):
-    * the old table is MOVED to a backup, never deleted before the new
-    * table is in place, and a missing target with a backup present is
-    * recovered on entry — so a crash at ANY point leaves either the old
-    * or the new table reachable, and the replayed batch re-merges
-    * against it. */
+    * the swap never deletes the old table before the new one is in
+    * place, and the read rolls a half-finished swap forward — so a
+    * crash at ANY point leaves either the old or the new table
+    * reachable, and the replayed batch re-merges against it. */
   def mergeParquet(spark: SparkSession, incoming: DataFrame,
       tablePath: String, key: String,
       orderCols: Seq[org.apache.spark.sql.Column],
       assumeDeduped: Boolean = false): Long = {
-    // roll a half-finished previous swap forward before reading
-    graft.sources.TableSwap.recover(tablePath)
     val deduped =
       if (assumeDeduped) incoming
       else Upsert.firstPerKey(incoming, key, orderCols)
-    val merged =
-      if (Files.exists(Paths.get(tablePath)))
-        Upsert.replaceByKey(spark.read.parquet(tablePath), deduped, key)
-      else deduped
-    val rows = Observation()
-    merged.observe(rows, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(tablePath + ".tmp")
-    val n = rows.get("n").asInstanceOf[Long]
-    graft.sources.TableSwap.promoteTmp(tablePath)
-    n
+    TableSwap.commit(TableSwap.read(spark, tablePath)
+      .fold(deduped)(Upsert.replaceByKey(_, deduped, key)), tablePath)
   }
 
   /** The micro-batch loop: `numBatches` polls of `fetch`, each merged

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.QuantileSketch
 
@@ -9,9 +8,10 @@ import graft.ops.QuantileSketch
   * state table — the QUANTILE member of the mergeable-summary stream
   * family (rollups: [[IncrementalAggStream]]; distinct: the HLL fold;
   * heavy hitters: the CMS stream): each micro-batch's per-(key,
-  * bucket) counts merge into the parquet state via `foreachBatch`, so
-  * the table converges to exactly `summarize(all rows ever
-  * delivered)` regardless of batch boundaries, and
+  * bucket) counts merge into the parquet state through [[applyBatch]]
+  * (a `foreachBatch` body; the `ops_incr_quantile_stream` entry drives
+  * it per slice), so the table converges to exactly `summarize(all
+  * rows ever delivered)` regardless of batch boundaries, and
   * [[graft.ops.QuantileSketch.quantiles]] reads current percentile
   * estimates off it at any time. Idempotence and crash safety ride
   * [[MergeableStream]]'s batch-id marker inside the atomic swap —
@@ -23,18 +23,6 @@ import graft.ops.QuantileSketch
   * state; history is never re-read and streaming operator state stays
   * empty — flat memory at any stream length. */
 object QuantileSketchStream {
-
-  def start(stream: DataFrame, tablePath: String, checkpoint: String,
-      keys: Seq[String], valCol: String, widthCents: Long,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, tablePath, keys, valCol, widthCents)
-        ()
-      }
-      .start()
 
   /** One micro-batch against the state table — also the seam the spec
     * drives directly (incl. replaying a batch id to prove the no-op).

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.{col, max, struct}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Upsert
+import graft.sources.TableSwap
 
 /** CDC stream → SCD-2 history: the `foreachBatch` composition of
   * [[graft.ops.Upsert.scd2MergeSlice]] — each micro-batch of changelog
@@ -40,33 +39,25 @@ import graft.ops.Upsert
 object Scd2Stream {
 
   def start(stream: DataFrame, tablePath: String, checkpoint: String,
-      key: String, ts: String, attr: String, tieBreak: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, tablePath, key, ts, attr, tieBreak)
-        ()
-      }
-      .start()
+      key: String, ts: String, attr: String,
+      tieBreak: String): StreamingQuery =
+    ForeachBatch.start(stream, checkpoint) { (batch, _) =>
+      applyBatch(batch, tablePath, key, ts, attr, tieBreak)
+      ()
+    }
 
   /** One batch against the table — also the seam unit tests drive
     * directly. Returns the number of slice rows actually merged. */
   private[graft] def applyBatch(batch: DataFrame, tablePath: String,
       key: String, ts: String, attr: String, tieBreak: String): Long = {
-    val spark = batch.sparkSession
-    graft.sources.TableSwap.recover(tablePath)
     val outCols =
       Seq(key, tieBreak, attr, "valid_from", "valid_to", "is_current")
-    var pinned: DataFrame = null
-    try {
-    val (merged, nFresh) =
-      if (!Files.exists(Paths.get(tablePath))) {
-        (Upsert.scd2FromChangelog(batch, key, ts, attr, tieBreak)
-          .select(outCols.map(col): _*), batch.count())
-      } else {
-        val hist = spark.read.parquet(tablePath)
+    TableSwap.read(batch.sparkSession, tablePath) match {
+      case None =>
+        TableSwap.commit(Upsert.scd2FromChangelog(batch, key, ts, attr,
+          tieBreak).select(outCols.map(col): _*), tablePath)
+        batch.count()
+      case Some(hist) =>
         // high-water-mark replay filter: anything at or before the
         // key's frontier is a redelivery under the append-only
         // contract (see scaladoc) — including same-attr continuation
@@ -76,7 +67,6 @@ object Scd2Stream {
         // are legal under the derivation's (ts, tieBreak) total
         // order, and a ts-only mark would silently drop the later
         // half of such a pair as a "replay".
-        import org.apache.spark.sql.functions.{max, struct}
         // shared field aliases so the struct comparison type-checks
         val frontier = hist.groupBy(col(key))
           .agg(max(struct(col("valid_from").as("t"),
@@ -94,16 +84,13 @@ object Scd2Stream {
               > col("__hwm"))
           .drop("__hwm")
           .persist()
-        pinned = fresh
-        val n = fresh.count()
-        if (n == 0) return 0L
-        (Upsert.scd2MergeSlice(hist, fresh, key, ts, attr, tieBreak)
-          .select(outCols.map(col): _*), n)
-      }
-    val tmp = tablePath + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.sources.TableSwap.promoteTmp(tablePath)
-    nFresh
-    } finally if (pinned != null) pinned.unpersist(false)
+        try {
+          val n = fresh.count()
+          if (n > 0)
+            TableSwap.commit(Upsert.scd2MergeSlice(hist, fresh, key, ts,
+              attr, tieBreak).select(outCols.map(col): _*), tablePath)
+          n
+        } finally fresh.unpersist(false)
+    }
   }
 }

@@ -1,14 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.Dedup
 import graft.ops.BloomPrune
+import graft.sources.TableSwap
 
 /** Streaming incremental-dedup ADMISSION — the daily-ingest production
   * shape: a `readStream` of candidate documents is checked per
@@ -69,33 +68,18 @@ import graft.ops.BloomPrune
   */
 object StreamAdmission {
 
-  private def trace[T](tag: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.contains("SPARK_GRAFT_TRACE")) System.err.println(
-      f"[admit:$tag] ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    r
-  }
-
   /** Loaded state handles (None until first commit/seed). */
   final case class State(docs: Option[DataFrame],
       shingles: Option[DataFrame], shdf: Option[DataFrame])
 
+  /** TableSwap's read rolls a half-finished swap forward first: a
+    * crash between the two moves leaves only `<path>.bak`, and deciding
+    * a batch against a missing docs/shdf table would re-admit
+    * duplicates / clobber the accumulated df counts. */
   def loadState(spark: SparkSession, statePath: String): State = State(
-    readIfExists(spark, s"$statePath/docs"),
-    readIfExists(spark, s"$statePath/shingles"),
-    readIfExists(spark, s"$statePath/shdf"))
-
-  private def readIfExists(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    // roll a half-finished swap forward FIRST: a crash between the two
-    // moves leaves only <path>.bak, and deciding a batch against a
-    // missing docs/shdf table would re-admit duplicates / clobber the
-    // accumulated df counts
-    graft.sources.TableSwap.recover(path)
-    if (Files.exists(Paths.get(path))) Some(spark.read.parquet(path))
-    else None
-  }
+    TableSwap.read(spark, s"$statePath/docs"),
+    TableSwap.read(spark, s"$statePath/shingles"),
+    TableSwap.read(spark, s"$statePath/shdf"))
 
   /** Pure per-batch decision: one row per DISTINCT incoming id not yet
     * committed, with (id, text, n_sh, exact_dup, near_dup, admitted).
@@ -191,25 +175,22 @@ object StreamAdmission {
     // already shingled — is a deliberate batch-scale recompute: passing
     // the flag-stage postings through would couple the two stages'
     // lifecycles for a scan bounded by the admitted slice of one batch.)
-    val aSh = trace("ckpt-shingles")(graft.CacheScope.trackLocalCheckpoint(
+    val aSh = graft.CacheScope.trackLocalCheckpoint(
       Dedup.shingles(admitted, "id", "text").withColumn("__k",
-        concat(col("id").cast("string"), lit(":"), col("shingle")))))
-    trace("merge-shingles")(
-      MicroBatchIngest.mergeParquet(spark, aSh, s"$statePath/shingles",
-        "__k", Seq(asc("__k")), assumeDeduped = true))
+        concat(col("id").cast("string"), lit(":"), col("shingle"))))
+    MicroBatchIngest.mergeParquet(spark, aSh, s"$statePath/shingles",
+      "__k", Seq(asc("__k")), assumeDeduped = true)
     val aDf = aSh.groupBy("shingle").agg(count(lit(1)).as("__d"))
-    val newDf = trace("ckpt-shdf")(graft.CacheScope.trackLocalCheckpoint(
-      readIfExists(spark, s"$statePath/shdf") match {
+    val newDf = graft.CacheScope.trackLocalCheckpoint(
+      TableSwap.read(spark, s"$statePath/shdf") match {
         case Some(sdf) => sdf.join(aDf, Seq("shingle"), "full_outer")
           .select(col("shingle"), (coalesce(col("df"), lit(0L)) +
             coalesce(col("__d"), lit(0L))).as("df"))
         case None => aDf.select(col("shingle"), col("__d").as("df"))
-      }))
-    trace("swap-shdf")(
-      graft.sources.TableSwap.replace(spark, newDf, s"$statePath/shdf"))
-    trace("merge-docs")(
-      MicroBatchIngest.mergeParquet(spark, admitted, s"$statePath/docs",
-        "id", Seq(asc("id")), assumeDeduped = true))
+      })
+    TableSwap.commit(newDf, s"$statePath/shdf")
+    MicroBatchIngest.mergeParquet(spark, admitted, s"$statePath/docs",
+      "id", Seq(asc("id")), assumeDeduped = true)
     // both checkpoints are fully consumed by the writes above — free
     // their blocks now instead of leaving them to GC (r22 lifecycle)
     graft.CacheScope.release(aSh)
@@ -220,7 +201,7 @@ object StreamAdmission {
     * checks — the seed IS the corpus). Refuses to overwrite. */
   def seed(spark: SparkSession, docs: DataFrame, statePath: String,
       idCol: String, textCol: String): Unit = {
-    require(!Files.exists(Paths.get(s"$statePath/docs")),
+    require(!TableSwap.exists(s"$statePath/docs"),
       s"seed: state already exists at $statePath")
     val base = docs.select(col(idCol).cast("long").as("id"),
       col(textCol).cast("string").as("text")).dropDuplicates("id")
@@ -241,13 +222,12 @@ object StreamAdmission {
     // tracked, not bare: the flags frame is RETURNED (stats/tests), so
     // the caller frees it with CacheScope.release ([[start]] does, per
     // batch) or leaves it to session release
-    val flags = trace("flag")(graft.CacheScope.trackLocalCheckpoint(
+    val flags = graft.CacheScope.trackLocalCheckpoint(
       flagBatch(batch, loadState(spark, statePath), idCol,
-        textCol, tau, maxShingleDf, expectedBatch)))
+        textCol, tau, maxShingleDf, expectedBatch))
     val admitted = flags.filter(col("admitted"))
       .select("id", "text", "n_sh")
-    if (trace("isEmpty")(!admitted.isEmpty))
-      trace("commit")(commitAdmitted(spark, admitted, statePath))
+    if (!admitted.isEmpty) commitAdmitted(spark, admitted, statePath)
     flags
   }
 
@@ -258,16 +238,12 @@ object StreamAdmission {
     * replay converge. */
   def start(stream: DataFrame, statePath: String, checkpoint: String,
       idCol: String, textCol: String, tau: Double = 0.3,
-      maxShingleDf: Long = 1000L, expectedBatch: Long = 1L << 20,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // nothing reads a batch's flags once its commit has landed
-        graft.CacheScope.release(admitAndCommit(batch.sparkSession, batch,
-          statePath, idCol, textCol, tau, maxShingleDf, expectedBatch))
-      }
-      .start()
+      maxShingleDf: Long = 1000L,
+      expectedBatch: Long = 1L << 20): StreamingQuery =
+    ForeachBatch.start(stream, checkpoint) { (batch, _) =>
+      // nothing reads a batch's flags once its commit has landed
+      graft.CacheScope.release(admitAndCommit(batch.sparkSession, batch,
+        statePath, idCol, textCol, tau, maxShingleDf, expectedBatch))
+    }
 
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The reference's poll→parse→upsert loop (get_games_from_tv.py:122-147)
   * as TRUE Structured Streaming: any `readStream` source →
@@ -27,15 +27,10 @@ object StreamMerge {
     * `orderCols` must be columns of the stream (e.g. the event/ingest
     * timestamp) forming a total order per key. */
   def start(stream: DataFrame, tablePath: String, checkpoint: String,
-      key: String, orderCols: Seq[Column],
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        MicroBatchIngest.mergeParquet(batch.sparkSession, batch,
-          tablePath, key, orderCols)
-        ()
-      }
-      .start()
+      key: String, orderCols: Seq[Column]): StreamingQuery =
+    ForeachBatch.start(stream, checkpoint) { (batch, _) =>
+      MicroBatchIngest.mergeParquet(batch.sparkSession, batch,
+        tablePath, key, orderCols)
+      ()
+    }
 }

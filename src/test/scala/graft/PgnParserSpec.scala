@@ -121,6 +121,21 @@ class PgnParserSpec extends AnyFunSuite {
       imperative.map(g => (g.headers, g.moves)))
   }
 
+  test("a trailing block of only a malformed [ line: the same rows from readAndParse, parseLines and splitBlocks") {
+    val lines = Seq("[White \"a\"]", "1. e4 e5 1-0", "", "[Black \"b\"]",
+      "1. d4 0-1", "", "[junk only")
+    val dir = Files.createTempDirectory("pgn-junk")
+    try {
+      Files.writeString(dir.resolve("j.pgn"), lines.mkString("\n") + "\n")
+      val got = rows(PgnParser.readAndParse(spark, dir.toString))
+      val imperative = PgnParser.splitBlocks(lines.mkString("\n"))
+        .zipWithIndex.map { case (g, i) => ("j.pgn", i.toLong, g.headers, g.moves) }
+      assert(got === spec(Seq("j.pgn" -> lines)))
+      assert(got === imperative)
+      assert(got.map(_._4) === Seq("1. e4 e5 1-0", "1. d4 0-1"))
+    } finally graft.sources.TableSwap.deleteRecursively(dir)
+  }
+
   test("parseLines keeps the last duplicate tag and leaves the session's mapKeyDedupPolicy alone") {
     // a fresh session: the shared one's policy may already be anything
     val s = spark.newSession()

@@ -210,6 +210,24 @@ class StreamMergeSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir + "/t").count() === 2L)
   }
 
+  test("TableSwap.commit counts its write and moves the marker with the " +
+      "data; read recovers a crashed swap") {
+    import java.nio.file.Paths
+    import graft.sources.TableSwap
+    val table = Files.createTempDirectory("swap").toString + "/t"
+    assert(TableSwap.read(spark, table).isEmpty)
+    assert(TableSwap.commit(Seq(1L, 2L, 3L).toDF("v"), table,
+      Some("_m" -> "7")) === 3L)
+    assert(TableSwap.readMarker(table, "_m") === Some("7"))
+    assert(TableSwap.commit(Seq(4L).toDF("v"), table) === 1L)
+    assert(TableSwap.readMarker(table, "_m") === None)
+    // a crash between the two moves: only the backup is left
+    Files.move(Paths.get(table), Paths.get(table + ".bak"))
+    assert(TableSwap.read(spark, table).map(_.as[Long].collect().toSeq) ===
+      Some(Seq(4L)))
+    assert(!Files.exists(Paths.get(table + ".bak")))
+  }
+
   test("append-mode watermark: late rows dropped, only finalized windows emit") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
