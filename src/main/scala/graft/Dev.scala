@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   *       (`toRdd.count()`); CSV on stdout, per-phase medians of N runs
   *   jobs [query-or-build ...]       wall time of every Spark job an
   *       entry runs (eager actions, AQE stages, stream micro-batches),
-  *       and the share of the entry's wall time no job covers (gaps)
+  *       each labelled `[description]` (the entry's name, or a
+  *       stream's own) before its stage names, and the share of the
+  *       entry's wall time no job covers (gaps)
   *   explain [query ...]             formatted physical plans
   */
 object Dev {
@@ -106,11 +108,13 @@ object Dev {
     val seen = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val stages = e.stageInfos.map(si =>
+          si.name.takeWhile(_ != '(').trim + ":" + si.numTasks)
+          .mkString(" | ")
         val desc = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.nonEmpty).getOrElse(e.stageInfos.map(si =>
-            si.name.takeWhile(_ != '(').trim + ":" + si.numTasks)
-            .mkString(" | ").take(160))
+          .map(_.trim.replaceAll("\\s+", " ")).filter(_.nonEmpty)
+          .fold(stages)(d => s"[$d] $stages").take(160)
         seen.put(e.jobId, Job(e.jobId, e.time, e.stageInfos.size, desc))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
@@ -120,12 +124,16 @@ object Dev {
     names.foreach { n =>
       seen.clear()
       val t0 = System.currentTimeMillis() // the listener's event clock
+      // the entry names its jobs; SQL executions copy the description to
+      // the broadcast and AQE jobs they start on other threads
+      spark.sparkContext.setJobDescription(n)
       val r =
         try Right(SparkEntry.queries.get(n) match {
           case Some(fn) => fn(spark, sfDir).queryExecution.toRdd.count()
           case None => SparkEntry.benchBuilds(n)(spark, sfDir)
         })
         catch { case e: Throwable => Left(e) }
+        finally spark.sparkContext.setJobDescription(null)
       val t1 = System.currentTimeMillis()
       val wall = (t1 - t0) / 1e3
       Thread.sleep(300) // let the listener bus drain

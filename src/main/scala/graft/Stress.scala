@@ -249,13 +249,10 @@ object Stress {
 
     amplify(spark, base, work, amp)
 
-    // Build-fresh measurement: without this, a `*_build` leg whose
-    // fixture survived from a prior process records a ~0 s marker
-    // no-op on one scale and a real build on another, and the fitted
-    // exponent is meaningless (the r13/r14 BENCH_SF1 artifact rows).
-    // Queries still reuse the session-memoized build within a scale,
-    // so the non-build entries stay steady-state.
-    System.setProperty(graft.sources.FixtureMarker.ForceProp, "1")
+    // Every `*_build` leg times a real build: fixture builds are never
+    // reused across JVMs (graft.queries.Fixture). Queries reuse the
+    // session-memoized build within a scale, so the non-build entries
+    // stay steady-state.
 
     val scales = Seq(("sf0.01", small, 0.01), ("sf0.1", base, 0.1),
       ("sf1", work, 1.0))

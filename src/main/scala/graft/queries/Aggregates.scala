@@ -188,58 +188,41 @@ object Aggregates extends QueryModule {
     * the batch `w10_capped_sessions` oracle verifies it hash-for-hash
     * — the same stream≡batch proof shape as `pgn_stream_e2e`. */
   private def cappedStreamPath(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "w10_stream") {
+    Fixture.dir(s, d, "w10_stream") { base =>
       import graft.streaming.CappedSessions
-      val base = s"${sys.props("java.io.tmpdir")}/graft_w10s_" +
-        java.lang.Integer.toHexString(d.hashCode)
       val (src, cp, out) = (s"$base/src", s"$base/cp", s"$base/subs")
-      // Cross-PROCESS reuse (the dedup_stream_admit_build pattern):
-      // the streamed output is a pure function of the events table, so
-      // a completed build is stamped with the source fingerprint and a
-      // later JVM reuses it instead of re-running the four stream
-      // queries; testdata regeneration forces a clean rebuild.
-      val fp = graft.sources.FixtureMarker.fingerprint(
-        java.nio.file.Paths.get(s"$d/events.parquet"), "w10v1")
-      val reusable = graft.sources.FixtureMarker.reusable(base, fp)
-      def build(): String = {
-      graft.sources.TableSwap.deleteRecursively(
-        java.nio.file.Paths.get(base))
       val e = Tables.events(s, d)
         .select(col("user_id").cast("long").as("user_id"), col("ts"),
           unix_micros(col("ts")).as("us"))
       val mm = e.agg(min("us"), max("us")).head()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
+      // the first delivery pins the state-store count in the checkpoint,
+      // so it is derived from that delivery's written source
+      // (ScopedConf.streamPartitions)
       def deliver(df: DataFrame): Unit = {
         df.select("user_id", "ts").coalesce(1)
           .write.mode("append").parquet(src)
         val stream = s.readStream
           .schema("user_id LONG, ts TIMESTAMP").parquet(src)
-        val q = CappedSessions
-          .subSessions(CappedSessions.toEvents(stream), withTimeout = true)
-          .toDF()
-          .writeStream.option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        require(q.awaitTermination(300000), "w10_capped_sessions_stream: " +
-          "stream did not finish within 5 minutes — refusing partial output")
+        ScopedConf.withStreamPartitions(s, s.read.parquet(src)) {
+          Fixture.await(CappedSessions
+            .subSessions(CappedSessions.toEvents(stream), withTimeout = true)
+            .toDF()
+            .writeStream.option("checkpointLocation", cp)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .format("parquet").option("path", out).start(),
+            "w10_capped_sessions_stream")
+        }
       }
-      // tiny per-batch state tables: 8 shuffle partitions keeps task
-      // scheduling off the build's critical path (saved/restored —
-      // production tunes this per batch size like any Spark job)
-      ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-        deliver(e.filter(col("us") <= c1))
-        deliver(e.filter(col("us") > c1 && col("us") <= c2))
-        deliver(e.filter(col("us") > c2))
-        // sentinel flush: one far-future event per seen user
-        deliver(e.select("user_id").distinct()
-          .withColumn("ts", timestamp_micros(
-            lit(hi + 3L * graft.streaming.CappedSessions.GapUs))))
-        graft.sources.FixtureMarker.stamp(base, fp)
-      }
+      deliver(e.filter(col("us") <= c1))
+      deliver(e.filter(col("us") > c1 && col("us") <= c2))
+      deliver(e.filter(col("us") > c2))
+      // sentinel flush: one far-future event per seen user
+      deliver(e.select("user_id").distinct()
+        .withColumn("ts", timestamp_micros(
+          lit(hi + 3L * graft.streaming.CappedSessions.GapUs))))
       out
-      }
-      if (reusable) out else build()
     }
 
   private def w10CappedSessionsStream(s: SparkSession, d: String): DataFrame =

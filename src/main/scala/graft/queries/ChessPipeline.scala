@@ -100,13 +100,6 @@ object ChessPipeline extends QueryModule {
         array_sort(collect_list(struct(col("line_no"), col("line")))),
         x => x.getField("line")), "\n").as("doc"))
 
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-
   /** Run the STREAMING ingest end-to-end once per (session, dir):
     * documents → distributed PGN block split → normalized rows →
     * parquet file-source stream → StreamMerge (checkpointed
@@ -116,12 +109,9 @@ object ChessPipeline extends QueryModule {
     * (checkpoint) and the merge must overwrite, not duplicate (LWW).
     * Returns the merged table path. */
   private def streamedTable(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "pgn_streamed") {
+    Fixture.dir(s, d, "pgn_streamed") { base =>
       import s.implicits._
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_" +
-        java.lang.Integer.toHexString(d.hashCode)
       val (src, cp, table) = (s"$base/src", s"$base/cp", s"$base/games")
-      deleteRec(java.nio.file.Paths.get(base))   // fresh per session
       def normalized(docs: DataFrame, ts: String): DataFrame = {
         val parsed = docs.select("doc").as[String]
           .flatMap(doc => PgnParser.splitBlocks(doc).zipWithIndex.map {
@@ -133,14 +123,9 @@ object ChessPipeline extends QueryModule {
       }
       def runStream(schema: org.apache.spark.sql.types.StructType): Unit = {
         val stream = s.readStream.schema(schema).parquet(src)
-        // fail FAST on timeout: awaitTermination(ms) returns false if
-        // the query is still running — proceeding would read (and
-        // memoize for the whole session) a partially merged table
-        val done = graft.streaming.StreamMerge.start(stream, table, cp,
-            "id_game", Seq(desc("tm_ingested"), desc("__seq")))
-          .awaitTermination(300000)
-        require(done, "pgn_stream_e2e: streaming merge did not finish " +
-          "within 5 minutes — refusing to read a partial table")
+        Fixture.await(graft.streaming.StreamMerge.start(stream, table, cp,
+            "id_game", Seq(desc("tm_ingested"), desc("__seq"))),
+          "pgn_stream_e2e")
       }
       val docs = synthesizedDocs(s, d)
       // The source WRITES stay at the session's partitioning — the

@@ -191,10 +191,6 @@ object CorpusOps extends QueryModule {
       .orderBy("doc_id")
   }
 
-  private def scratch(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_export_shards_" +
-      java.lang.Integer.toHexString(d.hashCode)
-
   // Manifest over the WRITTEN shard tree (write once per session/dir,
   // like the layout entries): the oracle computes the same manifest
   // straight from the source parquet, so hash equality proves the
@@ -202,8 +198,7 @@ object CorpusOps extends QueryModule {
   // the md5 formula. Directory↔column consistency is pinned in
   // ExportSpec (a pruned single-shard read contains exactly its keys).
   private def exportShardManifest(s: SparkSession, d: String): DataFrame = {
-    val path = graft.CacheScope.memo(s, d, "export_shards") {
-      val p = scratch(d)
+    val path = Fixture.dir(s, d, "export_shards") { p =>
       Export.writeShards(Tables.documents(s, d), "doc_id", Shards, p)
       p
     }
@@ -281,9 +276,7 @@ object CorpusOps extends QueryModule {
     * the served entry loads it back. The memo keys the SAVE; the
     * load is per-query (cheap: 1 meta row + lazy parquet scans). */
   private def decontamStateDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "decontam_state") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_dcst_" +
-        java.lang.Integer.toHexString(d.hashCode)
+    Fixture.dir(s, d, "decontam_state") { base =>
       Decontam.saveState(Decontam.buildState(
         Tables.documents(s, d).filter(col("doc_id") % 97 === 0),
         "doc_id", "text", k = K, expectedItems = 100000), base)

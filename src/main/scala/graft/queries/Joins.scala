@@ -281,11 +281,10 @@ object Joins extends QueryModule {
   // swaps) — memoized per (session, dir) so bench reruns, Explain,
   // and sibling callers pay it once and share one temp dir
   private def scd2StreamTable(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "scd2_stream_table") {
+    Fixture.dir(s, d, "scd2_stream_table") { base =>
       val log = Tables.events(s, d)
         .select("user_id", "ts", "event_type", "event_id")
-      val dir = java.nio.file.Files.createTempDirectory("scd2_stream")
-        .toString + "/hist"
+      val dir = s"$base/hist"
       val c1 = to_timestamp(lit("2024-01-11 00:00:00"))
       val c2 = to_timestamp(lit("2024-01-21 00:00:00"))
       val slices = Seq(

@@ -14,21 +14,16 @@ import graft.sources.{Bucketing, TextFormats}
   * (`PartitionFilters` non-empty, no shuffle Exchange on either join
   * side) are asserted in LayoutSpec; PLANS.md documents both.
   *
-  * Write targets live under java.io.tmpdir, keyed by the sf dir, and
-  * are written once per (session, dir) via CacheScope.memo — a Verify or
-  * Bench run pays one layout write, like a real pipeline pays its
-  * write once and prunes forever after.
+  * Write targets are [[Fixture.dir]] directories, written once per
+  * (session, dir) — a Verify or Bench run pays one layout write, like a
+  * real pipeline pays its write once and prunes forever after.
   */
 object LayoutOps extends QueryModule {
 
-  private def scratch(d: String, tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_layout_${tag}_" +
-      java.lang.Integer.toHexString(d.hashCode)
-
   /** Date-partitioned cleaned games, written once per (session, dir). */
   private def partitionedGamesPath(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "layout_partitioned") {
-      val path = scratch(d, "games")
+    Fixture.dir(s, d, "layout_partitioned") { base =>
+      val path = s"$base/games"
       Layout.writePartitionedByDate(ChessPipeline.cleanedGames(s, d), path)
       path
     }
@@ -46,16 +41,16 @@ object LayoutOps extends QueryModule {
     * Returns the two catalog table names. */
   private[queries] def bucketedTables(s: SparkSession, d: String)
       : (String, String) =
-    graft.CacheScope.memo(s, d, "layout_bucketed") {
+    Fixture.dir(s, d, "layout_bucketed") { base =>
       val h = java.lang.Integer.toHexString(d.hashCode)
       val (ct, ot) = (s"graft_bkt_customer_$h", s"graft_bkt_orders_$h")
       Bucketing.writeBucketed(
         graft.Tables.customer(s, d).select("c_custkey", "c_name"),
-        ct, scratch(d, "cust"), "c_custkey", buckets = 8)
+        ct, s"$base/cust", "c_custkey", buckets = 8)
       Bucketing.writeBucketed(
         graft.Tables.orders(s, d)
           .select("o_orderkey", "o_custkey", "o_totalprice"),
-        ot, scratch(d, "ord"), "o_custkey", buckets = 8)
+        ot, s"$base/ord", "o_custkey", buckets = 8)
       (ct, ot)
     }
 
@@ -83,8 +78,8 @@ object LayoutOps extends QueryModule {
   // the ORIGINAL parquet, so hash equality proves write∘read = id.
   private def srcJsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    val path = graft.CacheScope.memo(s, d, "src_jsonl") {
-      val p = scratch(d, "jsonl")
+    val path = Fixture.dir(s, d, "src_jsonl") { base =>
+      val p = s"$base/jsonl"
       TextFormats.writeJsonl(ev, p); p
     }
     TextFormats.readJsonl(s, path, ev.schema).orderBy("event_id")
@@ -92,8 +87,8 @@ object LayoutOps extends QueryModule {
 
   private def srcCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    val path = graft.CacheScope.memo(s, d, "src_csv") {
-      val p = scratch(d, "csv")
+    val path = Fixture.dir(s, d, "src_csv") { base =>
+      val p = s"$base/csv"
       TextFormats.writeCsv(ev, p); p
     }
     TextFormats.readCsv(s, path, ev.schema).orderBy("event_id")
@@ -101,8 +96,8 @@ object LayoutOps extends QueryModule {
 
   private def srcOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    val path = graft.CacheScope.memo(s, d, "src_orc") {
-      val p = scratch(d, "orc")
+    val path = Fixture.dir(s, d, "src_orc") { base =>
+      val p = s"$base/orc"
       TextFormats.writeOrc(ev, p); p
     }
     TextFormats.readOrc(s, path, ev.schema).orderBy("event_id")
@@ -112,8 +107,8 @@ object LayoutOps extends QueryModule {
     * (session, dir). LayoutSpec pins the locality property (per-
     * partition bounding boxes ≪ the table's extent on BOTH axes). */
   private def zorderedOrdersPath(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "layout_zorder") {
-      val path = scratch(d, "zord")
+    Fixture.dir(s, d, "layout_zorder") { base =>
+      val path = s"$base/zord"
       graft.Tables.orders(s, d)
         .withColumn("z", graft.functions.ZOrder.zValue(
           col("o_custkey"), col("o_orderkey")))
@@ -139,9 +134,8 @@ object LayoutOps extends QueryModule {
   // parquet, so hash equality proves compaction is content-preserving.
   // (File-count arithmetic is pinned in LayoutSpec.)
   private def compactedEventsPath(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "layout_compact") {
-      val frag = scratch(d, "frag")
-      val comp = scratch(d, "comp")
+    Fixture.dir(s, d, "layout_compact") { base =>
+      val (frag, comp) = (s"$base/frag", s"$base/comp")
       graft.Tables.events(s, d).repartition(50)
         .write.mode("overwrite").parquet(frag)
       Layout.compact(s, frag, comp)
@@ -159,10 +153,9 @@ object LayoutOps extends QueryModule {
     * (pinned in SchemaContractSpec), so this is the drift case a real
     * multi-year table hits. Written once per (session, dir). */
   private def schemaGenerationsPath(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "layout_schema_evo") {
+    Fixture.dir(s, d, "layout_schema_evo") { root =>
       val base = graft.Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-      val root = scratch(d, "evo")
       // gen0 narrows l_orderkey to int32; guard the fixture against a
       // scale factor whose keys overflow int32 (the cast is non-ANSI
       // and would wrap silently, corrupting the fixture).
@@ -209,8 +202,8 @@ object LayoutOps extends QueryModule {
     * written once per (session, dir). */
   private[graft] def rangeSortedEventsPath(s: SparkSession, d: String)
       : String =
-    graft.CacheScope.memo(s, d, "layout_range_sorted") {
-      val path = scratch(d, "rsort")
+    Fixture.dir(s, d, "layout_range_sorted") { base =>
+      val path = s"$base/rsort"
       graft.ops.Export.writeRangeSorted(
         graft.Tables.events(s, d), Seq("ts", "event_id"), 8, path)
       path
@@ -251,11 +244,10 @@ object LayoutOps extends QueryModule {
     * (the batch-id idempotence protocol — a double-counted replay
     * would hash-mismatch the oracle). Built once per (session, dir). */
   private def incrAggStreamTable(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "incr_agg_stream") {
+    Fixture.dir(s, d, "incr_agg_stream") { base =>
       val o = graft.Tables.orders(s, d)
         .select("o_custkey", "o_orderkey", "o_totalprice", "o_orderdate")
-      val dir = java.nio.file.Files.createTempDirectory("incr_agg")
-        .toString + "/state"
+      val dir = s"$base/state"
       val c1 = to_timestamp(lit("1994-01-01 00:00:00"))
       val c2 = to_timestamp(lit("1996-01-01 00:00:00"))
       val slices = Seq(
@@ -335,11 +327,10 @@ object LayoutOps extends QueryModule {
     * histogram counts would hash-mismatch the oracle). Built once per
     * (session, dir). */
   private def incrQuantileStreamTable(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "incr_quantile_stream") {
+    Fixture.dir(s, d, "incr_quantile_stream") { base =>
       val o = graft.Tables.orders(s, d)
         .select("o_custkey", "o_totalprice", "o_orderdate")
-      val dir = java.nio.file.Files.createTempDirectory("incr_quantile")
-        .toString + "/state"
+      val dir = s"$base/state"
       val c1 = to_timestamp(lit("1994-01-01 00:00:00"))
       val c2 = to_timestamp(lit("1996-01-01 00:00:00"))
       val slices = Seq(
@@ -394,10 +385,9 @@ object LayoutOps extends QueryModule {
   /** Streamed windowed-quantile state: three ten-day delivery slices
     * plus a replayed id that must be a no-op. */
   private def w11StreamTable(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "w11_quantile_stream") {
+    Fixture.dir(s, d, "w11_quantile_stream") { base =>
       val e = w11Events(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("w11_quantile")
-        .toString + "/state"
+      val dir = s"$base/state"
       val c1 = to_timestamp(lit("2024-01-11 00:00:00"))
       val c2 = to_timestamp(lit("2024-01-21 00:00:00"))
       val slices = Seq(

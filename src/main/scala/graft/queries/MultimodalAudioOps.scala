@@ -180,13 +180,8 @@ object MultimodalAudioOps extends QueryModule {
     * the scene exactly, so expected fingerprints (and clusters) are
     * pure integer+md5 arithmetic the DuckDB oracle recomputes. */
   private def audioPcmFixtureDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "mm_audio_pcm_fixtures") {
+    Fixture.dir(s, d, "mm_audio_pcm_fixtures") { base =>
       import graft.multimodal.AudioCodec
-      val base = s"${sys.props("java.io.tmpdir")}/graft_apcm_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val bp = java.nio.file.Paths.get(base)
-      graft.sources.TableSwap.deleteRecursively(bp)
-      java.nio.file.Files.createDirectories(bp)
       val docs = Tables.documents(s, d)
       Planting.requireHeadroom(docs, "doc_id", "mm_audio_near")
       def put(name: String, bytes: Array[Byte]): Unit =

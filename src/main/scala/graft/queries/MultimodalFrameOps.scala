@@ -241,12 +241,7 @@ object MultimodalFrameOps extends QueryModule {
     *                        byte-distinct, collapses onto the %300
     *                        HEVC primary. */
   private def clipFixtureDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "mm_clip_fixtures") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_clip_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val bp = java.nio.file.Paths.get(base)
-      graft.sources.TableSwap.deleteRecursively(bp)
-      java.nio.file.Files.createDirectories(bp)
+    Fixture.dir(s, d, "mm_clip_fixtures") { base =>
       val docs = Tables.documents(s, d)
       Planting.requireHeadroom(docs, "doc_id", "mm_frame_sample")
       def put(name: String, bytes: Array[Byte]): Unit =

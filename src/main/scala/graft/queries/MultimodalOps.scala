@@ -35,12 +35,7 @@ object MultimodalOps extends QueryModule {
     * dimensions derivable from doc_id in the DuckDB oracle. The text
     * bytes ride after the header so payload sizes vary organically. */
   private def imageFixtureDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "mm_image_fixtures") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_img_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val bp = java.nio.file.Paths.get(base)
-      graft.sources.TableSwap.deleteRecursively(bp)
-      java.nio.file.Files.createDirectories(bp)
+    Fixture.dir(s, d, "mm_image_fixtures") { base =>
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 25 === 0).select("doc_id", "text")
         .collect().foreach { r =>
@@ -78,12 +73,7 @@ object MultimodalOps extends QueryModule {
     * DuckDB oracle recomputes sample rate, channels, and the integer
     * duration math from the planting formula. */
   private def avFixtureDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "mm_av_fixtures") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_av_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val bp = java.nio.file.Paths.get(base)
-      graft.sources.TableSwap.deleteRecursively(bp)
-      java.nio.file.Files.createDirectories(bp)
+    Fixture.dir(s, d, "mm_av_fixtures") { base =>
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 25 === 0).select("doc_id", "text")
         .collect().foreach { r =>
@@ -124,12 +114,7 @@ object MultimodalOps extends QueryModule {
     * (bounded at 4% of docs); the operators under test are fully
     * distributed. */
   private def binaryFixtureDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "mm_binary_fixtures") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_mm_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val bp = java.nio.file.Paths.get(base)
-      graft.sources.TableSwap.deleteRecursively(bp)
-      java.nio.file.Files.createDirectories(bp)
+    Fixture.dir(s, d, "mm_binary_fixtures") { base =>
       val docs = Tables.documents(s, d)
       Planting.requireHeadroom(docs, "doc_id", "mm_binary_ingest")
       val exts = Seq("mp4", "img", "wav")   // id%3 = video/image/audio
@@ -265,13 +250,8 @@ object MultimodalOps extends QueryModule {
     * are pure integer+md5 arithmetic the DuckDB oracle recomputes
     * verbatim. */
   private def pixelFixtureDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "mm_pixel_fixtures") {
+    Fixture.dir(s, d, "mm_pixel_fixtures") { base =>
       import graft.multimodal.PixelCodec
-      val base = s"${sys.props("java.io.tmpdir")}/graft_pxl_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val bp = java.nio.file.Paths.get(base)
-      graft.sources.TableSwap.deleteRecursively(bp)
-      java.nio.file.Files.createDirectories(bp)
       val docs = Tables.documents(s, d)
       Planting.requireHeadroom(docs, "doc_id", "mm_dedup_near")
       def put(name: String, bytes: Array[Byte]): Unit =

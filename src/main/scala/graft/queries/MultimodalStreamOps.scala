@@ -168,9 +168,7 @@ object MultimodalStreamOps extends QueryModule {
         lit(v).as("variant"))
 
   /** Run seed + 3 checkpointed deliveries once per (session, dir,
-    * tier); returns the state path. Cross-process reuse via a
-    * source-fingerprint marker (same discipline as the
-    * dedup_stream_admit fixture). `clipProtocol` routes through
+    * tier); returns the state path. `clipProtocol` routes through
     * [[MediaAdmission.startClips]] (frame-level composite state)
     * instead of the single-fingerprint protocol. */
   private def streamedState(s: SparkSession, d: String, tag: String,
@@ -178,70 +176,52 @@ object MultimodalStreamOps extends QueryModule {
       fingerprint: Array[Byte] => Option[Long],
       jpegCopies: Boolean = false,
       clipProtocol: Boolean = false): String =
-    graft.CacheScope.memo(s, d, tag) {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
-        java.lang.Integer.toHexString(d.hashCode)
+    Fixture.dir(s, d, tag) { base =>
       val (src, cp, state) = (s"$base/src", s"$base/cp", s"$base/state")
-      // schedule-version markers: the r17 lossy-WebP delivery bumped
-      // the image tier to v4 (r15's WebP copies set clip v4 / image
-      // v3) — older state dirs must rebuild; the audio tier's
-      // schedule is unchanged (v2)
-      val fp = graft.sources.FixtureMarker.fingerprint(
-        java.nio.file.Paths.get(s"$d/documents.parquet"),
-        if (clipProtocol) "v4" else if (jpegCopies) "v4i" else "v2")
-      val reusable = graft.sources.FixtureMarker.reusable(base, fp)
-      if (!reusable) {
-        graft.sources.TableSwap.deleteRecursively(
-          java.nio.file.Paths.get(base))
-        val docs = Tables.documents(s, d)
-        Planting.requireHeadroom(docs, "doc_id", tag)
-        val scenes = docs.filter(col("doc_id") % 25 === 0)
-          .select("doc_id")
-        val seed = sched(scenes, 25, 0, 0, 0)
-        val incA0 = sched(scenes, 50, Offset, 0, 1)
-          .unionByName(sched(scenes, 75, 2 * Offset, 0, 2))
-        // image tier: %150 scenes also deliver a baseline-JPEG
-        // re-render; clip tier: an MJPEG-MP4 re-render — either way a
-        // cross-format copy rejected at dist 0 (absent from the
-        // admitted-set oracles by construction)
-        val incA1 = if (jpegCopies || clipProtocol)
-          incA0.unionByName(sched(scenes, 150, 6 * Offset, 0, 5))
-            .unionByName(sched(scenes, 225, 7 * Offset, 0, 6))
-          else incA0
-        val incA = if (jpegCopies)
-          incA1.unionByName(sched(scenes, 275, 8 * Offset, 0, 7))
-          else incA1
-        val incB = sched(scenes, 125, 4 * Offset, 0, 3)
-          .unionByName(sched(scenes, 100, 3 * Offset, 3 * Offset, 0))
-          .unionByName(sched(scenes, 175, 5 * Offset, 0, 4))
-        def deliver(inc: DataFrame): Unit = {
-          payloads(inc).coalesce(1).write.mode("append").parquet(src)
-          val stream = s.readStream
-            .schema("asset_id LONG, payload BINARY").parquet(src)
-          val q = if (clipProtocol)
+      val docs = Tables.documents(s, d)
+      Planting.requireHeadroom(docs, "doc_id", tag)
+      val scenes = docs.filter(col("doc_id") % 25 === 0)
+        .select("doc_id")
+      val seed = sched(scenes, 25, 0, 0, 0)
+      val incA0 = sched(scenes, 50, Offset, 0, 1)
+        .unionByName(sched(scenes, 75, 2 * Offset, 0, 2))
+      // image tier: %150 scenes also deliver a baseline-JPEG
+      // re-render; clip tier: an MJPEG-MP4 re-render — either way a
+      // cross-format copy rejected at dist 0 (absent from the
+      // admitted-set oracles by construction)
+      val incA1 = if (jpegCopies || clipProtocol)
+        incA0.unionByName(sched(scenes, 150, 6 * Offset, 0, 5))
+          .unionByName(sched(scenes, 225, 7 * Offset, 0, 6))
+        else incA0
+      val incA = if (jpegCopies)
+        incA1.unionByName(sched(scenes, 275, 8 * Offset, 0, 7))
+        else incA1
+      val incB = sched(scenes, 125, 4 * Offset, 0, 3)
+        .unionByName(sched(scenes, 100, 3 * Offset, 3 * Offset, 0))
+        .unionByName(sched(scenes, 175, 5 * Offset, 0, 4))
+      def deliver(inc: DataFrame): Unit = {
+        payloads(inc).coalesce(1).write.mode("append").parquet(src)
+        val stream = s.readStream
+          .schema("asset_id LONG, payload BINARY").parquet(src)
+        Fixture.await(if (clipProtocol)
             MediaAdmission.startClips(stream, state, cp,
               "asset_id", "payload")
           else MediaAdmission.start(stream, state, cp,
-            "asset_id", "payload", fingerprint)
-          val done = q.awaitTermination(300000)
-          // stop a timed-out query BEFORE throwing: a memo does
-          // not cache a failed build, so a later retry would delete
-          // and rebuild this directory underneath a zombie stream
-          if (!done) q.stop()
-          require(done, s"$tag: admission stream did not finish " +
-            "within 5 minutes — refusing to read partial state")
-        }
-        ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          if (clipProtocol)
-            MediaAdmission.seedClips(s, payloads(seed), state,
-              "asset_id", "payload")
-          else MediaAdmission.seed(s, payloads(seed), state,
-            "asset_id", "payload", fingerprint)
-          deliver(incA)
-          deliver(incB)
-          deliver(incA)   // replay: must converge with zero changes
-          graft.sources.FixtureMarker.stamp(base, fp)
-        }
+            "asset_id", "payload", fingerprint), tag)
+      }
+      // 8 shuffle partitions for the state rewrites: the file-derived
+      // count (ScopedConf.streamPartitions) gives 1 here and measured
+      // slower at sf1 (mm_audio_stream_admit_build, median of 3:
+      // 4.8 → 5.5 s), so this dial stays a literal
+      ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        if (clipProtocol)
+          MediaAdmission.seedClips(s, payloads(seed), state,
+            "asset_id", "payload")
+        else MediaAdmission.seed(s, payloads(seed), state,
+          "asset_id", "payload", fingerprint)
+        deliver(incA)
+        deliver(incB)
+        deliver(incA)   // replay: must converge with zero changes
       }
       state
     }

@@ -50,25 +50,28 @@ private[graft] object ScopedConf {
     finally prev.foreach { case (k, v) => s.conf.set(k, v) }
   }
 
-  /** The stream-build partition count DERIVED instead of pinned (the
-    * r21 verdict's ask: the literal 8 encoded the fixture and ignored
-    * `$SPARK_GRAFT_CPUS`): one shuffle partition per advisory-sized
-    * chunk of the batch SOURCE, capped at the session's core count —
-    * `clamp(⌈bytes / advisoryPartitionSize⌉, 1, cores)`. Fixture-sized
-    * inputs get the few-store/few-file behavior the r20 t2 fix bought;
-    * at 100 TB the same formula saturates the executors (bytes/advisory
-    * ≫ cores) instead of pinning every micro-batch at 8 tasks. The
-    * advisory size rides `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-    * so cluster tuning flows through. */
+  /** The stream-build partition count DERIVED instead of pinned: one
+    * shuffle partition per advisory-sized chunk of the files `input`
+    * reads, capped at the session's core count —
+    * `clamp(⌈bytes / advisoryPartitionSize⌉, 1, cores)`. Bytes are the
+    * lengths of `input.inputFiles`, so an input with no files (an RDD
+    * or local relation) gets 1, never the planner's default-size
+    * estimate. Fixture-sized inputs get the few-store/few-file
+    * behavior; at 100 TB the same formula saturates the executors
+    * (bytes/advisory ≫ cores). The advisory size rides
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` so cluster
+    * tuning flows through. */
   def streamPartitions(s: SparkSession,
       input: org.apache.spark.sql.DataFrame): Int = {
     val cores = math.max(1, s.sparkContext.defaultParallelism)
-    val advisory = math.max(1L <<20, s.sessionState.conf.getConf(
+    val advisory = math.max(1L, s.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
-    val chunks =
-      ((bytes + advisory - 1) / advisory).min(BigInt(cores)).toInt
-    math.max(1, chunks)
+    val hadoopConf = s.sessionState.newHadoopConf()
+    val bytes = input.inputFiles.iterator.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(hadoopConf).getFileStatus(p).getLen
+    }.sum
+    math.max(1L, ((bytes + advisory - 1) / advisory).min(cores)).toInt
   }
 
   def withStreamPartitions[T](s: SparkSession,

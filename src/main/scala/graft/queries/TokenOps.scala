@@ -320,10 +320,9 @@ object TokenOps extends QueryModule {
     * cells equal the one-shot batch sketch (sketch addition is exact —
     * the mergeability CMS exists for). Built once per (session, dir). */
   private def hhStreamCells(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "hh_stream_cells") {
+    Fixture.dir(s, d, "hh_stream_cells") { base =>
       import graft.text.CountMin
-      val dir = java.nio.file.Files.createTempDirectory("hh_stream")
-        .toString + "/cells"
+      val dir = s"$base/cells"
       val toks = tokenStream(s, d)
       // data-derived per-batch merge partitioning (ScopedConf
       // .streamPartitions; r20 t2 precedent)

@@ -70,12 +70,7 @@ object WarcOps extends QueryModule {
     * body. A corrupt shard (+Offset ids, truncated mid-record) MUST
     * parse to None and contribute nothing. */
   private def warcFixtureDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "warc_fixtures") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_warc_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val bp = java.nio.file.Paths.get(base)
-      graft.sources.TableSwap.deleteRecursively(bp)
-      java.nio.file.Files.createDirectories(bp)
+    Fixture.dir(s, d, "warc_fixtures") { base =>
       val docs = Tables.documents(s, d)
       Planting.requireHeadroom(docs, "doc_id", "warc_ingest")
       val rows = docs.select("doc_id", "source", "text")

@@ -238,8 +238,7 @@ object Windows extends QueryModule {
     * the streamed output must equal exactly the original events table
     * — the batch-distinct oracle. */
   private def t2StreamDir(s: SparkSession, d: String): String =
-    graft.CacheScope.memo(s, d, "t2_watermark_stream") {
-      val base = java.nio.file.Files.createTempDirectory("t2_wm").toString
+    Fixture.dir(s, d, "t2_watermark_stream") { base =>
       val e = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type")
       val c1 = to_timestamp(lit("2024-01-11 00:00:00"))
@@ -285,8 +284,11 @@ object Windows extends QueryModule {
     // ~12.5k state rows per store at sf0.1 (far under memory) and cut
     // the fixed store count 4×. At 100 TB the SAME dial scales the
     // other way: size partitions so each store's state fits an
-    // executor, not by the default. Scoped to the stream and restored
-    // — batch queries keep the session's own count.
+    // executor, not by the default. The file-derived count
+    // (ScopedConf.streamPartitions) gives 1 here and measured slower at
+    // sf1 (median of 3: 9.2 → 12.6 s), so the literal stays. Scoped to
+    // the stream and restored — batch queries keep the session's own
+    // count.
     ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
       // the stream pins numShufflePartitions from the session conf at
       // its first batch, so the restore must wait for completion

@@ -1,0 +1,74 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.ScopedConf
+
+/** Registry fixture builds go through `graft.queries.Fixture`: fresh in
+  * every session, staged in one directory per fixture, streams awaited
+  * and stopped in one place — plus the file-derived stream partition
+  * count those builds run at. */
+class FixtureSpec extends AnyFunSuite {
+  import TestSpark._
+
+  private def local(f: String): Path =
+    Paths.get(new org.apache.hadoop.fs.Path(f).toUri.getPath)
+
+  test("a fixture is rebuilt in a new session, not reused from disk") {
+    val query = SparkEntry.queries("w10_capped_sessions_stream")
+    val full = query(spark, sf0001).count()
+    assert(full > 0)
+    val perFile = query(spark, sf0001).inputFiles
+      .map(f => f -> spark.read.parquet(f).count())
+    val (victim, lost) = perFile.maxBy(_._2)
+    assert(lost > 0 && perFile.map(_._2).sum === full)
+    Files.delete(local(victim))
+    assert(query(spark.newSession(), sf0001).count() === full)
+  }
+
+  test("graft.queries stages files and awaits streams only through " +
+      "Fixture") {
+    val root = Paths.get("src/main/scala/graft/queries")
+    assert(Files.isDirectory(root), s"missing $root")
+    val sources = Files.list(root).toArray.toSeq.map(_.asInstanceOf[Path])
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Fixture.scala")
+      .map(p => p.getFileName.toString ->
+        new String(Files.readAllBytes(p), "UTF-8"))
+    for (needle <- Seq("java.io.tmpdir", "createTempDirectory",
+        "awaitTermination(", "FixtureMarker")) {
+      val hits = sources.collect { case (f, src) if src.contains(needle) => f }
+      assert(hits.isEmpty, s"$needle in $hits")
+    }
+  }
+
+  test("streamPartitions gives 1 to an input that reads no files") {
+    val rdd = spark.createDataFrame(spark.sparkContext
+      .parallelize(1 to 1000, 8).map(i => (i, i.toString)))
+    assert(rdd.inputFiles.isEmpty)
+    assert(ScopedConf.streamPartitions(spark, rdd) === 1)
+  }
+
+  test("streamPartitions gives ceil(file bytes / advisory size), clamped " +
+      "to the cores") {
+    val root = Files.createTempDirectory("stream_parts")
+    try {
+      spark.range(0, 20000).selectExpr("id", "md5(cast(id as string)) s")
+        .repartition(3).write.parquet(s"$root/t")
+      val written = spark.read.parquet(s"$root/t")
+      val bytes = written.inputFiles
+        .map(f => Files.size(local(f))).sum
+      val cores = spark.sparkContext.defaultParallelism
+      def at(advisory: Long): Int = ScopedConf.withConf(spark,
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString) {
+        ScopedConf.streamPartitions(spark, written)
+      }
+      assert(cores >= 2)
+      assert(at(bytes) === 1)
+      assert(at((bytes + 1) / 2) === 2)
+      assert(at(bytes / 100) === cores)
+    } finally graft.sources.TableSwap.deleteRecursively(root)
+  }
+}
