@@ -6,8 +6,10 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** The one owner of session-scoped storage. Three kinds of entry live
   * in one table per session, under one lock:
   *   - memoized builds shared by several registry queries ([[memo]]);
-  *   - caches the library creates INSIDE operators ([[track]], e.g.
-  *     the df-capped shingle index in
+  *     a memo holds no storage of its own — a build that caches its
+  *     result does so through [[track]];
+  *   - caches ([[track]] is the library's only `persist`, e.g. the
+  *     df-capped shingle index in
   *     [[graft.dedup.Dedup.jaccardPairsFromShingles]]);
   *   - every local checkpoint ([[trackLocalCheckpoint]] is the
   *     library's only `localCheckpoint()` call).
@@ -34,8 +36,7 @@ object CacheScope {
     * table), where building under the lock would serialize every
     * build. `lazy val` gives once-only construction per key. */
   private final class Memo(thunk: () => AnyRef) {
-    @volatile var built = false
-    lazy val value: AnyRef = { val v = thunk(); built = true; v }
+    lazy val value: AnyRef = thunk()
   }
 
   /** One session's storage: memos by key, and every cache or
@@ -94,22 +95,11 @@ object CacheScope {
     free
   }).foreach(_())
 
-  /** Unpersist every memoized Dataset, cache and checkpoint of `s`
-    * (non-blocking) and forget them all. Results derived from a
-    * released cache recompute; results derived from a released
-    * checkpoint must already have been evaluated. */
-  def releaseAll(s: SparkSession): Unit = {
-    val scope = scopes.synchronized(scopes.remove(s))
-    if (scope != null) {
-      // only memos whose thunk actually RAN can pin storage — forcing
-      // unbuilt ones here would do the build just to throw it away
-      scope.memos.values.forEach { m =>
-        if (m.built) m.value match {
-          case ds: Dataset[_] => ds.unpersist(false)
-          case _ => ()
-        }
-      }
-      scope.pinned.values.forEach(_())
-    }
-  }
+  /** Unpersist every cache and checkpoint of `s` (non-blocking) and
+    * forget them and every memo. Results derived from a released cache
+    * recompute; results derived from a released checkpoint must already
+    * have been evaluated. */
+  def releaseAll(s: SparkSession): Unit =
+    Option(scopes.synchronized(scopes.remove(s)))
+      .foreach(_.pinned.values.forEach(_()))
 }

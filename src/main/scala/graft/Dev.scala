@@ -53,18 +53,12 @@ object Dev {
     }
   }
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    (s((s.size - 1) / 2) + s(s.size / 2)) / 2
-  }
-
   private def profile(spark: SparkSession, sfDir: String,
       names: Seq[String], runs: Int): Unit = {
     GraftSession.warm(spark, sfDir)
-    // builds first, untimed, so query numbers are steady-state
-    SparkEntry.benchBuilds.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try fn(spark, sfDir) catch { case _: Throwable => () }
-    }
+    // builds first (a failure goes to stderr), so query numbers are
+    // steady-state
+    Bench.runBuilds(spark, sfDir)
     println("name,build_s,plan_s,exec_s,total_s")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
@@ -75,11 +69,11 @@ object Dev {
           val t1 = System.nanoTime()
           df.queryExecution.executedPlan // analysis+optimization+planning
           val t2 = System.nanoTime()
-          df.queryExecution.toRdd.count()
+          Bench.force(df)
           val t3 = System.nanoTime()
           Seq(t1 - t0, t2 - t1, t3 - t2, t3 - t0).map(_ / 1e9)
         }
-        println((n +: phases.transpose.map(p => f"${median(p)}%.3f"))
+        println((n +: phases.transpose.map(p => f"${Bench.median(p)}%.3f"))
           .mkString(","))
       } catch { case e: Throwable =>
         System.err.println(s"FAILED $n: ${e.getMessage}")
@@ -129,7 +123,7 @@ object Dev {
       spark.sparkContext.setJobDescription(n)
       val r =
         try Right(SparkEntry.queries.get(n) match {
-          case Some(fn) => fn(spark, sfDir).queryExecution.toRdd.count()
+          case Some(fn) => Bench.force(fn(spark, sfDir))
           case None => SparkEntry.benchBuilds(n)(spark, sfDir)
         })
         catch { case e: Throwable => Left(e) }

@@ -35,8 +35,7 @@ object GraftSession {
     * query), and the array_dot codegen kernel. */
   def warm(spark: SparkSession, sfDir: String): Unit = {
     val warmSf = SparkEntry.TinySfDir
-    try SparkEntry.entry(spark).queryExecution.toRdd.count()
-    catch { case _: Throwable => () }
+    Bench.timed("warm-up")(Bench.force(SparkEntry.entry(spark)))
     // Skipped when measuring the warm dir itself: the dedup warm queries
     // populate memoized shared builds keyed on (session, dir), and
     // reusing them would zero out the cost the explicit `*_build`
@@ -45,10 +44,9 @@ object GraftSession {
       Seq("dedup_ngram_jaccard", "dedup_simhash", "sim_cosine_topk").foreach { q =>
         SparkEntry.queries.get(q) match {
           case Some(fn) =>
-            // catch only runtime failures (e.g. missing testdata), not a
-            // renamed registry key — that would silently un-warm the JIT
-            try fn(spark, warmSf).queryExecution.toRdd.count()
-            catch { case _: Throwable => () }
+            // a runtime failure (e.g. missing testdata) goes to stderr;
+            // a renamed registry key must not silently un-warm the JIT
+            Bench.timed(s"warm-up $q")(Bench.force(fn(spark, warmSf)))
           case None =>
             System.err.println(s"warm-up: registry query '$q' missing")
         }

@@ -24,10 +24,16 @@ import org.apache.spark.sql.functions._
   *     entropy the fuzzy blocking relies on.
   * Replica 0 is the untouched original, so sf1 ⊇ sf0.1 byte-for-byte.
   *
-  * Protocol: per scale, the shared one-time builds run first as their
-  * own `*_build` entries (same discipline as [[Bench]]), then each
-  * heavy entry runs once, steady-state. Exponents are fitted on the
-  * top decade (sf0.1 → sf1), where per-entry times are seconds and
+  * The sf1 tables are a [[graft.queries.Fixture]] directory
+  * (`graft_sf1_<hex>` in the JVM's temp directory), cleared and rebuilt
+  * on every run like every other fixture, so they are always made by
+  * this code from the current sf0.1 tables. The step is a fixed 10×:
+  * each exponent is `log10` of a time ratio over one decade.
+  *
+  * Protocol: [[Bench]]'s run loop at each scale — every registry
+  * `*_build` first, each timed as its own entry ([[Bench.runBuilds]]),
+  * then each listed entry once, steady-state. Exponents are fitted on
+  * the top decade (sf0.1 → sf1), where per-entry times are seconds and
   * fixed overhead (~0.1 s/job scheduling floor) doesn't dominate;
   * the lower decade is reported for reference only.
   *
@@ -105,23 +111,8 @@ object Stress {
     "layout_bucketed_join", "layout_compact", "export_range_sorted",
     "src_csv_roundtrip", "src_orc_roundtrip")
 
-  /** Shared builds consumed by the measured tiers (subset of
-    * [[SparkEntry.benchBuilds]]). */
-  private val Builds = Seq(
-    "dedup_index_build", "dedup_passage_build", "dedup_stream_admit_build",
-    "decontam_state_build",
-    "pipeline_curate_build", "pipeline_curate_v3_build",
-    "layout_partition_build", "layout_bucketed_build",
-    "layout_zorder_build", "layout_compact_build",
-    "layout_range_sorted_build", "text_lm_build",
-    "text_hh_stream_build", "w10_stream_build",
-    "ops_incr_quantile_stream_build", "w11_stream_build",
-    "sim_pq_model_build", "sim_pq_encode_build", "sim_ivf_append_build",
-    "mm_pixel_build", "mm_audio_build", "mm_frame_build",
-    "mm_frame_stream_admit_build", "mm_stream_admit_build",
-    "mm_audio_stream_admit_build", "t2_wm_stream_build",
-    "j8_scd2_stream_build", "pgn_stream_build",
-    "ops_incr_agg_stream_build", "warc_build")
+  /** One decade: sf1 holds 10 replicas of sf0.1. */
+  private val Amp = 10
 
   private def tokenSuffixed(text: Column, rep: Column): Column =
     array_join(
@@ -135,15 +126,11 @@ object Stress {
     when(rep === 0, vec).otherwise(concat(
       slice(vec, rep + 1, size(vec) - rep), slice(vec, lit(1), rep)))
 
-  private def amplify(spark: SparkSession, base: String, out: String,
-      amp: Int): Unit = {
-    // v2: fact tables (orders/lineitem/events) amplified too, not
-    // byte-copied — bump the marker so a v1 work dir is rebuilt
-    val done = java.nio.file.Paths.get(out, "_AMPLIFIED_V2")
-    if (java.nio.file.Files.exists(done)) return
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+  /** Write the sf1 tables synthesized from `base` into `out`. */
+  private def amplify(spark: SparkSession, base: String, out: String)
+      : Unit = {
     val reps = broadcast(
-      spark.range(amp).select(col("id").cast("int").as("__rep")))
+      spark.range(Amp).select(col("id").cast("int").as("__rep")))
 
     val docs = Tables.documents(spark, base)
     val dStride = docs.agg(max("doc_id")).head().getLong(0) + 1
@@ -217,14 +204,6 @@ object Stress {
         java.nio.file.Paths.get(out, s"$t.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    java.nio.file.Files.createFile(done)
-  }
-
-  private def timed(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    try { body; (System.nanoTime() - t0) / 1e9 }
-    catch { case e: Throwable =>
-      System.err.println(s"stress: FAILED — ${e.getMessage}"); -1.0 }
   }
 
   /** dedup_semantic with the cell count grown ∝ corpus (the registry
@@ -240,39 +219,31 @@ object Stress {
       "/root/testdata/sf0.01")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val work = sys.env.getOrElse("SPARK_GRAFT_STRESS_WORK",
-      s"${sys.props("java.io.tmpdir")}/graft_sf1")
-    val amp = sys.env.getOrElse("SPARK_GRAFT_AMP", "10").toInt
     val spark = GraftSession.local()
     GraftSession.warm(spark, small)
     CacheScope.releaseAll(spark)
+    val work = graft.queries.Fixture.dir(spark, base, "sf1") { out =>
+      amplify(spark, base, out); out
+    }
 
-    amplify(spark, base, work, amp)
-
-    // Every `*_build` leg times a real build: fixture builds are never
-    // reused across JVMs (graft.queries.Fixture). Queries reuse the
-    // session-memoized build within a scale, so the non-build entries
-    // stay steady-state.
-
+    // Queries reuse the session-memoized builds within a scale, so the
+    // non-build entries stay steady-state.
     val scales = Seq(("sf0.01", small, 0.01), ("sf0.1", base, 0.1),
       ("sf1", work, 1.0))
     val times: Seq[(String, Seq[(String, Double)])] = scales.map {
       case (label, dir, sf) =>
-        val builds = Builds.map { n =>
-          n -> timed(SparkEntry.benchBuilds(n)(spark, dir))
-        }
-        val entries = (Heavy ++ TextTier ++ RelTier).map { n =>
-          n -> timed(
-            SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count())
-        }
+        val builds = Bench.runBuilds(spark, dir)
+        val entries = Bench.timeEach((Heavy ++ TextTier ++ RelTier)
+          .map(n => n -> SparkEntry.queries(n)))(
+          fn => Bench.force(fn(spark, dir)))
         // scaled-cells variant: 8 cells at the sf0.1 anchor, ∝ sf
         val cells = math.max(2, math.round(8 * sf / 0.1).toInt)
-        val scaled = "dedup_semantic_cells_scaled" -> timed(
-          semanticScaled(spark, dir, cells)
-            .queryExecution.toRdd.count())
+        val scaled = "dedup_semantic_cells_scaled"
+        val scaledTime = Bench.timed(scaled)(
+          Bench.force(semanticScaled(spark, dir, cells)))
         CacheScope.releaseAll(spark)
         System.err.println(s"stress: $label done")
-        label -> (builds ++ entries :+ scaled)
+        label -> (builds ++ entries :+ (scaled -> scaledTime))
     }
 
     val byScale = times.toMap
@@ -286,22 +257,18 @@ object Stress {
         if h > 0 && l > 0
       } yield math.log10(h / l)
     val names = byScale("sf1").map(_._1)
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    def obj(pairs: Seq[(String, Double)]): String =
-      pairs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
+    import Bench.{num, obj}
     val expTop = names.flatMap(n => expo(t1, t01)(n).map(n -> _))
     val expLow = names.flatMap(n => expo(t01, t001)(n).map(n -> _))
     val total1 = byScale("sf1").map(_._2).filter(_ >= 0).sum
     val json =
-      s"""{"metric":"sf1_total","value":${fmt(total1)},"unit":"sec"""" +
-      s""","amp":$amp,"queries":${obj(byScale("sf1"))}""" +
+      s"""{"metric":"sf1_total","value":${num(total1)},"unit":"sec"""" +
+      s""","amp":$Amp,"queries":${obj(byScale("sf1"))}""" +
       s""","exponent_sf01_to_sf1":${obj(expTop)}""" +
       s""","exponent_sf001_to_sf01":${obj(expLow)}""" +
       s""","times_sf01":${obj(byScale("sf0.1"))}""" +
       s""","times_sf001":${obj(byScale("sf0.01"))}""" +
-      s""","sf":"$work"}"""
+      s""","sf":${Bench.str(work)}}"""
     CacheScope.releaseAll(spark)   // its WARNs must precede the JSON line
     println(json)
     val out = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "BENCH_SF1.json")

@@ -64,8 +64,8 @@ object ChessPipeline extends QueryModule {
   private def runPipeline(s: SparkSession, d: String): Cleaning.CleanResult = {
     val normalized = graft.CacheScope.memo(s, d, "pgn_normalized") {
       val parsed = PgnParser.parseLines(synthesizedLines(s, d))
-      Normalize.buildGameData(parsed,
-        ingestedAt = lit("2025-05-02 00:00:00").cast("timestamp")).persist()
+      graft.CacheScope.track(Normalize.buildGameData(parsed,
+        ingestedAt = lit("2025-05-02 00:00:00").cast("timestamp")))
     }
     Cleaning.validateAndClean(normalized,
       validatedAt = lit("2025-05-02 00:00:00").cast("timestamp"))
@@ -177,7 +177,7 @@ object ChessPipeline extends QueryModule {
   override val benchBuilds: Map[String, (SparkSession, String) => Unit] =
     Map(
       "pgn_parse_build"  -> ((s, d) => {
-        // force the persisted normalize memo (persist() alone is lazy)
+        // force the cached normalize memo (caching alone is lazy)
         runPipeline(s, d).cleaned.queryExecution.toRdd.count(); ()
       }),
       "pgn_stream_build" -> ((s, d) => { streamedTable(s, d); () })

@@ -58,8 +58,8 @@ object CorpusOps extends QueryModule {
     * indexes in DataOps. */
   private def dupPositions(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memo(s, d, "passage_positions") {
-      PassageDedup.duplicatedPositions(
-        plantedCorpus(s, d, "dedup_passage"), "doc_id", "text", K).persist()
+      graft.CacheScope.track(PassageDedup.duplicatedPositions(
+        plantedCorpus(s, d, "dedup_passage"), "doc_id", "text", K))
     }
 
   private def dedupPassageSpans(s: SparkSession, d: String): DataFrame =
@@ -170,14 +170,14 @@ object CorpusOps extends QueryModule {
     graft.CacheScope.memo(s, d, "curate_v3_gated") {
       // keepExpr as a filter — one scan, no self-join, no second
       // derivation of the planted union
-      plantedCorpus(s, d, "pipeline_curate_v3")
-        .filter(LinearClassifier.keepExpr(col("text"))).persist()
+      graft.CacheScope.track(plantedCorpus(s, d, "pipeline_curate_v3")
+        .filter(LinearClassifier.keepExpr(col("text"))))
     }
 
   private def v3Positions(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memo(s, d, "curate_v3_positions") {
-      PassageDedup.duplicatedPositions(v3Gated(s, d), "doc_id", "text", K)
-        .persist()
+      graft.CacheScope.track(
+        PassageDedup.duplicatedPositions(v3Gated(s, d), "doc_id", "text", K))
     }
 
   private def pipelineCurateV3(s: SparkSession, d: String): DataFrame = {

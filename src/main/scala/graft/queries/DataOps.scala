@@ -38,7 +38,8 @@ object DataOps extends QueryModule {
   /** (id, shingle), persisted. */
   private def sharedShingles(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memo(s, d, "dedup_shingles") {
-      Dedup.shingles(Tables.documents(s, d), "doc_id", "text").persist()
+      graft.CacheScope.track(
+        Dedup.shingles(Tables.documents(s, d), "doc_id", "text"))
     }
 
   /** (id, sid) — dictionary-encoded, persisted. Separate memo entry:
@@ -48,8 +49,8 @@ object DataOps extends QueryModule {
   private def sharedEncoded(s: SparkSession, d: String): DataFrame = {
     val sh = sharedShingles(s, d)
     graft.CacheScope.memo(s, d, "dedup_encoded") {
-      sh.join(Dedup.shingleDictionary(sh), Seq("shingle"))
-        .select("id", "sid").persist()
+      graft.CacheScope.track(sh.join(Dedup.shingleDictionary(sh),
+        Seq("shingle")).select("id", "sid"))
     }
   }
 
@@ -59,7 +60,7 @@ object DataOps extends QueryModule {
   private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame = {
     val sh = sharedShingles(s, d)   // resolved before the thunk (no nesting)
     graft.CacheScope.memo(s, d, "jaccard_pairs") {
-      Dedup.jaccardPairsFromShingles(sh, 0.3).persist()
+      graft.CacheScope.track(Dedup.jaccardPairsFromShingles(sh, 0.3))
     }
   }
 
@@ -71,7 +72,8 @@ object DataOps extends QueryModule {
   private[queries] def sharedClusters(s: SparkSession, d: String): DataFrame = {
     val pairs = sharedJaccardPairs(s, d)   // resolved before the thunk
     graft.CacheScope.memo(s, d, "dedup_clusters") {
-      Dedup.connectedComponents(pairs.select("id1", "id2")).persist()
+      graft.CacheScope.track(
+        Dedup.connectedComponents(pairs.select("id1", "id2")))
     }
   }
 
@@ -319,9 +321,9 @@ object DataOps extends QueryModule {
       val sh = sharedShingles(s, d)
       val plantedSh = sh.unionByName(sh.filter(col("id") % 10 === 0)
         .select((col("id") + Planting.Offset).as("id"), col("shingle")))
-      Dedup.connectedComponents(
+      graft.CacheScope.track(Dedup.connectedComponents(
         Dedup.jaccardPairsFromShingles(plantedSh, 0.3)
-          .select("id1", "id2")).persist()
+          .select("id1", "id2")))
     }
 
   /** The curation pipelines' planted corpus. text is coalesced to ''
@@ -337,9 +339,10 @@ object DataOps extends QueryModule {
       val base = Tables.documents(s, d)
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
       Planting.requireHeadroom(base, "doc_id", "pipeline_curate")
-      base.unionByName(base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + Planting.Offset).as("doc_id"), col("text")))
-        .persist()
+      graft.CacheScope.track(base.unionByName(
+        base.filter(col("doc_id") % 10 === 0)
+          .select((col("doc_id") + Planting.Offset).as("doc_id"),
+            col("text"))))
     }
 
   private def pipelineCurate(s: SparkSession, d: String): DataFrame = {

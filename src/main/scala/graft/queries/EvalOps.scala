@@ -27,8 +27,8 @@ object EvalOps extends QueryModule {
     * (session, dir): three metric entries share it. */
   private def ranking(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memo(s, d, "eval_ranking") {
-      Similarity.bruteForceTopK(Tables.embeddings(s, d),
-        col("vec_id") % 50 === 0, k = K).persist()
+      graft.CacheScope.track(Similarity.bruteForceTopK(
+        Tables.embeddings(s, d), col("vec_id") % 50 === 0, k = K))
     }
 
   /** Sparse graded qrels: equi-join on label (the hash-join key),

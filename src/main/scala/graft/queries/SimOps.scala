@@ -68,7 +68,7 @@ object SimOps extends QueryModule {
   private def pqEncoded(s: SparkSession, d: String): DataFrame = {
     val model = pqModel(s, d)   // resolved before the nested memo
     graft.CacheScope.memo(s, d, "pq_encoded") {
-      Pq.pqEncode(Tables.embeddings(s, d), model).persist()
+      graft.CacheScope.track(Pq.pqEncode(Tables.embeddings(s, d), model))
     }
   }
 

@@ -218,12 +218,12 @@ object TrainPrep extends QueryModule {
       val pathId = when(expr("(doc_id % 400) DIV 20") < srcNum,
           col("doc_id") % 5)
         .otherwise(col("doc_id"))
-      UrlOps.canonicalize(
+      graft.CacheScope.track(UrlOps.canonicalize(
         Tables.documents(s, d).select(col("doc_id"), col("text"),
           concat(lit("https://"), col("source"),
             lit(".example.org/doc/"), pathId.cast("string"),
             when(col("doc_id") % 4 === 0, lit("?utm_source=feed"))
-              .otherwise(lit(""))).as("url"))).persist()
+              .otherwise(lit(""))).as("url"))))
     }
 
   private def webHostGate(s: SparkSession, d: String): DataFrame =

@@ -71,26 +71,25 @@ object Scd2Stream {
         val frontier = hist.groupBy(col(key))
           .agg(max(struct(col("valid_from").as("t"),
             col(tieBreak).as("k"))).as("__hwm"))
-        // persist, not localCheckpoint (r22): the count below
+        // a cache, not a localCheckpoint (r22): the count below
         // materializes the cache in ONE job where the eager checkpoint
         // ran its own materialization job AND the count — one fewer
         // action per micro-batch, and the cache is released as soon as
         // the batch's write lands (a checkpoint's blocks have no
         // recompute path, so they had to outlive the batch)
-        val fresh = batch
+        val fresh = graft.CacheScope.track(batch
           .join(frontier, Seq(key), "left_outer")
           .filter(col("__hwm").isNull ||
             struct(col(ts).as("t"), col(tieBreak).as("k"))
               > col("__hwm"))
-          .drop("__hwm")
-          .persist()
+          .drop("__hwm"))
         try {
           val n = fresh.count()
           if (n > 0)
             TableSwap.commit(Upsert.scd2MergeSlice(hist, fresh, key, ts,
               attr, tieBreak).select(outCols.map(col): _*), tablePath)
           n
-        } finally fresh.unpersist(false)
+        } finally graft.CacheScope.release(fresh)
     }
   }
 }

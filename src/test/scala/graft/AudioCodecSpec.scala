@@ -145,7 +145,7 @@ class AudioCodecSpec extends AnyFunSuite {
   }
 
   test("nearDupAudioClusters e2e: resampled/re-encoded/stereo/gain copies cluster, distinct scenes don't") {
-    val dir = Files.createTempDirectory("mm_audio_spec").toString
+    val dir = TestSpark.tempDir("mm_audio_spec").toString
     def put(name: String, b: Array[Byte]): Unit =
       Files.write(Paths.get(s"$dir/$name"), b)
     val e1 = AudioCodec.sceneEnvelope(1L)

@@ -88,7 +88,7 @@ class CacheScopeSpec extends AnyFunSuite {
     def memoized: Dataset[_] =
       CacheScope.memo(s, "cache-scope-spec", "memo") {
         builds += 1
-        s.range(0, 301, 1, 3).toDF("memo_id").persist()
+        CacheScope.track(s.range(0, 301, 1, 3).toDF("memo_id"))
       }
     val m = memoized
     assert(memoized eq m, "a memo builds once per session")
@@ -152,18 +152,21 @@ class CacheScopeSpec extends AnyFunSuite {
     CacheScope.releaseAll(s)
   }
 
-  test("CacheScope is the only localCheckpoint() caller in src/main") {
-    // one owner: a bare checkpoint elsewhere would pin blocks that no
-    // release point knows about
+  test("CacheScope is the only persist/localCheckpoint caller in src/main") {
+    // one owner: a bare cache or checkpoint elsewhere would pin blocks
+    // that no release point knows about
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"missing $root")
-    val call = """\.localCheckpoint\s*\(""".r
-    val offenders = java.nio.file.Files.walk(root).toArray.toSeq
+    val sources = java.nio.file.Files.walk(root).toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path])
       .filter(p => p.toString.endsWith(".scala") &&
         p.getFileName.toString != "CacheScope.scala")
-      .filter(p => call.findFirstIn(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
-    assert(offenders.isEmpty, s"bare localCheckpoint() in $offenders")
+      .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    for (call <- Seq("""\.localCheckpoint\s*\(""".r, """\.persist\s*\(""".r)) {
+      val offenders = sources.collect {
+        case (p, src) if call.findFirstIn(src).isDefined => p
+      }
+      assert(offenders.isEmpty, s"bare $call in $offenders")
+    }
   }
 }

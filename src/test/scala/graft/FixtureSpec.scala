@@ -28,20 +28,32 @@ class FixtureSpec extends AnyFunSuite {
     assert(query(spark.newSession(), sf0001).count() === full)
   }
 
-  test("graft.queries stages files and awaits streams only through " +
-      "Fixture") {
-    val root = Paths.get("src/main/scala/graft/queries")
+  /** (file name, text) of every Scala source under `dir` but `except`. */
+  private def sources(dir: String, except: String): Seq[(String, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"missing $root")
-    val sources = Files.list(root).toArray.toSeq.map(_.asInstanceOf[Path])
+    Files.walk(root).toArray.toSeq.map(_.asInstanceOf[Path])
       .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "Fixture.scala")
+        p.getFileName.toString != except)
       .map(p => p.getFileName.toString ->
         new String(Files.readAllBytes(p), "UTF-8"))
+  }
+
+  test("src/main stages files and awaits streams only through Fixture") {
+    val main = sources("src/main/scala", "Fixture.scala")
     for (needle <- Seq("java.io.tmpdir", "createTempDirectory",
         "awaitTermination(", "FixtureMarker")) {
-      val hits = sources.collect { case (f, src) if src.contains(needle) => f }
+      val hits = main.collect { case (f, src) if src.contains(needle) => f }
       assert(hits.isEmpty, s"$needle in $hits")
     }
+  }
+
+  test("tests make scratch directories only through TestSpark.tempDir") {
+    val call = """createTempDirectory\s*\(""".r
+    val hits = sources("src/test/scala", "TestSpark.scala").collect {
+      case (f, src) if call.findFirstIn(src).isDefined => f
+    }
+    assert(hits.isEmpty, s"createTempDirectory in $hits")
   }
 
   test("streamPartitions gives 1 to an input that reads no files") {
@@ -53,22 +65,20 @@ class FixtureSpec extends AnyFunSuite {
 
   test("streamPartitions gives ceil(file bytes / advisory size), clamped " +
       "to the cores") {
-    val root = Files.createTempDirectory("stream_parts")
-    try {
-      spark.range(0, 20000).selectExpr("id", "md5(cast(id as string)) s")
-        .repartition(3).write.parquet(s"$root/t")
-      val written = spark.read.parquet(s"$root/t")
-      val bytes = written.inputFiles
-        .map(f => Files.size(local(f))).sum
-      val cores = spark.sparkContext.defaultParallelism
-      def at(advisory: Long): Int = ScopedConf.withConf(spark,
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString) {
-        ScopedConf.streamPartitions(spark, written)
-      }
-      assert(cores >= 2)
-      assert(at(bytes) === 1)
-      assert(at((bytes + 1) / 2) === 2)
-      assert(at(bytes / 100) === cores)
-    } finally graft.sources.TableSwap.deleteRecursively(root)
+    val root = TestSpark.tempDir("stream_parts")
+    spark.range(0, 20000).selectExpr("id", "md5(cast(id as string)) s")
+      .repartition(3).write.parquet(s"$root/t")
+    val written = spark.read.parquet(s"$root/t")
+    val bytes = written.inputFiles
+      .map(f => Files.size(local(f))).sum
+    val cores = spark.sparkContext.defaultParallelism
+    def at(advisory: Long): Int = ScopedConf.withConf(spark,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString) {
+      ScopedConf.streamPartitions(spark, written)
+    }
+    assert(cores >= 2)
+    assert(at(bytes) === 1)
+    assert(at((bytes + 1) / 2) === 2)
+    assert(at(bytes / 100) === cores)
   }
 }

@@ -73,7 +73,7 @@ class IncrementalAggSpec extends AnyFunSuite {
   }
 
   test("stream applyBatch: replayed batch id is a no-op on state") {
-    val dir = Files.createTempDirectory("incr_spec").toString + "/state"
+    val dir = TestSpark.tempDir("incr_spec").toString + "/state"
     assert(IncrementalAggStream.applyBatch(batchA, 0L, dir, Keys, "v", "d"))
     assert(IncrementalAggStream.applyBatch(batchB, 1L, dir, Keys, "v", "d"))
     val before = spark.read.parquet(dir).collect().map(_.toString).sorted
@@ -90,7 +90,7 @@ class IncrementalAggSpec extends AnyFunSuite {
 
   test("stream applyBatch on a file:-scheme'd Hadoop path: replay skip + crash recovery") {
     import java.nio.file.Paths
-    val local = Files.createTempDirectory("incr_fs").toString
+    val local = TestSpark.tempDir("incr_fs").toString
     // explicit URI scheme: the marker + swap must route through the
     // Hadoop FileSystem for this path, not java.nio (which would
     // misread "file:/..." as a relative path)

@@ -54,7 +54,7 @@ class IvfAppendSpec extends AnyFunSuite {
 
   test("save → load round trip serves bit-identical query results " +
       "(centroids, assignments, vectors all survive)") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_save")
+    val dir = TestSpark.tempDir("ivf_save")
       .toString + "/idx"
     Similarity.saveIvfIndex(base, dir)
     val loaded = Similarity.loadIvfIndex(spark, dir)

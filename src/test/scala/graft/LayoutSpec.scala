@@ -97,7 +97,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact: file count follows the byte target, content preserved") {
-    val dir = java.nio.file.Files.createTempDirectory("cmp").toString
+    val dir = TestSpark.tempDir("cmp").toString
     val ev = Tables.events(spark, sf0001)
     ev.repartition(20).write.mode("overwrite").parquet(s"$dir/frag")
     def parts(p: String) = new java.io.File(p).listFiles()

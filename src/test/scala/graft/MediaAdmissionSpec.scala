@@ -41,7 +41,7 @@ class MediaAdmissionSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq.sorted
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/state"
+    TestSpark.tempDir(tag).toString + "/state"
 
   test("simhashMatches: cross-side banded probe is exact for maxDist < bands") {
     import TestSpark.spark.implicits._

@@ -21,7 +21,7 @@ class ModelPersistSpec extends AnyFunSuite {
   private val terms = Seq("spark", "window", "vector")
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/m"
+    TestSpark.tempDir(tag).toString + "/m"
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq

@@ -13,7 +13,7 @@ class MultimodalSpec extends AnyFunSuite {
   import TestSpark._
 
   private def plant(files: (String, String)*): String = {
-    val dir = Files.createTempDirectory("mm_fixture").toString
+    val dir = TestSpark.tempDir("mm_fixture").toString
     files.foreach { case (name, content) =>
       Files.write(Paths.get(s"$dir/$name"), content.getBytes("UTF-8"))
     }
@@ -87,7 +87,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("decodeMeta e2e: planted image files yield header dims via binaryFile") {
     import Multimodal.MediaHeaders
-    val dir = Files.createTempDirectory("mm_img").toString
+    val dir = TestSpark.tempDir("mm_img").toString
     Files.write(Paths.get(s"$dir/asset_10.png"),
       MediaHeaders.png(101, 44) ++ "tail".getBytes("UTF-8"))
     Files.write(Paths.get(s"$dir/asset_11.jpg"),
@@ -143,7 +143,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("decodeAv e2e: planted WAV/MP4 files yield container metadata via binaryFile") {
     import Multimodal.MediaHeaders
-    val dir = Files.createTempDirectory("mm_av").toString
+    val dir = TestSpark.tempDir("mm_av").toString
     Files.write(Paths.get(s"$dir/asset_20.wav"),
       MediaHeaders.wav(16000, 2, 4) ++ "tail".getBytes("UTF-8"))
     Files.write(Paths.get(s"$dir/asset_21.mp4"),

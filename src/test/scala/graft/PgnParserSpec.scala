@@ -75,7 +75,7 @@ class PgnParserSpec extends AnyFunSuite {
     }.toDF("src_file", "line_no", "line")))
 
   private def withDump[T](seed: Long)(body: (String, Seq[(String, Seq[String])]) => T): T = {
-    val dir = Files.createTempDirectory("pgn-parity")
+    val dir = TestSpark.tempDir("pgn-parity")
     try body(dir.toString, render(seed, dir))
     finally graft.sources.TableSwap.deleteRecursively(dir)
   }
@@ -124,7 +124,7 @@ class PgnParserSpec extends AnyFunSuite {
   test("a trailing block of only a malformed [ line: the same rows from readAndParse, parseLines and splitBlocks") {
     val lines = Seq("[White \"a\"]", "1. e4 e5 1-0", "", "[Black \"b\"]",
       "1. d4 0-1", "", "[junk only")
-    val dir = Files.createTempDirectory("pgn-junk")
+    val dir = TestSpark.tempDir("pgn-junk")
     try {
       Files.writeString(dir.resolve("j.pgn"), lines.mkString("\n") + "\n")
       val got = rows(PgnParser.readAndParse(spark, dir.toString))

@@ -283,7 +283,7 @@ class PixelCodecSpec extends AnyFunSuite {
   }
 
   test("nearDupMediaClusters e2e: re-encoded/resized/color/BMP copies cluster, distinct scenes don't") {
-    val dir = Files.createTempDirectory("mm_pxl_spec").toString
+    val dir = TestSpark.tempDir("mm_pxl_spec").toString
     def put(name: String, b: Array[Byte]): Unit =
       Files.write(Paths.get(s"$dir/$name"), b)
     val g1 = PixelCodec.sceneGrid(1L)

@@ -21,7 +21,7 @@ class PqPersistSpec extends AnyFunSuite {
     df.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
 
   test("model save → load round-trips codebooks and sqNorms bit-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_save")
+    val dir = TestSpark.tempDir("pq_save")
       .toString + "/pq"
     Pq.savePqModel(model, dir, spark)
     val loaded = Pq.loadPqModel(spark, dir)
@@ -43,7 +43,7 @@ class PqPersistSpec extends AnyFunSuite {
   }
 
   test("loaded model serves bit-identical pqTopK and pqRerank") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_save2")
+    val dir = TestSpark.tempDir("pq_save2")
       .toString + "/pq"
     Pq.savePqModel(model, dir, spark)
     val loaded = Pq.loadPqModel(spark, dir)
@@ -55,7 +55,7 @@ class PqPersistSpec extends AnyFunSuite {
 
   test("persisted encoded corpus serves bit-identical results without " +
       "re-encoding (topk + rerank stage-1 pool)") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_enc")
+    val dir = TestSpark.tempDir("pq_enc")
       .toString + "/pq"
     Pq.savePqEncoded(emb, model, dir)
     val enc = Pq.loadPqEncoded(spark, dir)

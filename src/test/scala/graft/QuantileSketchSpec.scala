@@ -75,7 +75,7 @@ class QuantileSketchSpec extends AnyFunSuite {
 
   test("streamed state: three deliveries + a replayed batch id " +
       "converge to the batch fold (replay is a no-op)") {
-    val dir = java.nio.file.Files.createTempDirectory("qsketch")
+    val dir = TestSpark.tempDir("qsketch")
       .toString + "/state"
     batches.zipWithIndex.foreach { case (b, i) =>
       assert(graft.streaming.QuantileSketchStream.applyBatch(

@@ -1,16 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-/** Shared session for all suites — one JVM-wide SparkSession. Its 4
-  * cores are fixed so test partitioning does not follow the host's
-  * `$SPARK_GRAFT_CPUS`. */
-object TestSpark {
-  lazy val spark: SparkSession = GraftSession.local("4")
-  val sf0001 = "/root/testdata/sf0.001"
-  val sf001 = "/root/testdata/sf0.01"
-}
 
 /** Contract checks over the whole SparkEntry registry. */
 class RegistrySpec extends AnyFunSuite {

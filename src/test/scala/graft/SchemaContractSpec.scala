@@ -83,7 +83,7 @@ class SchemaContractSpec extends AnyFunSuite {
   }
 
   test("mixed int/long generations: Spark mergeSchema refuses, contract read unions") {
-    val root = java.nio.file.Files.createTempDirectory("graft-evo")
+    val root = TestSpark.tempDir("graft-evo")
     root.toFile.deleteOnExit()
     val g0 = StructType(Seq(StructField("id", IntegerType),
       StructField("v", FloatType)))

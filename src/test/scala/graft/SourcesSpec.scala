@@ -17,7 +17,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("csv and json round-trip the tv_channel_games schema") {
-    val dir = Files.createTempDirectory("src").toString
+    val dir = TestSpark.tempDir("src").toString
     val games = Seq(
       ("g1", "alice", "bob", "1-0", 2400, true),
       ("g2", "carol", "dave", "0-1", 2200, false))
@@ -48,7 +48,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("bucketed tables join with no Exchange on either side") {
     import graft.sources.Bucketing
-    val base = Files.createTempDirectory("bk").toString
+    val base = TestSpark.tempDir("bk").toString
     val orders = Tables.orders(spark, sf001)
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val lineitem = Tables.lineitem(spark, sf001)
@@ -87,7 +87,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("partitioned layout prunes directories for partition predicates") {
     import graft.sources.Bucketing
-    val base = Files.createTempDirectory("pt").toString + "/events"
+    val base = TestSpark.tempDir("pt").toString + "/events"
     val events = Tables.events(spark, sf001)
       .withColumn("dt", to_date(col("ts")))
     Bucketing.writePartitioned(events, base, "dt")
@@ -127,7 +127,7 @@ class SourcesSpec extends AnyFunSuite {
   test("TextFormats: lenient jsonl read quarantines corrupt lines, keeps good ones") {
     import graft.sources.TextFormats
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("corrupt").toString
+    val dir = TestSpark.tempDir("corrupt").toString
     Files.write(java.nio.file.Paths.get(dir, "part-0.json"),
       java.util.Arrays.asList(
         """{"id": 1, "name": "ok"}""",
@@ -153,7 +153,7 @@ class SourcesSpec extends AnyFunSuite {
   test("TextFormats: jsonl and csv round-trip events losslessly (µs ts, quoted props)") {
     import graft.sources.TextFormats
     val ev = Tables.events(spark, sf0001)
-    val dir = Files.createTempDirectory("fmt").toString
+    val dir = TestSpark.tempDir("fmt").toString
     TextFormats.writeJsonl(ev, s"$dir/jsonl")
     TextFormats.writeCsv(ev, s"$dir/csv")
     val j = TextFormats.readJsonl(spark, s"$dir/jsonl", ev.schema)

@@ -19,7 +19,7 @@ class StateTableSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fileUri(prefix: String): String =
-    "file:" + Files.createTempDirectory(prefix).toString
+    "file:" + TestSpark.tempDir(prefix).toString
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -119,7 +117,7 @@ class StatefulSpec extends AnyFunSuite {
   }
 
   test("date-partitioned layout prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("layout").toString
+    val dir = TestSpark.tempDir("layout").toString
     val games = Seq(
       ("g1", java.sql.Date.valueOf("2025-01-01")),
       ("g2", java.sql.Date.valueOf("2025-01-02")),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +14,7 @@ class StreamAdmissionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   // near-dup pair: 12-word docs sharing 11 words → ~10/13 shingles
   // shared, Jaccard well above 0.3

@@ -22,9 +22,9 @@ class StreamMergeSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("StreamMerge: checkpointed foreachBatch merge is incremental and replay-safe") {
-    val src = Files.createTempDirectory("sm_src").toString
-    val cp = Files.createTempDirectory("sm_cp").toString
-    val table = Files.createTempDirectory("sm_tbl").toString + "/games"
+    val src = TestSpark.tempDir("sm_src").toString
+    val cp = TestSpark.tempDir("sm_cp").toString
+    val table = TestSpark.tempDir("sm_tbl").toString + "/games"
 
     def fileA() = Seq(
       ("g1", "alice", ts("2025-05-01 10:00:00")),
@@ -58,7 +58,7 @@ class StreamMergeSpec extends AnyFunSuite {
 
     // full replay (lost checkpoint): reprocessing everything converges
     // to the same table — idempotent merge absorbs at-least-once
-    val cp2 = Files.createTempDirectory("sm_cp2").toString
+    val cp2 = TestSpark.tempDir("sm_cp2").toString
     runOnce(cp2)
     assert(tableRows() === expected)
   }
@@ -67,7 +67,7 @@ class StreamMergeSpec extends AnyFunSuite {
       "derivation; last-slice redelivery is a no-op") {
     import graft.ops.Upsert
     import graft.streaming.Scd2Stream
-    val table = Files.createTempDirectory("scd2s").toString + "/hist"
+    val table = TestSpark.tempDir("scd2s").toString + "/hist"
     val log = Tables.events(spark, sf001)
       .select("user_id", "ts", "event_type", "event_id")
     // terciles on the raw long micros (exact, deterministic)
@@ -107,7 +107,7 @@ class StreamMergeSpec extends AnyFunSuite {
       "correctly (lexicographic high-water mark, not ts-only)") {
     import graft.ops.Upsert
     import graft.streaming.Scd2Stream
-    val table = Files.createTempDirectory("scd2eq").toString + "/hist"
+    val table = TestSpark.tempDir("scd2eq").toString + "/hist"
     val t = ts("2025-06-01 12:00:00")
     // same user, same timestamp, consecutive tie-breaks — legal under
     // the derivation's (ts, tieBreak) total order
@@ -137,9 +137,9 @@ class StreamMergeSpec extends AnyFunSuite {
       "and a fresh-checkpoint replay of change-point batches converges") {
     import graft.ops.Upsert
     import graft.streaming.Scd2Stream
-    val src = Files.createTempDirectory("scd2_src").toString
-    val cp = Files.createTempDirectory("scd2_cp").toString
-    val table = Files.createTempDirectory("scd2_tbl").toString + "/hist"
+    val src = TestSpark.tempDir("scd2_src").toString
+    val cp = TestSpark.tempDir("scd2_cp").toString
+    val table = TestSpark.tempDir("scd2_tbl").toString + "/hist"
     // change-point-only changelog: every row flips the attr
     def slice(ids: Seq[Long], t0: String, attr: String) = ids.map(u =>
       (u, ts(t0), attr, u * 10 + attr.length.toLong))
@@ -169,7 +169,7 @@ class StreamMergeSpec extends AnyFunSuite {
       want.except(table_()).count() == 0)
     // lost checkpoint, full redelivery: every change point already in
     // history → both batches drop to empty slices, table unchanged
-    runOnce(Files.createTempDirectory("scd2_cp2").toString)
+    runOnce(TestSpark.tempDir("scd2_cp2").toString)
     assert(table_().except(want).count() == 0 &&
       want.except(table_()).count() == 0)
   }
@@ -177,7 +177,7 @@ class StreamMergeSpec extends AnyFunSuite {
   test("mergeParquet recovers the table from a backup left by a crashed swap") {
     import java.nio.file.Paths
     import graft.streaming.MicroBatchIngest.mergeParquet
-    val table = Files.createTempDirectory("rc").toString + "/t"
+    val table = TestSpark.tempDir("rc").toString + "/t"
     val batch1 = Seq(("k1", "v1", ts("2025-05-01 10:00:00")),
       ("k2", "v1", ts("2025-05-01 10:00:00")))
       .toDF("id_game", "id_user_white", "tm_ingested")
@@ -198,7 +198,7 @@ class StreamMergeSpec extends AnyFunSuite {
 
   test("mergeParquet returns the merged row count, empty deliveries included") {
     import graft.streaming.MicroBatchIngest.mergeParquet
-    val dir = Files.createTempDirectory("mc").toString
+    val dir = TestSpark.tempDir("mc").toString
     val batch = Seq(("k1", "v0", ts("2025-05-01 09:00:00")),
       ("k1", "v1", ts("2025-05-01 10:00:00")),
       ("k2", "v1", ts("2025-05-01 10:00:00")))
@@ -214,7 +214,7 @@ class StreamMergeSpec extends AnyFunSuite {
       "data; read recovers a crashed swap") {
     import java.nio.file.Paths
     import graft.sources.TableSwap
-    val table = Files.createTempDirectory("swap").toString + "/t"
+    val table = TestSpark.tempDir("swap").toString + "/t"
     assert(TableSwap.read(spark, table).isEmpty)
     assert(TableSwap.commit(Seq(1L, 2L, 3L).toDF("v"), table,
       Some("_m" -> "7")) === 3L)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +22,7 @@ class StreamingSpec extends AnyFunSuite {
        |""".stripMargin
 
   test("T1-T3: micro-batch loop merges batches, last write wins, idempotent") {
-    val dir = Files.createTempDirectory("mb").toString
+    val dir = TestSpark.tempDir("mb").toString
     val table = s"$dir/tv_channel_games"
     val batches: Int => Seq[String] = {
       case 0 => Seq(pgn("aaaa1111", "alice", "1-0") + "\n" + pgn("bbbb2222", "bob", "0-1"))
@@ -48,7 +46,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T4: streaming tumbling-window agg matches the batch result") {
     val events = Tables.events(spark, sf0001).cache()
-    val src = Files.createTempDirectory("ev").toString
+    val src = TestSpark.tempDir("ev").toString
     events.write.mode("overwrite").parquet(src)
     val stream = spark.readStream
       .schema(spark.read.parquet(src).schema)
@@ -198,7 +196,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T2: streaming dropDuplicates removes cross-batch re-deliveries") {
     val events = Tables.events(spark, sf0001).limit(100).cache()
-    val src = Files.createTempDirectory("dup").toString
+    val src = TestSpark.tempDir("dup").toString
     // two identical files = the same events delivered twice
     events.write.mode("overwrite").parquet(s"$src/a")
     events.write.mode("overwrite").parquet(s"$src/b")

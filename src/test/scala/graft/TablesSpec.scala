@@ -19,7 +19,7 @@ class TablesSpec extends AnyFunSuite {
   private val epochUs = 1700000000000000L // 2023-11-14T22:13:20 UTC
 
   private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    val d = TestSpark.tempDir(s"graft-$name")
     d.toFile.deleteOnExit()
     s"$d/events.parquet"
   }
@@ -91,7 +91,7 @@ class TablesSpec extends AnyFunSuite {
     "embeddings" -> (Tables.embeddings _))
 
   test("every loader absorbs a narrowed-generation parquet (int32/float32 + added column)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-narrowgen")
+    val root = TestSpark.tempDir("graft-narrowgen")
     root.toFile.deleteOnExit()
     Tables.contracts.keys.foreach { name =>
       val orig = Tables.table(spark, sf0001, name)
@@ -127,7 +127,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("case-only column drift binds to the contract (analyzer-consistent)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-casegen")
+    val root = TestSpark.tempDir("graft-casegen")
     root.toFile.deleteOnExit()
     Tables.table(spark, sf0001, "documents")
       .select(col("doc_id").as("DOC_ID"), col("text").as("Text"),
