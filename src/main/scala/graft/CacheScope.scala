@@ -1,7 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The one owner of session-scoped storage. Three kinds of entry live
   * in one table per session, under one lock:
@@ -69,9 +73,24 @@ object CacheScope {
       _ => new Memo(() => build))).value.asInstanceOf[T]
 
   /** Persist `df` (MEMORY_AND_DISK, `.cache()` semantics) and register
-    * it. */
-  def track[T](df: Dataset[T]): Dataset[T] =
-    pin(df.cache())(df.unpersist(false))
+    * it. A plan that another handle already cached is not cached again:
+    * both handles read the one cache entry, which stays until the last
+    * of them is released. */
+  def track[T](df: Dataset[T]): Dataset[T] = {
+    if (df.storageLevel == StorageLevel.NONE) df.cache()
+    pin(df)(if (!sharesEntry(df)) df.unpersist(false))
+  }
+
+  /** Whether a registered handle other than `ds`, in any session, reads
+    * the cache entry `ds` reads. */
+  private def sharesEntry(ds: Dataset[_]): Boolean = {
+    val cm = ds.sparkSession.sharedState.cacheManager
+    cm.lookupCachedData(castToImpl(ds)).exists { entry =>
+      scopes.synchronized(scopes.values.asScala.exists(
+        _.pinned.keySet.asScala.exists(h =>
+          (h ne ds) && cm.lookupCachedData(castToImpl(h)).exists(_ eq entry))))
+    }
+  }
 
   /** Eager `localCheckpoint`, registered. The returned Dataset is the
     * handle [[release]] takes; a plan derived from it is not. */
@@ -83,8 +102,10 @@ object CacheScope {
 
   /** Free a registered cache or checkpoint NOW and forget it — for
     * iteration loops whose superseded generations are provably dead
-    * (e.g. rank vector i−1 once vector i is materialized). A released
-    * checkpoint must not be read again: there is no recompute path.
+    * (e.g. rank vector i−1 once vector i is materialized). A cache
+    * entry that another registered handle still reads stays cached. A
+    * released checkpoint must not be read again: there is no recompute
+    * path.
     * No-op on anything else, a plan derived from a handle included.
     * An emptied scope is dropped: every stream runs its micro-batches
     * on its own cloned session, so per-stream scopes would otherwise

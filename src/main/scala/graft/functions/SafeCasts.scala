@@ -53,11 +53,6 @@ object SafeCasts {
   def tryToDate(c: Column, fmt: String): Column =
     when(c.rlike(shapeRe(fmt)), try_to_date(c, fmt)).otherwise(lit(null))
 
-  /** [[tryToDate]]'s analog for `try_to_timestamp`. */
-  def tryToTimestamp(c: Column, fmt: String): Column =
-    when(c.rlike(shapeRe(fmt)), try_to_timestamp(c, lit(fmt)))
-      .otherwise(lit(null).cast("timestamp"))
-
   private[functions] def shapeRe(fmt: String): String = {
     // Fail FAST on pattern letters the shape derivation doesn't model:
     // quoting them as literals would turn the "permissive" guard into

@@ -57,7 +57,7 @@ object AudioCodec {
     * channels, to mono samples. Unknown chunks (LIST metadata etc.)
     * are skipped — a re-encoded container with stripped/added tags
     * decodes to the same samples. None on anything malformed. */
-  def decodePcmWav(b: Array[Byte]): Option[Pcm] = {
+  private[graft] def decodePcmWav(b: Array[Byte]): Option[Pcm] = {
     if (b.length < 12 || fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "WAVE")
       return None
     var rate = 0; var channels = 0; var bits = 0; var haveFmt = false
@@ -119,7 +119,7 @@ object AudioCodec {
     * (sign/15-bit exponent/explicit-integer-bit 64-bit mantissa);
     * integral rates recover exactly from the top mantissa bits.
     * Unknown chunks are skipped; None on anything malformed. */
-  def decodeAiff16(b: Array[Byte]): Option[Pcm] = {
+  private[graft] def decodeAiff16(b: Array[Byte]): Option[Pcm] = {
     if (b.length < 12 || fourcc(b, 0) != "FORM" || fourcc(b, 8) != "AIFF")
       return None
     var rate = 0; var channels = 0; var bits = 0; var haveComm = false
@@ -172,7 +172,8 @@ object AudioCodec {
 
   /** 64-bin energy envelope: bin b = floor-mean of |sample| over
     * {i : ⌊64·i/n⌋ = b}. None below 64 samples (empty bins). */
-  def energyEnvelope(samples: Array[Int]): Option[Array[Long]] = {
+  private[graft] def energyEnvelope(samples: Array[Int])
+      : Option[Array[Long]] = {
     val n = samples.length
     if (n < 64) return None
     val sums = new Array[Long](64)
@@ -194,7 +195,7 @@ object AudioCodec {
   /** 64-bit gradient fingerprint over the envelope: bit k set when bin
     * (k+1) mod 64 is strictly louder than bin k (the dHash rule on one
     * 64-long row, wrapping 63→0). */
-  def fingerprint64(env: Array[Long]): Long = {
+  private[graft] def fingerprint64(env: Array[Long]): Long = {
     require(env.length == 64, "fingerprint64 expects 64 energy bins")
     var h = 0L
     var k = 0
@@ -212,7 +213,7 @@ object AudioCodec {
     * re-encode of a WAV recording reaches the identical envelope (a
     * 24-bit remaster reaches it ×256 — gradient signs are
     * scale-invariant). */
-  def decodeAudio(payload: Array[Byte]): Option[Pcm] =
+  private[graft] def decodeAudio(payload: Array[Byte]): Option[Pcm] =
     decodePcmWav(payload).orElse(FlacCodec.decodeFlac16(payload))
       .orElse(decodeAiff16(payload))
 

@@ -671,7 +671,7 @@ object Multimodal {
   /** The pair machinery over precomputed (asset_id, frame_no, phash)
     * rows — exposed so pipelines (curate v10) can share ONE cached
     * decode projection between the decode gate and the pairing. */
-  def clipPairsFromFrameHashes(fh: DataFrame,
+  private def clipPairsFromFrameHashes(fh: DataFrame,
       maxDist: Int = 2): DataFrame = {
     // composite frame id: clip ⊕ frame ordinal (frame counts are
     // bounded by the decoder's maxFrames=256 cap, so 9 bits suffice).

@@ -122,7 +122,7 @@ object PixelCodec {
     * any 8-bit-representable value). Ancillary chunks (tEXt etc.) are
     * skipped, so metadata-stripped/annotated re-encodes decode to the
     * same pixels. Returns None for malformed input. */
-  def decodePng(b: Array[Byte]): Option[Gray] = {
+  private[graft] def decodePng(b: Array[Byte]): Option[Gray] = {
     if (b.length < 45 || !b.take(8).sameElements(PngSig)) return None
     var p = 8
     var w = 0; var h = 0; var colorType = -1; var ok = false
@@ -356,7 +356,7 @@ object PixelCodec {
   /** Decode a 24-bit uncompressed bottom-up BMP (BITMAPINFOHEADER) to
     * luma via the same BT.601 weights as the PNG color modes (fixtures
     * write R=G=B, where the weights collapse to identity). */
-  def decodeBmp24(b: Array[Byte]): Option[Gray] = {
+  private[graft] def decodeBmp24(b: Array[Byte]): Option[Gray] = {
     if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return None
     val dataOff = le32(b, 10).toInt
     if (le32(b, 14).toInt < 40) return None       // header size
@@ -385,7 +385,7 @@ object PixelCodec {
   /** Pixel decode across the supported formats (PNG, BMP, baseline
     * JPEG — [[JpegCodec]] carries the DCT tier — GIF via [[GifCodec]]'s
     * LZW tier, and baseline TIFF via [[TiffCodec]]'s IFD/strip walk). */
-  def decodePixels(b: Array[Byte]): Option[Gray] =
+  private[graft] def decodePixels(b: Array[Byte]): Option[Gray] =
     decodePng(b).orElse(decodeBmp24(b))
       .orElse(JpegCodec.decodeJpeg(b))
       .orElse(GifCodec.decodeGif(b))

@@ -425,7 +425,7 @@ object Vp8Codec {
 
   /** Exact integer 4×4 inverse DCT; `c` natural order, result into
     * `out` (row-major), final (x+4)>>3. */
-  def idct4x4(c: Array[Int], out: Array[Int]): Unit = {
+  private[graft] def idct4x4(c: Array[Int], out: Array[Int]): Unit = {
     val t = new Array[Int](16)
     var i = 0
     while (i < 4) {
@@ -458,7 +458,7 @@ object Vp8Codec {
   }
 
   /** Exact integer inverse Walsh–Hadamard (Y2 → 16 luma DCs). */
-  def iwalsh(c: Array[Int], out: Array[Int]): Unit = {
+  private[graft] def iwalsh(c: Array[Int], out: Array[Int]): Unit = {
     val t = new Array[Int](16)
     var i = 0
     while (i < 4) {

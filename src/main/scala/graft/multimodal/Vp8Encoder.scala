@@ -58,7 +58,7 @@ object Vp8Encoder {
   }
 
   /** The raw VP8 key-frame payload. */
-  def encodeVp8Frame(g: Gray, qi: Int, nParts: Int,
+  private def encodeVp8Frame(g: Gray, qi: Int, nParts: Int,
       skipFlags: Boolean, filterLevel: Int = 0,
       simpleFilter: Boolean = false, sharpness: Int = 0,
       segmented: Boolean = false,

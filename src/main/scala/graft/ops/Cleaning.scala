@@ -27,14 +27,14 @@ object Cleaning {
 
   /** `_clean_title` (:78-83): falsy or none/unranked → "None", else
     * TRIM+UPPER. */
-  def cleanTitle(c: Column): Column =
+  private def cleanTitle(c: Column): Column =
     when(falsy(c) || lower(trim(c)).isin("none", "unranked"), lit("None"))
       .otherwise(upper(trim(c)))
 
   /** Termination canonicalization (:134-141): upper-trimmed through
     * {TIME FORFEIT→TIME_FORFEIT, UNTERMINATED→NORMAL, identity on canon},
     * default NORMAL. */
-  def canonTermination(c: Column): Column = {
+  private def canonTermination(c: Column): Column = {
     val key = upper(trim(coalesce(c, lit(""))))
     coalesce(
       element_at(typedLit(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Keyed dataset diff — the regression check between two versions of
@@ -38,10 +38,4 @@ object Diff {
           .when(!(col("__o") <=> col("__n")), lit("changed"))
           .otherwise(lit("unchanged")).as("status"))
   }
-
-  /** The summary form: one row per status with its count. */
-  def diffCounts(oldDf: DataFrame, newDf: DataFrame, key: String,
-      compareCols: Seq[String] = Nil): DataFrame =
-    diff(oldDf, newDf, key, compareCols)
-      .groupBy("status").agg(count(lit(1)).as("n"))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic sharded corpus export — the "write the training set"
@@ -34,7 +34,7 @@ object Export {
       s"CAST($inner AS VARCHAR)", nShards)
 
   /** The corpus with its shard assignment materialized. */
-  def withShard(df: DataFrame, idCol: String, nShards: Int): DataFrame =
+  private def withShard(df: DataFrame, idCol: String, nShards: Int): DataFrame =
     df.withColumn("shard", shardId(col(idCol), nShards))
 
   /** Manifest: (shard, n_docs, n_tokens, n_chars, min_doc_id,
@@ -74,10 +74,6 @@ object Export {
       else sharded
     ordered.write.mode("overwrite").partitionBy("shard").parquet(path)
   }
-
-  /** Read one shard back (partition-pruned scan). */
-  def readShard(s: SparkSession, path: String, shard: Int): DataFrame =
-    s.read.parquet(path).filter(col("shard") === shard)
 
   /** Globally-ORDERED export without a global sort: range-partition on
     * the sort key (`repartitionByRange` samples split points in one

@@ -34,21 +34,6 @@ object Skew {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Two-phase aggregation for skewed group keys: partial-aggregate on
-    * (key, salt), then final-aggregate on key. `partial` and `merge`
-    * must form the usual associative partial/final pair (e.g.
-    * count→sum). The default two-phase HashAggregate already does this
-    * map-side; explicit salting additionally splits a hot key across
-    * REDUCERS in the first shuffle. */
-  def saltedCount(df: DataFrame, key: String, buckets: Int): DataFrame =
-    df.withColumn("__salt",
-        pmod(xxhash64(struct(df.columns.map(col) :+
-          monotonically_increasing_id(): _*)), lit(buckets)))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").as("n"))
-
   /** Exact `count(DISTINCT value)` per key with the hot key's distinct
     * SET split across reducers. Plain count-distinct is the aggregation
     * map-side partials cannot fix: every distinct value of a hot key

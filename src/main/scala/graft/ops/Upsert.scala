@@ -39,12 +39,6 @@ object Upsert {
       key: String): DataFrame =
     existing.join(incoming, Seq(key), "left_anti").unionByName(incoming)
 
-  /** Convenience: newest `orderCol` wins (callers must ensure it is
-    * unique per key, or use the Seq overload with a tiebreaker). */
-  def lastWriteWins(existing: DataFrame, incoming: DataFrame,
-      key: String, orderCol: String): DataFrame =
-    lastWriteWins(existing, incoming, key, Seq(desc(orderCol)))
-
   /** First-write-wins (users, backfill_user_profiles.py:169-220):
     * incoming rows whose key already exists are DISCARDED — existing
     * rows are never updated (docs/assumptions.md:36).
@@ -54,10 +48,6 @@ object Upsert {
     val dedup = firstPerKey(incoming, key, orderCols)
     existing.unionByName(dedup.join(existing, Seq(key), "left_anti"))
   }
-
-  def firstWriteWins(existing: DataFrame, incoming: DataFrame,
-      key: String, orderCol: String): DataFrame =
-    firstWriteWins(existing, incoming, key, Seq(asc(orderCol)))
 
   /** Incremental SCD-2 maintenance — fold a NEW changelog slice into
     * an existing history without re-deriving from the full log (the

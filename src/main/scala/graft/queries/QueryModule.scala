@@ -54,23 +54,26 @@ private[graft] object ScopedConf {
     * shuffle partition per advisory-sized chunk of the files `input`
     * reads, capped at the session's core count —
     * `clamp(⌈bytes / advisoryPartitionSize⌉, 1, cores)`. Bytes are the
-    * lengths of `input.inputFiles`, so an input with no files (an RDD
-    * or local relation) gets 1, never the planner's default-size
-    * estimate. Fixture-sized inputs get the few-store/few-file
-    * behavior; at 100 TB the same formula saturates the executors
-    * (bytes/advisory ≫ cores). The advisory size rides
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` so cluster
-    * tuning flows through. */
+    * lengths the scans' file indexes already hold (each distinct path
+    * once, the files `input.inputFiles` names), so the driver stats no
+    * file, and an input with no files (an RDD or local relation) gets
+    * 1, never the planner's default-size estimate. Fixture-sized
+    * inputs get the few-store/few-file behavior; at 100 TB the same
+    * formula saturates the executors (bytes/advisory ≫ cores). The
+    * advisory size rides `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * so cluster tuning flows through. */
   def streamPartitions(s: SparkSession,
       input: org.apache.spark.sql.DataFrame): Int = {
     val cores = math.max(1, s.sparkContext.defaultParallelism)
     val advisory = math.max(1L, s.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val hadoopConf = s.sessionState.newHadoopConf()
-    val bytes = input.inputFiles.iterator.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(hadoopConf).getFileStatus(p).getLen
-    }.sum
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelationWithTable}
+    val bytes = input.queryExecution.optimizedPlan.collect {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files)
+    }.flatten.map(f => f.getPath.toUri.toString -> f.getLen).toMap
+      .values.sum
     math.max(1L, ((bytes + advisory - 1) / advisory).min(cores)).toInt
   }
 

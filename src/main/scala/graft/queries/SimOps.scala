@@ -62,9 +62,8 @@ object SimOps extends QueryModule {
     }
 
   /** The encoded corpus (codes + rnorm), built once per (session,
-    * dir) — the "encode once per corpus version" serve shape
-    * [[Pq.savePqEncoded]] persists across sessions; every PQ entry
-    * reads this instead of re-encoding per query batch. */
+    * dir) — the "encode once per corpus version" serve shape; every
+    * PQ entry reads this instead of re-encoding per query batch. */
   private def pqEncoded(s: SparkSession, d: String): DataFrame = {
     val model = pqModel(s, d)   // resolved before the nested memo
     graft.CacheScope.memo(s, d, "pq_encoded") {

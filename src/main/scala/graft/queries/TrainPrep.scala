@@ -72,9 +72,9 @@ object TrainPrep extends QueryModule {
     Planting.requireHeadroom(docs, "doc_id", "text_normalize_uni")
     val planted = UniRows.toDF("doc_id", "text")
     TextAnalysis.normalizeUnicode(docs.unionByName(planted))
-      // tokensUnicode(text) ≡ split of the canonical form already in
-      // scope — counting over norm_text skips a second NFC + double
-      // regexp pass over every document
+      // tokens = split of the canonical form already in scope —
+      // counting over norm_text skips a second NFC + double regexp
+      // pass over every document
       .withColumn("n_tokens", size(filter(
         split(col("norm_text"), " "), w => length(w) > 0)))
       .select("doc_id", "norm_text", "n_chars_before", "n_chars_after",

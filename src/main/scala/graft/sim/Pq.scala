@@ -175,20 +175,11 @@ object Pq {
   // as the reference semantics and proves bit-parity on both shapes.
 
   /** ADC top-k: approximate cosine = Σ_j LUT[j][code_j] / (‖q‖·rnorm).
-    * Output (query_id, rank, cand_id, score). The corpus side is the
-    * encoded scan (m bytes + 1 double per row) against a broadcast
-    * query-LUT block — no corpus shuffle. */
-  def pqTopK(embeddings: DataFrame, queryPred: org.apache.spark.sql.Column,
-      k: Int, model: PqModel): DataFrame =
-    pqTopKEncoded(pqEncode(embeddings, model), embeddings, queryPred,
-      k, model)
-
-  /** [[pqTopK]] against an ALREADY-ENCODED corpus (e.g. loaded via
-    * [[loadPqEncoded]]) — the serve-path shape: encode once per
-    * corpus version, persist, and every later query batch pays only
-    * the (m bytes + 1 double)/row encoded scan, never a re-encode.
-    * Bit-identical to [[pqTopK]] for `enc = pqEncode(...)` of the
-    * same model (PqPersistSpec pins the round trip).
+    * Output (query_id, rank, cand_id, score), against an
+    * ALREADY-ENCODED corpus `enc = pqEncode(embeddings, model)` — the
+    * serve-path shape: encode once per corpus version, and every
+    * query batch pays only the (m bytes + 1 double)/row encoded scan,
+    * never a re-encode.
     *
     * Plan shape mirrors [[Similarity.bruteForceTopK]]'s tiled
     * primitive-block harness — query LUTs collect into BOUNDED tiles
@@ -311,7 +302,7 @@ object Pq {
     * shipped `merges.txt`. Rendered identically by [[pinnedCbSql]] for
     * the DuckDB oracle, so codebook, assignment and ADC scores are all
     * BIGINT-exact cross-engine. */
-  def pinnedCbVal(j: Int, c: Int, i: Int): Int =
+  private def pinnedCbVal(j: Int, c: Int, i: Int): Int =
     ((c * (2 * i + 1) + 3 * j) % 17) - 8
 
   /** [[pinnedCbVal]] as a DuckDB SQL expression over the (non-negative
@@ -319,7 +310,7 @@ object Pq {
   def pinnedCbSql(j: String, c: String, i: String): String =
     s"((($c) * (2*($i)+1) + 3*($j)) % 17) - 8"
 
-  /** Pinned-integer ADC conformance twin of [[pqTopK]]: the same
+  /** Pinned-integer ADC conformance twin of [[pqTopKEncoded]]: the same
     * encode → LUT → Σ_j LUT[j][code_j] → rank pipeline (including the
     * SAME codegen'd [[graft.functions.ArrayAdcSum]] table-lookup
     * kernel and the same [[nearest]] lowest-tie assignment kernel),
@@ -327,7 +318,7 @@ object Pq {
     * vectors ([[Quantize.q8Codes]]) and the [[pinnedCbVal]] codebook —
     * every distance, LUT cell and score is integer arithmetic, so the
     * full ADC ranking is BIGINT-exact and oracle-checkable by hash.
-    * The trained float path ([[pqTopK]]) stays rows-only by necessity
+    * The trained float path ([[pqTopKEncoded]]) stays rows-only by necessity
     * (float k-means is engine-specific); this twin is its hash anchor.
     *
     * Scale shape is the production one: the encoded corpus
@@ -384,20 +375,13 @@ object Pq {
       .select("query_id", "rank", "cand_id", "score")
   }
 
-  /** Two-stage PQ retrieval: ADC proposes `mPool` candidates, exact
-    * float cosine re-ranks them to `k` (same stage-2 semantics as
-    * [[Quantize.q8Rerank]], i.e. the sim_cosine_topk oracle's). With
-    * mPool ≥ corpus size stage 1 keeps every candidate and the output
-    * equals [[Similarity.bruteForceTopK]] bit-for-bit — the
-    * exhaustive-mode conformance proof. */
-  def pqRerank(embeddings: DataFrame, queryPred: org.apache.spark.sql.Column,
-      k: Int, mPool: Int, model: PqModel): DataFrame =
-    pqRerankWith(pqTopK(embeddings, queryPred, mPool, model),
-      embeddings, queryPred, k, mPool)
-
-  /** [[pqRerank]] stage 2 over an explicit stage-1 pool — lets the
-    * serve path feed ADC candidates from a persisted encoded corpus
-    * ([[pqTopKEncoded]]) without re-encoding. */
+  /** Two-stage PQ retrieval, stage 2: exact float cosine re-ranks a
+    * stage-1 ADC pool ([[pqTopKEncoded]] with k = `mPool`) to `k`
+    * (same stage-2 semantics as [[Quantize.q8Rerank]], i.e. the
+    * sim_cosine_topk oracle's). With mPool ≥ corpus size stage 1
+    * keeps every candidate and the output equals
+    * [[Similarity.bruteForceTopK]] bit-for-bit — the exhaustive-mode
+    * conformance proof. */
   def pqRerankWith(pool: DataFrame, embeddings: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int, mPool: Int)
       : DataFrame = {
@@ -421,57 +405,4 @@ object Pq {
       .filter(col("rank") <= k)
       .select("query_id", "rank", "cand_id", "cosine")
   }
-
-  /** Persist a trained model: codebooks as an m·ksub-row metadata
-    * parquet (one row per (subspace, code) with its centroid and
-    * ‖centroid‖² — doubles round-trip parquet bit-exactly, so a
-    * loaded model's codes, LUTs and scores are identical to the
-    * in-session model's). The [[saveIvfIndex]] analog: train once,
-    * save once, serve from any later session. */
-  def savePqModel(model: PqModel, path: String,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    import spark.implicits._
-    val rows = for {
-      j <- model.codebooks.indices
-      c <- model.codebooks(j).indices
-    } yield (j, c, model.codebooks(j)(c).toSeq, model.sqNorms(j)(c))
-    rows.toDF("sub", "code", "vd", "sqnorm")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-  }
-
-  /** Load a persisted model. `sqNorms` re-derives from the loaded
-    * codebooks by the same fixed-order fold that built the saved
-    * `sqnorm` column, so the round trip is bit-exact end to end. */
-  def loadPqModel(spark: org.apache.spark.sql.SparkSession,
-      path: String): PqModel = {
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .select("sub", "code", "vd").as[(Int, Int, Seq[Double])]
-      .collect()
-    require(rows.nonEmpty, s"loadPqModel: empty codebook at $path")
-    val m = rows.map(_._1).max + 1
-    val ksub = rows.map(_._2).max + 1
-    val byKey = rows.map(r => (r._1, r._2) -> r._3.toArray).toMap
-    val cb = Array.tabulate(m, ksub)((j, c) => byKey((j, c)))
-    PqModel(cb.head.head.length, cb)
-  }
-
-  /** Persist the encoded corpus (vec_id, codes, rnorm) range-
-    * partitioned by vec_id: rerank's candidate joins and incremental
-    * re-encodes prune row groups on the vec_id min/max stats, and the
-    * encode cost is paid once per corpus version instead of per query
-    * batch. 8 partitions suffice at conformance SF; at warehouse
-    * scale the writer's range exchange sizes partitions off the AQE
-    * advisory target instead. */
-  def savePqEncoded(embeddings: DataFrame, model: PqModel,
-      path: String): Unit =
-    pqEncode(embeddings, model)
-      .repartitionByRange(8, col("vec_id"))
-      .write.mode("overwrite").parquet(s"$path/encoded")
-
-  /** Load a persisted encoded corpus for [[pqTopKEncoded]]. */
-  def loadPqEncoded(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/encoded")
-      .select("vec_id", "codes", "rnorm")
 }

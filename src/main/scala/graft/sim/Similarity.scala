@@ -482,39 +482,6 @@ object Similarity {
     appended
   }
 
-  /** Persist a built index: centroids as a C-row metadata parquet,
-    * posting assignments PARTITIONED BY CELL (the materialized
-    * posting-list layout the scaladoc above promises — a probe-side
-    * scan of one cell is one directory), vectors plain. Build once,
-    * save once, serve from any later session — the index outliving
-    * the SparkSession is what makes the build-once economics real. */
-  def saveIvfIndex(idx: IvfIndex, path: String): Unit = {
-    val spark = idx.cells.sparkSession
-    import spark.implicits._
-    idx.centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "vd")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    idx.cells.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells")
-    idx.vecs.write.mode("overwrite").parquet(s"$path/vecs")
-  }
-
-  /** Load a persisted index. Query results are identical to the
-    * in-session index by construction (same centroids, same
-    * assignments, same normed vectors — IvfAppendSpec pins the
-    * round trip bit-for-bit). */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfIndex = {
-    import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cell", "vd").as[(Int, Seq[Double])]
-      .collect().sortBy(_._1).map(_._2.toArray)
-    IvfIndex(cents,
-      spark.read.parquet(s"$path/cells").select("vec_id", "cell"),
-      spark.read.parquet(s"$path/vecs").select("vec_id", "vd", "norm"))
-  }
-
   /** Re-assign an arbitrary vector set under an index's FROZEN
     * centroids (no Lloyd) — the reference point append is proven
     * against, and the rebuild step after a centroid retrain. */
@@ -558,7 +525,7 @@ object Similarity {
   /** Random-hyperplane LSH bucket id from `numPlanes` sign bits.
     * numPlanes = 0 degenerates to one bucket — retrieval becomes
     * exhaustive (used by the oracle-pinned conformance entry). */
-  def lshBucket(numPlanes: Int): Column = {
+  private def lshBucket(numPlanes: Int): Column = {
     if (numPlanes == 0) return lit(0L)
     val bits = (0 until numPlanes).map { p =>
       val dot =

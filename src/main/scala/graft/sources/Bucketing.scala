@@ -34,13 +34,4 @@ object Bucketing {
   def read(spark: SparkSession, name: String): DataFrame =
     spark.table(name)
 
-  /** Write `df` hive-partitioned by `partitionCol` — the other write-
-    * time layout lever: an equality/range predicate on the partition
-    * column becomes directory pruning (`PartitionFilters` in the scan),
-    * so a day-scoped query over a 100 TB table reads one directory, not
-    * the table. Keep partition cardinality moderate (dates, not ids) —
-    * each value is a directory and tiny files kill scan throughput. */
-  def writePartitioned(df: DataFrame, path: String,
-      partitionCol: String): Unit =
-    df.write.partitionBy(partitionCol).mode("overwrite").parquet(path)
 }

@@ -3,8 +3,9 @@ package graft.sources
 import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.ops.Upsert
 
 /** JDBC merge sinks — the reference's physical sink is a Postgres
   * table written with per-row upserts (game_upsert.py:84-110 uses
@@ -14,10 +15,10 @@ import org.apache.spark.sql.functions._
   * statements.
   *
   * Scale design:
-  *   - incoming rows are deduped per key FIRST (same row_number window
-  *     as [[graft.ops.Upsert]]) and then hash-REPARTITIONED on the key,
-  *     so each key is written by exactly one task — no cross-writer
-  *     races, no row-level retry loops;
+  *   - incoming rows are deduped per key FIRST
+  *     ([[graft.ops.Upsert.firstPerKey]]) and then hash-REPARTITIONED
+  *     on the key, so each key is written by exactly one task — no
+  *     cross-writer races, no row-level retry loops;
   *   - each partition opens ONE connection and writes in JDBC batches
   *     (`batchSize`), the same per-partition-state seam as the HTTP
   *     enrichment client — N executors write N-way parallel, and
@@ -63,7 +64,8 @@ object JdbcSink {
     val insertSql = s"INSERT INTO $table (${cols.mkString(", ")}) SELECT " +
       cols.map(_ => "?").mkString(", ") + from +
       s" WHERE NOT EXISTS (SELECT 1 FROM $table WHERE $key = ?)"
-    foreachKeyPartition(dedupByKey(df, key, orderCols), key, url, numWriters) {
+    foreachKeyPartition(Upsert.firstPerKey(df, key, orderCols), key, url,
+        numWriters) {
       (conn, rows) =>
         val upd = conn.prepareStatement(updateSql)
         val ins = conn.prepareStatement(insertSql)
@@ -101,7 +103,8 @@ object JdbcSink {
     val sql = s"INSERT INTO $table (${cols.mkString(", ")}) SELECT " +
       cols.map(_ => "?").mkString(", ") + from +
       s" WHERE NOT EXISTS (SELECT 1 FROM $table WHERE $key = ?)"
-    foreachKeyPartition(dedupByKey(df, key, orderCols), key, url, numWriters) {
+    foreachKeyPartition(Upsert.firstPerKey(df, key, orderCols), key, url,
+        numWriters) {
       (conn, rows) =>
         val ins = conn.prepareStatement(sql)
         try rows.grouped(batchSize).foreach { group =>
@@ -115,27 +118,6 @@ object JdbcSink {
           conn.commit()
         } finally ins.close()
     }
-  }
-
-  /** Partitioned parallel JDBC read — the source-side counterpart of
-    * the sinks: N executors each scan one stride of `partitionCol`
-    * (numeric) between the bounds, so a large table ingests N-way
-    * parallel instead of through one connection. Push filters onto the
-    * returned DataFrame — Spark turns them into WHERE clauses on each
-    * stride query (JDBC predicate pushdown). */
-  def readPartitioned(spark: org.apache.spark.sql.SparkSession, url: String,
-      table: String, partitionCol: String, lowerBound: Long,
-      upperBound: Long, numPartitions: Int): DataFrame =
-    spark.read.jdbc(url, table, partitionCol, lowerBound, upperBound,
-      numPartitions, new java.util.Properties())
-
-  /** In-batch dedup: first row per key under `orderCols` wins — the
-    * same contract as [[graft.ops.Upsert.lastWriteWins]]. */
-  private def dedupByKey(df: DataFrame, key: String,
-      orderCols: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(orderCols: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Repartition on the key (each key → exactly one writer task) and

@@ -36,24 +36,6 @@ object TextFormats {
       : DataFrame =
     s.read.schema(schema).option("timestampFormat", TsFormat).json(path)
 
-  /** [[readJsonl]] plus corrupt-row capture: malformed lines land in
-    * `_corrupt_record` (other fields null) instead of silently becoming
-    * all-null rows — the dirty-ingest contract: count/quarantine bad
-    * lines, never lose them. PERMISSIVE is Spark's default mode; what
-    * this adds is the explicit capture column on the caller's schema.
-    * Caveat (Spark restriction): a query pruned down to ONLY the
-    * corrupt column on the raw files throws
-    * QUERY_ONLY_CORRUPT_RECORD_COLUMN — materialize (cache/write) the
-    * parse first when auditing bad rows alone. */
-  def readJsonlLenient(s: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    s.read
-      .schema(schema.add("_corrupt_record", "string"))
-      .option("timestampFormat", TsFormat)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-
   /** RFC-4180-style CSV with header; embedded quotes/delimiters in
     * field values survive the default quote+escape discipline. */
   def writeCsv(df: DataFrame, path: String): Unit =

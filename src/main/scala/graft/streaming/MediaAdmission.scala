@@ -77,8 +77,8 @@ object MediaAdmission {
     * fingerprints within `maxDist` of any committed fingerprint, merge
     * the admitted remainder. Returns false iff the batch id was
     * already applied (replay skip). */
-  def admitBatch(batch: DataFrame, batchId: Long, statePath: String,
-      idCol: String, payloadCol: String,
+  private[graft] def admitBatch(batch: DataFrame, batchId: Long,
+      statePath: String, idCol: String, payloadCol: String,
       fingerprint: Array[Byte] => Option[Long],
       maxDist: Int = 2): Boolean =
     MergeableStream.applyBatch(batch, batchId, s"$statePath/fps",
@@ -128,7 +128,7 @@ object MediaAdmission {
     * would alias under Spark's truncate-toward-zero `div` (clip -1's
     * frames landing under clip 0) — so null, negative, and ≥2^45 ids
     * all drop at this gate with the undecodables. */
-  def clipFingerprints(batch: DataFrame, idCol: String,
+  private[graft] def clipFingerprints(batch: DataFrame, idCol: String,
       payloadCol: String): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
@@ -159,8 +159,9 @@ object MediaAdmission {
     * reference band join — work bounded by the batch's band
     * collisions, never state²), so the clip protocol costs the same
     * shape as the single-fingerprint one, just F rows per asset. */
-  def admitClipBatch(batch: DataFrame, batchId: Long, statePath: String,
-      idCol: String, payloadCol: String, maxDist: Int = 2): Boolean =
+  private[graft] def admitClipBatch(batch: DataFrame, batchId: Long,
+      statePath: String, idCol: String, payloadCol: String,
+      maxDist: Int = 2): Boolean =
     MergeableStream.applyBatch(batch, batchId, s"$statePath/ffps",
       summarize = b => clipFingerprints(b, idCol, payloadCol),
       merge = (state, delta) => {

@@ -55,18 +55,15 @@ object MicroBatchIngest {
       tablePath: String): Long = {
     // in-batch dedup first (total order: batch ts, then delivery seq),
     // then the merge proper — the stored table carries no __seq.
-    // assumeDeduped: the __seq window already made keys unique; a second
-    // dedup window in mergeParquet would be a redundant shuffle.
     val deduped = Upsert.firstPerKey(batch, "id_game",
       Seq(desc("tm_ingested"), desc("__seq"))).drop("__seq")
-    mergeParquet(spark, deduped, tablePath, "id_game",
-      Seq(desc("tm_ingested")), assumeDeduped = true)
+    mergeParquet(spark, deduped, tablePath, "id_game")
   }
 
   /** Generalized idempotent parquet merge (also the `foreachBatch` body
-    * of [[StreamMerge]]): dedup incoming per key under `orderCols`
-    * (skipped when the caller already did — `assumeDeduped`),
-    * last-write-wins against the existing table, committed through
+    * of [[StreamMerge]]): `incoming`, already unique per key (callers
+    * dedup with [[Upsert.firstPerKey]]), replaces the existing table's
+    * rows with the same key, committed through
     * [[graft.sources.TableSwap]]. Returns the merged row count, observed
     * on the write itself (no re-read).
     *
@@ -76,15 +73,9 @@ object MicroBatchIngest {
     * crash at ANY point leaves either the old or the new table
     * reachable, and the replayed batch re-merges against it. */
   def mergeParquet(spark: SparkSession, incoming: DataFrame,
-      tablePath: String, key: String,
-      orderCols: Seq[org.apache.spark.sql.Column],
-      assumeDeduped: Boolean = false): Long = {
-    val deduped =
-      if (assumeDeduped) incoming
-      else Upsert.firstPerKey(incoming, key, orderCols)
+      tablePath: String, key: String): Long =
     TableSwap.commit(TableSwap.read(spark, tablePath)
-      .fold(deduped)(Upsert.replaceByKey(_, deduped, key)), tablePath)
-  }
+      .fold(incoming)(Upsert.replaceByKey(_, incoming, key)), tablePath)
 
   /** The micro-batch loop: `numBatches` polls of `fetch`, each merged
     * into the table; per-batch stats mirror the reference's

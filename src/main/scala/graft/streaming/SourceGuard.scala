@@ -1,9 +1,9 @@
 package graft.streaming
 
-/** T5-T7 source-wrapper policies (SURVEY.md §2.7): rate limiting,
-  * retry-with-backoff, and wall-clock budgets. These guard the pluggable
-  * fetch seams (S1/S6/S7) — they are HARNESS concerns, deliberately kept
-  * out of the query plan, exactly as the reference keeps them in its
+/** T5-T6 source-wrapper policies (SURVEY.md §2.7): rate limiting and
+  * retry-with-backoff. These guard the pluggable fetch seams
+  * (S1/S6/S7) — they are HARNESS concerns, deliberately kept out of
+  * the query plan, exactly as the reference keeps them in its
   * HTTP loop (get_games_from_tv.py:160-177, backfill_user_profiles.py:
   * 112-116, 254-263).
   *
@@ -38,13 +38,5 @@ object SourceGuard {
       catch { case _: Exception => i += 1; if (i < attempts) sleep(pauseMillis) }
     }
     None
-  }
-
-  /** Wall-clock budget gate (SCRIPT_TIME_LIMIT): `proceed()` is true
-    * until the budget elapses; callers stop pulling work after that. */
-  final class TimeBudget(budgetMillis: Long,
-      clock: () => Long = () => System.currentTimeMillis()) {
-    private val start = clock()
-    def proceed(): Boolean = clock() - start <= budgetMillis
   }
 }

@@ -167,7 +167,7 @@ object StreamAdmission {
     * then df counts, docs LAST (the commit marker — see scaladoc). The
     * caller must pass a MATERIALIZED frame (no lineage into the state
     * paths being replaced). */
-  def commitAdmitted(spark: SparkSession, admitted: DataFrame,
+  private def commitAdmitted(spark: SparkSession, admitted: DataFrame,
       statePath: String): Unit = {
     // injective key: id is all digits, so the first ':' ends it — no
     // (id, shingle) pair collides with another pair's concatenation.
@@ -178,8 +178,7 @@ object StreamAdmission {
     val aSh = graft.CacheScope.trackLocalCheckpoint(
       Dedup.shingles(admitted, "id", "text").withColumn("__k",
         concat(col("id").cast("string"), lit(":"), col("shingle"))))
-    MicroBatchIngest.mergeParquet(spark, aSh, s"$statePath/shingles",
-      "__k", Seq(asc("__k")), assumeDeduped = true)
+    MicroBatchIngest.mergeParquet(spark, aSh, s"$statePath/shingles", "__k")
     val aDf = aSh.groupBy("shingle").agg(count(lit(1)).as("__d"))
     val newDf = graft.CacheScope.trackLocalCheckpoint(
       TableSwap.read(spark, s"$statePath/shdf") match {
@@ -189,8 +188,7 @@ object StreamAdmission {
         case None => aDf.select(col("shingle"), col("__d").as("df"))
       })
     TableSwap.commit(newDf, s"$statePath/shdf")
-    MicroBatchIngest.mergeParquet(spark, admitted, s"$statePath/docs",
-      "id", Seq(asc("id")), assumeDeduped = true)
+    MicroBatchIngest.mergeParquet(spark, admitted, s"$statePath/docs", "id")
     // both checkpoints are fully consumed by the writes above — free
     // their blocks now instead of leaving them to GC (r22 lifecycle)
     graft.CacheScope.release(aSh)
@@ -216,7 +214,7 @@ object StreamAdmission {
 
   /** One micro-batch: flag, then commit admitted rows. Returns the
     * materialized flags (for stats/tests). */
-  def admitAndCommit(spark: SparkSession, batch: DataFrame,
+  private[graft] def admitAndCommit(spark: SparkSession, batch: DataFrame,
       statePath: String, idCol: String, textCol: String, tau: Double,
       maxShingleDf: Long, expectedBatch: Long): DataFrame = {
     // tracked, not bare: the flags frame is RETURNED (stats/tests), so

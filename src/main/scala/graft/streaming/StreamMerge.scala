@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.ops.Upsert
+
 /** The reference's poll→parse→upsert loop (get_games_from_tv.py:122-147)
   * as TRUE Structured Streaming: any `readStream` source →
   * `foreachBatch` → the same idempotent last-write-wins merge the batch
@@ -29,8 +31,8 @@ object StreamMerge {
   def start(stream: DataFrame, tablePath: String, checkpoint: String,
       key: String, orderCols: Seq[Column]): StreamingQuery =
     ForeachBatch.start(stream, checkpoint) { (batch, _) =>
-      MicroBatchIngest.mergeParquet(batch.sparkSession, batch,
-        tablePath, key, orderCols)
+      MicroBatchIngest.mergeParquet(batch.sparkSession,
+        Upsert.firstPerKey(batch, key, orderCols), tablePath, key)
       ()
     }
 }

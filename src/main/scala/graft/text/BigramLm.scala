@@ -160,34 +160,4 @@ object BigramLm {
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         col("mean_ln_p"), col("perplexity"))
   }
-
-  // ---- model persistence (train-once / score-many) -------------------
-
-  /** Persist a trained model, mirroring [[graft.sim.Pq.savePqModel]]:
-    * bigram counts range-partitioned on (prev, w) — the scorer's join
-    * key, so a partial-corpus score prunes row groups — context totals
-    * and the 1-row V scalar as metadata parquet. Integer state only
-    * (counts, totals, V are all BIGINT), so the round trip is exact by
-    * type, not by float-bit luck. */
-  def saveLmModel(counts: DataFrame, totals: DataFrame, v: Long,
-      path: String): Unit = {
-    val spark = counts.sparkSession
-    import spark.implicits._
-    counts.repartitionByRange(8, col("prev"), col("w"))
-      .write.mode("overwrite").parquet(s"$path/counts")
-    totals.coalesce(1).write.mode("overwrite").parquet(s"$path/totals")
-    Seq(v).toDF("v").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/vocab")
-  }
-
-  /** Load a persisted model for [[pinnedScore]]/[[lnScore]]/
-    * [[rateBuckets]] — the exact (counts, totals, v) triple
-    * [[graft.queries.TokenOps]]'s session memo holds, served from
-    * parquet instead of a retrain. */
-  def loadLmModel(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame, Long) = {
-    val v = spark.read.parquet(s"$path/vocab").head().getLong(0)
-    (spark.read.parquet(s"$path/counts").select("prev", "w", "c"),
-      spark.read.parquet(s"$path/totals").select("prev", "cc"), v)
-  }
 }

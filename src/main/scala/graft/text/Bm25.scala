@@ -57,26 +57,8 @@ object Bm25 {
     // the rest of the vocabulary
     val qtoks = toks.filter(col("term").isInCollection(queryTerms))
     val tf = qtoks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    scoreTopK(tf, lens, stats, k, k1, b, lnIdf)
-  }
-
-  /** doc lengths from a per-row projection, NOT the exploded index:
-    * an empty/whitespace-only doc contributes len 0 here, so N and
-    * avgdl cover the WHOLE corpus (the Robertson/Zaragoza N), not
-    * just docs that happened to produce tokens. */
-  private def docLens(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      size(filter(TextAnalysis.tokens(col(textCol)),
-        w => length(w) > 0)).as("len"))
-
-  /** The shared scoring tail — ONE definition for the inline and the
-    * index-served paths, so the persistence round trip is bit-exact by
-    * construction. `tf` holds query-term postings only (doc_id, term,
-    * tf); df re-derives from it (identical to a stored per-term df —
-    * the filter keeps every posting of each query term). */
-  private def scoreTopK(tf: DataFrame, lens: DataFrame, stats: DataFrame,
-      k: Int, k1: Double, b: Double, lnIdf: Boolean): DataFrame = {
+    // df re-derives from the query-term postings (the filter keeps
+    // every posting of each query term)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val odds = (col("n_docs") - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
@@ -99,66 +81,13 @@ object Bm25 {
       .limit(k)
   }
 
-  // ---- index persistence (build-once / serve-many) -------------------
-
-  /** A persisted-form inverted index: full-vocabulary postings
-    * (term, doc_id, tf), per-doc lengths, and the 1-row corpus stats
-    * (n_docs, avgdl). Everything a query needs — the corpus text is
-    * never re-scanned at serve time. */
-  case class Bm25Index(postings: DataFrame, lens: DataFrame,
-      stats: DataFrame)
-
-  /** Build the full inverted index from a corpus (one token explode +
-    * two hash aggregations — the one-time cost [[saveIndex]] amortizes
-    * across every query thereafter). */
-  def buildIndex(docs: DataFrame, idCol: String,
-      textCol: String): Bm25Index = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .filter(length(col("term")) > 0)
-    val lens = docLens(docs, idCol, textCol)
-    Bm25Index(
-      toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf")),
-      lens,
-      lens.agg(count(lit(1)).as("n_docs"), avg(col("len")).as("avgdl")))
-  }
-
-  /** Persist an index, mirroring [[graft.sim.Pq.savePqModel]]'s
-    * layout discipline: postings range-partitioned on term so a
-    * query's isin filter prunes row groups on the term min/max stats
-    * (the posting-list seek of a classical inverted index, expressed
-    * as parquet pruning); lens range-partitioned on doc_id for the
-    * score join; stats as a 1-row metadata file. */
-  def saveIndex(idx: Bm25Index, path: String): Unit = {
-    idx.postings.repartitionByRange(8, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$path/postings")
-    idx.lens.repartitionByRange(8, col("doc_id"))
-      .write.mode("overwrite").parquet(s"$path/lens")
-    idx.stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  /** Load a persisted index for [[topKIndexed]]. */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Bm25Index =
-    Bm25Index(
-      spark.read.parquet(s"$path/postings").select("term", "doc_id", "tf"),
-      spark.read.parquet(s"$path/lens").select("doc_id", "len"),
-      spark.read.parquet(s"$path/stats").select("n_docs", "avgdl"))
-
-  /** Serve BM25 from a (possibly loaded) index: identical scoring tail
-    * as the inline path — [[ModelPersistSpec]] proves save → load →
-    * serve is bit-identical to [[bm25TopK]]/[[bm25PinnedTopK]] on the
-    * same corpus. The postings filter is the only index touch. */
-  def topKIndexed(idx: Bm25Index, queryTerms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75,
-      lnIdf: Boolean = true): DataFrame = {
-    require(queryTerms.nonEmpty, "empty query")
-    // postings are already one row per (term, doc_id) — the filter IS
-    // the whole index touch, no re-aggregation
-    scoreTopK(
-      idx.postings.filter(col("term").isInCollection(queryTerms))
-        .select("doc_id", "term", "tf"),
-      idx.lens, idx.stats, k, k1, b, lnIdf)
-  }
+  /** doc lengths from a per-row projection, NOT the exploded index:
+    * an empty/whitespace-only doc contributes len 0 here, so N and
+    * avgdl cover the WHOLE corpus (the Robertson/Zaragoza N), not
+    * just docs that happened to produce tokens. */
+  private def docLens(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+      size(filter(TextAnalysis.tokens(col(textCol)),
+        w => length(w) > 0)).as("len"))
 }

@@ -108,10 +108,9 @@ object Bpe {
     * this equals per-word tokenization flattened in order). */
   def tokens(c: Column): Column = tokens(c, Merges)
 
-  /** [[tokens]] against an arbitrary merge table in rank order — the
-    * serve side of [[loadMerges]] (a trained or shipped `merges.txt`
-    * instead of the frozen built-in). Same consistency preconditions
-    * as the frozen table (BpeSpec's invariants). */
+  /** [[tokens]] against an arbitrary merge table in rank order (a
+    * trained table instead of the frozen built-in). Same consistency
+    * preconditions as the frozen table (BpeSpec's invariants). */
   def tokens(c: Column, merges: Seq[(String, String)]): Column =
     // the fused codegen kernel — one pass over (offset, length) token
     // spans instead of ~|merges| full-string rebuilds; bit parity with
@@ -134,28 +133,6 @@ object Bpe {
   }
 
   def tokens(textCol: String): Column = tokens(col(textCol))
-
-  // ---- merge-table persistence (the shipped merges.txt analog) ------
-
-  /** Persist a merge table as 1-file metadata parquet in rank order —
-    * either the frozen built-in or [[BpeTrain.trainMerges]]'s learned
-    * output (both are (rank, left, right)-shaped). */
-  def saveMerges(merges: Seq[(String, String)], path: String,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    import spark.implicits._
-    merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
-      .toDF("rank", "left", "right")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted merge table for [[tokens]] — rank order is the
-    * apply order, restored explicitly (parquet row order is not a
-    * contract). */
-  def loadMerges(spark: org.apache.spark.sql.SparkSession,
-      path: String): Vector[(String, String)] =
-    spark.read.parquet(path).select("rank", "left", "right")
-      .collect().sortBy(_.getInt(0))
-      .map(r => (r.getString(1), r.getString(2))).toVector
 
   /** Subword token count — the honest denominator for token-budget
     * planning (mixture plan, packing, export manifests). */

@@ -11,11 +11,10 @@ import graft.ops.BloomPrune
   * (`text_decontaminate_bloom`, `text_decontaminate_spans`) previously
   * lacked: every serving job re-derived the benchmark side (shingle
   * explode + distinct + Bloom build + k-gram window) from the raw
-  * benchmark corpus each run. Like [[Bm25.saveIndex]] / `Pq.savePqModel`,
-  * the benchmark side is computed once per benchmark VERSION, saved,
-  * and served from any later session — the natural production shape,
-  * since benchmark suites change on release cadence while training
-  * corpora stream through daily.
+  * benchmark corpus each run. Here the benchmark side is computed once
+  * per benchmark VERSION, saved, and served from any later session —
+  * the natural production shape, since benchmark suites change on
+  * release cadence while training corpora stream through daily.
   *
   * State contents (reference: moveeleven-data/knightshift keeps no
   * such state — its per-run Python rebuild is exactly the cost this

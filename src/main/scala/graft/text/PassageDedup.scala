@@ -204,18 +204,13 @@ object PassageDedup {
     }
   }
 
-  /** Maximal duplicated token spans per document:
+  /** Maximal duplicated token spans per document, over a precomputed
+    * (doc_id, pos) position set ([[duplicatedPositions]]):
     * (doc_id, span_start, span_end, span_tokens), token positions
     * inclusive. Windows that overlap OR touch (gap 0) merge — classic
-    * gaps-and-islands over the per-document position stream. */
-  def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      k: Int): DataFrame =
-    duplicateSpansFromPositions(
-      duplicatedPositions(df, idCol, textCol, k), k)
-
-  /** [[duplicateSpans]] over a precomputed (doc_id, pos) position set —
-    * callers that need spans AND removal pay the gram aggregation
-    * once (the registry memoizes the position set per session/dir). */
+    * gaps-and-islands over the per-document position stream. Callers
+    * that need spans AND removal pay the gram aggregation once (the
+    * registry memoizes the position set per session/dir). */
   def duplicateSpansFromPositions(p: DataFrame, k: Int): DataFrame = {
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
     val prevEnd = max(col("pos") + (k - 1))
@@ -233,17 +228,11 @@ object PassageDedup {
           .as("span_tokens"))
   }
 
-  /** Cut every duplicated-passage token; reassemble the remainder:
-    * (doc_id, n_tokens, n_removed, clean_text), one row per input
-    * document (clean_text = '' when fully covered; text is
+  /** Cut every token a precomputed position set covers; reassemble
+    * the remainder: (doc_id, n_tokens, n_removed, clean_text), one row
+    * per input document (clean_text = '' when fully covered; text is
     * re-joined single-spaced from the whitespace tokenization, like
     * [[SegmentDedup.dedupSegments]]). */
-  def removeDuplicatePassages(df: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame =
-    removeFromPositions(df, idCol, textCol,
-      duplicatedPositions(df, idCol, textCol, k), k)
-
-  /** [[removeDuplicatePassages]] over a precomputed position set. */
   def removeFromPositions(df: DataFrame, idCol: String,
       textCol: String, p: DataFrame, k: Int): DataFrame = {
     val base = df.select(col(idCol).as("doc_id"), toks(textCol).as("__ts"))

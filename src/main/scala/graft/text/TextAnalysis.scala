@@ -173,16 +173,6 @@ object TextAnalysis {
       .withColumn("n_chars_before", length(col(textCol)))
       .withColumn("n_chars_after", length(col("norm_text")))
 
-  /** Unicode-aware tokens: whitespace split of the [[normalizeUnicode]]
-    * canonical form. Callers filter empty fragments (same contract as
-    * [[tokens]]); on ASCII text this agrees with `tokens ∘ normalize`. */
-  def tokensUnicode(text: Column): Column =
-    split(trim(regexp_replace(
-      regexp_replace(
-        lower(graft.functions.NfcNormalize.nfc_normalize(text)),
-        "[^\\p{L}\\p{N} ]", " "),
-      " +", " ")), " ")
-
   /** Per-document distinctive terms — tf-idf's ranking without its
     * float: terms ranked by (tf DESC, df ASC, term ASC). For any fixed
     * document that order is EXACTLY the tf·log(N/df) order (log is

@@ -71,7 +71,7 @@ object UrlOps {
     * per host, not per document). Two-phase aggregation on
     * `url_host`; output is one row per host — metadata next to the
     * corpus (millions of hosts vs billions of documents). */
-  def hostStats(canonicalized: DataFrame): DataFrame =
+  private[graft] def hostStats(canonicalized: DataFrame): DataFrame =
     canonicalized.groupBy("url_host")
       .agg(count(lit(1)).as("host_docs"),
         countDistinct(col("canon_url")).as("host_urls"))

@@ -67,8 +67,10 @@ class AnnSweepSpec extends AnyFunSuite {
 
   test("PQ recall@10 is monotone in the rerank pool (superset candidates)") {
     val model = Pq.trainPq(embs, m = 8, ksub = 16, iters = 2)
+    val enc = Pq.pqEncode(embs, model)
     val recalls = Seq(10, 30, 100).map(m =>
-      m -> recallOf(Pq.pqRerank(embs, pred, 10, m, model)))
+      m -> recallOf(Pq.pqRerankWith(
+        Pq.pqTopKEncoded(enc, embs, pred, m, model), embs, pred, 10, m)))
     info("PQ(m=8,ksub=16) rerank recall@10: " + recalls.map {
       case (m, r) => f"pool=$m%d→$r%.3f" }.mkString("  "))
     // a larger ADC pool is a superset of a smaller one, and the exact

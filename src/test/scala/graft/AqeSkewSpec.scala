@@ -19,10 +19,17 @@ import graft.ops.Skew
   * skew — zero code, runtime-sized. Salting still wins when (a) the
   * skew is in an AGGREGATION key (AQE only rebalances joins and
   * rebalance-partitions nodes, not a hot groupBy reducer —
-  * [[Skew.saltedCount]] two-phases it), or (b) the plan must be
+  * [[Skew.saltedCountDistinct]] two-phases it), or (b) the plan must be
   * deterministic at authoring time (AQE splits depend on runtime
   * statistics). */
 class AqeSkewSpec extends AnyFunSuite {
+
+  // the FINAL adaptive plan of the execution that ran, as a string
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).toString
 
   test("AQE splits the hot key at runtime; plain ≡ salted ≡ AQE results") {
     // fresh session: AQE thresholds are session conf, and the shared
@@ -62,14 +69,11 @@ class AqeSkewSpec extends AnyFunSuite {
     // join reading skew-subdivided shuffle blocks (string-pinned: the
     // SMJ hides inside WholeStageCodegen under a ResultQueryStage,
     // which TreeNode.collect does not descend through)
-    val finalPlan = (aqe.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }).toString
-    assert(finalPlan.contains("SortMergeJoin(skew=true)"),
-      s"AQE did not mark the join skew-split:\n$finalPlan")
-    assert(finalPlan.contains("AQEShuffleRead coalesced and skewed"),
-      s"hot partition was not subdivided at read time:\n$finalPlan")
+    val plan = finalPlan(aqe)
+    assert(plan.contains("SortMergeJoin(skew=true)"),
+      s"AQE did not mark the join skew-split:\n$plan")
+    assert(plan.contains("AQEShuffleRead coalesced and skewed"),
+      s"hot partition was not subdivided at read time:\n$plan")
 
     // all three strategies agree (saltedJoin is proven against plain
     // join in SourcesSpec; here all run under this session's confs)
@@ -81,20 +85,28 @@ class AqeSkewSpec extends AnyFunSuite {
     assert(aqe.exceptAll(salted).isEmpty && salted.exceptAll(aqe).isEmpty)
   }
 
-  test("aggregation skew: AQE leaves the hot reducer; saltedCount two-phases it") {
+  test("aggregation skew: AQE leaves the hot reducer; saltedCountDistinct two-phases it") {
     val s = TestSpark.spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.shuffle.partitions", "8")
     import s.implicits._
     val df = (0 until 30000).map { i =>
-      (if (i < 25000) 0L else 1L + i % 50L, "x" * 32)
-    }.toDF("k", "pad")
-    val direct = df.groupBy("k").count()
+      (if (i < 25000) 0L else 1L + i % 50L, s"v${i % 5000}")
+    }.toDF("k", "v")
+    val direct = df.groupBy("k").agg(count_distinct(col("v")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCount(df, "k", buckets = 8)
+    val saltedDf = Skew.saltedCountDistinct(df, "k", "v", buckets = 8)
+    val salted = saltedDf
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(salted === direct)
-    assert(direct(0L) === 25000L)
+    assert(direct(0L) === 5000L)
+    // two phases: an exchange keyed on (k, __salt, ...), then a final
+    // exchange on k alone that carries one partial count per (k, salt)
+    val plan = finalPlan(saltedDf)
+    assert("hashpartitioning\\(k#\\d+L?, __salt#".r.findFirstIn(plan).isDefined,
+      s"no (k, __salt) exchange:\n$plan")
+    assert("hashpartitioning\\(k#\\d+L?, \\d+\\)".r.findFirstIn(plan).isDefined,
+      s"no final exchange on k:\n$plan")
   }
 
   test("count-distinct skew: value-hash salting is exact at every bucket count") {

@@ -9,7 +9,8 @@ import graft.sim.Similarity
 
 /** Lifecycle checks for the session storage owner: registered
   * localCheckpoints free their storage blocks at releaseAll, release
-  * frees one registered generation immediately and nothing else, one
+  * frees one registered generation immediately and nothing else, two
+  * handles over one cached plan keep it until both are released, one
   * releaseAll drains memos, caches and checkpoints alike, and the
   * iterative operators that release generations in-loop still compute
   * correct results (a wrongly-early release would fail them with
@@ -66,6 +67,24 @@ class CacheScopeSpec extends AnyFunSuite {
 
   test("release is a no-op on unregistered plans") {
     CacheScope.release(spark.range(10).toDF("id"))
+  }
+
+  test("two tracks of one plan share one cache entry until both are released") {
+    val s = spark.newSession()
+    def plan = s.range(0, 304, 1, 3).toDF("shared_id")
+    val a = CacheScope.track(plan)
+    val b = CacheScope.track(plan)
+    assert(b.count() == 304)
+    def entry(ds: Dataset[_]) = s.sharedState.cacheManager
+      .lookupCachedData(org.apache.spark.sql.classic.ClassicConversions.castToImpl(ds))
+    assert(entry(a).exists(e => entry(b).exists(_ eq e)),
+      "two cache entries for one plan")
+    CacheScope.release(a)
+    assert(b.storageLevel != StorageLevel.NONE,
+      "releasing one handle unpersisted the other's cache")
+    CacheScope.release(b)
+    assert(b.storageLevel == StorageLevel.NONE,
+      "the last release must unpersist")
   }
 
   test("release on a plan derived from a registered checkpoint " +

@@ -110,7 +110,7 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("single-shard read is partition-pruned and complete") {
-    val one = Export.readShard(spark, shardDir, 3)
+    val one = spark.read.parquet(shardDir).filter(col("shard") === 3)
     val plan = one.queryExecution.executedPlan.toString
     // a NON-EMPTY PartitionFilters list — the bare label appears (as
     // "PartitionFilters: []") on every file scan, pruned or not
@@ -128,7 +128,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     Export.writeShards(docs, "doc_id", 4, dir, shuffled = true)
     // one file per shard → read-back preserves the written row order
-    val got = Export.readShard(spark, dir, 2)
+    val got = spark.read.parquet(dir).filter(col("shard") === 2)
       .select("doc_id").as[Long].collect().toSeq
     val expect = got.sortBy(id => (md5hex(s"order:$id"), id))
     assert(got === expect, "rows must be in md5('order:'||id) order")

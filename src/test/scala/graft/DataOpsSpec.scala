@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
-import graft.sim.Similarity
+import graft.sim.{Pq, Similarity}
 
 /** Semantic checks for the training-data-pipeline operators (beyond
   * the DuckDB hash conformance): planted duplicates are found, the
@@ -17,6 +17,13 @@ class DataOpsSpec extends AnyFunSuite {
 
   private def docs = Tables.documents(spark, sf001)
   private def embs = Tables.embeddings(spark, sf001)
+
+  // the registry's two-stage PQ path: an `mPool` ADC pool over the
+  // encoded corpus, re-ranked by exact cosine to `k`
+  private def adcRerank(pred: org.apache.spark.sql.Column, k: Int,
+      mPool: Int, model: Pq.PqModel) =
+    Pq.pqRerankWith(Pq.pqTopKEncoded(Pq.pqEncode(embs, model), embs,
+      pred, mPool, model), embs, pred, k, mPool)
 
   test("releaseAll leaves no graft-pinned blocks, checkpoints included") {
     // other suites share this JVM/session, so assert RELATIVELY: after
@@ -47,8 +54,7 @@ class DataOpsSpec extends AnyFunSuite {
     // (ksub deliberately small here: exhaustive equality must hold for
     // ANY codebook — stage 1 keeps everything, so ADC quality is moot)
     val pred = col("vec_id") % 50 === 0
-    val viaPq = graft.sim.Pq
-      .pqRerank(embs, pred, k = 10, mPool = Int.MaxValue, model)
+    val viaPq = adcRerank(pred, k = 10, mPool = Int.MaxValue, model)
       .orderBy("query_id", "rank").collect()
     val exact = Similarity.bruteForceTopK(embs, pred, k = 10)
       .orderBy("query_id", "rank").collect()
@@ -81,7 +87,7 @@ class DataOpsSpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(embs, pred, k = 10)
       .select("query_id", "cand_id")
       .as[(Long, Long)].collect().toSet
-    val got = graft.sim.Pq.pqRerank(embs, pred, k = 10, mPool = 100, model)
+    val got = adcRerank(pred, k = 10, mPool = 100, model)
       .select("query_id", "cand_id")
       .as[(Long, Long)].collect().toSet
     val recall = (got & exact).size.toDouble / exact.size

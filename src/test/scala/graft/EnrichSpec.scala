@@ -64,6 +64,19 @@ class EnrichSpec extends AnyFunSuite {
     assert(users.toSeq == Seq("alice", "bob"))
   }
 
+  test("P6: distinctUsers without force skips games whose profiles are updated") {
+    val games = Seq(
+      ("g1", "alice", "bob", true),    // profiles done: skipped
+      ("g2", "carol", "alice", false),
+      ("g3", "dave", "bob", true))     // profiles done: skipped
+      .toDF("id_game", "id_user_white", "id_user_black",
+        "ind_profile_updated")
+    def users(force: Boolean) = Enrich.distinctUsers(games, force)
+      .as[String].collect().sorted.toSeq
+    assert(users(force = false) == Seq("alice", "carol"))
+    assert(users(force = true) == Seq("alice", "bob", "carol", "dave"))
+  }
+
   test("F9 + S8: opening tag scrape and conditional backfill") {
     val exports = Seq(
       ("g1", "[ECO \"C20\"]\n[Opening \"King's Pawn Game\"]\n[WhiteElo \"2400\"]\n[BlackElo \"2300\"]\n1. e4"),

@@ -62,7 +62,7 @@ class FullChainSpec extends AnyFunSuite {
       keepCols = Seq("game_idx"))
     assert(normalized.count() == 4)
     val upserted = Upsert.lastWriteWins(normalized.limit(0), normalized,
-      "id_game", "game_idx").drop("game_idx")
+      "id_game", Seq(desc("game_idx"))).drop("game_idx")
     assert(upserted.count() == 3)
     assert(upserted.filter(col("id_game") === "game0001")
       .select("id_user_black").as[String].head() == "bob_rematch")
@@ -90,7 +90,7 @@ class FullChainSpec extends AnyFunSuite {
     val profiles = Enrich.flattenProfiles(bodies)
     val existingUsers = profiles.limit(0)
     val userTable = Upsert.firstWriteWins(existingUsers, profiles,
-      "id_user", "id_user")
+      "id_user", Seq(asc("id_user")))
     assert(userTable.count() == 2)
     assert(userTable.filter(col("id_user") === "alice")
       .select("val_rating_bullet").as[java.lang.Integer].head() == 2700)

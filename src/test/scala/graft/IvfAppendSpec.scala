@@ -51,27 +51,4 @@ class IvfAppendSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("overlap"))
   }
-
-  test("save → load round trip serves bit-identical query results " +
-      "(centroids, assignments, vectors all survive)") {
-    val dir = TestSpark.tempDir("ivf_save")
-      .toString + "/idx"
-    Similarity.saveIvfIndex(base, dir)
-    val loaded = Similarity.loadIvfIndex(spark, dir)
-    assert(loaded.centroids.map(_.toSeq).toSeq ===
-      base.centroids.map(_.toSeq).toSeq)
-    for (np <- Seq(2, 8)) {
-      val before = rows(Similarity.ivfQuery(base,
-        col("vec_id") % 50 === 0, k = 10, nprobe = np))
-      val after = rows(Similarity.ivfQuery(loaded,
-        col("vec_id") % 50 === 0, k = 10, nprobe = np))
-      assert(after === before, s"nprobe=$np")
-    }
-    // the posting table really is cell-partitioned on disk
-    val dirs = new java.io.File(s"$dir/cells").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell="))
-    // (== numCells when every cell captured vectors; empty cells
-    // legitimately write no directory)
-    assert(dirs.length > 1 && dirs.length <= base.centroids.length)
-  }
 }

@@ -110,22 +110,6 @@ class JdbcSinkSpec extends AnyFunSuite {
     }
   }
 
-  test("readPartitioned scans in parallel strides and round-trips the sink") {
-    withTable("read_sink") {
-      val rows = (1 to 100).map(i => (s"g$i", 1000 + i, "NORMAL", i.toLong))
-        .toDF("id_game", "elo", "term", "seq")
-      JdbcSink.upsert(rows, "id_game", Seq(desc("seq")), url, "read_sink")
-      val back = JdbcSink.readPartitioned(spark, url, "read_sink",
-        partitionCol = "seq", lowerBound = 1, upperBound = 101,
-        numPartitions = 4)
-      assert(back.rdd.getNumPartitions === 4)
-      assert(back.count() === 100)
-      // pushed predicate: each stride query carries the WHERE clause
-      val filtered = back.filter(col("elo") > 1090)
-      assert(filtered.count() === 10)
-    }
-  }
-
   test("upsert agrees with the in-engine Upsert.lastWriteWins merge") {
     withTable("parity_sink") {
       val existing = Seq(("g1", 1500, "NORMAL", 1L), ("g2", 1600, "NORMAL", 2L))

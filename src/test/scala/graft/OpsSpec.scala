@@ -24,7 +24,8 @@ class OpsSpec extends AnyFunSuite {
       (3L, "unchanged"),   // null <=> null is TRUE, not a change
       (4L, "removed"),
       (5L, "added")))
-    val counts = Diff.diffCounts(old, nw, "k").orderBy("status")
+    val counts = Diff.diff(old, nw, "k").groupBy("status").count()
+      .orderBy("status")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(counts === Seq(("added", 1L), ("changed", 1L),
       ("removed", 1L), ("unchanged", 2L)))

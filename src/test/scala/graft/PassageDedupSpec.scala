@@ -17,11 +17,13 @@ class PassageDedupSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
 
   private def spans(df: DataFrame, k: Int): Set[(Long, Int, Int, Int)] =
-    PassageDedup.duplicateSpans(df, "doc_id", "text", k)
+    PassageDedup.duplicateSpansFromPositions(
+        PassageDedup.duplicatedPositions(df, "doc_id", "text", k), k)
       .as[(Long, Int, Int, Int)].collect().toSet
 
   private def clean(df: DataFrame, k: Int): Map[Long, (Int, Int, String)] =
-    PassageDedup.removeDuplicatePassages(df, "doc_id", "text", k)
+    PassageDedup.removeFromPositions(df, "doc_id", "text",
+        PassageDedup.duplicatedPositions(df, "doc_id", "text", k), k)
       .as[(Long, Int, Int, String)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
 

@@ -160,12 +160,32 @@ class PgnPipelineSpec extends AnyFunSuite {
     assert(cleaned.values.forall(_.getAs[Boolean]("ind_validated")))
   }
 
+  test("P4: needsFix without force keeps exactly the unvalidated, '?'-ECO " +
+      "and non-canonical-termination rows") {
+    val games = Seq(
+      // id, validated, eco, termination
+      ("g1", true, "C20", "NORMAL"),        // done: skipped
+      ("g2", false, "C20", "NORMAL"),       // never validated
+      ("g3", true, "?", "RESIGNED"),        // '?' ECO
+      ("g4", true, "B?1", "NORMAL"),        // '?' anywhere in the code
+      ("g5", true, "A00", "Time forfeit"),  // not canonical
+      ("g6", true, "A00", "TIME_FORFEIT")   // done: skipped
+    ).toDF("id_game", "ind_validated", "val_opening_eco_code",
+      "val_termination")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_game").as[String].collect().toSet
+    assert(ids(Cleaning.needsFix(games, forceRevalidate = false)) ==
+      Set("g2", "g3", "g4", "g5"))
+    assert(ids(Cleaning.needsFix(games)) == ids(games))
+  }
+
   test("A1/J3: last-write-wins upsert — re-streamed game overwrites") {
     val existing = Seq(("a", "old", 1L), ("b", "keep", 1L))
       .toDF("id_game", "v", "tm")
     val incoming = Seq(("a", "new1", 2L), ("a", "new2", 3L), ("c", "ins", 2L))
       .toDF("id_game", "v", "tm")
-    val merged = Upsert.lastWriteWins(existing, incoming, "id_game", "tm")
+    val merged = Upsert.lastWriteWins(existing, incoming, "id_game",
+        Seq(desc("tm")))
       .orderBy("id_game").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(merged == Seq(("a", "new2"), ("b", "keep"), ("c", "ins")))
@@ -175,7 +195,8 @@ class PgnPipelineSpec extends AnyFunSuite {
     val existing = Seq(("u1", "orig")).toDF("id_user", "v")
     val incoming = Seq(("u1", "CLOBBER"), ("u2", "new-a"), ("u2", "new-b"))
       .toDF("id_user", "v")
-    val merged = Upsert.firstWriteWins(existing, incoming, "id_user", "v")
+    val merged = Upsert.firstWriteWins(existing, incoming, "id_user",
+        Seq(asc("v")))
       .orderBy("id_user").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(merged == Seq(("u1", "orig"), ("u2", "new-a")))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,21 +84,21 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned layout prunes directories for partition predicates") {
-    import graft.sources.Bucketing
+    import graft.ops.Layout
     val base = TestSpark.tempDir("pt").toString + "/events"
     val events = Tables.events(spark, sf001)
-      .withColumn("dt", to_date(col("ts")))
-    Bucketing.writePartitioned(events, base, "dt")
-    val oneDay = events.select(max("dt")).head().getDate(0).toString
-    val pruned = spark.read.parquet(base).filter(col("dt") === oneDay)
+      .withColumn("dt_game", to_date(col("ts")))
+    Layout.writePartitionedByDate(events, base)
+    val oneDay = events.select(max("dt_game")).head().getDate(0).toString
+    val pruned = spark.read.parquet(base).filter(col("dt_part") === oneDay)
     val scan = pruned.queryExecution.executedPlan.toString
     // the predicate must reach the file index as a PartitionFilter —
     // directory pruning, not a post-scan filter
     assert(scan.contains("PartitionFilters") &&
-      scan.matches("(?s).*PartitionFilters: \\[[^\\]]*dt[^\\]]*\\].*"),
+      scan.matches("(?s).*PartitionFilters: \\[[^\\]]*dt_part[^\\]]*\\].*"),
       s"partition predicate not pushed in:\n$scan")
     assert(pruned.count() ===
-      events.filter(col("dt") === oneDay).count())
+      events.filter(col("dt_game") === oneDay).count())
   }
 
   test("saltedJoin equals plain join (skew-spread, same result)") {
@@ -113,41 +111,6 @@ class SourcesSpec extends AnyFunSuite {
       .select("o_custkey", "o_orderkey", "c_name")
       .orderBy("o_orderkey").collect().toSeq
     assert(salted == plain)
-  }
-
-  test("saltedCount equals plain groupBy count") {
-    val li = Tables.lineitem(spark, sf0001)
-    val plain = li.groupBy("l_suppkey").agg(count(lit(1)).as("n"))
-      .orderBy("l_suppkey").as[(Long, Long)].collect().toSeq
-    val salted = Skew.saltedCount(li, "l_suppkey", 16)
-      .orderBy("l_suppkey").as[(Long, Long)].collect().toSeq
-    assert(salted == plain)
-  }
-
-  test("TextFormats: lenient jsonl read quarantines corrupt lines, keeps good ones") {
-    import graft.sources.TextFormats
-    import org.apache.spark.sql.types._
-    val dir = TestSpark.tempDir("corrupt").toString
-    Files.write(java.nio.file.Paths.get(dir, "part-0.json"),
-      java.util.Arrays.asList(
-        """{"id": 1, "name": "ok"}""",
-        """{"id": 2, "name": "also ok"}""",
-        """{"id": 3, "name": "unclosed""",    // malformed JSON
-        """not json at all"""))
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType)))
-    // cache: Spark disallows queries that prune down to ONLY the
-    // corrupt column on raw files (QUERY_ONLY_CORRUPT_RECORD_COLUMN) —
-    // materializing the parse first is the documented pattern
-    val out = TextFormats.readJsonlLenient(spark, dir, schema).cache()
-    assert(out.count() === 4)
-    val bad = out.filter(col("_corrupt_record").isNotNull)
-    assert(bad.count() === 2)
-    assert(bad.filter(col("id").isNotNull).count() === 0)
-    val good = out.filter(col("_corrupt_record").isNull)
-      .select("id", "name").orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(good === Seq((1L, "ok"), (2L, "also ok")))
   }
 
   test("TextFormats: jsonl and csv round-trip events losslessly (µs ts, quoted props)") {

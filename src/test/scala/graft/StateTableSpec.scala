@@ -25,16 +25,15 @@ class StateTableSpec extends AnyFunSuite {
 
   test("mergeParquet on a file: path keeps the first delivery's rows") {
     val table = fileUri("st_merge") + "/t"
-    val order = Seq(desc("tm_ingested"))
     val first = Seq(("k1", "v1", ts("2025-05-01 10:00:00")),
       ("k2", "v1", ts("2025-05-01 10:00:00")))
       .toDF("id_game", "id_user_white", "tm_ingested")
     val second = Seq(("k2", "v2", ts("2025-05-01 10:05:00")),
       ("k3", "v1", ts("2025-05-01 10:05:00")))
       .toDF("id_game", "id_user_white", "tm_ingested")
-    MicroBatchIngest.mergeParquet(spark, first, table, "id_game", order)
-    assert(MicroBatchIngest.mergeParquet(spark, second, table, "id_game",
-      order) === 3L)
+    MicroBatchIngest.mergeParquet(spark, first, table, "id_game")
+    assert(MicroBatchIngest.mergeParquet(spark, second, table, "id_game")
+      === 3L)
     val rows = spark.read.parquet(table).select("id_game", "id_user_white")
       .as[(String, String)].collect().toSet
     assert(rows === Set("k1" -> "v1", "k2" -> "v2", "k3" -> "v1"))

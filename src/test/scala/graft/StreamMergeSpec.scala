@@ -181,14 +181,14 @@ class StreamMergeSpec extends AnyFunSuite {
     val batch1 = Seq(("k1", "v1", ts("2025-05-01 10:00:00")),
       ("k2", "v1", ts("2025-05-01 10:00:00")))
       .toDF("id_game", "id_user_white", "tm_ingested")
-    mergeParquet(spark, batch1, table, "id_game", Seq(desc("tm_ingested")))
+    mergeParquet(spark, batch1, table, "id_game")
     // simulate a crash in the swap window: old table moved to .bak, the
     // new table never arrived
     Files.move(Paths.get(table), Paths.get(table + ".bak"))
     val batch2 = Seq(("k2", "v2", ts("2025-05-01 10:05:00")),
       ("k3", "v1", ts("2025-05-01 10:05:00")))
       .toDF("id_game", "id_user_white", "tm_ingested")
-    mergeParquet(spark, batch2, table, "id_game", Seq(desc("tm_ingested")))
+    mergeParquet(spark, batch2, table, "id_game")
     val rows = spark.read.parquet(table)
       .select("id_game", "id_user_white")
       .as[(String, String)].collect().toSet
@@ -203,10 +203,11 @@ class StreamMergeSpec extends AnyFunSuite {
       ("k1", "v1", ts("2025-05-01 10:00:00")),
       ("k2", "v1", ts("2025-05-01 10:00:00")))
       .toDF("id_game", "id_user_white", "tm_ingested")
-    val order = Seq(desc("tm_ingested"))
-    assert(mergeParquet(spark, batch, dir + "/t", "id_game", order) === 2L)
-    assert(mergeParquet(spark, batch.limit(0), dir + "/t", "id_game", order) === 2L)
-    assert(mergeParquet(spark, batch.limit(0), dir + "/e", "id_game", order) === 0L)
+    val latest = graft.ops.Upsert.firstPerKey(batch, "id_game",
+      Seq(desc("tm_ingested")))
+    assert(mergeParquet(spark, latest, dir + "/t", "id_game") === 2L)
+    assert(mergeParquet(spark, latest.limit(0), dir + "/t", "id_game") === 2L)
+    assert(mergeParquet(spark, latest.limit(0), dir + "/e", "id_game") === 0L)
     assert(spark.read.parquet(dir + "/t").count() === 2L)
   }
 

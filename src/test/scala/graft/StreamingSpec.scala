@@ -156,44 +156,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("stream-stream interval join: in-window same-key pairs only, bounded state") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t0 = 1700000000000L
-    def ts(offsetMin: Long) = new Timestamp(t0 + offsetMin * 60000L)
-    val imps = MemoryStream[(Long, Timestamp)]
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val joined = graft.streaming.StreamJoin.intervalJoin(
-      imps.toDF().toDF("ad_id", "imp_ts"),
-      clicks.toDF().toDF("ad_id", "click_ts"),
-      "ad_id", "imp_ts", "click_ts",
-      within = "10 minutes", delay = "1 minute")
-    val q = joined.writeStream.format("memory")
-      .queryName("attrib_out").outputMode("append").start()
-    try {
-      imps.addData(Seq((1L, ts(0)), (2L, ts(0)), (3L, ts(0))))
-      clicks.addData(Seq(
-        (1L, ts(5)),    // match: in window
-        (2L, ts(11)),   // no: outside `within`
-        (9L, ts(5)),    // no: key never impressed
-        (3L, ts(0))))   // match: boundary (rightTs == leftTs)
-      q.processAllAvailable()
-      // advance both watermarks far past every buffered row
-      imps.addData(Seq((100L, ts(1000))))
-      clicks.addData(Seq((200L, ts(1000))))
-      q.processAllAvailable()
-      val got = spark.table("attrib_out")
-        .select("ad_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(got === Seq(1L, 3L))
-      // state was evicted once the watermark passed the join window —
-      // only the two fresh sentinel rows (+1 matched-tracking slack per
-      // side) may remain, never the whole history
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(stateRows <= 4, s"join state not evicted: $stateRows rows")
-    } finally q.stop()
-  }
-
   test("T2: streaming dropDuplicates removes cross-batch re-deliveries") {
     val events = Tables.events(spark, sf0001).limit(100).cache()
     val src = TestSpark.tempDir("dup").toString
