@@ -213,6 +213,24 @@ private[graft] object Bytes {
     }
   }
 
+  /** The offset just past a leading ID3v2 tag — "ID3", version(2),
+    * flags(1), syncsafe size(4), the tag body, and a 10-byte footer
+    * when flag 0x10 is set — or 0 when the buffer has none. None when
+    * the size is not syncsafe or the tag reaches the buffer's end. */
+  def id3v2End(b: Array[Byte]): Option[Int] = {
+    if (b.length < 10 || b(0) != 'I' || b(1) != 'D' || b(2) != '3')
+      return Some(0)
+    var i = 6
+    var size = 0
+    while (i < 10) {
+      if ((u8(b, i) & 0x80) != 0) return None // not syncsafe
+      size = (size << 7) | u8(b, i)
+      i += 1
+    }
+    val p = 10 + size + (if ((u8(b, 5) & 0x10) != 0) 10 else 0)
+    if (p >= b.length) None else Some(p)
+  }
+
   /** Walk the RIFF-style chunks in [from, until) in order, calling
     * `f(id, payloadStart, payloadEnd)` until it returns false. Chunks are
     * word-aligned: an odd size is followed by one pad byte. For a LIST

@@ -96,6 +96,42 @@ object JpegCodec {
     }
   }
 
+  /** Read a DQT segment body [seg, segEnd) — one or more 8-bit tables
+    * — into `qt`; false on a 16-bit table, a table id over 3 or a table
+    * running past the segment. Shared by the sequential and the
+    * progressive decoder. */
+  private[multimodal] def readDqt(b: Array[Byte], seg: Int, segEnd: Int,
+      qt: Array[Array[Int]]): Boolean = {
+    var q = seg
+    while (q < segEnd) {
+      val pq = u8(b, q) >> 4; val tq = u8(b, q) & 15
+      if (pq != 0 || tq > 3 || q + 65 > segEnd) return false
+      qt(tq) = Array.tabulate(64)(i => u8(b, q + 1 + i))
+      q += 65
+    }
+    true
+  }
+
+  /** Read a DHT segment body [seg, segEnd) — one or more tables — into
+    * `dcT`/`acT`; false on a class over 1, a table id over 3, an empty
+    * or over-256-symbol table, or a table running past the segment. */
+  private[multimodal] def readDht(b: Array[Byte], seg: Int, segEnd: Int,
+      dcT: Array[Huff], acT: Array[Huff]): Boolean = {
+    var q = seg
+    while (q < segEnd) {
+      val tc = u8(b, q) >> 4; val th = u8(b, q) & 15
+      if (tc > 1 || th > 3 || q + 17 > segEnd) return false
+      val counts = Array.tabulate(16)(i => u8(b, q + 1 + i))
+      val n = counts.sum
+      if (n == 0 || n > 256 || q + 17 + n > segEnd) return false
+      val syms = Array.tabulate(n)(i => u8(b, q + 17 + i))
+      val tbl = new Huff(counts, syms)
+      if (tc == 0) dcT(th) = tbl else acT(th) = tbl
+      q += 17 + n
+    }
+    true
+  }
+
   /** Scan-data bit reader with FF00 unstuffing. A non-stuffing marker
     * ends the readable stream (markerAhead); restart handling consumes
     * it explicitly. */
@@ -232,26 +268,9 @@ object JpegCodec {
         val segEnd = p + 2 + len
         m match {
           case 0xdb => // DQT: one or more tables
-            var q = seg
-            while (q < segEnd) {
-              val pq = u8(b, q) >> 4; val tq = u8(b, q) & 15
-              if (pq != 0 || tq > 3 || q + 65 > segEnd) return None
-              qt(tq) = Array.tabulate(64)(i => u8(b, q + 1 + i))
-              q += 65
-            }
+            if (!readDqt(b, seg, segEnd, qt)) return None
           case 0xc4 => // DHT: one or more tables
-            var q = seg
-            while (q < segEnd) {
-              val tc = u8(b, q) >> 4; val th = u8(b, q) & 15
-              if (tc > 1 || th > 3 || q + 17 > segEnd) return None
-              val counts = Array.tabulate(16)(i => u8(b, q + 1 + i))
-              val n = counts.sum
-              if (n == 0 || n > 256 || q + 17 + n > segEnd) return None
-              val syms = Array.tabulate(n)(i => u8(b, q + 17 + i))
-              val tbl = new Huff(counts, syms)
-              if (tc == 0) dcT(th) = tbl else acT(th) = tbl
-              q += 17 + n
-            }
+            if (!readDht(b, seg, segEnd, dcT, acT)) return None
           case 0xc0 | 0xc1 => // SOF0/SOF1: (extended) sequential DCT
             if (u8(b, seg) != 8) return None // 8-bit precision only
             h = be16(b, seg + 1); w = be16(b, seg + 3)

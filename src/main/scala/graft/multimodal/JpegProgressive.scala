@@ -99,26 +99,9 @@ object JpegProgressive {
         var nextP = segEnd
         m match {
           case 0xdb => // DQT (may ride between scans)
-            var q = seg
-            while (q < segEnd) {
-              val pq = u8(b, q) >> 4; val tq = u8(b, q) & 15
-              if (pq != 0 || tq > 3 || q + 65 > segEnd) return None
-              qt(tq) = Array.tabulate(64)(i => u8(b, q + 1 + i))
-              q += 65
-            }
+            if (!readDqt(b, seg, segEnd, qt)) return None
           case 0xc4 => // DHT (redefinable between scans)
-            var q = seg
-            while (q < segEnd) {
-              val tc = u8(b, q) >> 4; val th = u8(b, q) & 15
-              if (tc > 1 || th > 3 || q + 17 > segEnd) return None
-              val counts = Array.tabulate(16)(i => u8(b, q + 1 + i))
-              val n = counts.sum
-              if (n == 0 || n > 256 || q + 17 + n > segEnd) return None
-              val syms = Array.tabulate(n)(i => u8(b, q + 17 + i))
-              val tbl = new Huff(counts, syms)
-              if (tc == 0) dcT(th) = tbl else acT(th) = tbl
-              q += 17 + n
-            }
+            if (!readDht(b, seg, segEnd, dcT, acT)) return None
           case 0xc2 => // SOF2: progressive DCT, Huffman
             if (coef != null) return None // one frame header only
             if (u8(b, seg) != 8) return None // 8-bit precision only

@@ -73,19 +73,10 @@ object Mp3Codec {
 
   private def decode0(b: Array[Byte]): Option[Mp3Stream] = {
     if (b.length < 4) return None
-    var p = 0
-    // ID3v2: "ID3" version(2) flags(1) syncsafe-size(4), optional
-    // 10-byte footer when flag 0x10
-    if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-      var i = 6
-      var size = 0
-      while (i < 10) {
-        if ((u8(b, i) & 0x80) != 0) return None // not syncsafe
-        size = (size << 7) | u8(b, i)
-        i += 1
-      }
-      p = 10 + size + (if ((u8(b, 5) & 0x10) != 0) 10 else 0)
-      if (p >= b.length) return None
+    // a leading ID3v2 tag is skipped
+    val p = Bytes.id3v2End(b) match {
+      case Some(q) => q
+      case None => return None
     }
     // trailing ID3v1 tag: exactly 128 bytes starting "TAG". The
     // trailer sniff must not override a valid tiling — a stream whose

@@ -359,83 +359,90 @@ object Multimodal {
       .as[MediaAsset]
   }
 
-  /** Exact media dedup by payload identity: group on (xxhash64, bytes)
-    * — the hash co-locates candidates cheaply (8-byte shuffle key next
-    * to megabyte payloads), the byte-equality grouping makes the
-    * result collision-proof. Returns one row per distinct payload:
-    * (canonical_id = min member, n_bytes, n_copies, member_ids). At
-    * 100 TB, run the same shape in two passes — group by hash first,
-    * then byte-verify only multi-member hash groups — so single-copy
-    * payloads (the vast majority) never shuffle their bytes. */
-  /** Perceptual hash per asset: distributed pixel decode (one decoder
-    * init point per partition, like [[decodeMeta]]) → 8×8 luma grid →
-    * 64-bit dHash ([[PixelCodec.phash]]). Undecodable payloads (no
-    * supported pixel format, non-÷8 dims) are dropped — they simply
-    * never enter the near-dup candidate space. Scale: one projection
-    * pass over the payload column; the output is 16 bytes/asset, so
-    * everything downstream of this line shuffles hashes, never media
-    * bytes. */
-  def perceptualHashes(assets: Dataset[MediaAsset]): DataFrame = {
+  /** The one media fingerprint form: (asset_id, frame_no, fp) rows out
+    * of one distributed decode projection over (asset_id, payload) rows
+    * (one decoder init point per partition, like [[decodeMeta]]).
+    * `payload` maps an asset's bytes to its 64-bit fingerprints in frame
+    * order: one for a still image or an audio stream ([[imageFp]],
+    * [[audioFp]] — frame_no 0), one per fingerprinted frame for a clip
+    * ([[clipFp]]). An undecodable payload yields none and drops at this
+    * gate, never throws. Scale: one projection pass over the payload
+    * column; the output is 24 bytes per frame, so everything downstream
+    * shuffles fingerprints, never media bytes. */
+  def fingerprints(assets: Dataset[_],
+      payload: Array[Byte] => Seq[Long]): DataFrame = {
     import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      it.flatMap(a => PixelCodec.phash(a.payload).map(h => (a.asset_id, h)))
-    }.toDF("asset_id", "phash")
+    assets.select(col("asset_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(FrameRows(payload))
+      .toDF("asset_id", "frame_no", "fp")
   }
 
-  /** Perceptual near-duplicate clusters over a media corpus:
-    * [[perceptualHashes]] → banded Hamming candidate pairing (the
-    * [[graft.dedup.Dedup.simhashPairs]] machinery at 64 bits / 8
-    * bands — EXACT for maxDist < 8 by pigeonhole, and work scales with
-    * band collisions, never corpus²) → connected components →
-    * (canonical_id = min member, n_members, member_ids). Catches what
-    * [[dedupExactMedia]] cannot: re-encoded (different PNG filters,
-    * stripped metadata), resized, and format-converted (PNG↔BMP)
-    * copies whose bytes share nothing but whose pixels do. */
-  def nearDupMediaClusters(assets: Dataset[MediaAsset],
-      maxDist: Int = 2): DataFrame =
-    perceptualLabels(perceptualHashes(assets), maxDist)
+  /** [[fingerprints]]' per-partition body. A case class, not a closure:
+    * two projections of one corpus with the same `payload` plan equal,
+    * so the one [[nearDupPairs]] pinned serves every later plan over
+    * that corpus and codec instead of decoding it again. */
+  private final case class FrameRows(payload: Array[Byte] => Seq[Long])
+      extends (Iterator[(Long, Array[Byte])] => Iterator[(Long, Long, Long)]) {
+    def apply(it: Iterator[(Long, Array[Byte])])
+        : Iterator[(Long, Long, Long)] =
+      it.flatMap { case (id, p) =>
+        Option(p).iterator.flatMap(payload(_).iterator.zipWithIndex
+          .map { case (fp, i) => (id, i.toLong, fp) })
+      }
+  }
+
+  /** An image's fingerprint: its 8×8-luma dHash ([[PixelCodec.phash]]:
+    * PNG/BMP/JPEG/GIF/TIFF/WebP pixel decode, dimensions ≥ 8). */
+  val imageFp: Array[Byte] => Seq[Long] = PixelCodec.phash(_).toSeq
+
+  /** An audio stream's fingerprint: the 64-bin energy-envelope gradient
+    * ([[AudioCodec.afp]]: PCM decode, ≥ 64 samples). */
+  val audioFp: Array[Byte] => Seq[Long] = AudioCodec.afp(_).toSeq
+
+  /** A clip's fingerprints: one dHash per decoded frame
+    * ([[decodeClipFrames]]), in frame order; frames under 8×8 are
+    * skipped, so frame_no numbers the fingerprinted frames. */
+  val clipFp: Array[Byte] => Seq[Long] = b =>
+    decodeClipFrames(b).toSeq.flatten
+      .flatMap(fr => PixelCodec.lumaGrid8(fr).map(PixelCodec.dhash64))
+
+  /** Near-duplicate asset pairs (id1 < id2): assets sharing at least one
+    * fingerprint within Hamming `maxDist` — the
+    * [[graft.dedup.Dedup.simhashPairs]] banded pairing at 64 bits / 8
+    * bands (EXACT for maxDist < 8 by pigeonhole; work scales with band
+    * collisions, never corpus² or frames²) over [[fingerprints]] rows
+    * keyed by asset_id. Same-asset frame pairs fall to its id1 < id2
+    * filter and the `distinct` collapses frame pairs into asset pairs,
+    * so a still image and a re-edited or trimmed clip pair the same
+    * way. `fps` is pinned first: the pairing reads it on both sides of
+    * the band self-join, and a caller that reuses it (curation's
+    * keep-best join) reads the same cache instead of decoding again. */
+  def nearDupPairs(fps: DataFrame, maxDist: Int = 2): DataFrame =
+    graft.dedup.Dedup.simhashPairs(
+        graft.CacheScope.track(fps)
+          .select(col("asset_id").as("id"), col("fp").as("simhash")),
+        maxDist, bits = 64, bands = 8)
+      .select("id1", "id2").distinct()
+
+  /** Component labels over [[nearDupPairs]]: (id, cluster_id = min
+    * reachable asset) for every asset in at least one pair; singletons
+    * are absent (their label is themselves). */
+  def nearDupLabels(fps: DataFrame, maxDist: Int = 2): DataFrame =
+    graft.dedup.Dedup.connectedComponents(nearDupPairs(fps, maxDist))
+
+  /** Near-duplicate clusters (canonical_id = min member, n_members,
+    * member_ids) over [[nearDupLabels]]. Catches what
+    * [[dedupExactMedia]] cannot: re-encoded, resized, format-converted,
+    * resampled, channel-converted and gain-scaled copies, and
+    * re-edited or trimmed clips, whose bytes share nothing but whose
+    * pixels or energy envelope do. */
+  def nearDupClusters(fps: DataFrame, maxDist: Int = 2): DataFrame =
+    nearDupLabels(fps, maxDist)
       .groupBy(col("cluster_id").as("canonical_id"))
       .agg(count(lit(1)).as("n_members"),
         array_join(sort_array(collect_list(col("id")))
           .cast("array<string>"), ",").as("member_ids"))
-
-  /** Component labels over the perceptual-hash space: (id, cluster_id
-    * = min reachable member) for every asset in at least one near-dup
-    * pair — singletons are absent (their label is themselves). The
-    * label-level view [[nearDupMediaClusters]] groups, exposed so
-    * pipelines (curate v8) can keep-best without re-decoding. */
-  def perceptualLabels(hashed: DataFrame, maxDist: Int = 2): DataFrame =
-    bandedLabels(hashed, "phash", maxDist)
-
-  private def bandedLabels(hashed: DataFrame, hashCol: String,
-      maxDist: Int): DataFrame = {
-    // Decode once: the banded pairing references its input on BOTH
-    // sides of the candidate self-join, and an uncached input would
-    // re-run the decode projection — the corpus-scan cost at 100 TB —
-    // twice. The hash DF is 16 bytes/asset, so pinning it is
-    // metadata-scale ([[graft.CacheScope]] releases it with the
-    // session); callers that reuse the same hashed DF (curate v8/v9's
-    // keep-best join) ride the same cache.
-    val sketches = graft.CacheScope.track(hashed)
-      .select(col("asset_id").as("id"), col(hashCol).as("simhash"))
-    graft.dedup.Dedup.connectedComponents(
-      graft.dedup.Dedup.simhashPairs(sketches, maxDist,
-        bits = 64, bands = 8))
-  }
-
-  /** Audio fingerprints per asset: distributed PCM decode (one decoder
-    * init point per partition, like [[perceptualHashes]]) → 64-bin
-    * energy envelope → 64-bit gradient fingerprint
-    * ([[AudioCodec.afp]]). Undecodable payloads (not 16-bit PCM WAV,
-    * under 64 samples) are dropped. Scale: one projection pass over
-    * the payload column emitting 16 bytes/asset — downstream shuffles
-    * fingerprints, never audio bytes. */
-  def audioFingerprints(assets: Dataset[MediaAsset]): DataFrame = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      it.flatMap(a => AudioCodec.afp(a.payload).map(h => (a.asset_id, h)))
-    }.toDF("asset_id", "afp")
-  }
 
   /** Animated-clip frame decode across the supported containers:
     * GIF (still/interlaced/animated — [[GifCodec.decodeGifFrames]]),
@@ -448,7 +455,8 @@ object Multimodal {
     * frame tier:
     * sampling, dense hashing, and streamed clip admission all decode
     * through here, so a new container lands in every path at once. */
-  def decodeClipFrames(b: Array[Byte]): Option[Seq[PixelCodec.Gray]] =
+  private[graft] def decodeClipFrames(b: Array[Byte])
+      : Option[Seq[PixelCodec.Gray]] =
     GifCodec.decodeGifFrames(b).orElse(Mp4Codec.decodeMjpegFrames(b))
       .orElse(AviCodec.decodeMjpegFrames(b))
       .orElse(WebpCodec.decodeWebpFrames(b))
@@ -481,36 +489,6 @@ object Multimodal {
     }.toDF("asset_id", "n_frames", "frame_no", "phash")
   }
 
-  /** EVERY frame's perceptual hash — the dense form behind
-    * [[nearDupClipPairs]]: (asset_id, frame_no, phash), F·16 bytes per
-    * clip out of one decode projection. */
-  def frameHashes(assets: Dataset[MediaAsset]): DataFrame = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      it.flatMap { a =>
-        decodeClipFrames(a.payload).iterator.flatMap { frames =>
-          frames.iterator.zipWithIndex.flatMap { case (fr, i) =>
-            PixelCodec.lumaGrid8(fr).map(g =>
-              (a.asset_id, i.toLong, PixelCodec.dhash64(g)))
-          }
-        }
-      }
-    }.toDF("asset_id", "frame_no", "phash")
-  }
-
-  /** Re-edited-clip detection: distinct clip pairs sharing at least
-    * one visually-near frame (Hamming ≤ maxDist on the frame dHash).
-    * Frame-level banded pairing (the [[graft.dedup.Dedup.simhashPairs]]
-    * machinery — exact for maxDist < 8 by pigeonhole, work scales with
-    * band collisions, never frames²) over composite frame ids, then
-    * pairs collapse to their clips. Catches a re-encoded, re-edited,
-    * or trimmed copy of a clip whose bytes share nothing — the video
-    * analog of [[nearDupMediaClusters]]. */
-  def nearDupClipPairs(assets: Dataset[MediaAsset],
-      maxDist: Int = 2): DataFrame =
-    clipPairsFromFrameHashes(
-      graft.CacheScope.track(frameHashes(assets)), maxDist)
-
   /** The AVC (H.264) digest tier over a media corpus — the documented
     * no-pixel-decode contract of [[Mp4Codec.decodeAvcDigest]]: one
     * distributed projection extracts per-clip metadata + the ordered
@@ -518,7 +496,7 @@ object Multimodal {
     * Non-AVC or malformed payloads drop at the gate. Scale: the
     * output is ~50 bytes/clip, so exact-dedup grouping downstream
     * shuffles fingerprints, never video bytes — the same
-    * projection-first discipline as [[perceptualHashes]]. */
+    * projection-first discipline as [[fingerprints]]. */
   def avcClipDigests(assets: Dataset[MediaAsset]): DataFrame = {
     import assets.sparkSession.implicits._
     assets.mapPartitions { it =>
@@ -668,50 +646,14 @@ object Multimodal {
       "audio_fp")
   }
 
-  /** The pair machinery over precomputed (asset_id, frame_no, phash)
-    * rows — exposed so pipelines (curate v10) can share ONE cached
-    * decode projection between the decode gate and the pairing. */
-  private def clipPairsFromFrameHashes(fh: DataFrame,
-      maxDist: Int = 2): DataFrame = {
-    // composite frame id: clip ⊕ frame ordinal (frame counts are
-    // bounded by the decoder's maxFrames=256 cap, so 9 bits suffice).
-    val banded = fh
-      .select((col("asset_id") * 512 + col("frame_no")).as("id"),
-        col("phash").as("simhash"))
-    graft.dedup.Dedup.simhashPairs(banded, maxDist, bits = 64, bands = 8)
-      .select(expr("id1 div 512").as("clip_a"),
-        expr("id2 div 512").as("clip_b"))
-      .filter(col("clip_a") =!= col("clip_b"))
-      .distinct()
-  }
-
-  /** Component labels over the clip-pair graph — (id, cluster_id = min
-    * reachable clip) for every clip in at least one frame-share pair;
-    * singletons are absent (their label is themselves), exactly like
-    * [[perceptualLabels]]. */
-  def clipLabels(fh: DataFrame, maxDist: Int = 2): DataFrame =
-    graft.dedup.Dedup.connectedComponents(
-      clipPairsFromFrameHashes(fh, maxDist)
-        .select(col("clip_a").as("id1"), col("clip_b").as("id2")))
-
-  /** Audio-space component labels — [[perceptualLabels]] over
-    * [[audioFingerprints]] output (same banded Hamming machinery:
-    * 64 bits / 8 bands, exact for maxDist < 8 by pigeonhole). */
-  def audioLabels(fingerprinted: DataFrame, maxDist: Int = 2): DataFrame =
-    bandedLabels(fingerprinted, "afp", maxDist)
-
-  /** Perceptual near-duplicate clusters over an audio corpus — the
-    * audio analog of [[nearDupMediaClusters]]: catches re-encoded
-    * (metadata chunks), resampled, channel-converted, and gain-scaled
-    * copies whose bytes share nothing but whose energy envelope does. */
-  def nearDupAudioClusters(assets: Dataset[MediaAsset],
-      maxDist: Int = 2): DataFrame =
-    audioLabels(audioFingerprints(assets), maxDist)
-      .groupBy(col("cluster_id").as("canonical_id"))
-      .agg(count(lit(1)).as("n_members"),
-        array_join(sort_array(collect_list(col("id")))
-          .cast("array<string>"), ",").as("member_ids"))
-
+  /** Exact media dedup by payload identity: group on (xxhash64, bytes)
+    * — the hash co-locates candidates cheaply (8-byte shuffle key next
+    * to megabyte payloads), the byte-equality grouping makes the
+    * result collision-proof. Returns one row per distinct payload:
+    * (canonical_id = min member, n_bytes, n_copies, member_ids). At
+    * 100 TB, run the same shape in two passes — group by hash first,
+    * then byte-verify only multi-member hash groups — so single-copy
+    * payloads (the vast majority) never shuffle their bytes. */
   def dedupExactMedia(assets: Dataset[MediaAsset]): DataFrame =
     assets.toDF()
       .groupBy(xxhash64(col("payload")).as("__h"), col("payload"))

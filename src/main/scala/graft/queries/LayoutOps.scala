@@ -238,36 +238,44 @@ object LayoutOps extends QueryModule {
       .orderBy("o_custkey")
   }
 
+  /** Fold three slices of `df`, cut at the timestamps `c1` < `c2` on
+    * `tsCol`, into `base/state` through `apply` with monotone batch ids
+    * 0, 1, 2, then REPLAY batch 1, which must be a no-op (the batch-id
+    * idempotence protocol — a double-counted replay would hash-mismatch
+    * the oracle). The batches run at data-derived state partitioning
+    * (the ScopedConf.streamPartitions rationale). Returns the state
+    * path. */
+  private def slicedReplay(s: SparkSession, df: DataFrame, tsCol: String,
+      c1: String, c2: String, base: String, name: String)
+      (apply: (DataFrame, Long, String) => Boolean): String = {
+    val dir = s"$base/state"
+    val (t1, t2) = (to_timestamp(lit(c1)), to_timestamp(lit(c2)))
+    val slices = Seq(
+      df.filter(col(tsCol) < t1),
+      df.filter(col(tsCol) >= t1 && col(tsCol) < t2),
+      df.filter(col(tsCol) >= t2))
+    val replayed = ScopedConf.withStreamPartitions(s, df) {
+      slices.zipWithIndex.foreach { case (sl, i) => apply(sl, i.toLong, dir) }
+      // replay of an already-applied id: must be skipped entirely
+      apply(slices(1), 1L, dir)
+    }
+    require(!replayed, s"$name: replay was not skipped")
+    dir
+  }
+
   /** The STREAMED rollup state: three order slices (by date) delivered
-    * through [[graft.streaming.IncrementalAggStream.applyBatch]] with
-    * monotone batch ids, plus a REPLAY of batch 1 that must be a no-op
-    * (the batch-id idempotence protocol — a double-counted replay
-    * would hash-mismatch the oracle). Built once per (session, dir). */
+    * through [[graft.streaming.IncrementalAggStream.applyBatch]] plus
+    * the replay of batch 1 ([[slicedReplay]]). Built once per
+    * (session, dir). */
   private def incrAggStreamTable(s: SparkSession, d: String): String =
     Fixture.dir(s, d, "incr_agg_stream") { base =>
-      val o = graft.Tables.orders(s, d)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "o_orderdate")
-      val dir = s"$base/state"
-      val c1 = to_timestamp(lit("1994-01-01 00:00:00"))
-      val c2 = to_timestamp(lit("1996-01-01 00:00:00"))
-      val slices = Seq(
-        o.filter(col("o_orderdate") < c1),
-        o.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2),
-        o.filter(col("o_orderdate") >= c2))
-      // data-derived per-batch state partitioning (the ScopedConf
-      // .streamPartitions rationale)
-      val replayed = ScopedConf.withStreamPartitions(s, o) {
-        slices.zipWithIndex.foreach { case (sl, i) =>
-          graft.streaming.IncrementalAggStream.applyBatch(sl, i.toLong,
-            dir, Seq("o_custkey"), "o_totalprice", "o_orderdate")
-        }
-        // replay of an already-applied id: must be skipped entirely
-        graft.streaming.IncrementalAggStream.applyBatch(
-          slices(1), 1L, dir, Seq("o_custkey"), "o_totalprice",
-          "o_orderdate")
+      slicedReplay(s, graft.Tables.orders(s, d)
+          .select("o_custkey", "o_orderkey", "o_totalprice", "o_orderdate"),
+        "o_orderdate", "1994-01-01 00:00:00", "1996-01-01 00:00:00",
+        base, "ops_incr_agg_stream") { (sl, id, dir) =>
+        graft.streaming.IncrementalAggStream.applyBatch(sl, id, dir,
+          Seq("o_custkey"), "o_totalprice", "o_orderdate")
       }
-      require(!replayed, "ops_incr_agg_stream: replay was not skipped")
-      dir
     }
 
   private def opsIncrAggStream(s: SparkSession, d: String): DataFrame =
@@ -322,32 +330,18 @@ object LayoutOps extends QueryModule {
   }
 
   /** The STREAMED histogram state: three date slices delivered through
-    * [[graft.streaming.QuantileSketchStream.applyBatch]] with monotone
-    * batch ids plus a replayed id that must be a no-op (doubled
-    * histogram counts would hash-mismatch the oracle). Built once per
-    * (session, dir). */
+    * [[graft.streaming.QuantileSketchStream.applyBatch]] plus the replay
+    * of batch 1 ([[slicedReplay]]; doubled histogram counts would
+    * hash-mismatch the oracle). Built once per (session, dir). */
   private def incrQuantileStreamTable(s: SparkSession, d: String): String =
     Fixture.dir(s, d, "incr_quantile_stream") { base =>
-      val o = graft.Tables.orders(s, d)
-        .select("o_custkey", "o_totalprice", "o_orderdate")
-      val dir = s"$base/state"
-      val c1 = to_timestamp(lit("1994-01-01 00:00:00"))
-      val c2 = to_timestamp(lit("1996-01-01 00:00:00"))
-      val slices = Seq(
-        o.filter(col("o_orderdate") < c1),
-        o.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2),
-        o.filter(col("o_orderdate") >= c2))
-      val replayed = ScopedConf.withStreamPartitions(s, o) {
-        slices.zipWithIndex.foreach { case (sl, i) =>
-          graft.streaming.QuantileSketchStream.applyBatch(sl, i.toLong,
-            dir, Seq("o_custkey"), "o_totalprice", widthCents = 50000L)
-        }
-        graft.streaming.QuantileSketchStream.applyBatch(
-          slices(1), 1L, dir, Seq("o_custkey"), "o_totalprice",
-          widthCents = 50000L)
+      slicedReplay(s, graft.Tables.orders(s, d)
+          .select("o_custkey", "o_totalprice", "o_orderdate"),
+        "o_orderdate", "1994-01-01 00:00:00", "1996-01-01 00:00:00",
+        base, "ops_incr_quantile_stream") { (sl, id, dir) =>
+        graft.streaming.QuantileSketchStream.applyBatch(sl, id, dir,
+          Seq("o_custkey"), "o_totalprice", widthCents = 50000L)
       }
-      require(!replayed, "ops_incr_quantile_stream: replay was not skipped")
-      dir
     }
 
   private def opsIncrQuantileStream(s: SparkSession, d: String): DataFrame =
@@ -383,27 +377,14 @@ object LayoutOps extends QueryModule {
   }
 
   /** Streamed windowed-quantile state: three ten-day delivery slices
-    * plus a replayed id that must be a no-op. */
+    * plus the replay of batch 1 ([[slicedReplay]]). */
   private def w11StreamTable(s: SparkSession, d: String): String =
     Fixture.dir(s, d, "w11_quantile_stream") { base =>
-      val e = w11Events(s, d)
-      val dir = s"$base/state"
-      val c1 = to_timestamp(lit("2024-01-11 00:00:00"))
-      val c2 = to_timestamp(lit("2024-01-21 00:00:00"))
-      val slices = Seq(
-        e.filter(col("ts") < c1),
-        e.filter(col("ts") >= c1 && col("ts") < c2),
-        e.filter(col("ts") >= c2))
-      val replayed = ScopedConf.withStreamPartitions(s, e) {
-        slices.zipWithIndex.foreach { case (sl, i) =>
-          graft.streaming.QuantileSketchStream.applyBatch(sl, i.toLong,
-            dir, w11Keys, "value", widthCents = 1000L)
-        }
-        graft.streaming.QuantileSketchStream.applyBatch(
-          slices(1), 1L, dir, w11Keys, "value", widthCents = 1000L)
+      slicedReplay(s, w11Events(s, d), "ts", "2024-01-11 00:00:00",
+        "2024-01-21 00:00:00", base, "w11_stream") { (sl, id, dir) =>
+        graft.streaming.QuantileSketchStream.applyBatch(sl, id, dir,
+          w11Keys, "value", widthCents = 1000L)
       }
-      require(!replayed, "w11_stream: replay was not skipped")
-      dir
     }
 
   private def w11WindowedQuantileStream(s: SparkSession, d: String)

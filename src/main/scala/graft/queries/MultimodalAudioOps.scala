@@ -15,8 +15,6 @@ import graft.multimodal.Multimodal
   * streamed audio admission oracle) recompute. */
 object MultimodalAudioOps extends QueryModule {
 
-  private val Shards = 8
-
   /** Plant SAMPLE-REAL audio files once per (session, dir) for the
     * audio-fingerprint tier — the audio analog of [[pixelFixtureDir]]:
     * every 25th doc is a "scene" — a 64-segment constant-amplitude
@@ -497,10 +495,9 @@ object MultimodalAudioOps extends QueryModule {
   // string (same comparator rationale as mm_phash). The oracle
   // recomputes every expected fingerprint from the planting formula.
   private def mmAudioFp(s: SparkSession, d: String): DataFrame =
-    Multimodal.audioFingerprints(
-        Multimodal.ingestBinary(s, audioPcmFixtureDir(s, d)))
+    audioFps(s, d)
       .select(col("asset_id"),
-        reverse(lpad(bin(col("afp")), 64, "0")).as("afp_bits"))
+        reverse(lpad(bin(col("fp")), 64, "0")).as("afp_bits"))
       .orderBy("asset_id")
 
   // The dedup ∩ audio closure: byte-distinct envelope-near copies
@@ -508,9 +505,14 @@ object MultimodalAudioOps extends QueryModule {
   // recovered into clusters; the oracle enumerates expected clusters
   // straight from the planting schedule.
   private def mmAudioNear(s: SparkSession, d: String): DataFrame =
-    Multimodal.nearDupAudioClusters(
-        Multimodal.ingestBinary(s, audioPcmFixtureDir(s, d)))
-      .orderBy("canonical_id")
+    Multimodal.nearDupClusters(audioFps(s, d)).orderBy("canonical_id")
+
+  /** The PCM fixture corpus's envelope fingerprints (mm_audio_fp's
+    * projection). */
+  private def audioFps(s: SparkSession, d: String): DataFrame =
+    Multimodal.fingerprints(
+      Multimodal.ingestBinary(s, audioPcmFixtureDir(s, d)),
+      Multimodal.audioFp)
 
   /** Fixture planting is one-time per (session, dir) — an explicit
     * build line, like the other mm fixture dirs. */
@@ -519,49 +521,11 @@ object MultimodalAudioOps extends QueryModule {
 
       "mm_audio_build"  -> ((s, d) => { audioPcmFixtureDir(s, d); () }))
 
-  /** Curate v9 — the audio+text composition (v8's shape on the audio
-    * tier), every stage rule verbatim from its per-operator oracle:
-    *   1. binary ingest over the PCM fixture corpus (incl. its corrupt
-    *      family);
-    *   2. decode gate = audio fingerprinting (mm_audio_fp's rule:
-    *      assets whose payload PCM-decodes with ≥64 samples —
-    *      truncated WAVs drop here, never throw);
-    *   3. audio near-dup keep-best (mm_audio_near's clusters: keep the
-    *      canonical = min member, count the dropped copies);
-    *   4. transcript quality gate (text_quality_gate's dials verbatim
-    *      on the scene document's text — the transcript of a real
-    *      audio+text corpus);
-    *   5. mixture shard (export_shard_manifest's md5 shard rule).
-    * Scale shape: decode is one projection over payloads; everything
-    * after shuffles 16-byte fingerprints and transcript METRICS, never
-    * audio bytes; the transcript join is by scene id. */
-  private def pipelineCurateV9(s: SparkSession, d: String): DataFrame = {
-    val hashed = Multimodal.audioFingerprints(
-      Multimodal.ingestBinary(s, audioPcmFixtureDir(s, d)))
-    val labels = Multimodal.audioLabels(hashed)
-    val dropped = labels.groupBy(col("cluster_id").as("__cid"))
-      .agg((count(lit(1)) - 1).as("n_dups_dropped"))
-    val kept = hashed
-      .join(labels.withColumnRenamed("id", "asset_id"),
-        Seq("asset_id"), "left")
-      .filter(col("cluster_id").isNull ||
-        col("cluster_id") === col("asset_id"))
-      .join(dropped, col("cluster_id") === col("__cid"), "left")
-      .select(col("asset_id"),
-        coalesce(col("n_dups_dropped"), lit(0L)).as("n_dups_dropped"),
-        pmod(col("asset_id"), lit(Planting.Offset)).as("doc_id"))
-    val transcripts = graft.text.TextAnalysis
-      .qualityGate(Tables.documents(s, d))
-      .select("doc_id", "n_words", "mean_word_len", "symbol_ratio",
-        "keep")
-    kept.join(transcripts, Seq("doc_id"))
-      .filter(col("keep"))
-      .select(col("asset_id"), col("doc_id"), col("n_dups_dropped"),
-        col("n_words"), col("mean_word_len"), col("symbol_ratio"),
-        graft.ops.Export.shardId(col("asset_id"), Shards).as("shard"))
-      .orderBy("asset_id")
-  }
-
+  /** Curate v9 — the audio+text composition: [[MultimodalOps.curate]]
+    * over the PCM fixture corpus (incl. its corrupt family), with
+    * mm_audio_fp's decode gate and mm_audio_near's clusters. */
+  private def pipelineCurateV9(s: SparkSession, d: String): DataFrame =
+    MultimodalOps.curate(s, d, audioFps(s, d)).drop("n_frames")
 
   // The MP3 digest tier end-to-end: binary ingest over the audio
   // fixture corpus → the documented no-PCM-synthesis contract
@@ -909,20 +873,7 @@ object MultimodalAudioOps extends QueryModule {
     // text_quality_gate metric/keep fragments on the scene document
     // (its transcript), and the export shard rule
     "pipeline_curate_v9" ->
-      s"""WITH $audioAssetsCte,
-          counts AS (SELECT scene, count(*) AS n FROM assets GROUP BY scene),
-          ${OracleCtes.tokCte},
-          ${OracleCtes.qualityMetricsCte}
-          SELECT a.asset_id, a.scene AS doc_id,
-                 CAST(c.n - 1 AS BIGINT) AS n_dups_dropped,
-                 q.n_words, q.mean_word_len, q.symbol_ratio,
-                 ${graft.ops.Export.shardIdSql("a.asset_id", 8)} AS shard
-          FROM assets a
-          JOIN counts c USING (scene)
-          JOIN m q ON q.doc_id = a.scene
-          WHERE a.asset_id = a.scene
-            AND ${OracleCtes.qualityKeepSql}
-          ORDER BY a.asset_id""",
+      MultimodalOps.curateOracle(audioAssetsCte, clips = false),
 
   )
 }

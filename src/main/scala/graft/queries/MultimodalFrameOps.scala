@@ -609,59 +609,22 @@ object MultimodalFrameOps extends QueryModule {
   // scenes sit ~32 dHash bits apart, so the pair set falls straight
   // out of the planting schedule.
   private def mmFrameNear(s: SparkSession, d: String): DataFrame =
-    Multimodal.nearDupClipPairs(
-        Multimodal.ingestBinary(s, clipFixtureDir(s, d)))
+    Multimodal.nearDupPairs(clipFps(s, d))
+      .select(col("id1").as("clip_a"), col("id2").as("clip_b"))
       .orderBy("clip_a", "clip_b")
 
-  /** Curate v10 — the video+caption composition (v8's shape on the
-    * clip tier), every stage rule verbatim from its per-operator
-    * oracle:
-    *   1. binary ingest over the clip fixture corpus (incl. its
-    *      truncated corrupt family);
-    *   2. decode gate = frame hashing (mm_frame_sample's rule: clips
-    *      whose payload animation-decodes — truncated streams drop
-    *      here, never throw), carrying the clip's frame count through
-    *      as metadata;
-    *   3. re-edit keep-best (mm_frame_near's pair graph → connected
-    *      components: keep the canonical = min clip, count the dropped
-    *      copies);
-    *   4. caption quality gate (text_quality_gate's dials verbatim on
-    *      the scene document's text — the caption/transcript of a real
-    *      video+text corpus);
-    *   5. mixture shard (export_shard_manifest's md5 shard rule).
-    * Scale shape: ONE cached decode projection (frame hashes, F·16
-    * bytes/clip) feeds both the gate and the pairing; everything after
-    * shuffles frame hashes and caption METRICS, never clip bytes; the
-    * caption join is by scene id. */
-  private def pipelineCurateV10(s: SparkSession, d: String): DataFrame = {
-    val fh = graft.CacheScope.track(Multimodal.frameHashes(
-      Multimodal.ingestBinary(s, clipFixtureDir(s, d))))
-    val clips = fh.groupBy("asset_id")
-      .agg((max(col("frame_no")) + 1).as("n_frames"))
-    val labels = Multimodal.clipLabels(fh)
-    val dropped = labels.groupBy(col("cluster_id").as("__cid"))
-      .agg((count(lit(1)) - 1).as("n_dups_dropped"))
-    val kept = clips
-      .join(labels.withColumnRenamed("id", "asset_id"),
-        Seq("asset_id"), "left")
-      .filter(col("cluster_id").isNull ||
-        col("cluster_id") === col("asset_id"))
-      .join(dropped, col("cluster_id") === col("__cid"), "left")
-      .select(col("asset_id"), col("n_frames"),
-        coalesce(col("n_dups_dropped"), lit(0L)).as("n_dups_dropped"),
-        pmod(col("asset_id"), lit(Planting.Offset)).as("doc_id"))
-    val captions = graft.text.TextAnalysis
-      .qualityGate(Tables.documents(s, d))
-      .select("doc_id", "n_words", "mean_word_len", "symbol_ratio",
-        "keep")
-    kept.join(captions, Seq("doc_id"))
-      .filter(col("keep"))
-      .select(col("asset_id"), col("doc_id"), col("n_frames"),
-        col("n_dups_dropped"), col("n_words"), col("mean_word_len"),
-        col("symbol_ratio"),
-        graft.ops.Export.shardId(col("asset_id"), 8).as("shard"))
-      .orderBy("asset_id")
-  }
+  /** Every frame's dHash over the clip fixture corpus: one decode
+    * projection, F rows per clip. */
+  private def clipFps(s: SparkSession, d: String): DataFrame =
+    Multimodal.fingerprints(
+      Multimodal.ingestBinary(s, clipFixtureDir(s, d)), Multimodal.clipFp)
+
+  /** Curate v10 — the video+caption composition:
+    * [[MultimodalOps.curate]] over the clip fixture corpus (incl. its
+    * truncated corrupt family), with mm_frame_near's pair graph as the
+    * keep-best clusters and each clip's frame count carried through. */
+  private def pipelineCurateV10(s: SparkSession, d: String): DataFrame =
+    MultimodalOps.curate(s, d, clipFps(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mm_frame_sample"     -> (mmFrameSample _),
@@ -994,21 +957,7 @@ object MultimodalFrameOps extends QueryModule {
     // SHARED text_quality_gate metric/keep fragments on the scene
     // document (its caption), and the export shard rule
     "pipeline_curate_v10" ->
-      s"""WITH $clipsCte,
-          counts AS (SELECT scene, count(*) AS n FROM clips GROUP BY scene),
-          ${OracleCtes.tokCte},
-          ${OracleCtes.qualityMetricsCte}
-          SELECT c.asset_id, c.scene AS doc_id,
-                 CAST(c.f AS BIGINT) AS n_frames,
-                 CAST(cn.n - 1 AS BIGINT) AS n_dups_dropped,
-                 q.n_words, q.mean_word_len, q.symbol_ratio,
-                 ${graft.ops.Export.shardIdSql("c.asset_id", 8)} AS shard
-          FROM clips c
-          JOIN counts cn USING (scene)
-          JOIN m q ON q.doc_id = c.scene
-          WHERE c.asset_id = c.scene
-            AND ${OracleCtes.qualityKeepSql}
-          ORDER BY c.asset_id""",
+      MultimodalOps.curateOracle(clipsCte, clips = true),
 
     // expected clip pairs fall straight out of the variant schedule:
     // the still shares frame 0 with its clip (distance 0); the re-edit

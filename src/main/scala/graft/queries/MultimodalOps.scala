@@ -373,10 +373,9 @@ object MultimodalOps extends QueryModule {
   // hash-identical pixels and the perturbed variant's exact bits are
   // pinned too.
   private def mmPhash(s: SparkSession, d: String): DataFrame =
-    Multimodal.perceptualHashes(
-        Multimodal.ingestBinary(s, pixelFixtureDir(s, d)))
+    imageFps(s, d)
       .select(col("asset_id"),
-        reverse(lpad(bin(col("phash")), 64, "0")).as("phash_bits"))
+        reverse(lpad(bin(col("fp")), 64, "0")).as("phash_bits"))
       .orderBy("asset_id")
 
   // The dedup ∩ multimodal closure: byte-distinct pixel-near copies
@@ -385,9 +384,12 @@ object MultimodalOps extends QueryModule {
   // components; the oracle enumerates expected clusters straight from
   // the planting schedule.
   private def mmDedupNear(s: SparkSession, d: String): DataFrame =
-    Multimodal.nearDupMediaClusters(
-        Multimodal.ingestBinary(s, pixelFixtureDir(s, d)))
-      .orderBy("canonical_id")
+    Multimodal.nearDupClusters(imageFps(s, d)).orderBy("canonical_id")
+
+  /** The pixel fixture corpus's dHash rows (mm_phash's projection). */
+  private def imageFps(s: SparkSession, d: String): DataFrame =
+    Multimodal.fingerprints(
+      Multimodal.ingestBinary(s, pixelFixtureDir(s, d)), Multimodal.imageFp)
 
   /** Fixture plantings are one-time per (session, dir) — registered as
     * explicit build lines so single-shot bench numbers for the mm
@@ -400,37 +402,42 @@ object MultimodalOps extends QueryModule {
       "mm_image_build"  -> ((s, d) => { imageFixtureDir(s, d); () }),
       "mm_av_build"     -> ((s, d) => { avFixtureDir(s, d); () }))
 
-  /** Curate v8 — the first image+text composition, every stage rule
-    * verbatim from its per-operator oracle (the v1–v7 discipline on
-    * the multimodal tier):
-    *   1. binary ingest (mm_binary_ingest's source, over the pixel
-    *      fixture corpus incl. its corrupt family);
-    *   2. decode gate = perceptual hashing (mm_phash's rule: assets
-    *      whose payload pixel-decodes to a ÷8 image — truncated PNGs
-    *      drop here, never throw);
-    *   3. perceptual near-dup keep-best (mm_dedup_near's clusters:
-    *      keep the canonical = min member, count the dropped copies);
-    *   4. caption quality gate (text_quality_gate's dials verbatim on
-    *      the scene document's text — the caption of a real image+text
-    *      corpus);
-    *   5. mixture shard (export_shard_manifest's md5 shard rule).
-    * Scale shape: decode is one projection over payloads; everything
-    * after shuffles 16-byte hashes and caption METRICS, never media
-    * bytes; the caption join is by scene id against the quality
-    * projection. */
-  private def pipelineCurateV8(s: SparkSession, d: String): DataFrame = {
-    val hashed = Multimodal.perceptualHashes(
-      Multimodal.ingestBinary(s, pixelFixtureDir(s, d)))
-    val labels = Multimodal.perceptualLabels(hashed)
+  /** Curate v8 — the image+text composition: [[curate]] over the pixel
+    * fixture corpus (incl. its corrupt family), with mm_phash's decode
+    * gate and mm_dedup_near's clusters. */
+  private def pipelineCurateV8(s: SparkSession, d: String): DataFrame =
+    curate(s, d, imageFps(s, d)).drop("n_frames")
+
+  /** The keep-best curation composition of curate v8 (image), v9
+    * (audio) and v10 (clip), every stage rule verbatim from its
+    * per-operator oracle (the v1–v7 discipline on the multimodal tier):
+    *   1. binary ingest and decode gate = the tier's fingerprint
+    *      projection `fps` (asset_id, frame_no, fp): assets whose
+    *      payload does not decode drop there, never throw; n_frames =
+    *      the asset's fingerprinted frames (1 for a still or a stream);
+    *   2. near-dup keep-best (the tier's near-dup clusters: keep the
+    *      canonical = min member, count the dropped copies);
+    *   3. caption quality gate (text_quality_gate's dials verbatim on
+    *      the scene document's text — the caption or transcript of a
+    *      real media+text corpus);
+    *   4. mixture shard (export_shard_manifest's md5 shard rule).
+    * Scale shape: decode is one projection over payloads, pinned by
+    * the pairing and read again here; everything after shuffles
+    * fingerprints and caption METRICS, never media bytes; the caption
+    * join is by scene id against the quality projection. */
+  private[queries] def curate(s: SparkSession, d: String,
+      fps: DataFrame): DataFrame = {
+    val labels = Multimodal.nearDupLabels(fps)
     val dropped = labels.groupBy(col("cluster_id").as("__cid"))
       .agg((count(lit(1)) - 1).as("n_dups_dropped"))
-    val kept = hashed
+    val kept = fps.groupBy("asset_id")
+      .agg((max(col("frame_no")) + 1).as("n_frames"))
       .join(labels.withColumnRenamed("id", "asset_id"),
         Seq("asset_id"), "left")
       .filter(col("cluster_id").isNull ||
         col("cluster_id") === col("asset_id"))
       .join(dropped, col("cluster_id") === col("__cid"), "left")
-      .select(col("asset_id"),
+      .select(col("asset_id"), col("n_frames"),
         coalesce(col("n_dups_dropped"), lit(0L)).as("n_dups_dropped"),
         pmod(col("asset_id"), lit(Planting.Offset)).as("doc_id"))
     val captions = graft.text.TextAnalysis
@@ -439,10 +446,39 @@ object MultimodalOps extends QueryModule {
         "keep")
     kept.join(captions, Seq("doc_id"))
       .filter(col("keep"))
-      .select(col("asset_id"), col("doc_id"), col("n_dups_dropped"),
-        col("n_words"), col("mean_word_len"), col("symbol_ratio"),
+      .select(col("asset_id"), col("doc_id"), col("n_frames"),
+        col("n_dups_dropped"), col("n_words"), col("mean_word_len"),
+        col("symbol_ratio"),
         graft.ops.Export.shardId(col("asset_id"), Shards).as("shard"))
       .orderBy("asset_id")
+  }
+
+  /** [[curate]]'s DuckDB oracle over a planted schedule `cte` with one
+    * row per decodable asset (asset_id, scene): cluster sizes from the
+    * variant schedule, the SHARED text_quality_gate metric/keep
+    * fragments on the scene document, and the export shard rule. The
+    * clip schedule's table is `clips` and carries each clip's frame
+    * count `f` (the n_frames column); the others are `assets`. */
+  private[queries] def curateOracle(cte: String, clips: Boolean)
+      : String = {
+    val (t, a, c) =
+      if (clips) ("clips", "c", "cn") else ("assets", "a", "c")
+    val nFrames =
+      if (clips) s"CAST($a.f AS BIGINT) AS n_frames,\n" + " " * 17 else ""
+    s"""WITH $cte,
+          counts AS (SELECT scene, count(*) AS n FROM $t GROUP BY scene),
+          ${OracleCtes.tokCte},
+          ${OracleCtes.qualityMetricsCte}
+          SELECT $a.asset_id, $a.scene AS doc_id,
+                 ${nFrames}CAST($c.n - 1 AS BIGINT) AS n_dups_dropped,
+                 q.n_words, q.mean_word_len, q.symbol_ratio,
+                 ${graft.ops.Export.shardIdSql(s"$a.asset_id", 8)} AS shard
+          FROM $t $a
+          JOIN counts $c USING (scene)
+          JOIN m q ON q.doc_id = $a.scene
+          WHERE $a.asset_id = $a.scene
+            AND ${OracleCtes.qualityKeepSql}
+          ORDER BY $a.asset_id"""
   }
 
   private val Shards = 8
@@ -523,21 +559,7 @@ object MultimodalOps extends QueryModule {
     // at the decode gate), cluster sizes from the variant schedule,
     // the SHARED text_quality_gate metric/keep fragments on the scene
     // document, and the export shard rule
-    "pipeline_curate_v8" ->
-      s"""WITH $pixelAssetsCte,
-          counts AS (SELECT scene, count(*) AS n FROM assets GROUP BY scene),
-          ${OracleCtes.tokCte},
-          ${OracleCtes.qualityMetricsCte}
-          SELECT a.asset_id, a.scene AS doc_id,
-                 CAST(c.n - 1 AS BIGINT) AS n_dups_dropped,
-                 q.n_words, q.mean_word_len, q.symbol_ratio,
-                 ${graft.ops.Export.shardIdSql("a.asset_id", 8)} AS shard
-          FROM assets a
-          JOIN counts c USING (scene)
-          JOIN m q ON q.doc_id = a.scene
-          WHERE a.asset_id = a.scene
-            AND ${OracleCtes.qualityKeepSql}
-          ORDER BY a.asset_id""",
+    "pipeline_curate_v8" -> curateOracle(pixelAssetsCte, clips = false),
 
     // recomputes every expected dHash from the planting formula:
     // md5-mixed 8x8 block luma -> horizontal gradient signs (wrapping

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.multimodal.{AudioCodec, JpegCodec, PixelCodec}
+import graft.multimodal.{AudioCodec, JpegCodec, Multimodal, PixelCodec}
 import graft.streaming.MediaAdmission
 
 /** Streamed multimodal-admission conformance — the incremental form of
@@ -167,15 +167,18 @@ object MultimodalStreamOps extends QueryModule {
         (col("doc_id") + sceneOff).as("scene"),
         lit(v).as("variant"))
 
+  /** Delivery A's cross-format re-render families, (mod, variant):
+    * %150 variant 5, %225 variant 6, %275 variant 7, each at
+    * asset id + (variant + 1)·Offset. A tier delivers the first
+    * `crossFormat` of them — the ones its payloads render. */
+  private val CrossFormat = Seq((150, 5), (225, 6), (275, 7))
+
   /** Run seed + 3 checkpointed deliveries once per (session, dir,
-    * tier); returns the state path. `clipProtocol` routes through
-    * [[MediaAdmission.startClips]] (frame-level composite state)
-    * instead of the single-fingerprint protocol. */
+    * tier) through [[MediaAdmission]]; returns the state path. */
   private def streamedState(s: SparkSession, d: String, tag: String,
       payloads: DataFrame => DataFrame,
-      fingerprint: Array[Byte] => Option[Long],
-      jpegCopies: Boolean = false,
-      clipProtocol: Boolean = false): String =
+      fingerprint: Array[Byte] => Seq[Long],
+      crossFormat: Int): String =
     Fixture.dir(s, d, tag) { base =>
       val (src, cp, state) = (s"$base/src", s"$base/cp", s"$base/state")
       val docs = Tables.documents(s, d)
@@ -183,19 +186,15 @@ object MultimodalStreamOps extends QueryModule {
       val scenes = docs.filter(col("doc_id") % 25 === 0)
         .select("doc_id")
       val seed = sched(scenes, 25, 0, 0, 0)
-      val incA0 = sched(scenes, 50, Offset, 0, 1)
-        .unionByName(sched(scenes, 75, 2 * Offset, 0, 2))
-      // image tier: %150 scenes also deliver a baseline-JPEG
-      // re-render; clip tier: an MJPEG-MP4 re-render — either way a
-      // cross-format copy rejected at dist 0 (absent from the
-      // admitted-set oracles by construction)
-      val incA1 = if (jpegCopies || clipProtocol)
-        incA0.unionByName(sched(scenes, 150, 6 * Offset, 0, 5))
-          .unionByName(sched(scenes, 225, 7 * Offset, 0, 6))
-        else incA0
-      val incA = if (jpegCopies)
-        incA1.unionByName(sched(scenes, 275, 8 * Offset, 0, 7))
-        else incA1
+      // cross-format copies (baseline JPEG / MJPEG-MP4, WebP, lossy
+      // WebP) are rejected at dist 0 — absent from the admitted-set
+      // oracles by construction
+      val incA = CrossFormat.take(crossFormat).foldLeft(
+          sched(scenes, 50, Offset, 0, 1)
+            .unionByName(sched(scenes, 75, 2 * Offset, 0, 2))) {
+        case (inc, (mod, v)) =>
+          inc.unionByName(sched(scenes, mod, (v + 1) * Offset, 0, v))
+      }
       val incB = sched(scenes, 125, 4 * Offset, 0, 3)
         .unionByName(sched(scenes, 100, 3 * Offset, 3 * Offset, 0))
         .unionByName(sched(scenes, 175, 5 * Offset, 0, 4))
@@ -203,21 +202,15 @@ object MultimodalStreamOps extends QueryModule {
         payloads(inc).coalesce(1).write.mode("append").parquet(src)
         val stream = s.readStream
           .schema("asset_id LONG, payload BINARY").parquet(src)
-        Fixture.await(if (clipProtocol)
-            MediaAdmission.startClips(stream, state, cp,
-              "asset_id", "payload")
-          else MediaAdmission.start(stream, state, cp,
-            "asset_id", "payload", fingerprint), tag)
+        Fixture.await(MediaAdmission.start(stream, state, cp,
+          "asset_id", "payload", fingerprint), tag)
       }
       // 8 shuffle partitions for the state rewrites: the file-derived
       // count (ScopedConf.streamPartitions) gives 1 here and measured
       // slower at sf1 (mm_audio_stream_admit_build, median of 3:
       // 4.8 → 5.5 s), so this dial stays a literal
       ScopedConf.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-        if (clipProtocol)
-          MediaAdmission.seedClips(s, payloads(seed), state,
-            "asset_id", "payload")
-        else MediaAdmission.seed(s, payloads(seed), state,
+        MediaAdmission.seed(s, payloads(seed), state,
           "asset_id", "payload", fingerprint)
         deliver(incA)
         deliver(incB)
@@ -228,15 +221,15 @@ object MultimodalStreamOps extends QueryModule {
 
   private def imageState(s: SparkSession, d: String): String =
     streamedState(s, d, "mm_stream_admit", imagePayloads,
-      PixelCodec.phash, jpegCopies = true)
+      Multimodal.imageFp, crossFormat = 3)
 
   private def audioState(s: SparkSession, d: String): String =
     streamedState(s, d, "mm_audio_stream_admit", audioPayloads,
-      AudioCodec.afp)
+      Multimodal.audioFp, crossFormat = 0)
 
   private def clipState(s: SparkSession, d: String): String =
     streamedState(s, d, "mm_frame_stream_admit", clipPayloads,
-      _ => None, clipProtocol = true)
+      Multimodal.clipFp, crossFormat = 2)
 
   // Admitted fingerprint state after the full streamed run, surfaced
   // LSB-first as a bit string (same comparator rationale as mm_phash).
@@ -253,12 +246,11 @@ object MultimodalStreamOps extends QueryModule {
   private def mmAudioStreamAdmit(s: SparkSession, d: String): DataFrame =
     admitted(s, audioState(s, d), "afp_bits")
 
-  // Admitted CLIP frame state after the full streamed run: composite
-  // ids unpack to (clip, frame ordinal), hashes surface LSB-first.
+  // Admitted CLIP frame state after the full streamed run: one row per
+  // (clip, frame ordinal), hashes surface LSB-first.
   private def mmFrameStreamAdmit(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${clipState(s, d)}/ffps")
-      .select(expr("id div 512").as("asset_id"),
-        pmod(col("id"), lit(512L)).as("frame_no"),
+    s.read.parquet(s"${clipState(s, d)}/fps")
+      .select(col("id").as("asset_id"), col("frame_no"),
         reverse(lpad(bin(col("fp")), 64, "0")).as("phash_bits"))
       .orderBy("asset_id", "frame_no")
 

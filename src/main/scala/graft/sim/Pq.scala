@@ -375,11 +375,11 @@ object Pq {
       .select("query_id", "rank", "cand_id", "score")
   }
 
-  /** Two-stage PQ retrieval, stage 2: exact float cosine re-ranks a
-    * stage-1 ADC pool ([[pqTopKEncoded]] with k = `mPool`) to `k`
-    * (same stage-2 semantics as [[Quantize.q8Rerank]], i.e. the
-    * sim_cosine_topk oracle's). With mPool ≥ corpus size stage 1
-    * keeps every candidate and the output equals
+  /** Two-stage retrieval, stage 2: exact float cosine re-ranks a
+    * stage-1 pool (query_id, cand_id) to `k` — an ADC pool
+    * ([[pqTopKEncoded]] with k = `mPool`) or [[Quantize.q8Rerank]]'s
+    * int8 pool; the sim_cosine_topk oracle's semantics. With mPool ≥
+    * corpus size stage 1 keeps every candidate and the output equals
     * [[Similarity.bruteForceTopK]] bit-for-bit — the exhaustive-mode
     * conformance proof. */
   def pqRerankWith(pool: DataFrame, embeddings: DataFrame,

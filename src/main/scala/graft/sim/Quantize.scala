@@ -98,33 +98,15 @@ object Quantize {
     * second, the same semantics the sim_cosine_topk oracle pins), so
     * the composition is oracle-checkable end to end.
     *
-    * Scale: stage 1 is [[q8TopK]] (corpus never shuffles). Stage 2
+    * Scale: stage 1 is [[q8TopK]] (corpus never shuffles). Stage 2 is
+    * [[Pq.pqRerankWith]], the one exact-cosine rerank stage, and
     * touches only query-scale data: the candidate list (queries·m
     * rows) broadcasts against the corpus scan to pick up candidate
     * vectors (BroadcastHashJoin — big side stays in place), then joins
     * the query vectors on query_id — both sides of that join are
     * query-scale, so its shuffle is small however big the corpus. */
   def q8Rerank(embeddings: DataFrame, queryPred: Column, k: Int, m: Int,
-      scale: Int = 64, numTiles: Int = 1): DataFrame = {
-    import graft.functions.ArrayDotProduct.array_dot
-    require(m >= k, s"rerank pool m=$m must be >= k=$k")
-    val cands = q8TopK(embeddings, queryPred, m, scale, numTiles)
-      .select("query_id", "cand_id")
-    val v = Similarity.withNorms(embeddings)
-    val cv = v.join(broadcast(cands), col("vec_id") === col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        col("vd").as("__cv"), col("norm").as("__cn"))
-    val qv = v.filter(queryPred)
-      .select(col("vec_id").as("__qid"),
-        col("vd").as("__qv"), col("norm").as("__qn"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    cv.join(qv, col("query_id") === col("__qid"))
-      .select(col("query_id"), col("cand_id"),
-        (array_dot(col("__qv"), col("__cv")) /
-          (col("__qn") * col("__cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "cand_id", "cosine")
-  }
+      scale: Int = 64, numTiles: Int = 1): DataFrame =
+    Pq.pqRerankWith(q8TopK(embeddings, queryPred, m, scale, numTiles),
+      embeddings, queryPred, k, m)
 }

@@ -144,7 +144,7 @@ class AudioCodecSpec extends AnyFunSuite {
       PixelCodec.Gray(8, 8, Array.fill(64)(7)))).isEmpty)
   }
 
-  test("nearDupAudioClusters e2e: resampled/re-encoded/stereo/gain copies cluster, distinct scenes don't") {
+  test("nearDupClusters e2e (audio): resampled/re-encoded/stereo/gain copies cluster") {
     val dir = TestSpark.tempDir("mm_audio_spec").toString
     def put(name: String, b: Array[Byte]): Unit =
       Files.write(Paths.get(s"$dir/$name"), b)
@@ -170,8 +170,8 @@ class AudioCodecSpec extends AnyFunSuite {
                                                 // corrupt: dropped
     put("asset_9.img", PixelCodec.encodeGray8Png(PixelCodec.renderGrid(
       PixelCodec.sceneGrid(1L), 64)))           // non-audio: dropped
-    val out = Multimodal.nearDupAudioClusters(
-        Multimodal.ingestBinary(spark, dir))
+    val out = Multimodal.nearDupClusters(Multimodal.fingerprints(
+        Multimodal.ingestBinary(spark, dir), Multimodal.audioFp))
       .orderBy("canonical_id").collect()
       .map(r => (r.getAs[Long]("canonical_id"), r.getAs[Long]("n_members"),
         r.getAs[String]("member_ids")))

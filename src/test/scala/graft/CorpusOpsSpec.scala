@@ -94,8 +94,8 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   // ---- sharded export ----
 
-  private val shardDir =
-    s"${sys.props("java.io.tmpdir")}/graft_export_spec"
+  // shared by the two tests below: the second reads the first's write
+  private lazy val shardDir = TestSpark.tempDir("export_spec").toString
 
   test("written shard directories agree with the column formula") {
     val docs = Tables.documents(spark, sf0001)
@@ -124,7 +124,7 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("shuffled write fixes a deterministic within-shard order") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_export_shuffled"
+    val dir = TestSpark.tempDir("export_shuffled").toString
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     Export.writeShards(docs, "doc_id", 4, dir, shuffled = true)
     // one file per shard → read-back preserves the written row order

@@ -39,21 +39,27 @@ class FixtureSpec extends AnyFunSuite {
         new String(Files.readAllBytes(p), "UTF-8"))
   }
 
+  /** A hand-built path under the JVM's temp directory (written as a
+    * pattern, so this file does not match itself). */
+  private val tmpdir = """java\.io\.tmpdir""".r
+
   test("src/main stages files and awaits streams only through Fixture") {
     val main = sources("src/main/scala", "Fixture.scala")
-    for (needle <- Seq("java.io.tmpdir", "createTempDirectory",
-        "awaitTermination(", "FixtureMarker")) {
-      val hits = main.collect { case (f, src) if src.contains(needle) => f }
+    for (needle <- Seq(tmpdir, """createTempDirectory""".r,
+        """awaitTermination\(""".r, """FixtureMarker""".r)) {
+      val hits = main.collect {
+        case (f, src) if needle.findFirstIn(src).isDefined => f }
       assert(hits.isEmpty, s"$needle in $hits")
     }
   }
 
   test("tests make scratch directories only through TestSpark.tempDir") {
-    val call = """createTempDirectory\s*\(""".r
-    val hits = sources("src/test/scala", "TestSpark.scala").collect {
-      case (f, src) if call.findFirstIn(src).isDefined => f
+    for (needle <- Seq("""createTempDirectory\s*\(""".r, tmpdir)) {
+      val hits = sources("src/test/scala", "TestSpark.scala").collect {
+        case (f, src) if needle.findFirstIn(src).isDefined => f
+      }
+      assert(hits.isEmpty, s"$needle in $hits")
     }
-    assert(hits.isEmpty, s"createTempDirectory in $hits")
   }
 
   test("streamPartitions gives 1 to an input that reads no files") {

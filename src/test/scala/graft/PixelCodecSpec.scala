@@ -282,7 +282,7 @@ class PixelCodecSpec extends AnyFunSuite {
     assert(PixelCodec.phash(probe).isEmpty)
   }
 
-  test("nearDupMediaClusters e2e: re-encoded/resized/color/BMP copies cluster, distinct scenes don't") {
+  test("nearDupClusters e2e (image): re-encoded/resized/color/BMP copies cluster") {
     val dir = TestSpark.tempDir("mm_pxl_spec").toString
     def put(name: String, b: Array[Byte]): Unit =
       Files.write(Paths.get(s"$dir/$name"), b)
@@ -300,8 +300,8 @@ class PixelCodecSpec extends AnyFunSuite {
       PixelCodec.renderGrid(PixelCodec.sceneGrid(3L), 64))) // singleton scene
     put("asset_8.wav", Multimodal.MediaHeaders.wav(8000, 1, 4) ++
       Array.fill[Byte](4)(0))                               // non-image: dropped
-    val out = Multimodal.nearDupMediaClusters(
-        Multimodal.ingestBinary(spark, dir))
+    val out = Multimodal.nearDupClusters(Multimodal.fingerprints(
+        Multimodal.ingestBinary(spark, dir), Multimodal.imageFp))
       .orderBy("canonical_id").collect()
       .map(r => (r.getAs[Long]("canonical_id"), r.getAs[Long]("n_members"),
         r.getAs[String]("member_ids")))
